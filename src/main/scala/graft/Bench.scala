@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with total + per-query seconds over the
   * full declared query set. A full untimed warmup pass precedes the timed
@@ -13,19 +12,10 @@ object Bench {
     // default matches the documented grading environment: local[32],
     // spark.sql.shuffle.partitions=32 (AQE coalesces small shuffles below it)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Harness.quietBenignWindowWarns()
-    // dogfood the custom planner path: row_number-top-k rewrites to the
-    // bounded-heap TopKPerGroup operator (equality-pinned by
-    // TopKStrategySpec and the DuckDB gate itself)
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKStrategy)
+    // GraftExtensions dogfoods the custom planner path: row_number-top-k
+    // rewrites to the bounded-heap TopKPerGroup operator (equality-pinned
+    // by TopKStrategySpec and the DuckDB gate itself)
+    val spark = Harness.session(cpus.toInt)
     // SPARK_GRAFT_ONLY=q1,q2 restricts the battery for targeted iteration;
     // the driver never sets it, so graded runs always time the full set.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)

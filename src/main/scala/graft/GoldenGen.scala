@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 
 /** Regenerates the sf0.001 golden checksums (SURVEY §5.2) consumed by
   * GoldenSpec: one line per declared query, `name<TAB>rows<TAB>md5` of the
@@ -19,13 +18,7 @@ object GoldenGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Harness.quietBenignWindowWarns()
+    val spark = Harness.session(4)
     val sf = "/root/testdata/sf0.001"
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val rows = fn(spark, sf).collect().map(_.toString)

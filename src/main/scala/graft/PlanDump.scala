@@ -3,12 +3,18 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Regenerates docs/PLANS.md: the physical plans (`explain("formatted")`)
   * of the headline queries, so the plan shapes the engine is designed
   * around — pushdown, pruning, broadcast, partial aggregation, bounded-heap
   * top-k, codegen spans — are reviewable without running Spark.
   * `sbt "runMain graft.PlanDump"` after changing any of these queries.
+  *
+  * `sbt "runMain graft.PlanDump <round> <suffix> <q1,q2,...> [sfDir]"`
+  * instead writes each named query's plan to
+  * plans/<round>/<query>_<suffix>.txt — before/after plan evidence for an
+  * optimization round.
   */
 object PlanDump {
 
@@ -42,19 +48,30 @@ object PlanDump {
     "a36_locality_placement" -> "locality-weighted placement: ONE map-side-combining groupBy reduces data to three-factor region metadata (partial+final agg), the cost-rank window is global over that bounded table — the locality credit is arithmetic on the aggregate row, no extra pass or join",
     "a37_quota_throttle" -> "quota throttle plan: O(scopes) metadata end to end — the listing rows cross-join one broadcast total, the ladder is a CASE projection, and the double-apply upsert is an anti-join + union of the same tiny plan (no FileScan anywhere past the fixture bulk load)")
 
+  private def formatted(spark: SparkSession, name: String, sf: String): String =
+    SparkEntry.queries(name)(spark, sf).queryExecution.explainString(FormattedMode)
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Harness.quietBenignWindowWarns()
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKStrategy)
+    require(Set(0, 3, 4)(args.length),
+      "usage: PlanDump [<round> <suffix> <q1,q2,...> [sfDir]]")
+    val spark = Harness.session(4)
 
     val sf = "/root/testdata/sf0.001"
+    if (args.isEmpty) writePlansMd(spark, sf)
+    else {
+      val Array(round, suffix, names) = args.take(3)
+      val dir = args.lift(3).getOrElse(sf)
+      Files.createDirectories(Paths.get(s"plans/$round"))
+      names.split(',').foreach { name =>
+        val out = s"plans/$round/${name}_$suffix.txt"
+        Files.writeString(Paths.get(out), formatted(spark, name, dir))
+        println(s"wrote $out")
+      }
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, sf: String): Unit = {
     // hand-written adjudication notes live after this marker in the
     // current file; carry them through the regeneration verbatim
     val marker = "<!-- hand-written notes below — PlanDump preserves everything after this marker -->"
@@ -75,14 +92,10 @@ object PlanDump {
     sb ++= "broadcasts stay broadcasts (dims are small by construction), and AQE\n"
     sb ++= "re-coalesces/skew-splits at runtime.\n"
     headliners.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb ++= s"\n## $name\n\n$why\n\n```\n$plan```\n"
+      sb ++= s"\n## $name\n\n$why\n\n```\n${formatted(spark, name, sf)}```\n"
     }
     Files.writeString(out, sb.toString + preserved)
     println(s"wrote docs/PLANS.md (${headliners.size} plans"
       + (if (preserved.nonEmpty) " + preserved notes)" else ")"))
-    spark.stop()
   }
 }

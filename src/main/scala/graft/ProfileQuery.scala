@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-invocation cost profiler for one declared query: splits each run
   * into DSL-construction, planning (analysis→executedPlan), and
   * execution wall time, and — when a `--sql <text>` twin is given —
@@ -19,16 +17,7 @@ object ProfileQuery {
     val sfDir = args(1)
     val k = if (args.length > 2) args(2).toInt else 7
     val sqlTwin = if (args.length > 3) Some(args(3)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKStrategy)
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val fn = SparkEntry.queries(name)
 
     def profile(tag: String, mk: () => org.apache.spark.sql.DataFrame): Unit = {

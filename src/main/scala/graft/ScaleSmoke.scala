@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 100×-scale smoke: synthesizes an events table 100× the bench fixture
@@ -156,16 +156,7 @@ object ScaleSmoke {
     val n = sys.env.getOrElse("SPARK_GRAFT_SMOKE_ROWS", "10000000").toLong
     val users = math.max(1L, n / 67L) // keeps ~67 events/user like the fixtures
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_scale_$n"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Harness.quietBenignWindowWarns()
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKStrategy)
+    val spark = Harness.session(32)
 
     if (!new java.io.File(s"$dir/events.parquet").exists()) {
       val t0 = 1704067200000000L // 2024-01-01 in epoch µs

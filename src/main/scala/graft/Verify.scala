@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Harness.quietBenignWindowWarns()
-    // dogfood the custom planner path: row_number-top-k rewrites to the
-    // bounded-heap TopKPerGroup operator (equality-pinned by
-    // TopKStrategySpec and the DuckDB gate itself)
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKStrategy)
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump for targeted local
     // iteration (pair with tools/compare.py --partial, which then skips

@@ -78,8 +78,7 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
 
   val name = "graft_cosine"
-  private val info = new ExpressionInfo(classOf[CosineSim].getName, name)
-  private val builder: Seq[Expression] => Expression =
+  private[functions] val builder: Seq[Expression] => Expression =
     es => { GraftFnArgs.exact(name, es, 2); CosineSim(es(0), es(1)) }
 
   /** Runtime registration on an existing session (test/driver path). */
@@ -88,50 +87,35 @@ object CosineSim {
 }
 
 /** Production registration path: `--conf spark.sql.extensions=
-  * graft.functions.GraftExtensions` makes `graft_cosine` a first-class
-  * SQL function in every session of the cluster.
+  * graft.functions.GraftExtensions` makes the native graft_* functions
+  * first-class SQL functions and installs the bounded-heap top-k rewrite
+  * in every session of the cluster. [[graft.Harness.session]] installs
+  * it the same way for every main. Each function is injected with its
+  * companion's own `builder`, the one its runtime `register` uses.
+  *
+  * The top-k rewrite goes in as a pre-CBO rule, which runs once on the
+  * plan the operator-optimization batches finished — the plan a
+  * session's experimental optimizer hooks also rewrite, so both wirings
+  * plan every declared query alike (pinned by WiringSpec). An
+  * `injectOptimizerRule` placement runs inside those batches instead:
+  * it can fire before a window key that a filter pins to a constant is
+  * folded away, and the top-k then groups and shuffles on that constant.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(CosineSim.name),
-      new ExpressionInfo(classOf[CosineSim].getName, CosineSim.name),
-      (es: Seq[Expression]) => {
-        GraftFnArgs.exact(CosineSim.name, es, 2); CosineSim(es(0), es(1))
-      }))
-    ext.injectFunction((FunctionIdentifier(Shingles.name),
-      new ExpressionInfo(classOf[Shingles].getName, Shingles.name),
-      (es: Seq[Expression]) => Shingles(GraftFnArgs.exact(Shingles.name, es, 2).head,
-        GraftFnArgs.intLit(Shingles.name, es, 1))))
-    ext.injectFunction((FunctionIdentifier(MinHashSig.name),
-      new ExpressionInfo(classOf[MinHashSig].getName, MinHashSig.name),
-      (es: Seq[Expression]) => MinHashSig(GraftFnArgs.exact(MinHashSig.name, es, 2).head,
-        GraftFnArgs.intLit(MinHashSig.name, es, 1))))
-    ext.injectFunction((FunctionIdentifier(Winnow.name),
-      new ExpressionInfo(classOf[Winnow].getName, Winnow.name),
-      (es: Seq[Expression]) => Winnow(GraftFnArgs.exact(Winnow.name, es, 2).head,
-        GraftFnArgs.intLit(Winnow.name, es, 1))))
-    ext.injectFunction((FunctionIdentifier(LshBands.name),
-      new ExpressionInfo(classOf[LshBands].getName, LshBands.name),
-      (es: Seq[Expression]) => LshBands(GraftFnArgs.exact(LshBands.name, es, 3).head,
-        GraftFnArgs.intLit(LshBands.name, es, 1),
-        GraftFnArgs.intLit(LshBands.name, es, 2))))
-    ext.injectFunction((FunctionIdentifier(SigAgree.name),
-      new ExpressionInfo(classOf[SigAgree].getName, SigAgree.name),
-      (es: Seq[Expression]) => {
-        GraftFnArgs.exact(SigAgree.name, es, 2); SigAgree(es(0), es(1))
-      }))
-    ext.injectFunction((FunctionIdentifier(HyperplaneKeys.name),
-      new ExpressionInfo(classOf[HyperplaneKeys].getName, HyperplaneKeys.name),
-      (es: Seq[Expression]) => HyperplaneKeys(
-        GraftFnArgs.exact(HyperplaneKeys.name, es, 3).head,
-        GraftFnArgs.intLit(HyperplaneKeys.name, es, 1),
-        GraftFnArgs.intLit(HyperplaneKeys.name, es, 2))))
-    ext.injectFunction((FunctionIdentifier(JaccardSim.name),
-      new ExpressionInfo(classOf[JaccardSim].getName, JaccardSim.name),
-      (es: Seq[Expression]) => {
-        GraftFnArgs.exact(JaccardSim.name, es, 2); JaccardSim(es(0), es(1))
-      }))
-    ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      (CosineSim.name, classOf[CosineSim], CosineSim.builder),
+      (Shingles.name, classOf[Shingles], Shingles.builder),
+      (MinHashSig.name, classOf[MinHashSig], MinHashSig.builder),
+      (Winnow.name, classOf[Winnow], Winnow.builder),
+      (LshBands.name, classOf[LshBands], LshBands.builder),
+      (SigAgree.name, classOf[SigAgree], SigAgree.builder),
+      (HyperplaneKeys.name, classOf[HyperplaneKeys], HyperplaneKeys.builder),
+      (JaccardSim.name, classOf[JaccardSim], JaccardSim.builder)
+    ).foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
+    ext.injectPreCBORule(_ => graft.plans.RewriteWindowTopK)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

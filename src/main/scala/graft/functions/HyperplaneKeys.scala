@@ -88,12 +88,13 @@ object HyperplaneKeys {
     new GenericArrayData(out)
   }
 
+  private[functions] val builder: Seq[Expression] => Expression =
+    es => HyperplaneKeys(GraftFnArgs.exact(name, es, 3).head,
+      GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2))
+
   /** Runtime registration on an existing session (test/driver path). */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => HyperplaneKeys(GraftFnArgs.exact(name, es, 3).head,
-        GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2)),
-      "internal")
+    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }
 
 /** Margin-ranked multi-probe keys: `graft_hyperplane_probes(emb, nBits,

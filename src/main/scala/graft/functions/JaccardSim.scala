@@ -59,9 +59,10 @@ object JaccardSim {
     c.toDouble / (na + nb - c)
   }
 
+  private[functions] val builder: Seq[Expression] => Expression =
+    es => { GraftFnArgs.exact(name, es, 2); JaccardSim(es(0), es(1)) }
+
   /** Runtime registration on an existing session (test/driver path). */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => { GraftFnArgs.exact(name, es, 2); JaccardSim(es(0), es(1)) },
-      "internal")
+    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }

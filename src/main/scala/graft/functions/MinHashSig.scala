@@ -78,11 +78,12 @@ object MinHashSig {
     new GenericArrayData(out)
   }
 
+  private[functions] val builder: Seq[Expression] => Expression =
+    es => MinHashSig(GraftFnArgs.exact(name, es, 2).head, GraftFnArgs.intLit(name, es, 1))
+
   /** Runtime registration on an existing session (test/driver path). */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => MinHashSig(GraftFnArgs.exact(name, es, 2).head,
-        GraftFnArgs.intLit(name, es, 1)), "internal")
+    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }
 
 /** Native signature agreement: `graft_sig_agree(a, b)` = fraction of
@@ -157,11 +158,12 @@ object SigAgree {
     c.toDouble / na
   }
 
+  private[functions] val builder: Seq[Expression] => Expression =
+    es => { GraftFnArgs.exact(name, es, 2); SigAgree(es(0), es(1)) }
+
   /** Runtime registration on an existing session (test/driver path). */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => { GraftFnArgs.exact(name, es, 2); SigAgree(es(0), es(1)) },
-      "internal")
+    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }
 
 /** Native LSH band keys: `graft_lsh_bands(sig, bands, rows)` maps a
@@ -212,10 +214,11 @@ object LshBands {
     new GenericArrayData(out)
   }
 
+  private[functions] val builder: Seq[Expression] => Expression =
+    es => LshBands(GraftFnArgs.exact(name, es, 3).head,
+      GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2))
+
   /** Runtime registration on an existing session (test/driver path). */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => LshBands(GraftFnArgs.exact(name, es, 3).head,
-        GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2)),
-      "internal")
+    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }

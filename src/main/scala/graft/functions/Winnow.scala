@@ -62,9 +62,10 @@ object Winnow {
     new GenericArrayData(out)
   }
 
+  private[functions] val builder: Seq[Expression] => Expression =
+    es => Winnow(GraftFnArgs.exact(name, es, 2).head, GraftFnArgs.intLit(name, es, 1))
+
   /** Runtime registration on an existing session (test/driver path). */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => Winnow(GraftFnArgs.exact(name, es, 2).head,
-        GraftFnArgs.intLit(name, es, 1)), "internal")
+    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }

@@ -78,10 +78,4 @@ package object ops {
   implicit class GraftCkpt(private val df: DataFrame) {
     def graftCkpt(eager: Boolean = true): DataFrame = ckpt(df, eager)
   }
-
-  /** DuckDB spelling of [[dsum]]. */
-  def dsumSql(e: String): String = s"CAST(sum(CAST($e AS DECIMAL(18,2))) AS DOUBLE)"
-
-  /** DuckDB spelling of [[lsum]]. */
-  def lsumSql(e: String): String = s"CAST(sum(CAST($e AS DECIMAL(18,0))) AS BIGINT)"
 }

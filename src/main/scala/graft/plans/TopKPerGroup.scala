@@ -49,10 +49,12 @@ object RewriteWindowTopK extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Stock Spark 4 runs InsertWindowGroupLimit before user rules, leaving
-    * sort-based WindowGroupLimit / local Sort nodes under the Window. Our
-    * heap-based exec needs neither — strip them so the work isn't done
-    * twice.
+  /** Stock Spark 4's "Infer window group limit" batch puts sort-based
+    * WindowGroupLimit / local Sort nodes under the Window. It runs after
+    * the pre-CBO batch GraftExtensions injects this rule into, so there
+    * the Window has none yet; it runs before a session's experimental
+    * optimizer hooks, which do see them. Our heap-based exec
+    * needs neither — strip them so the work isn't done twice.
     */
   private def stripGroupLimit(p: LogicalPlan): LogicalPlan = p match {
     case wgl: WindowGroupLimit => stripGroupLimit(wgl.child)

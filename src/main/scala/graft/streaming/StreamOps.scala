@@ -66,10 +66,6 @@ object StreamOps {
   private val servingCaches =
     new java.util.HashMap[SparkSession, ServingCaches]()
 
-  /** Test-only introspection: number of live session entries. */
-  private[graft] def servingCacheSessions: Int =
-    servingCaches.synchronized(servingCaches.size)
-
   private[streaming] def registerServingCache(spark: SparkSession, df: DataFrame): Unit =
     servingCaches.synchronized {
       var cs = servingCaches.get(spark)

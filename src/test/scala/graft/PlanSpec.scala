@@ -599,20 +599,13 @@ class PlanSpec extends SparkSuite {
     // firing. The restructured query (keyed-count size filter BEFORE the
     // window, bare rn=1 above it) must plan as TopKPartial → one
     // cluster_id exchange → TopKFinal with k=1 — the shape the 100 TB
-    // claim in DedupOps' scaladoc rests on. Registered the same way
-    // Verify/Bench register it (experimental session hooks).
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(graft.plans.TopKStrategy)
-    try {
-      val plan = physical(SparkEntry.queries("j64_dedup_canonical")(spark, sf))
-      assert(plan.contains("TopKPartial") && plan.contains("TopKFinal"),
-        s"bounded-heap rewrite did not fire:\n$plan")
-      assert(!plan.contains("Window ") && !plan.contains("WindowGroupLimit"),
-        s"stock window machinery still present:\n$plan")
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      spark.experimental.extraStrategies = Nil
-    }
+    // claim in DedupOps' scaladoc rests on. Planned on the session every
+    // main runs (Harness.session, GraftExtensions installed).
+    val plan = physical(SparkEntry.queries("j64_dedup_canonical")(SparkSuite.graft, sf))
+    assert(plan.contains("TopKPartial") && plan.contains("TopKFinal"),
+      s"bounded-heap rewrite did not fire:\n$plan")
+    assert(!plan.contains("Window ") && !plan.contains("WindowGroupLimit"),
+      s"stock window machinery still present:\n$plan")
   }
 
   test("j63 dedup report: keyed aggregations only — no window over data, bounded exchanges") {

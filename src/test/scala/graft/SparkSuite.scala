@@ -25,6 +25,19 @@ object SparkSuite {
     Harness.quietBenignWindowWarns()
     s
   }
+
+  /** The session every main runs on: [[Harness.session]], so
+    * GraftExtensions' native functions and top-k rewrite are installed.
+    * It is built beside the stock `spark`, which stays the reference side
+    * of every comparison and the JVM's default and active session.
+    */
+  lazy val graft: SparkSession = {
+    val stock = spark
+    val s = Harness.session(4)
+    SparkSession.setDefaultSession(stock)
+    SparkSession.setActiveSession(stock)
+    s
+  }
 }
 
 abstract class SparkSuite extends AnyFunSuite {

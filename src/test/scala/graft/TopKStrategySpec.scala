@@ -1,94 +1,81 @@
 package graft
 
-import graft.plans.{RewriteWindowTopK, TopKStrategy}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The custom top-k planner path (TopKPerGroup + TopKStrategy) must be a
   * bit-for-bit drop-in for the stock Filter(Window(row_number)) plan on
-  * every query shape that uses the idiom.
+  * every query shape that uses the idiom. The custom side of each
+  * comparison runs on the session the mains run (GraftExtensions
+  * installed); the stock side runs on the plain suite session.
   */
 class TopKStrategySpec extends SparkSuite {
 
-  private def withTopK[T](body: => T): T = {
-    spark.experimental.extraOptimizations = Seq(RewriteWindowTopK)
-    spark.experimental.extraStrategies = Seq(TopKStrategy)
-    try body
-    finally {
-      spark.experimental.extraOptimizations = Nil
-      spark.experimental.extraStrategies = Nil
-    }
-  }
+  private def graftSession: SparkSession = SparkSuite.graft
 
-  private def topkQuery(): DataFrame = {
+  private def topkQuery(s: SparkSession): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(spark, sf)
+    Tables.orders(s, sf)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
       .orderBy("o_custkey", "rn")
   }
 
   test("rewrite fires: plan contains TopKFinalExec/TopKPartialExec") {
-    withTopK {
-      val df = topkQuery()
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKFinal"), plan)
-      assert(plan.contains("TopKPartial"), plan)
-      assert(!plan.contains("WindowGroupLimit") && !plan.contains("Window ["),
-        s"stock window machinery still present:\n$plan")
-    }
+    val df = topkQuery(graftSession)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKFinal"), plan)
+    assert(plan.contains("TopKPartial"), plan)
+    assert(!plan.contains("WindowGroupLimit") && !plan.contains("Window ["),
+      s"stock window machinery still present:\n$plan")
   }
 
   test("j23 stratified sample runs the bounded-heap rewrite (expression sort key)") {
     // pins that an EXPRESSION in the window ORDER BY (the sampling hash)
     // still rewrites — j23's per-stratum state must stay O(k), and the
     // scan must stay pruned to the two referenced columns
-    withTopK {
-      val df = graft.ops.SampleOps.j23_sample_stratified(spark, sf)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKFinal") && plan.contains("TopKPartial"), plan)
-      assert(!plan.contains("Window ["), s"stock window still present:\n$plan")
-      // the fixture may already be cached by an earlier suite: accept a
-      // pruned parquet ReadSchema OR an InMemoryTableScan projecting only
-      // the two referenced columns — both prove pruning reached the scan
-      val pruned = plan.contains("ReadSchema: struct<doc_id:bigint,lang:string>") ||
-        "InMemoryTableScan \\[doc_id#\\d+L, lang#\\d+\\]".r.findFirstIn(plan).isDefined
-      assert(pruned, s"scan not pruned to doc_id+lang:\n$plan")
-    }
+    val df = graft.ops.SampleOps.j23_sample_stratified(graftSession, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKFinal") && plan.contains("TopKPartial"), plan)
+    assert(!plan.contains("Window ["), s"stock window still present:\n$plan")
+    // the fixture may already be cached by an earlier suite: accept a
+    // pruned parquet ReadSchema OR an InMemoryTableScan projecting only
+    // the two referenced columns — both prove pruning reached the scan
+    val pruned = plan.contains("ReadSchema: struct<doc_id:bigint,lang:string>") ||
+      "InMemoryTableScan \\[doc_id#\\d+L, lang#\\d+\\]".r.findFirstIn(plan).isDefined
+    assert(pruned, s"scan not pruned to doc_id+lang:\n$plan")
   }
 
   test("j56 seeded shuffle heads run the bounded-heap rewrite") {
     // each trainer shard's read head must be O(k) state, never a full
     // per-shard sort — the property that keeps the epoch-shuffle
     // materialization one streaming pass at any corpus size
-    withTopK {
-      val df = graft.ops.SampleOps.j56_seeded_shuffle(spark, sf)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKFinal") && plan.contains("TopKPartial"), plan)
-      assert(!plan.contains("Window ["), s"stock window still present:\n$plan")
-    }
+    val df = graft.ops.SampleOps.j56_seeded_shuffle(graftSession, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKFinal") && plan.contains("TopKPartial"), plan)
+    assert(!plan.contains("Window ["), s"stock window still present:\n$plan")
   }
 
   test("custom top-k equals stock window top-k (k=3, desc order)") {
-    val stock = topkQuery().collect().map(_.toString)
-    val custom = withTopK { topkQuery().collect().map(_.toString) }
+    val stock = topkQuery(spark).collect().map(_.toString)
+    val custom = topkQuery(graftSession).collect().map(_.toString)
     assert(custom.sorted.sameElements(stock.sorted))
   }
 
   test("rn = 1 (argmax shape, e1) matches stock") {
-    def q(): DataFrame = {
+    def q(s: SparkSession): DataFrame = {
       val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(spark, sf)
+      Tables.orders(s, sf)
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select("o_custkey", "o_orderkey")
     }
-    val stock = q().collect().map(_.toString)
-    val custom = withTopK { q().collect().map(_.toString) }
+    val stock = q(spark).collect().map(_.toString)
+    val custom = q(graftSession).collect().map(_.toString)
     assert(custom.sorted.sameElements(stock.sorted))
   }
 
@@ -98,9 +85,7 @@ class TopKStrategySpec extends SparkSuite {
     Seq("e1_win_rownum", "e9_win_topk_group", "b13_page_per_bucket", "e2_win_rank")
       .foreach { name =>
         val stock = SparkEntry.queries(name)(spark, sf).collect().map(_.toString)
-        val custom = withTopK {
-          SparkEntry.queries(name)(spark, sf).collect().map(_.toString)
-        }
+        val custom = SparkEntry.queries(name)(graftSession, sf).collect().map(_.toString)
         assert(custom.sameElements(stock), s"$name diverged under TopK rewrite")
       }
   }
@@ -109,44 +94,41 @@ class TopKStrategySpec extends SparkSuite {
     // Shrink the tracked-group bound far below the input's group count so
     // most rows take the map-full passthrough branch — the path production
     // data never exercises at test scale.
-    def q(): DataFrame = {
+    def q(s: SparkSession): DataFrame = {
       val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(spark, sf)
+      Tables.orders(s, sf)
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 2)
         .select("o_custkey", "o_orderkey", "rn")
     }
-    val stock = q().collect().map(_.toString)
-    spark.conf.set("spark.graft.topk.maxTrackedGroups", "3")
-    spark.conf.set("spark.sql.adaptive.enabled", "false") // plain tree for metric lookup
+    val stock = q(spark).collect().map(_.toString)
+    graftSession.conf.set("spark.graft.topk.maxTrackedGroups", "3")
+    graftSession.conf.set("spark.sql.adaptive.enabled", "false") // plain tree for metric lookup
     try {
-      val (custom, passthrough) = withTopK {
-        val df = q()
-        val rows = df.collect().map(_.toString)
-        val pt = df.queryExecution.executedPlan
-          .collect { case t: graft.plans.TopKPartialExec => t }
-          .map(_.metrics("passthroughRows").value).sum
-        (rows, pt)
-      }
+      val df = q(graftSession)
+      val custom = df.collect().map(_.toString)
+      val passthrough = df.queryExecution.executedPlan
+        .collect { case t: graft.plans.TopKPartialExec => t }
+        .map(_.metrics("passthroughRows").value).sum
       assert(custom.sorted.sameElements(stock.sorted))
       assert(passthrough > 0, "conf did not shrink the map: passthrough branch never ran")
     } finally {
-      spark.conf.unset("spark.graft.topk.maxTrackedGroups")
-      spark.conf.unset("spark.sql.adaptive.enabled")
+      graftSession.conf.unset("spark.graft.topk.maxTrackedGroups")
+      graftSession.conf.unset("spark.sql.adaptive.enabled")
     }
   }
 
   test("multi-column group keys and string ordering work") {
-    def q(): DataFrame = {
+    def q(s: SparkSession): DataFrame = {
       val w = Window.partitionBy("l_returnflag", "l_linestatus")
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      Tables.lineitem(spark, sf)
+      Tables.lineitem(s, sf)
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 5)
         .select("l_returnflag", "l_linestatus", "l_orderkey", "rn")
     }
-    val stock = q().collect().map(_.toString)
-    val custom = withTopK { q().collect().map(_.toString) }
+    val stock = q(spark).collect().map(_.toString)
+    val custom = q(graftSession).collect().map(_.toString)
     assert(custom.sorted.sameElements(stock.sorted))
   }
 }
