@@ -12,11 +12,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * over two float-array columns, with `doGenCode` so it fuses into
   * whole-stage codegen (no UDF serialization, no boxing per element).
   *
-  * Semantics contract: bit-identical to the HOF formulation in
-  * TextOps.dotCol/l2Col (left fold from 0.0 in index order, float widened
-  * to double before multiply, norms multiplied before the single divide) —
-  * CosineSimSpec asserts equality against j8 and the k5 oracle twin runs
-  * the same DuckDB SQL as j8.
+  * Semantics contract: bit-identical to the HOF zip_with/aggregate fold
+  * (left fold from 0.0 in index order, float widened to double before
+  * multiply, norms multiplied before the single divide) — CosineSimSpec
+  * asserts equality against that fold and against j8, and the k5 oracle
+  * twin runs the same DuckDB SQL as j8.
   *
   * This is the hot-path option for 100 TB similarity scans: one fused
   * loop per row versus a chain of three HOF array traversals.
@@ -105,6 +105,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     Seq[(String, Class[_], Seq[Expression] => Expression)](
       (CosineSim.name, classOf[CosineSim], CosineSim.builder),
+      (DotProduct.name, classOf[DotProduct], DotProduct.builder),
       (Shingles.name, classOf[Shingles], Shingles.builder),
       (MinHashSig.name, classOf[MinHashSig], MinHashSig.builder),
       (Winnow.name, classOf[Winnow], Winnow.builder),

@@ -602,7 +602,8 @@ object DedupOps {
     */
   def j39_simhash_portable: Q = (s, d) =>
     simhashPortableFrame(ScaleOps.fanOut(
-        Tables.documents(s, d).where(col("doc_id") < 2000)))
+        Tables.documents(s, d).where(col("doc_id") < 2000),
+        asc_nulls_last("doc_id")))
       .orderBy(asc_nulls_last("doc_id"))
 
   /** The j39 fingerprint as a ROW-LOCAL projection (batch ≡ streaming —
@@ -644,9 +645,11 @@ object DedupOps {
     */
   def j40_minhash_portable: Q = (s, d) =>
     // fanOut: 16 md5s per distinct token all inside the row — serial on
-    // the fixture's one-split scan without it; identity at scale
+    // the fixture's one-split scan without it; identity at scale. Keyed
+    // on the output order, so the sort reuses its range exchange
     minhashPortableFrame(ScaleOps.fanOut(
-        Tables.documents(s, d).where(col("doc_id") < 2000)))
+        Tables.documents(s, d).where(col("doc_id") < 2000),
+        asc_nulls_last("doc_id")))
       .orderBy(asc_nulls_last("doc_id"))
 
   /** The j40 signature digest as a ROW-LOCAL projection (batch ≡

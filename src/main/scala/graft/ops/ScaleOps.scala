@@ -43,8 +43,18 @@ object ScaleOps {
     * memoized, fixtures are immutable per run) to count ROW GROUPS — the
     * true upper bound on scan parallelism for parquet, which byte-range
     * split math overstates on the driver's single-row-group fixtures.
+    *
+    * `sortKey`: pass it when the fanned-out pass is a map-only kernel
+    * whose output is then ordered (or grouped) by a column already
+    * present at fan-out time — e.g. `asc_nulls_last("doc_id")` under a
+    * per-document digest ordered by doc_id. The widening is then a
+    * `repartitionByRange` on that key instead of round-robin: the later
+    * Sort's ordering is already satisfied, so the plan keeps ONE
+    * exchange, and the range sampling reads only the scan (after a
+    * round-robin fan-out, the sort's own range sampling re-runs the
+    * whole kernel). Still the identity when the scan is not starved.
     */
-  def fanOut(df: DataFrame): DataFrame = {
+  def fanOut(df: DataFrame, sortKey: Column*): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     // ANALYZED plan, not `.logical`: Spark 4's `read.parquet` leaves an
@@ -87,7 +97,9 @@ object ScaleOps {
         }
       }
     }.sum
-    if (splits >= target) df else df.repartition(target)
+    if (splits >= target) df
+    else if (sortKey.isEmpty) df.repartition(target)
+    else df.repartitionByRange(target, sortKey: _*)
   }
 
   // path → row-group count; bounded LRU on the Tables.countCache pattern

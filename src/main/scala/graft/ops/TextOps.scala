@@ -20,16 +20,15 @@ object TextOps {
 
   /** Left-fold dot product of two float vectors in double precision —
     * deterministic across engines per R7 (float×float exact in double;
-    * 0.0-init left fold == DuckDB list_reduce).
+    * 0.0-init left fold == DuckDB list_reduce). The native codegen'd
+    * [[graft.functions.DotProduct]] kernel: callers register it on their
+    * session first (`DotProduct.register`).
     */
   def dotCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+    call_function(graft.functions.DotProduct.name, a, b)
 
-  /** Left-fold L2 norm. */
-  def l2Col(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
+  /** Left-fold L2 norm (sqrt of the self dot product, same kernel). */
+  def l2Col(a: Column): Column = sqrt(dotCol(a, a))
 
   /** j1: exact dedup — normalize, content-hash, keep one survivor per hash.
     * The canonical 100 TB exact-dedup shape: one shuffle on the hash key
@@ -134,6 +133,7 @@ object TextOps {
     * against. Probe set is broadcast; corpus side never shuffles.
     */
   def j8_sim_topk: Q = (s, d) => {
+    graft.functions.DotProduct.register(s)
     val emb = Tables.embeddings(s, d)
     // norms precomputed once per row (not once per pair) — sqrt is
     // deterministic, so sim stays bit-identical to the inline form
@@ -155,10 +155,12 @@ object TextOps {
   }
 
   /** j10: L2 norms (R7 left fold). */
-  def j10_vec_norms: Q = (s, d) =>
+  def j10_vec_norms: Q = (s, d) => {
+    graft.functions.DotProduct.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), l2Col(col("embedding")).as("l2"))
       .orderBy(asc_nulls_last("vec_id")).limit(100)
+  }
 
   /** j14: n-gram Jaccard near-dup ranking — exact 5-char-shingle Jaccard
     * of each probe doc against the corpus, top-5 most similar per probe.
@@ -419,8 +421,9 @@ object TextOps {
     val fps = array_sort(array_distinct(
       call_function(graft.functions.Winnow.name, hashes, lit(w))))
     // fanOut: the fixture's single-row-group scan would run the whole
-    // digest pass on one core; identity at production split counts
-    ScaleOps.fanOut(Tables.documents(s, d))
+    // digest pass on one core; identity at production split counts.
+    // Keyed on the output order, so the sort reuses its range exchange
+    ScaleOps.fanOut(Tables.documents(s, d), asc_nulls_last("doc_id"))
       .select(col("doc_id"), lower(col("text")).as("t"))
       .where(length(col("t")) >= k)
       .select(col("doc_id"),
@@ -509,7 +512,8 @@ object TextOps {
       (col("doc_id") % 256).cast("string"), lit(".10."),
       (col("doc_id") % 100).cast("string"), lit(".7 call +1-555-"),
       lpad((col("doc_id") % 10000).cast("string"), 4, "0"))
-    ScaleOps.fanOut(Tables.documents(s, d))
+    // keyed fanOut (j33's): the regex scrub runs once, across all cores
+    ScaleOps.fanOut(Tables.documents(s, d), asc_nulls_last("doc_id"))
       .select(col("doc_id"), lower(col("text")).as("t"))
       .select(col("doc_id"), aug.as("a"))
       .select(col("doc_id"),

@@ -2,14 +2,26 @@ package graft
 
 import graft.functions.CosineSim
 import graft.ops.{TextOps, UdxOps}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class CosineSimSpec extends SparkSuite {
 
+  // the interpreted HOF fold, spelled out here rather than taken from
+  // TextOps.dotCol/l2Col (which run the native graft_dot kernel), so the
+  // reference stays independent of any native kernel
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+
+  private def hofL2(a: Column): Column =
+    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, x) => acc + x))
+
   test("k5 native expression reproduces j8 bit-for-bit") {
-    val hof = TextOps.j8_sim_topk(spark, sf).collect().map(_.toString)
+    val j8 = TextOps.j8_sim_topk(spark, sf).collect().map(_.toString)
     val native = UdxOps.k5_expr_cosine(spark, sf).collect().map(_.toString)
-    assert(native.sameElements(hof))
+    assert(native.sameElements(j8))
   }
 
   test("cosine values themselves are bit-identical to the HOF fold") {
@@ -20,8 +32,8 @@ class CosineSimSpec extends SparkSuite {
       .where(col("a") < col("b"))
     val both = pairs.select(
       expr("graft_cosine(ea, eb)").as("native"),
-      (TextOps.dotCol(col("ea"), col("eb"))
-        / (TextOps.l2Col(col("ea")) * TextOps.l2Col(col("eb")))).as("hof"))
+      (hofDot(col("ea"), col("eb"))
+        / (hofL2(col("ea")) * hofL2(col("eb")))).as("hof"))
     val diff = both.where(col("native") =!= col("hof")).count()
     assert(diff == 0, s"$diff pairs differ between codegen and HOF cosine")
   }

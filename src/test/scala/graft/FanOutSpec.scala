@@ -36,5 +36,19 @@ class FanOutSpec extends SparkSuite {
     // production path: enough files => identity decided from the file
     // LIST alone, zero footer reads
     assert(graft.ops.ScaleOps.fanOut(df) eq df)
+    assert(graft.ops.ScaleOps.fanOut(df, asc_nulls_last("id")) eq df)
+  }
+
+  test("keyed fanOut on a starved scan plans ONE range exchange under an orderBy on its key") {
+    val docs = Tables.documents(spark, sf) // 1 file, 1 row group
+    val key = asc_nulls_last("doc_id")
+    val out = graft.ops.ScaleOps.fanOut(docs, key)
+    assert(!(out eq docs), "keyed fanOut returned the identity on a 1-row-group scan")
+    val plan = out.select(col("doc_id"), md5(col("text")).as("h")).orderBy(key)
+      .queryExecution.executedPlan.toString
+    val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges == 1 && plan.toLowerCase.contains("rangepartitioning"),
+      s"expected the fan-out's range exchange to serve the sort too\n$plan")
+    assert(!plan.toLowerCase.contains("roundrobinpartitioning"), plan)
   }
 }

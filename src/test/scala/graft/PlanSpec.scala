@@ -199,28 +199,30 @@ class PlanSpec extends SparkSuite {
   test("j33 winnow fingerprint is a map-only pass — no shuffle before the output sort") {
     // the whole fingerprint (native shingle slice, per-gram md5, deque
     // sliding min, distinct+sort+digest) happens inside the document's
-    // own row; the only exchanges are the fanOut round-robin (local
-    // split-starvation remedy — identity at production split counts) and
-    // the rangepartitioning that orders the oracle output. At 100 TB the
-    // operator itself is a map-only scan.
-    val plan = physical(SparkEntry.queries("j33_winnow_fingerprint")(spark, sf))
-    val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 2 && plan.contains("rangepartitioning"),
-      s"expected only fanOut + the output-order range exchange\n$plan")
-    assert(!plan.contains("hashpartitioning"), plan)
-    assert(!plan.contains("Join"), plan)
+    // own row. The ONE exchange is the keyed fanOut's doc_id range
+    // partitioning (local split-starvation remedy — identity at
+    // production split counts), which already satisfies the output
+    // order, so the sort adds no second exchange and the kernel runs
+    // once. At 100 TB the operator itself is a map-only scan.
+    assertOneRangeExchange("j33_winnow_fingerprint")
   }
 
   test("j34 PII scrub shares j33's map-only shape") {
-    // same tolerance as the j33 pin: r20 added fanOut to j34 (isolated
-    // A/B 0.92 -> 0.51 s at sf0.1), so the plan may carry the round-robin
-    // split-starvation exchange — identity at production split counts —
-    // besides the output-order range exchange; still no hash shuffle and
-    // no join anywhere.
-    val plan = physical(SparkEntry.queries("j34_pii_scrub")(spark, sf))
+    // r20 added fanOut to j34 (isolated A/B 0.92 -> 0.51 s at sf0.1);
+    // keyed on doc_id, its range exchange is also the output order's —
+    // one exchange, no hash shuffle and no join anywhere.
+    assertOneRangeExchange("j34_pii_scrub")
+  }
+
+  /** Exactly one exchange, the doc_id range partitioning of the keyed
+    * fanOut: no round-robin, no hash shuffle, no join.
+    */
+  private def assertOneRangeExchange(q: String): Unit = {
+    val plan = physical(SparkEntry.queries(q)(spark, sf))
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 2 && plan.contains("rangepartitioning"),
-      s"expected only fanOut + the output-order range exchange\n$plan")
+    assert(exchanges == 1 && plan.contains("rangepartitioning"),
+      s"$q: expected exactly one exchange, the keyed fanOut's range exchange\n$plan")
+    assert(!plan.contains("roundrobinpartitioning"), plan)
     assert(!plan.contains("hashpartitioning"), plan)
     assert(!plan.contains("Join"), plan)
   }
@@ -269,14 +271,9 @@ class PlanSpec extends SparkSuite {
   }
 
   test("j39/j40 portable fingerprints are map-only (row-local, j33's shape)") {
-    for (q <- Seq("j39_simhash_portable", "j40_minhash_portable")) {
-      val plan = physical(SparkEntry.queries(q)(spark, sf))
-      val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-      assert(exchanges <= 2 && plan.contains("rangepartitioning"),
-        s"$q: expected only fanOut + the output-order range exchange\n$plan")
-      assert(!plan.contains("hashpartitioning"), plan)
-      assert(!plan.contains("Join"), plan)
-    }
+    // keyed fanOut like j33: one doc_id range exchange serves both the
+    // widening and the output order
+    Seq("j39_simhash_portable", "j40_minhash_portable").foreach(assertOneRangeExchange)
   }
 
   test("j42 RRF fusion: probe vectors broadcast (corpus embeddings never shuffle), no cartesian") {
