@@ -1433,50 +1433,22 @@ object HFileCodec {
     * pass, O(blockSize) heap beyond the block-index entries and the row
     * bloom (10 bits per distinct row, chunked) — a region file larger
     * than the heap writes fine. Returns bytes written.
+    *
+    * `includeMvcc` appends each cell's memstoreTS vlong and records
+    * `MAX_MEMSTORE_TS` in file-info (HBase flushes always do this;
+    * bulk-load files conventionally don't — the reader gates on the
+    * key's presence either way). `includeTags` appends each cell's tag
+    * bytes and records `hfile.MAX_TAGS_LEN`.
     */
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int): Long =
-    write(cells, sink, blockSize, DefaultIndexChunkEntries)
-
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int, indexChunkEntries: Int): Long =
-    write(cells, sink, blockSize, indexChunkEntries, DefaultBloomChunkKeys)
-
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int, indexChunkEntries: Int, bloomChunkKeys: Int): Long =
-    write(cells, sink, blockSize, indexChunkEntries, bloomChunkKeys,
-      CompressionNone)
-
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int, indexChunkEntries: Int, bloomChunkKeys: Int,
-            compression: Int): Long =
-    write(cells, sink, blockSize, indexChunkEntries, bloomChunkKeys,
-      compression, EncodingNone)
-
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int, indexChunkEntries: Int, bloomChunkKeys: Int,
-            compression: Int, encoding: Int): Long =
-    write(cells, sink, blockSize, indexChunkEntries, bloomChunkKeys,
-      compression, encoding, ChecksumCrc32c)
-
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int, indexChunkEntries: Int, bloomChunkKeys: Int,
-            compression: Int, encoding: Int, checksumType: Int): Long =
-    write(cells, sink, blockSize, indexChunkEntries, bloomChunkKeys,
-      compression, encoding, checksumType,
-      includeMvcc = false, includeTags = false)
-
-  /** Core writer. `includeMvcc` appends each cell's memstoreTS vlong and
-    * records `MAX_MEMSTORE_TS` in file-info (HBase flushes always do
-    * this; bulk-load files conventionally don't — the reader gates on
-    * the key's presence either way). `includeTags` appends each cell's
-    * tag bytes and records `hfile.MAX_TAGS_LEN`. Both default off, so
-    * files are byte-identical to r9's unless asked for.
-    */
-  def write(cells: Iterator[HCell], sink: java.io.OutputStream,
-            blockSize: Int, indexChunkEntries: Int, bloomChunkKeys: Int,
-            compression: Int, encoding: Int, checksumType: Int,
-            includeMvcc: Boolean, includeTags: Boolean): Long = {
+  def writeTo(cells: Iterator[HCell], sink: java.io.OutputStream,
+              blockSize: Int = 64 * 1024,
+              compression: Int = CompressionNone,
+              encoding: Int = EncodingNone,
+              checksumType: Int = ChecksumCrc32c,
+              includeMvcc: Boolean = false,
+              includeTags: Boolean = false,
+              indexChunkEntries: Int = DefaultIndexChunkEntries,
+              bloomChunkKeys: Int = DefaultBloomChunkKeys): Long = {
     require(indexChunkEntries > 0, "indexChunkEntries must be positive")
     require(bloomChunkKeys > 0, "bloomChunkKeys must be positive")
     require(compression == CompressionNone || compression == CompressionGz ||
@@ -1744,46 +1716,18 @@ object HFileCodec {
     written
   }
 
-  /** In-memory convenience form (specs, small files). */
-  def write(cells: Iterator[HCell], blockSize: Int = 64 * 1024): Array[Byte] = {
+  /** In-memory form of [[writeTo]] (specs, small files). */
+  def write(cells: Iterator[HCell], blockSize: Int = 64 * 1024,
+            compression: Int = CompressionNone,
+            encoding: Int = EncodingNone,
+            checksumType: Int = ChecksumCrc32c,
+            includeMvcc: Boolean = false,
+            includeTags: Boolean = false,
+            indexChunkEntries: Int = DefaultIndexChunkEntries,
+            bloomChunkKeys: Int = DefaultBloomChunkKeys): Array[Byte] = {
     val out = new ByteArrayOutputStream(1 << 20)
-    write(cells, out, blockSize)
-    out.toByteArray
-  }
-
-  /** In-memory convenience form with an explicit codec. */
-  def write(cells: Iterator[HCell], blockSize: Int,
-            compression: Int): Array[Byte] =
-    write(cells, blockSize, compression, EncodingNone)
-
-  /** In-memory convenience form with an explicit codec and encoding. */
-  def write(cells: Iterator[HCell], blockSize: Int,
-            compression: Int, encoding: Int): Array[Byte] =
-    write(cells, blockSize, compression, encoding, ChecksumCrc32c)
-
-  /** In-memory convenience form with explicit codec, encoding and
-    * checksum type.
-    */
-  def write(cells: Iterator[HCell], blockSize: Int, compression: Int,
-            encoding: Int, checksumType: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream(1 << 20)
-    write(cells, out, blockSize, DefaultIndexChunkEntries,
-      DefaultBloomChunkKeys, compression, encoding, checksumType)
-    out.toByteArray
-  }
-
-  /** In-memory convenience form that persists the v3 per-cell postfixes
-    * (memstoreTS vlong and/or tags) — the region-server flush shape.
-    */
-  def writeWithExtras(cells: Iterator[HCell], blockSize: Int = 64 * 1024,
-                      compression: Int = CompressionNone,
-                      encoding: Int = EncodingNone,
-                      includeMvcc: Boolean = true,
-                      includeTags: Boolean = false): Array[Byte] = {
-    val out = new ByteArrayOutputStream(1 << 20)
-    write(cells, out, blockSize, DefaultIndexChunkEntries,
-      DefaultBloomChunkKeys, compression, encoding, ChecksumCrc32c,
-      includeMvcc, includeTags)
+    writeTo(cells, out, blockSize, compression, encoding, checksumType,
+      includeMvcc, includeTags, indexChunkEntries, bloomChunkKeys)
     out.toByteArray
   }
 
@@ -2000,19 +1944,15 @@ object HFileCodec {
     * independent of file size: the region-server read shape. Relies on the
     * v3 layout invariant that the file-info block follows the last data
     * block, so the data section ends at the first non-`DATABLK*` magic.
-    */
-  def readStreaming(in: java.io.InputStream): Iterator[HCell] =
-    readStreaming(in, NoExtras)
-
-  /** Forward-streaming reader with explicit postfix flags: a pure
-    * forward stream meets the file-info (which gates mvcc/tags) only
-    * AFTER the data blocks, so a caller reading a file that carries
-    * postfixes must say so — [[graft.sources.HFileOps]] reads the
+    *
+    * A pure forward stream meets the file-info (which gates mvcc/tags)
+    * only AFTER the data blocks, so a caller reading a file that carries
+    * postfixes must pass `extras` — [[graft.sources.HFileOps]] reads the
     * trailer + file-info with one positioned read first and passes the
     * flags in.
     */
   def readStreaming(in: java.io.InputStream,
-                    extras: CellExtras): Iterator[HCell] = new Iterator[HCell] {
+                    extras: CellExtras = NoExtras): Iterator[HCell] = new Iterator[HCell] {
     private var blockIter: Iterator[HCell] = Iterator.empty
     private var done = false
 

@@ -2,9 +2,12 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
@@ -66,19 +69,6 @@ object HFileOps {
     case _                           => "put"
   }
 
-  /** Bulk-write a cells DataFrame as `regions` HFile region files under
-    * `dir`. Returns the file names written (small: one per region).
-    *
-    * Any `*.hfile` already under `dir` is deleted first: a prior run with
-    * a different region count (or dataset) at the same path must never
-    * leak stale region files into a later [[read]], which globs the whole
-    * directory.
-    *
-    * Files are written to a task-temp name then renamed — speculative or
-    * retried tasks can't leave a torn file behind (the same commit
-    * discipline as Hadoop output committers; rename is atomic on HDFS and
-    * local file://).
-    */
   /** HBase cell-tag wire format inside a cell's tag blob: repeated
     * `[2-byte BE tagLen][1-byte type][payload]`, tagLen = 1 + payload
     * length. The TTL tag (HBase `TagType.TTL_TAG_TYPE` = 8) carries one
@@ -137,6 +127,94 @@ object HFileOps {
   private[graft] def visOfTags(tags: Array[Byte]): Option[String] =
     tagOfType(tags, VisTagType).map(new String(_, UTF_8))
 
+  /** Make `dir/name` visible only once it is whole — the store-file
+    * commit rule of [public: o.a.h.hbase.regionserver.HRegionFileSystem
+    * #commitStoreFile]. `write` streams into a dot-prefixed `.tmp` file
+    * next to the destination, named from the task attempt id (a UUID on
+    * the driver), so speculative or retried attempts never share one and
+    * no reader glob (`*.hfile`, `*.gwal`, `flushed-*.seq`) sees it; the
+    * temp file is then renamed into place. A write or rename that throws
+    * removes the temp file and leaves any earlier `dir/name` as it was.
+    *
+    * Commit via FileContext.rename(OVERWRITE): Hadoop FileSystems report
+    * most failures by RETURNING FALSE, and a delete-then-rename pair loses
+    * that signal entirely. rename(OVERWRITE) raises on failure everywhere,
+    * and is a single atomic operation on filesystems that provide one
+    * (HDFS). On file:// the local AbstractFileSystem still implements
+    * overwrite as delete+rename internally, so the kill window narrows but
+    * does not vanish there — acceptable for the local smoke; the production
+    * target is a shared FS with atomic rename.
+    */
+  private[graft] def commitFile(dir: HPath, name: String, conf: Configuration)(
+      write: java.io.OutputStream => Unit): Unit = {
+    val attempt = Option(TaskContext.get()).map(_.taskAttemptId().toString)
+      .getOrElse(java.util.UUID.randomUUID().toString)
+    val tmp = new HPath(dir, s".$name.$attempt.tmp")
+    val dst = new HPath(dir, name)
+    val fs = dir.getFileSystem(conf)
+    try {
+      val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
+      try write(os) finally os.close()
+      try FileContext.getFileContext(dst.toUri, conf)
+        .rename(tmp, dst, Options.Rename.OVERWRITE)
+      catch { case e: java.io.IOException =>
+        throw new java.io.IOException(s"commitFile: failed to rename $tmp -> $dst", e)
+      }
+    } catch { case e: Throwable =>
+      try fs.delete(tmp, false) catch { case NonFatal(d) => e.addSuppressed(d) }
+      throw e
+    }
+  }
+
+  /** Driver-side preamble of a write that replaces its OWN group of files:
+    * create `dir`, then delete what matches `glob` under it (files outside
+    * the group stay).
+    */
+  private[graft] def clearGroup(dir: HPath, glob: String, conf: Configuration): Unit = {
+    val fs = dir.getFileSystem(conf)
+    fs.mkdirs(dir)
+    Option(fs.globStatus(new HPath(dir, glob))).getOrElse(Array.empty)
+      .foreach(st => fs.delete(st.getPath, false))
+  }
+
+  /** Cut a key-sorted iterator into its runs of equal `key` and call
+    * `f(key, run)` once per run, in order; `run` ends where the key
+    * changes and `f` must consume all of it. Returns `f`'s results —
+    * how one task writes one file per key run in O(1) files open.
+    */
+  private[graft] def mapRuns[A, K, B](it: Iterator[A])(key: A => K)(
+      f: (K, Iterator[A]) => B): Seq[B] = {
+    val in = it.buffered
+    val out = Seq.newBuilder[B]
+    while (in.hasNext) {
+      val k = key(in.head)
+      out += f(k, new Iterator[A] {
+        def hasNext: Boolean = in.hasNext && key(in.head) == k
+        def next(): A = in.next()
+      })
+    }
+    out.result()
+  }
+
+  /** The KeyValue sort: the `leading` key columns (rowkey and cf, in the
+    * caller's order) ascending, then qualifier, ts DESC, type-code DESC —
+    * the type tiebreak is HBase's comparator rule that deletes sort before
+    * puts at an equal timestamp (DeleteFamily's empty qualifier already
+    * places it before all of the family's columns).
+    */
+  private def keyValueOrder(leading: String*): Seq[Column] =
+    leading.map(col(_).asc) ++ Seq(col("qualifier").asc, col("ts").desc,
+      expr("CASE op WHEN 'delete_family' THEN 14 WHEN 'delete' THEN 12 " +
+        "WHEN 'delete_version' THEN 8 ELSE 4 END").desc)
+
+  /** Bulk-write a cells DataFrame as `regions` HFile region files under
+    * `dir`. Returns the file names written (small: one per region).
+    *
+    * Any `*.hfile` already under `dir` is deleted first: a prior run with
+    * a different region count (or dataset) at the same path must never
+    * leak stale region files into a later [[read]], which globs the whole
+    * directory. Each region file is made visible by [[commitFile]].
+    */
   def bulkWrite(cells: DataFrame, dir: String, regions: Int,
                 blockSize: Int = 64 * 1024,
                 compression: Int = HFileCodec.CompressionNone,
@@ -146,25 +224,13 @@ object HFileOps {
                 ttlMsCol: Option[String] = None,
                 visCol: Option[String] = None): Seq[String] = {
     val hadoopConf = cells.sparkSession.sparkContext.hadoopConfiguration
-    val dirPath = new HPath(dir)
-    val dfs = dirPath.getFileSystem(hadoopConf)
-    dfs.mkdirs(dirPath)
     // generation >= 0 = LSM store-file mode: this write adds/replaces ONE
     // generation's files and leaves the others for [[mergedRead]]'s
     // merge-on-read (HBase accrues store files per flush/bulk-load the
     // same way); the default (-1) keeps whole-directory-replace semantics.
-    val ownGlob = if (generation >= 0) f"gen-$generation%03d-*.hfile" else "*.hfile"
-    Option(dfs.globStatus(new HPath(dirPath, ownGlob)))
-      .getOrElse(Array.empty)
-      .foreach(st => dfs.delete(st.getPath, false))
+    clearGroup(new HPath(dir),
+      if (generation >= 0) f"gen-$generation%03d-*.hfile" else "*.hfile", hadoopConf)
     val serConf = new SerializableConfiguration(hadoopConf)
-    // KeyValue order: (rowkey, cf, qualifier, ts DESC, type-code DESC) —
-    // the type tiebreak is HBase's comparator rule that deletes sort
-    // before puts at an equal timestamp (DeleteFamily's empty qualifier
-    // already places it before all of the family's columns)
-    val typeRank = expr(
-      "CASE op WHEN 'delete_family' THEN 14 WHEN 'delete' THEN 12 " +
-        "WHEN 'delete_version' THEN 8 ELSE 4 END")
     val outCols = Seq("rowkey", "cf", "qualifier", "ts", "value", "op") ++
       ttlMsCol ++ visCol
     val ttlIdx = ttlMsCol.map(_ => 6)
@@ -174,8 +240,7 @@ object HFileOps {
     val withTags = ttlMsCol.isDefined || visCol.isDefined
     val sorted = cells
       .repartitionByRange(regions, col("rowkey"))
-      .sortWithinPartitions(col("rowkey").asc, col("cf").asc,
-        col("qualifier").asc, col("ts").desc, typeRank.desc)
+      .sortWithinPartitions(keyValueOrder("rowkey", "cf"): _*)
       .select(outCols.map(col): _*)
     sorted.rdd.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
@@ -203,36 +268,14 @@ object HFileOps {
               }
             })
         }
-        val fs = new HPath(dir).getFileSystem(serConf.value)
         val name =
           if (generation >= 0) f"gen-$generation%03d-region-$pid%05d.hfile"
           else f"region-$pid%05d.hfile"
-        val tmp = new HPath(dir, s".$name.${TaskContext.get().taskAttemptId()}.tmp")
         // stream the codec straight to the filesystem: a region file bigger
-        // than the task heap writes fine (O(blockSize) memory — HFileCodec.write)
-        val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-        try HFileCodec.write(cellsIt, os, blockSize,
-          HFileCodec.DefaultIndexChunkEntries, HFileCodec.DefaultBloomChunkKeys,
-          compression, encoding, HFileCodec.ChecksumCrc32c,
-          includeMvcc = false, includeTags = withTags)
-        finally os.close()
-        val dst = new HPath(dir, name)
-        // Commit via FileContext.rename(OVERWRITE): Hadoop FileSystems
-        // report most failures by RETURNING FALSE, and the previous
-        // delete-then-rename pair lost that signal entirely. rename(OVERWRITE)
-        // raises on failure everywhere, and is a single atomic operation on
-        // filesystems that provide one (HDFS). On file:// the local
-        // AbstractFileSystem still implements overwrite as delete+rename
-        // internally, so the kill window narrows but does not vanish there —
-        // acceptable for the local smoke; the production target is a
-        // shared FS with atomic rename.
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          dst.toUri, serConf.value)
-        try fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        catch { case e: java.io.IOException =>
-          throw new java.io.IOException(
-            s"bulkWrite: failed to commit $tmp -> $dst", e)
-        }
+        // than the task heap writes fine (O(blockSize) memory — HFileCodec.writeTo)
+        commitFile(new HPath(dir), name, serConf.value)(os =>
+          HFileCodec.writeTo(cellsIt, os, blockSize, compression, encoding,
+            includeTags = withTags))
         Iterator.single(name)
       }
     }.collect().toSeq.sorted
@@ -860,7 +903,7 @@ object HFileOps {
     * region's parent store files as ONE new store file under `outDir`
     * (`region-NNNNN.hfile` by group index). One task per merged region
     * streams its parents' cells in range order straight into
-    * [[HFileCodec.write]] — zero shuffle, O(blockSize) task memory, the
+    * [[HFileCodec.writeTo]] — zero shuffle, O(blockSize) task memory, the
     * shape a region server's post-merge compaction has at any region
     * size. The rewrite is RAW (every version and tombstone kept — minor-
     * compaction semantics); version/tombstone resolution stays the read
@@ -872,35 +915,16 @@ object HFileOps {
                      compression: Int = HFileCodec.CompressionNone,
                      encoding: Int = HFileCodec.EncodingNone): Seq[String] = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val outPath = new HPath(outDir)
-    val dfs = outPath.getFileSystem(hadoopConf)
-    dfs.mkdirs(outPath)
-    Option(dfs.globStatus(new HPath(outPath, "*.hfile")))
-      .getOrElse(Array.empty)
-      .foreach(st => dfs.delete(st.getPath, false))
+    clearGroup(new HPath(outDir), "*.hfile", hadoopConf)
     val serConf = new SerializableConfiguration(hadoopConf)
     spark.sparkContext
       .parallelize(groups.zipWithIndex, math.max(1, groups.size))
       .map { case (parents, i) =>
         val cellsIt = parents.iterator.flatMap(p =>
           streamFileCells(p, serConf.value))
-        val fs = new HPath(outDir).getFileSystem(serConf.value)
         val name = f"region-$i%05d.hfile"
-        val tmp = new HPath(outDir,
-          s".$name.${TaskContext.get().taskAttemptId()}.tmp")
-        val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-        try HFileCodec.write(cellsIt, os, blockSize,
-          HFileCodec.DefaultIndexChunkEntries, HFileCodec.DefaultBloomChunkKeys,
-          compression, encoding)
-        finally os.close()
-        val dst = new HPath(outDir, name)
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          dst.toUri, serConf.value)
-        try fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        catch { case e: java.io.IOException =>
-          throw new java.io.IOException(
-            s"compactRegions: failed to commit $tmp -> $dst", e)
-        }
+        commitFile(new HPath(outDir), name, serConf.value)(os =>
+          HFileCodec.writeTo(cellsIt, os, blockSize, compression, encoding))
         name
       }.collect().toSeq.sorted
   }
@@ -925,56 +949,26 @@ object HFileOps {
                         compression: Int = HFileCodec.CompressionNone,
                         encoding: Int = HFileCodec.EncodingNone): Seq[String] = {
     val hadoopConf = cells.sparkSession.sparkContext.hadoopConfiguration
-    val dirPath = new HPath(dir)
-    val dfs = dirPath.getFileSystem(hadoopConf)
-    dfs.mkdirs(dirPath)
-    Option(dfs.globStatus(new HPath(dirPath, "cf=*/*.hfile")))
-      .getOrElse(Array.empty)
-      .foreach(st => dfs.delete(st.getPath, false))
+    clearGroup(new HPath(dir), "cf=*/*.hfile", hadoopConf)
     val serConf = new SerializableConfiguration(hadoopConf)
-    val typeRank = expr(
-      "CASE op WHEN 'delete_family' THEN 14 WHEN 'delete' THEN 12 " +
-        "WHEN 'delete_version' THEN 8 ELSE 4 END")
     val sorted = cells
       .repartitionByRange(regions, col("rowkey"))
-      .sortWithinPartitions(col("cf").asc, col("rowkey").asc,
-        col("qualifier").asc, col("ts").desc, typeRank.desc)
+      .sortWithinPartitions(keyValueOrder("cf", "rowkey"): _*)
       .select("rowkey", "cf", "qualifier", "ts", "value", "op")
-    sorted.rdd.mapPartitions { it0 =>
+    sorted.rdd.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      val it = it0.buffered
-      val written = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val cf = it.head.getString(1)
-        // iterator view over this family's run — hands the codec a
-        // stream that ends at the next family, consuming nothing extra
-        val run: Iterator[HFileCodec.HCell] = new Iterator[HFileCodec.HCell] {
-          def hasNext: Boolean = it.hasNext && it.head.getString(1) == cf
-          def next(): HFileCodec.HCell = {
-            val r = it.next()
+      mapRuns(it)(_.getString(1)) { (cf, run) =>
+        val name = f"region-$pid%05d.hfile"
+        commitFile(new HPath(dir, s"cf=$cf"), name, serConf.value)(os =>
+          HFileCodec.writeTo(run.map { r =>
             HFileCodec.HCell(
               r.getString(0).getBytes(UTF_8), r.getString(1).getBytes(UTF_8),
               r.getString(2).getBytes(UTF_8), r.getLong(3),
               typOf(r.getString(5)),
               java.nio.ByteBuffer.allocate(8).putDouble(r.getDouble(4)).array())
-          }
-        }
-        val fs = new HPath(dir).getFileSystem(serConf.value)
-        val name = f"cf=$cf/region-$pid%05d.hfile"
-        val tmp = new HPath(dir,
-          f"cf=$cf%s/.region-$pid%05d.${TaskContext.get().taskAttemptId()}%d.tmp")
-        fs.mkdirs(new HPath(dir, s"cf=$cf"))
-        val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-        try HFileCodec.write(run, os, blockSize,
-          HFileCodec.DefaultIndexChunkEntries, HFileCodec.DefaultBloomChunkKeys,
-          compression, encoding)
-        finally os.close()
-        val dst = new HPath(dir, name)
-        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, serConf.value)
-          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        written += name
-      }
-      written.result().iterator
+          }, os, blockSize, compression, encoding))
+        s"cf=$cf/$name"
+      }.iterator
     }.collect().toSeq.sorted
   }
 
@@ -1123,10 +1117,8 @@ object HFileOps {
   def snapshot(spark: SparkSession, files: Seq[String],
                manifestPath: String): Unit = {
     val p = new HPath(manifestPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(files.sorted.mkString("", "\n", "\n").getBytes(UTF_8))
-    finally out.close()
+    commitFile(p.getParent, p.getName, spark.sparkContext.hadoopConfiguration)(
+      _.write(files.sorted.mkString("", "\n", "\n").getBytes(UTF_8)))
   }
 
   /** Clone-read of a [[snapshot]]: resolve the manifest's pinned file
@@ -1307,12 +1299,10 @@ object HFileOps {
       .foreach { src =>
         val conf = serConf.value
         val sp = new HPath(src)
-        val sfs = sp.getFileSystem(conf)
-        val dp = new HPath(new HPath(dst), sp.getName)
-        org.apache.hadoop.fs.FileUtil.copy(
-          sfs, sp, dp.getFileSystem(conf), dp,
-          false /* deleteSource */, true /* overwrite */, conf)
-        ()
+        val in = sp.getFileSystem(conf).open(sp)
+        try commitFile(new HPath(dst), sp.getName, conf)(os =>
+          org.apache.hadoop.io.IOUtils.copyBytes(in, os, 1 << 16, false))
+        finally in.close()
       }
   }
 

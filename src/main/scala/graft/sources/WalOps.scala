@@ -94,17 +94,12 @@ object WalOps {
   def writeWal(cells: DataFrame, dir: String, segments: Int,
                prefix: String = "wal"): Int = {
     val hadoopConf = cells.sparkSession.sparkContext.hadoopConfiguration
-    val dirPath = new HPath(dir)
-    val dfs = dirPath.getFileSystem(hadoopConf)
-    dfs.mkdirs(dirPath)
     // Segment names are `<prefix>-NNNNN.gwal` (exactly five digits), so
     // the replace-own-group delete globs on that exact shape: a group
     // whose prefix extends this one (e.g. "wal-b0001" vs "wal") can
     // never be swept up by its shorter sibling's rewrite.
-    Option(dfs.globStatus(new HPath(dirPath,
-        s"$prefix-[0-9][0-9][0-9][0-9][0-9].gwal")))
-      .getOrElse(Array.empty)
-      .foreach(st => dfs.delete(st.getPath, false))
+    HFileOps.clearGroup(new HPath(dir),
+      s"$prefix-[0-9][0-9][0-9][0-9][0-9].gwal", hadoopConf)
     val serConf = new SerializableConfiguration(hadoopConf)
     val sorted = cells
       .repartitionByRange(segments, col("rowkey"))
@@ -115,21 +110,8 @@ object WalOps {
       val pid = TaskContext.getPartitionId()
       if (it.isEmpty) Iterator.empty
       else {
-        val fs = new HPath(dir).getFileSystem(serConf.value)
-        val name = f"$prefix%s-$pid%05d.gwal"
-        val tmp = new HPath(dir, s".$name.${TaskContext.get().taskAttemptId()}.tmp")
-        val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-        try {
-          os.write(Magic)
-          it.foreach { r =>
-            writeRecord(os, encodeRecord(r.getLong(0), r.getString(1),
-              r.getString(2), r.getString(3), r.getLong(4),
-              if (r.isNullAt(5)) None else Some(r.getDouble(5)), r.getString(6)))
-          }
-        } finally os.close()
-        val dst = new HPath(dir, name)
-        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, serConf.value)
-          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        HFileOps.commitFile(new HPath(dir), f"$prefix%s-$pid%05d.gwal",
+            serConf.value)(writeSegment(_, it, 0))
         Iterator.single(1)
       }
     }.sum().toInt
@@ -139,9 +121,23 @@ object WalOps {
     os.write(v >>> 24); os.write(v >>> 16); os.write(v >>> 8); os.write(v)
   }
 
-  /** One length-prefixed, CRC-framed record — the segment wire unit
-    * shared by [[writeWal]] and [[replicate]]'s re-encode.
+  /** One segment: the magic, then one record per row of `rows`, whose
+    * (seq, rowkey, cf, qualifier, ts, value, op) columns start at `from`
+    * — shared by [[writeWal]], [[replicate]]'s re-encode and
+    * [[splitWal]].
     */
+  private def writeSegment(os: java.io.OutputStream, rows: Iterator[Row],
+                           from: Int): Unit = {
+    os.write(Magic)
+    rows.foreach { r =>
+      writeRecord(os, encodeRecord(r.getLong(from), r.getString(from + 1),
+        r.getString(from + 2), r.getString(from + 3), r.getLong(from + 4),
+        if (r.isNullAt(from + 5)) None else Some(r.getDouble(from + 5)),
+        r.getString(from + 6)))
+    }
+  }
+
+  /** One length-prefixed, CRC-framed record — the segment wire unit. */
   private def writeRecord(os: java.io.OutputStream, rec: Array[Byte]): Unit = {
     val crc = new CRC32C
     crc.update(rec)
@@ -323,25 +319,12 @@ object WalOps {
     spark.sparkContext
       .parallelize(names, names.size)
       .map { name =>
-        val src = new HPath(primaryDir, name)
-        val rfs = new HPath(replicaDir).getFileSystem(serConf.value)
-        val tmp = new HPath(replicaDir,
-          s".$name.${TaskContext.get().taskAttemptId()}.tmp")
-        val os = new java.io.BufferedOutputStream(rfs.create(tmp, true), 1 << 16)
         // stream decode→re-encode: verified prefix only (a torn tail
         // stops the iterator), O(record) memory at any segment size
-        val in = openRaw(src, serConf.value)
-        try {
-          os.write(Magic)
-          decodeStream(in).foreach { r =>
-            writeRecord(os, encodeRecord(r.getLong(0), r.getString(1),
-              r.getString(2), r.getString(3), r.getLong(4),
-              if (r.isNullAt(5)) None else Some(r.getDouble(5)), r.getString(6)))
-          }
-        } finally { in.close(); os.close() }
-        val dst = new HPath(replicaDir, name)
-        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, serConf.value)
-          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        val in = openRaw(new HPath(primaryDir, name), serConf.value)
+        try HFileOps.commitFile(new HPath(replicaDir), name, serConf.value)(
+          writeSegment(_, decodeStream(in), 0))
+        finally in.close()
         1
       }.sum().toInt
   }
@@ -379,13 +362,8 @@ object WalOps {
                regionIdOf: org.apache.spark.sql.Column, assign: DataFrame,
                recoveredDir: String, segments: Int): Int = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val recPath = new HPath(recoveredDir)
-    val rfs = recPath.getFileSystem(hadoopConf)
-    rfs.mkdirs(recPath)
-    Option(rfs.globStatus(new HPath(recPath,
-        "*/rec-[0-9][0-9][0-9][0-9][0-9].gwal")))
-      .getOrElse(Array.empty)
-      .foreach(st => rfs.delete(st.getPath, false))
+    HFileOps.clearGroup(new HPath(recoveredDir),
+      "*/rec-[0-9][0-9][0-9][0-9][0-9].gwal", hadoopConf)
     val routed = readWal(spark, walDir)
       .withColumn("region_id", regionIdOf)
       .join(broadcast(assign.select(col("region_id"), col("to_server"))),
@@ -404,39 +382,12 @@ object WalOps {
         "value", "op")
     sorted.rdd.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      val fs = new HPath(recoveredDir).getFileSystem(serConf.value)
-      var cur: String = null
-      var os: java.io.BufferedOutputStream = null
-      var tmp: HPath = null
-      var written = 0
       // partitions are sorted by host first, so each host is ONE
-      // contiguous run per partition: roll the output file on host change
-      def roll(): Unit = if (os != null) {
-        os.close()
-        val dst = new HPath(s"$recoveredDir/$cur", f"rec-$pid%05d.gwal")
-        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, serConf.value)
-          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        os = null
-        written += 1
-      }
-      it.foreach { r =>
-        val srv = r.getString(0)
-        if (srv != cur) {
-          roll()
-          cur = srv
-          val hostDir = new HPath(recoveredDir, srv)
-          fs.mkdirs(hostDir)
-          tmp = new HPath(hostDir,
-            f".rec-$pid%05d.gwal.${TaskContext.get().taskAttemptId()}%d.tmp")
-          os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-          os.write(Magic)
-        }
-        writeRecord(os, encodeRecord(r.getLong(1), r.getString(2),
-          r.getString(3), r.getString(4), r.getLong(5),
-          if (r.isNullAt(6)) None else Some(r.getDouble(6)), r.getString(7)))
-      }
-      roll()
-      Iterator.single(written)
+      // contiguous run per partition: one recovered segment per run
+      Iterator.single(HFileOps.mapRuns(it)(_.getString(0)) { (srv, run) =>
+        HFileOps.commitFile(new HPath(recoveredDir, srv), f"rec-$pid%05d.gwal",
+          serConf.value)(writeSegment(_, run, 1))
+      }.size)
     }.sum().toInt
   }
 
@@ -518,7 +469,9 @@ object WalOps {
     * afterwards those log entries are dead weight (HBase would archive
     * the rolled segments). Each flush writes only what arrived since
     * the previous one, so repeated flushes never double-persist
-    * (WalSpec pins the two-flush case).
+    * (WalSpec pins the two-flush case). The marker commits through
+    * [[HFileOps.commitFile]]: a torn marker would make [[recover]] fail
+    * to parse the store's flush point.
     */
   def flush(spark: SparkSession, walDir: String, storeDir: String,
             upToSeq: Long, gen: Int, regions: Int): Unit = {
@@ -529,10 +482,9 @@ object WalOps {
     HFileOps.bulkWrite(cells, storeDir, regions,
       compression = HFileCodec.CompressionGz,
       encoding = HFileCodec.EncodingFastDiff, generation = gen)
-    val marker = new HPath(storeDir, f"flushed-$gen%03d.seq")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(marker, true)
-    try os.write(upToSeq.toString.getBytes(UTF_8)) finally os.close()
+    HFileOps.commitFile(new HPath(storeDir), f"flushed-$gen%03d.seq",
+      spark.sparkContext.hadoopConfiguration)(
+      _.write(upToSeq.toString.getBytes(UTF_8)))
   }
 
   /** The recovered region view: flushed HFile generations ∪ the WAL

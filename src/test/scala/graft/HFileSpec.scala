@@ -123,9 +123,7 @@ class HFileSpec extends SparkSuite {
     // tiny blocks (1 cell each) + a tiny chunk cap force the escalation a
     // 100 TB region file would hit at the real 16k default
     val cells = (0 until 5000).map(i => cell(f"r$i%06d", "q", 1000L + i, i.toDouble))
-    val out = new java.io.ByteArrayOutputStream(1 << 20)
-    HFileCodec.write(cells.iterator, out, blockSize = 1, indexChunkEntries = 128)
-    val bytes = out.toByteArray
+    val bytes = HFileCodec.write(cells.iterator, blockSize = 1, indexChunkEntries = 128)
     val tr = HFileCodec.readTrailer(bytes)
     // 5000 single-cell blocks / 128 per chunk = 40 root entries, not 5000
     assert(tr.dataIndexCount == math.ceil(5000.0 / 128).toInt,
@@ -148,8 +146,7 @@ class HFileSpec extends SparkSuite {
     val cells = (0 until 20).map(i => cell(f"r$i%06d", "q", 1000L + i, i.toDouble))
     val ex = intercept[IllegalArgumentException] {
       // 20 single-cell blocks > 4² two-level capacity
-      HFileCodec.write(cells.iterator, new java.io.ByteArrayOutputStream(),
-        blockSize = 1, indexChunkEntries = 4)
+      HFileCodec.write(cells.iterator, blockSize = 1, indexChunkEntries = 4)
     }
     assert(ex.getMessage.contains("two-level index capacity"))
   }
@@ -175,10 +172,8 @@ class HFileSpec extends SparkSuite {
     // tiny chunks force many bloom chunks; membership must still resolve
     // through the meta index (first-row ranges), not just chunk 0
     val cells = (0 until 3000).map(i => cell(f"r$i%06d", "q", 1000L + i, i.toDouble))
-    val out = new java.io.ByteArrayOutputStream(1 << 20)
-    HFileCodec.write(cells.iterator, out, 8 * 1024,
-      HFileCodec.DefaultIndexChunkEntries, 128) // 3000 rows / 128 → 24 chunks
-    val bytes = out.toByteArray
+    val bytes = HFileCodec.write(cells.iterator, blockSize = 8 * 1024,
+      bloomChunkKeys = 128) // 3000 rows / 128 → 24 chunks
     (0 until 3000 by 53).foreach { i =>
       assert(HFileCodec.mayContainRow(bytes, f"r$i%06d".getBytes(UTF_8)))
     }
@@ -754,7 +749,7 @@ class HFileSpec extends SparkSuite {
     for (enc <- Seq(HFileCodec.EncodingNone, HFileCodec.EncodingPrefix,
         HFileCodec.EncodingDiff, HFileCodec.EncodingFastDiff,
         HFileCodec.EncodingRowIndexV1)) {
-      val bytes = HFileCodec.writeWithExtras(cells.iterator, 4 * 1024,
+      val bytes = HFileCodec.write(cells.iterator, 4 * 1024,
         HFileCodec.CompressionGz, enc, includeMvcc = true, includeTags = true)
       val info = HFileCodec.readFileInfo(bytes)
       // the reader's open-time gate: key presence, value = the max
@@ -793,7 +788,7 @@ class HFileSpec extends SparkSuite {
       cell(f"r$i%06d", "q", 1000L + i, i.toDouble)
         .copy(memstoreTS = 500L + i)
     }
-    val bytes = HFileCodec.writeWithExtras(cells.iterator, 4 * 1024,
+    val bytes = HFileCodec.write(cells.iterator, 4 * 1024,
       HFileCodec.CompressionNone, HFileCodec.EncodingRowIndexV1,
       includeMvcc = true, includeTags = true)
     Files.write(dir.resolve("region-00000.hfile"), bytes)

@@ -537,7 +537,7 @@ object HFileFuzzProps extends Properties("HFileFuzz") {
         HFileCodec.EncodingDiff, HFileCodec.EncodingFastDiff,
         HFileCodec.EncodingRowIndexV1)) { (cells0, codec, enc) =>
       val cells = cells0.sortBy(c => new String(c.row, UTF_8))
-      val file = HFileCodec.writeWithExtras(cells.iterator, 4096, codec, enc,
+      val file = HFileCodec.write(cells.iterator, 4096, codec, enc,
         includeMvcc = true, includeTags = true)
       val info = HFileCodec.readFileInfo(file)
       val back = HFileCodec.read(file).toSeq
@@ -555,7 +555,7 @@ object HFileFuzzProps extends Properties("HFileFuzz") {
     forAll(Gen.chooseNum(1, 40).flatMap(Gen.listOfN(_, extrasCellGen)),
       Gen.chooseNum(0, Int.MaxValue), Gen.chooseNum(-128, 127)) {
       (cells0, posSeed, v) =>
-        val file = HFileCodec.writeWithExtras(
+        val file = HFileCodec.write(
           cells0.sortBy(c => new String(c.row, UTF_8)).iterator,
           4096, HFileCodec.CompressionNone, HFileCodec.EncodingNone,
           includeMvcc = true, includeTags = true)

@@ -344,6 +344,9 @@ class WalSpec extends SparkSuite {
     WalOps.writeWal(walCells(300), walDir, segments = 2)
     WalOps.flush(spark, walDir, storeDir, upToSeq = 99L, gen = 0, regions = 2)
     WalOps.flush(spark, walDir, storeDir, upToSeq = 199L, gen = 1, regions = 2)
+    // markers and region files commit through a temp file that never stays
+    val leftovers = new java.io.File(storeDir).list().filter(_.contains(".tmp"))
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
     // each flush persists only its memstore DELTA (gen-0 seqs 0-99,
     // gen-1 seqs 100-199); replay covers 200-299 — nothing twice
     val rec = WalOps.recover(spark, walDir, storeDir)
