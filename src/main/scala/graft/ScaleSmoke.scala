@@ -390,8 +390,8 @@ object ScaleSmoke {
         // this entry runs the SAME shingle-edge construction + CC over
         // the FULL scaled corpus (50k docs at the 100x smoke) — the
         // convergence probe, per-round localCheckpoint cadence, and the
-        // loud iteration cap all at real width (rounds logged by
-        // clusters() itself). The planted every-100th near-dups make the
+        // loud iteration cap all at real width (rounds in this entry's
+        // line). The planted every-100th near-dups make the
         // component set non-vacuous by construction.
         val edges = ops.DedupOps.shingleEdges(Tables.documents(spark, dir))
         val labels = ops.DedupOps.clustersFromEdges(edges, canonicalPairs = true)
@@ -518,10 +518,14 @@ object ScaleSmoke {
         .filter { case (n, _) => only.forall(_.contains(n)) }
 
     val results = runs.map { case (name, fn) =>
+      // -1 = this entry ran no connected components
+      ops.DedupOps.lastCcRounds = -1
       val t0 = System.nanoTime()
       val rows = fn()
       val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"$name%-26s $sec%8.2fs  ($rows rows)")
+      val cc = ops.DedupOps.lastCcRounds
+      System.err.println(f"$name%-26s $sec%8.2fs  ($rows rows)" +
+        (if (cc >= 0) s"  cc $cc star rounds" else ""))
       // Release this workload's driver/executor state so the full
       // ~100-workload one-JVM battery holds the DEFAULT 8g heap
       // (VERDICT r19 task 3: at 98 workloads the battery OOM'd on a

@@ -338,10 +338,6 @@ object DedupOps {
       i += 1
     }
     lastCcRounds = i
-    // one line per CC run: rounds used vs cap — the number a scale
-    // operator (and the smoke log) needs to size maxIter from evidence
-    System.err.println(s"[graft cc] ${if (converged) "converged" else "CAP HIT"} " +
-      s"after $i/$maxIter star rounds")
     // LOUD on truncation (ADVICE r10): exiting at the cap without a stable
     // fixpoint means some component still isn't a star — silently labeling
     // from it corrupts every downstream canonical-doc choice (and the j38

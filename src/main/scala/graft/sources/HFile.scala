@@ -2015,7 +2015,7 @@ object HFileCodec {
     def next(): HCell = { advance(); blockIter.next() }
   }
 
-  private def hasMagic(file: Array[Byte], off: Int, magic: Array[Byte]): Boolean =
+  private[sources] def hasMagic(file: Array[Byte], off: Int, magic: Array[Byte]): Boolean =
     java.util.Arrays.equals(java.util.Arrays.copyOfRange(file, off, off + 8), magic)
 
   /** Parse one index block's (offset, onDiskSize) child entries — the

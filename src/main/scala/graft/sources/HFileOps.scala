@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
+import org.apache.hadoop.fs.{FSDataInputStream, FileContext, Options, Path => HPath}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -305,12 +305,14 @@ object HFileOps {
   def regionCountForBytes(sourceBytes: Long): Int =
     math.min(4096L, math.max(4L, (sourceBytes + (1L << 24) - 1) / (1L << 24))).toInt
 
+  /** Index entries as the codec parses them: (offset, onDiskSize, first key). */
+  private type Entries = Seq[(Long, Int, Array[Byte])]
+
   /** One Hadoop positioned-read of a whole block (header first for the
-    * length, then header+payload) — the random-access primitive of the
-    * point-get path.
+    * length, then header+payload) — the random-access primitive of every
+    * seek path.
     */
-  private def readBlockAt(in: org.apache.hadoop.fs.FSDataInputStream,
-                          off: Long): Array[Byte] = {
+  private def readBlockAt(in: FSDataInputStream, off: Long): Array[Byte] = {
     val hdr = new Array[Byte](HFileCodec.HeaderSize)
     in.readFully(off, hdr)
     val payloadLen = java.nio.ByteBuffer.wrap(hdr, 8, 4).getInt
@@ -321,134 +323,207 @@ object HFileOps {
     block
   }
 
-  private def magicAt(b: Array[Byte], magic: Array[Byte]): Boolean =
-    java.util.Arrays.equals(java.util.Arrays.copyOfRange(b, 0, 8), magic)
-
-  /** Per-file postfix flags from the file-info block at `fileInfoOffset`
-    * (absolute) — the open-time mvcc/tags gate every read path applies
-    * before decoding cells. Files without a file-info block (offset < 0)
-    * carry no postfixes by construction.
-    */
-  private def extrasAt(blockAt: Long => Array[Byte],
-                       fileInfoOffset: Long): HFileCodec.CellExtras =
-    if (fileInfoOffset < 0) HFileCodec.NoExtras
-    else HFileCodec.extrasOf(HFileCodec.parseFileInfoPayload(
-      HFileCodec.blockPayload(blockAt(fileInfoOffset), 0)))
-
-  /** Region-file listing under `dir` + a serializable conf for executor-side
-    * opens — one name per region, bounded metadata, shared by every reader.
-    */
-  private def regionFiles(spark: SparkSession,
-                          dir: String): (Seq[String], SerializableConfiguration) = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new HPath(dir)
-    val dfs = dirPath.getFileSystem(hadoopConf)
-    val paths = Option(dfs.globStatus(new HPath(dirPath, "*.hfile")))
-      .getOrElse(Array.empty).map(_.getPath.toString).toSeq.sorted
-    (paths, new SerializableConfiguration(hadoopConf))
-  }
-
-  /** One task per region file for the positioned-read paths: opens the
-    * stream, reads the trailer then the whole LOAD-ON-OPEN region in one
-    * positioned read (HFileReaderImpl's open sequence — root index, meta
-    * index, file info, bloom meta, located by magic walk), hands `f` the
-    * stream + section offsets, closes on return. `f` MUST evaluate
-    * eagerly — nothing it returns may read `in` lazily.
-    */
-  /** [[seekScan]] plus the store-file generation of every produced cell
-    * (from the file name, like [[readWithGen]]) — the seam that lets the
-    * seek paths participate in merge-on-read version resolution.
-    */
-  /** Open one region file, run the trailer → load-on-open walk, hand `f`
-    * the positioned stream + absolute section offsets, close on return.
+  /** Open `p`, hand `f` the stream and the file length, close on return.
     * `f` MUST evaluate eagerly — nothing it returns may read the stream
-    * lazily. The shared skeleton of every positioned reader.
+    * lazily.
     */
-  private def openRegion[A](p: String, conf: org.apache.hadoop.conf.Configuration)(
-      f: (org.apache.hadoop.fs.FSDataInputStream, HFileCodec.LoadOnOpen) => A): A = {
+  private[sources] def withFile[A](p: String, conf: Configuration)(
+      f: (FSDataInputStream, Long) => A): A = {
     val path = new HPath(p)
     val fs = path.getFileSystem(conf)
-    val len = fs.getFileStatus(path).getLen
     val in = fs.open(path)
-    try {
-      val tail = new Array[Byte](HFileCodec.TrailerLen)
-      in.readFully(len - HFileCodec.TrailerLen, tail)
-      val trailer = HFileCodec.readTrailer(tail)
-      val looStart = trailer.loadOnOpenOffset
-      val looLen = len - HFileCodec.TrailerLen - looStart
-      // index + file info + bloom meta: ~100s of KB at most under the
-      // two-level index invariant; a hostile offset claiming more than
-      // one block's worth may only throw, never mega-allocate
-      require(looStart >= 0 && looLen > 0 && looLen <= HFileCodec.MaxBlockBytes,
-        s"implausible load-on-open section [$looStart, ${len - HFileCodec.TrailerLen})")
-      val loo = new Array[Byte](looLen.toInt)
-      in.readFully(looStart, loo)
-      val sect = HFileCodec.walkLoadOnOpen(loo, 0, loo.length)
-      def abs(rel: Long): Long = if (rel < 0) -1L else looStart + rel
-      f(in, HFileCodec.LoadOnOpen(abs(sect.rootIndexOffset),
-        abs(sect.metaIndexOffset), abs(sect.fileInfoOffset),
-        abs(sect.bloomMetaOffset)))
-    } finally in.close()
+    try f(in, fs.getFileStatus(path).getLen) finally in.close()
   }
 
+  /** A store file's trailer: one positioned read of its last
+    * [[HFileCodec.TrailerLen]] bytes. */
+  private[sources] def trailerAt(in: FSDataInputStream, len: Long): HFileCodec.Trailer = {
+    val tail = new Array[Byte](HFileCodec.TrailerLen)
+    in.readFully(len - HFileCodec.TrailerLen, tail)
+    HFileCodec.readTrailer(tail)
+  }
+
+  /** The one store-file open — HFileReaderImpl's open sequence: the
+    * trailer, then the whole LOAD-ON-OPEN section (root index, meta
+    * index, file info, bloom meta, located by magic walk) in one
+    * positioned read. Returns the blocks' absolute offsets and a
+    * `blockAt` that serves the section's blocks from the bytes already
+    * read and every other block (data, intermediate index, bloom chunk)
+    * with one positioned read.
+    */
+  private def openStore(in: FSDataInputStream,
+                        len: Long): (HFileCodec.LoadOnOpen, Long => Array[Byte]) = {
+    val looStart = trailerAt(in, len).loadOnOpenOffset
+    val looLen = len - HFileCodec.TrailerLen - looStart
+    // index + file info + bloom meta: ~100s of KB at most under the
+    // two-level index invariant; a hostile offset claiming more than
+    // one block's worth may only throw, never mega-allocate
+    require(looStart >= 0 && looLen > 0 && looLen <= HFileCodec.MaxBlockBytes,
+      s"implausible load-on-open section [$looStart, ${len - HFileCodec.TrailerLen})")
+    val section = new Array[Byte](looLen.toInt)
+    in.readFully(looStart, section)
+    val rel = HFileCodec.walkLoadOnOpen(section, 0, section.length)
+    def abs(r: Long): Long = if (r < 0) -1L else looStart + r
+    // the walk has bounds-checked every block it found
+    val held: Map[Long, Array[Byte]] = Seq(rel.rootIndexOffset, rel.metaIndexOffset,
+      rel.fileInfoOffset, rel.bloomMetaOffset).filter(_ >= 0).map { r =>
+      val at = r.toInt
+      abs(r) -> java.util.Arrays.copyOfRange(section, at,
+        at + HFileCodec.HeaderSize + java.nio.ByteBuffer.wrap(section, at + 8, 4).getInt)
+    }.toMap
+    (HFileCodec.LoadOnOpen(abs(rel.rootIndexOffset), abs(rel.metaIndexOffset),
+      abs(rel.fileInfoOffset), abs(rel.bloomMetaOffset)),
+      off => held.getOrElse(off, readBlockAt(in, off)))
+  }
+
+  /** [[openStore]] for one eager positioned reader: hands `f` the
+    * `blockAt` + offsets, closes on return. */
+  private def openRegion[A](p: String, conf: Configuration)(
+      f: (Long => Array[Byte], HFileCodec.LoadOnOpen) => A): A =
+    withFile(p, conf) { (in, len) =>
+      val (loo, blockAt) = openStore(in, len)
+      f(blockAt, loo)
+    }
+
+  /** [[openStore]] for a lazy stream: the file stays open until the
+    * running task completes. */
+  private def openForTask(p: String, conf: Configuration)
+      : (FSDataInputStream, HFileCodec.LoadOnOpen, Long => Array[Byte]) = {
+    val path = new HPath(p)
+    val fs = path.getFileSystem(conf)
+    val in = fs.open(path)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+    val (loo, blockAt) = openStore(in, fs.getFileStatus(path).getLen)
+    (in, loo, blockAt)
+  }
+
+  private def rootIndex(blockAt: Long => Array[Byte], loo: HFileCodec.LoadOnOpen): Entries =
+    HFileCodec.parseIndexEntriesWithKeys(blockAt(loo.rootIndexOffset), 0,
+      HFileCodec.RootIndexMagic)
+
+  /** The file-info map; empty when the file has no file-info block. */
+  private def fileInfo(blockAt: Long => Array[Byte],
+                       loo: HFileCodec.LoadOnOpen): Map[String, Array[Byte]] =
+    if (loo.fileInfoOffset < 0) Map.empty
+    else HFileCodec.parseFileInfoPayload(
+      HFileCodec.blockPayload(blockAt(loo.fileInfoOffset), 0))
+
+  /** Per-file postfix flags — the open-time mvcc/tags gate every read
+    * path applies before decoding cells. */
+  private def extrasAt(blockAt: Long => Array[Byte],
+                       loo: HFileCodec.LoadOnOpen): HFileCodec.CellExtras =
+    HFileCodec.extrasOf(fileInfo(blockAt, loo))
+
+  /** The region files under `dir` — one name per region, bounded
+    * metadata, shared by every reader. */
+  private def regionFiles(spark: SparkSession, dir: String): Seq[String] = {
+    val dirPath = new HPath(dir)
+    val dfs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(dfs.globStatus(new HPath(dirPath, "*.hfile")))
+      .getOrElse(Array.empty).map(_.getPath.toString).toSeq.sorted
+  }
+
+  /** The one block-index walk: the root entries `select` picks, each one
+    * that points at an IDXINTE2 chunk expanded into the chunk's entries
+    * `select` picks, yielded as data-block BYTES in file order (back to
+    * front under `backward`). Lazy: a chunk or data block is read only
+    * when the walk reaches it, so a walk stopped early (a limit, a
+    * WhileMatch stop) stops reading, and every block is read once.
+    */
+  private def dataBlocks(blockAt: Long => Array[Byte], root: Entries,
+                         select: Entries => Entries,
+                         backward: Boolean = false): Iterator[Array[Byte]] = {
+    def walk(entries: Entries): Iterator[Array[Byte]] = {
+      val sel = select(entries)
+      (if (backward) sel.reverseIterator else sel.iterator).map(e => blockAt(e._1))
+    }
+    walk(root).flatMap { blk =>
+      if (HFileCodec.hasMagic(blk, 0, HFileCodec.IntermediateIndexMagic))
+        walk(HFileCodec.parseIndexEntriesWithKeys(blk, 0,
+          HFileCodec.IntermediateIndexMagic))
+      else Iterator.single(blk)
+    }
+  }
+
+  /** Entry selection of a forward `[start, stop)` walk; an empty `stop`
+    * is open-ended, like HBase's `HConstants.EMPTY_END_ROW`. */
+  private def forwardRange(start: Array[Byte], stop: Array[Byte]): Entries => Entries =
+    if (stop.isEmpty) HFileCodec.entriesFromStart(_, start)
+    else HFileCodec.entriesInRange(_, start, stop)
+
+  private def rowBelow(row: Array[Byte], stop: Array[Byte]): Boolean =
+    stop.isEmpty || java.util.Arrays.compareUnsigned(row, stop) < 0
+
+  /** The one data-block decoder: magic check, payload (GZ and the other
+    * codecs inflate here), cells.
+    *
+    * When the block is ROW_INDEX_V1-encoded, `seekRows` (distinct sorted
+    * target rows, the multiGet shape) switches the decode from a full
+    * block scan to one binary-searched in-block seek per target, and
+    * `seekFrom` (a range scan's start row) skips the block prefix — the
+    * RowIndexSeekerV1 read shape. Both are hints only: callers still
+    * filter by row, so every encoding returns identical rows.
+    */
+  private def blockCells(blk: Array[Byte], extras: HFileCodec.CellExtras,
+                         seekRows: Seq[Array[Byte]] = Nil,
+                         seekFrom: Option[Array[Byte]] = None): Iterator[HFileCodec.HCell] = {
+    val isEncoded = HFileCodec.hasMagic(blk, 0, HFileCodec.EncodedDataMagic)
+    require(isEncoded || HFileCodec.hasMagic(blk, 0, HFileCodec.DataMagic),
+      "bad data block magic")
+    val payload = HFileCodec.blockPayload(blk, 0)
+    val rowIndexed = isEncoded &&
+      HFileCodec.encodingIdOf(payload) == HFileCodec.EncodingRowIndexV1
+    if (rowIndexed && seekRows.nonEmpty)
+      seekRows.iterator.flatMap { r =>
+        HFileCodec.rowIndexSeek(payload, 2, r, extras)
+          .takeWhile(c => java.util.Arrays.equals(c.row, r))
+      }
+    else if (rowIndexed && seekFrom.isDefined)
+      HFileCodec.rowIndexSeek(payload, 2, seekFrom.get, extras)
+    else HFileCodec.dataBlockCells(payload, isEncoded, extras)
+  }
+
+  /** The cells of one data block whose row passes `keep`, as rows — the
+    * shared tail of every positioned reader. */
+  private def decodeBlockRows(blk: Array[Byte], keep: Array[Byte] => Boolean,
+                              extras: HFileCodec.CellExtras,
+                              seekRows: Seq[Array[Byte]] = Nil,
+                              seekFrom: Option[Array[Byte]] = None): Seq[Row] =
+    blockCells(blk, extras, seekRows, seekFrom).filter(c => keep(c.row))
+      .map(cellRow(_)).toSeq
+
+  /** The one cell → row conversion: the cells-schema columns (the value
+    * as UTF-8 under `textValue`, else an 8-byte double), then `extra`. */
+  private def cellRow(c: HFileCodec.HCell, textValue: Boolean = false,
+                      extra: Seq[Any] = Nil): Row =
+    Row.fromSeq(Seq(new String(c.row, UTF_8), new String(c.family, UTF_8),
+      new String(c.qualifier, UTF_8), c.ts,
+      if (textValue) new String(c.value, UTF_8)
+      else java.nio.ByteBuffer.wrap(c.value).getDouble,
+      opOf(c.typ)) ++ extra)
+
+  /** One task per region file under `dir` for the positioned-read paths:
+    * [[openRegion]], run `f`, and add the store-file generation of every
+    * produced cell (from the file name, [[genOf]]) — the seam that lets
+    * the seek paths take part in merge-on-read version resolution.
+    */
   private def seekScanWithGen(spark: SparkSession, dir: String)(
-      f: (org.apache.hadoop.fs.FSDataInputStream, HFileCodec.LoadOnOpen) => Seq[Row]): DataFrame = {
-    val (paths, serConf) = regionFiles(spark, dir)
+      f: (Long => Array[Byte], HFileCodec.LoadOnOpen) => Seq[Row]): DataFrame = {
+    val paths = regionFiles(spark, dir)
+    val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val rows = spark.sparkContext
       .parallelize(paths, math.max(1, paths.size))
       .flatMap { p =>
-        val gen = {
-          val m = GenFilePattern.matcher(new HPath(p).getName)
-          if (m.matches()) m.group(1).toInt else 0
-        }
-        openRegion(p, serConf.value)((in, loo) =>
-          f(in, loo).map(r => Row.fromSeq(r.toSeq :+ gen)))
+        val gen = genOf(p)
+        openRegion(p, serConf.value)((blockAt, loo) =>
+          f(blockAt, loo).map(r => Row.fromSeq(r.toSeq :+ gen)))
       }
     spark.createDataFrame(rows, cellsWithGenSchema)
   }
 
   private def seekScan(spark: SparkSession, dir: String)(
-      f: (org.apache.hadoop.fs.FSDataInputStream, HFileCodec.LoadOnOpen) => Seq[Row]): DataFrame =
+      f: (Long => Array[Byte], HFileCodec.LoadOnOpen) => Seq[Row]): DataFrame =
     seekScanWithGen(spark, dir)(f).drop("gen")
-
-  /** Decode one data block into cells-schema Rows, keeping rows whose key
-    * passes `keep` — the shared tail of every positioned reader.
-    *
-    * When the block is ROW_INDEX_V1-encoded, `seekRows` (distinct exact
-    * target rows, the multiGet shape) switches the decode from a full
-    * block scan to one binary-searched in-block seek per target, and
-    * `seekFrom` (a range scan's start row) skips the block prefix — the
-    * RowIndexSeekerV1 read shape. Both are hints only: the `keep` filter
-    * still decides membership, so every encoding returns identical rows.
-    */
-  private def decodeBlockRows(blk: Array[Byte],
-                              keep: Array[Byte] => Boolean,
-                              seekRows: Seq[Array[Byte]] = Nil,
-                              seekFrom: Option[Array[Byte]] = None,
-                              extras: HFileCodec.CellExtras = HFileCodec.NoExtras): Seq[Row] = {
-    val isEncoded = magicAt(blk, HFileCodec.EncodedDataMagic)
-    require(isEncoded || magicAt(blk, HFileCodec.DataMagic),
-      "bad data block magic")
-    val payload = HFileCodec.blockPayload(blk, 0) // inflates GZ blocks
-    val rowIndexed = isEncoded &&
-      HFileCodec.encodingIdOf(payload) == HFileCodec.EncodingRowIndexV1
-    val cells: Iterator[HFileCodec.HCell] =
-      if (rowIndexed && seekRows.nonEmpty)
-        seekRows.iterator.flatMap { r =>
-          HFileCodec.rowIndexSeek(payload, 2, r, extras)
-            .takeWhile(c => java.util.Arrays.equals(c.row, r))
-        }
-      else if (rowIndexed && seekFrom.isDefined)
-        HFileCodec.rowIndexSeek(payload, 2, seekFrom.get, extras)
-      else HFileCodec.dataBlockCells(payload, isEncoded, extras)
-    cells
-      .filter(c => keep(c.row))
-      .map(c => Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-        new String(c.qualifier, UTF_8), c.ts,
-        java.nio.ByteBuffer.wrap(c.value).getDouble,
-        opOf(c.typ)))
-      .toSeq
-  }
 
   /** The HBase `Get` read shape against a bulk-written table: per region
     * file, a handful of positioned reads — trailer (1), the load-on-open
@@ -486,15 +561,15 @@ object HFileOps {
       maxVersions, ttlFloor)
 
   private def multiGetBody(rowkeys: Seq[String])
-      : (org.apache.hadoop.fs.FSDataInputStream, HFileCodec.LoadOnOpen) => Seq[Row] = {
+      : (Long => Array[Byte], HFileCodec.LoadOnOpen) => Seq[Row] = {
     val keyBytes = rowkeys.distinct.map(_.getBytes(UTF_8))
-    (in, loo) => {
+    (readBlock, loo) => {
       // raw blocks cached by offset: k keys sharing a bloom chunk,
       // intermediate index chunk, or data block cost ONE positioned
       // read of it (bounded: candidates per key are O(1))
       val blockCache = scala.collection.mutable.Map.empty[Long, Array[Byte]]
       def blockAt(off: Long): Array[Byte] =
-        blockCache.getOrElseUpdate(off, readBlockAt(in, off))
+        blockCache.getOrElseUpdate(off, readBlock(off))
       val surviving: Seq[Array[Byte]] =
         if (loo.bloomMetaOffset < 0) keyBytes
         else {
@@ -504,7 +579,8 @@ object HFileOps {
           keyBytes.filter { kb =>
             HFileCodec.candidateEntries(meta, metaRows, kb).exists { case (off, _, _) =>
               val chunk = blockAt(off)
-              require(magicAt(chunk, HFileCodec.BloomChunkMagic), "bad bloom chunk magic")
+              require(HFileCodec.hasMagic(chunk, 0, HFileCodec.BloomChunkMagic),
+                "bad bloom chunk magic")
               // bloom may only PRUNE: an uninflatable chunk claims containment
               try HFileCodec.bloomChunkContains(
                 HFileCodec.blockPayload(chunk, 0), 0, kb)
@@ -514,30 +590,22 @@ object HFileOps {
         }
       if (surviving.isEmpty) Seq.empty[Row]
       else {
-        val root = HFileCodec.parseIndexEntriesWithKeys(
-          blockAt(loo.rootIndexOffset), 0, HFileCodec.RootIndexMagic)
-        val rootRows = HFileCodec.indexRows(root)
-        val dataOffsets = surviving.flatMap { kb =>
-          HFileCodec.candidateEntries(root, rootRows, kb).flatMap { case (off, _, _) =>
-            val blk = blockAt(off)
-            if (magicAt(blk, HFileCodec.IntermediateIndexMagic))
-              HFileCodec.candidateEntries(
-                HFileCodec.parseIndexEntriesWithKeys(blk, 0,
-                  HFileCodec.IntermediateIndexMagic), kb)
-                .map(_._1)
-            else Seq(off)
-          }
-        }.distinct.sorted
+        val root = rootIndex(blockAt, loo)
         val wanted = surviving
           .map(scala.collection.immutable.ArraySeq.unsafeWrapArray(_)).toSet
         val seekRows = surviving.sortWith(
           java.util.Arrays.compareUnsigned(_, _) < 0)
-        val extras = extrasAt(blockAt, loo.fileInfoOffset)
-        dataOffsets.flatMap { off =>
-          decodeBlockRows(blockAt(off), row =>
+        val extras = extrasAt(blockAt, loo)
+        // one walk per key, in row order, so the blocks arrive in file
+        // order; the cache hands back one array per block, so `distinct`
+        // decodes each block once however many keys land in it
+        seekRows.iterator
+          .flatMap(kb => dataBlocks(blockAt, root, HFileCodec.candidateEntries(_, kb)))
+          .distinct
+          .flatMap(decodeBlockRows(_, row =>
             wanted.contains(scala.collection.immutable.ArraySeq.unsafeWrapArray(row)),
-            seekRows = seekRows, extras = extras)
-        }
+            extras, seekRows = seekRows))
+          .toSeq
       }
     }
   }
@@ -546,29 +614,26 @@ object HFileOps {
     * at the file level: per region, the block index selects only the data
     * blocks whose key range intersects `[startRow, stopRow)`; bytes read
     * scale with the RANGE, not the region. One task per region file (a
-    * region whose index excludes the whole range reads index blocks only).
-    */
-  def rangeScan(spark: SparkSession, dir: String,
-                startRow: String, stopRow: String): DataFrame =
-    rangeScan(spark, dir, startRow, stopRow, reversed = false)
-
-  /** [[rangeScan]] with HBase `Scan#setReversed` + `Scan#setLimit`
-    * semantics. Forward: `[startRow, stopRow)` ascending. Reversed: the
-    * start row is the seek origin (HIGH end, inclusive), the stop row the
-    * exclusive LOW end — keys in `(stopRow, startRow]`, produced newest-key
-    * first, the "closest row at-or-before" / last-N-rows idiom. `limit`
-    * bounds the CELLS RETURNED PER REGION in scan direction, and the block
-    * walk stops as soon as it is satisfied: a reversed limit-K scan against
-    * a large region reads O(K/cellsPerBlock) data blocks off the back of
-    * the selected range, not the range — the property that makes "last K"
-    * affordable on a 100 TB keyspace (plus index-only rejection of every
-    * region whose range misses the bound entirely). The global K across
-    * regions is the caller's `orderBy(...).limit(k)` —
-    * TakeOrderedAndProject over ≤ limit rows per region.
+    * region whose index excludes the whole range reads index blocks
+    * only). An empty `stopRow` is open-ended in either direction.
+    *
+    * `reversed` + `limit` are HBase `Scan#setReversed` + `Scan#setLimit`.
+    * Reversed: the start row is the seek origin (HIGH end, inclusive),
+    * the stop row the exclusive LOW end — keys in `(stopRow, startRow]`,
+    * produced newest-key first, the "closest row at-or-before" /
+    * last-N-rows idiom. `limit` bounds the CELLS RETURNED PER REGION in
+    * scan direction, and the block walk stops as soon as it is satisfied:
+    * a reversed limit-K scan against a large region reads O(K/cellsPerBlock)
+    * data blocks off the back of the selected range, not the range — the
+    * property that makes "last K" affordable on a 100 TB keyspace (plus
+    * index-only rejection of every region whose range misses the bound
+    * entirely). The global K across regions is the caller's
+    * `orderBy(...).limit(k)` — TakeOrderedAndProject over ≤ limit rows per
+    * region.
     */
   def rangeScan(spark: SparkSession, dir: String,
                 startRow: String, stopRow: String,
-                reversed: Boolean, limit: Int = Int.MaxValue): DataFrame = {
+                reversed: Boolean = false, limit: Int = Int.MaxValue): DataFrame = {
     val start = startRow.getBytes(UTF_8)
     val stop = stopRow.getBytes(UTF_8)
     seekScan(spark, dir)(rangeRowsInFile(_, _, start, stop, reversed, limit))
@@ -601,76 +666,46 @@ object HFileOps {
     * body of [[rangeScan]] (every file of a directory) and
     * [[referenceScan]] (an explicit half-file reference).
     */
-  private def rangeRowsInFile(in: org.apache.hadoop.fs.FSDataInputStream,
+  private def rangeRowsInFile(blockAt: Long => Array[Byte],
                               loo: HFileCodec.LoadOnOpen,
                               start: Array[Byte], stop: Array[Byte],
                               reversed: Boolean, limit: Int): Seq[Row] = {
-    {
-      val root = HFileCodec.parseIndexEntriesWithKeys(
-        readBlockAt(in, loo.rootIndexOffset), 0, HFileCodec.RootIndexMagic)
-      // LAZY leaf expansion (Iterator.flatMap): an intermediate index
-      // block is only read when the walk actually reaches its root entry,
-      // so a limit-K scan's INDEX reads scale with K too, not with the
-      // selected range — in either direction. Yields block BYTES, not
-      // offsets: the magic check already read the block, and re-reading
-      // by offset doubled the positioned reads of every single-level
-      // region (≤16k blocks — the common case; caught by the b24
-      // block-count spec).
-      def leaves(entries: Iterator[(Long, Int, Array[Byte])],
-                 backward: Boolean): Iterator[Array[Byte]] =
-        entries.flatMap { case (off, _, _) =>
-          val blk = readBlockAt(in, off)
-          if (magicAt(blk, HFileCodec.IntermediateIndexMagic)) {
-            val inner = HFileCodec.parseIndexEntriesWithKeys(blk, 0,
-              HFileCodec.IntermediateIndexMagic)
-            val sel = if (reversed) HFileCodec.entriesInRevRange(inner, stop, start)
-                      else HFileCodec.entriesInRange(inner, start, stop)
-            // iterator-map stays lazy: each child block is read only when
-            // the walk actually pulls it
-            if (backward) sel.reverseIterator.map(e => readBlockAt(in, e._1))
-            else sel.iterator.map(e => readBlockAt(in, e._1))
-          } else Iterator.single(blk)
-        }
-      val extras = extrasAt(readBlockAt(in, _), loo.fileInfoOffset)
-      if (!reversed) {
-        val keep = (row: Array[Byte]) =>
-          java.util.Arrays.compareUnsigned(row, start) >= 0 &&
-            java.util.Arrays.compareUnsigned(row, stop) < 0
-        // stop pulling blocks once `limit` cells have matched — cells are
-        // in file order, so the first `limit` of the concatenation is exact
-        var n = 0
-        val taken = leaves(
-          HFileCodec.entriesInRange(root, start, stop).iterator, backward = false)
-          .takeWhile(_ => n < limit).map { blk =>
-            val rows = decodeBlockRows(blk, keep,
-              seekFrom = Some(start), extras = extras)
-            n += rows.size
-            rows
-          }.toSeq
-        val flat = taken.flatten
-        if (limit < flat.size) flat.take(limit) else flat
-      } else {
-        val keep = (row: Array[Byte]) =>
-          java.util.Arrays.compareUnsigned(row, start) <= 0 &&
-            (stop.isEmpty || java.util.Arrays.compareUnsigned(row, stop) > 0)
-        // walk the selected blocks BACK TO FRONT; each block still decodes
-        // forward (the delta encodings are front-anchored — same constraint
-        // HBase's reversed StoreFileScanner has: seek to the previous
-        // block, decode it, serve its cells in reverse). Walking one block
-        // past `limit` can only ADD earlier cells, never change the last K.
-        var blocks = List.empty[Seq[Row]]
-        var n = 0
-        val it = leaves(
-          HFileCodec.entriesInRevRange(root, stop, start).reverseIterator,
-          backward = true)
-        while (n < limit && it.hasNext) {
-          val rows = decodeBlockRows(it.next(), keep, extras = extras)
-          blocks = rows :: blocks
+    val root = rootIndex(blockAt, loo)
+    val extras = extrasAt(blockAt, loo)
+    if (!reversed) {
+      val keep = (row: Array[Byte]) =>
+        java.util.Arrays.compareUnsigned(row, start) >= 0 && rowBelow(row, stop)
+      // stop pulling blocks once `limit` cells have matched — cells are
+      // in file order, so the first `limit` of the concatenation is exact
+      var n = 0
+      val taken = dataBlocks(blockAt, root, forwardRange(start, stop))
+        .takeWhile(_ => n < limit).map { blk =>
+          val rows = decodeBlockRows(blk, keep, extras, seekFrom = Some(start))
           n += rows.size
-        }
-        val flat = blocks.flatten // ascending file order
-        flat.takeRight(math.min(limit, flat.size)).reverse
+          rows
+        }.toSeq
+      val flat = taken.flatten
+      if (limit < flat.size) flat.take(limit) else flat
+    } else {
+      val keep = (row: Array[Byte]) =>
+        java.util.Arrays.compareUnsigned(row, start) <= 0 &&
+          (stop.isEmpty || java.util.Arrays.compareUnsigned(row, stop) > 0)
+      // walk the selected blocks BACK TO FRONT; each block still decodes
+      // forward (the delta encodings are front-anchored — same constraint
+      // HBase's reversed StoreFileScanner has: seek to the previous
+      // block, decode it, serve its cells in reverse). Walking one block
+      // past `limit` can only ADD earlier cells, never change the last K.
+      var blocks = List.empty[Seq[Row]]
+      var n = 0
+      val it = dataBlocks(blockAt, root,
+        HFileCodec.entriesInRevRange(_, stop, start), backward = true)
+      while (n < limit && it.hasNext) {
+        val rows = decodeBlockRows(it.next(), keep, extras)
+        blocks = rows :: blocks
+        n += rows.size
       }
+      val flat = blocks.flatten // ascending file order
+      flat.takeRight(math.min(limit, flat.size)).reverse
     }
   }
 
@@ -693,31 +728,16 @@ object HFileOps {
       start: Array[Byte], stopInclusive: Array[Byte],
       matches: Row => Boolean): (Seq[Row], Option[Row]) = {
     val stopExcl = stopInclusive :+ 0.toByte // inclusive stop as [start, stop+0x00)
-    val root = HFileCodec.parseIndexEntriesWithKeys(
-      blockAt(loo.rootIndexOffset), 0, HFileCodec.RootIndexMagic)
-    // LAZY leaf expansion, same discipline as rangeScan: index blocks are
-    // read only when the walk reaches them, so index reads stop early
-    // too; yields block BYTES so each block is read exactly once
-    def leaves(entries: Iterator[(Long, Int, Array[Byte])]): Iterator[Array[Byte]] =
-      entries.flatMap { case (off, _, _) =>
-        val blk = blockAt(off)
-        if (magicAt(blk, HFileCodec.IntermediateIndexMagic))
-          HFileCodec.entriesInRange(
-            HFileCodec.parseIndexEntriesWithKeys(blk, 0,
-              HFileCodec.IntermediateIndexMagic), start, stopExcl)
-            .iterator.map(e => blockAt(e._1))
-        else Iterator.single(blk)
-      }
-    val extras = extrasAt(blockAt, loo.fileInfoOffset)
+    val extras = extrasAt(blockAt, loo)
     val keep = (row: Array[Byte]) =>
       java.util.Arrays.compareUnsigned(row, start) >= 0 &&
         java.util.Arrays.compareUnsigned(row, stopInclusive) <= 0
     val out = Seq.newBuilder[Row]
     var failed: Option[Row] = None
-    val offs = leaves(HFileCodec.entriesInRange(root, start, stopExcl).iterator)
-    while (failed.isEmpty && offs.hasNext) {
-      val rows = decodeBlockRows(offs.next(), keep,
-        seekFrom = Some(start), extras = extras)
+    val blocks = dataBlocks(blockAt, rootIndex(blockAt, loo),
+      HFileCodec.entriesInRange(_, start, stopExcl))
+    while (failed.isEmpty && blocks.hasNext) {
+      val rows = decodeBlockRows(blocks.next(), keep, extras, seekFrom = Some(start))
       val it = rows.iterator
       while (failed.isEmpty && it.hasNext) {
         val r = it.next()
@@ -746,13 +766,13 @@ object HFileOps {
       matches: Row => Boolean): DataFrame = {
     val start = startRow.getBytes(UTF_8)
     val stopI = stopRowInclusive.getBytes(UTF_8)
-    val (paths, serConf) = regionFiles(spark, dir)
+    val paths = regionFiles(spark, dir)
+    val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val rows = spark.sparkContext
       .parallelize(paths, math.max(1, paths.size))
       .flatMap { p =>
-        openRegion(p, serConf.value) { (in, loo) =>
-          val (matched, failedAt) =
-            whileMatchWalk(readBlockAt(in, _), loo, start, stopI, matches)
+        openRegion(p, serConf.value) { (blockAt, loo) =>
+          val (matched, failedAt) = whileMatchWalk(blockAt, loo, start, stopI, matches)
           matched.map(r => Row.fromSeq(r.toSeq :+ true)) ++
             failedAt.map(r => Row.fromSeq(r.toSeq :+ false))
         }
@@ -763,26 +783,21 @@ object HFileOps {
 
   /** Read every region file under `dir` back into the cells schema —
     * one task per region file, each STREAMING its file block-by-block
-    * ([[HFileCodec.readStreaming]]): per-task heap is O(blockSize)
-    * regardless of region size, the same bound a region server's block
-    * reader has. (A whole-file `binaryFile` read held each region as one
-    * byte array — 32 concurrent multi-hundred-MB humongous allocations
-    * OOM'd an 8 GB heap at the 100M-row smoke scale.) The driver-side
-    * listing is one name per region — bounded, never data — and resolves
-    * through the same Hadoop FileSystem as the write, so reads work
-    * against any shared filesystem.
+    * ([[streamScan]]): per-task heap is O(blockSize) regardless of region
+    * size, the same bound a region server's block reader has. (A
+    * whole-file `binaryFile` read held each region as one byte array — 32
+    * concurrent multi-hundred-MB humongous allocations OOM'd an 8 GB heap
+    * at the 100M-row smoke scale.) The driver-side listing is one name per
+    * region — bounded, never data — and resolves through the same Hadoop
+    * FileSystem as the write, so reads work against any shared filesystem.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val (paths, serConf) = regionFiles(spark, dir)
-    readPaths(spark, paths, serConf)
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    streamScan(spark, regionFiles(spark, dir).map(Seq(_)))
 
   /** [[read]] over a store written with `textValue = true`: value bytes
     * decode as UTF-8 instead of an 8-byte double. */
-  def readText(spark: SparkSession, dir: String): DataFrame = {
-    val (paths, serConf) = regionFiles(spark, dir)
-    readPaths(spark, paths, serConf, textValue = true)
-  }
+  def readText(spark: SparkSession, dir: String): DataFrame =
+    streamScan(spark, regionFiles(spark, dir).map(Seq(_)), textValue = true)
 
   /** [[read]] exposing each cell's TTL tag as a nullable `ttl_ms` LONG
     * column (null = no TTL tag) — the read half of the cell-TTL
@@ -790,82 +805,55 @@ object HFileOps {
     * (`ts + ttl ≥ now`) is the QUERY's job with `now` a literal, the
     * b32 compaction-view composition.
     */
-  def readWithTtl(spark: SparkSession, dir: String): DataFrame = {
-    val (paths, serConf) = regionFiles(spark, dir)
-    val rows = spark.sparkContext
-      .parallelize(paths, math.max(1, paths.size))
-      .flatMap { p =>
-        streamFileCells(p, serConf.value).map { c =>
-          Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-            new String(c.qualifier, UTF_8), c.ts,
-            java.nio.ByteBuffer.wrap(c.value).getDouble,
-            opOf(c.typ), ttlOfTags(c.tags).map(Long.box).orNull)
-        }
-      }
-    spark.createDataFrame(rows, StructType(
-      cellsSchema.fields :+ StructField("ttl_ms", LongType, nullable = true)))
-  }
+  def readWithTtl(spark: SparkSession, dir: String): DataFrame =
+    streamScan(spark, regionFiles(spark, dir).map(Seq(_)),
+      extraFields = Seq(StructField("ttl_ms", LongType, nullable = true)),
+      extra = _ => c => Seq(ttlOfTags(c.tags).map(Long.box).orNull))
 
   /** [[read]] exposing BOTH cell-metadata tags: `ttl_ms` (nullable
     * LONG) and `vis` (nullable STRING, the visibility label
     * expression) — the multi-tag read path of the b33 lattice; each
     * tag resolves independently through the structural walk.
     */
-  def readWithCellTags(spark: SparkSession, dir: String): DataFrame = {
-    val (paths, serConf) = regionFiles(spark, dir)
-    val rows = spark.sparkContext
-      .parallelize(paths, math.max(1, paths.size))
-      .flatMap { p =>
-        streamFileCells(p, serConf.value).map { c =>
-          Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-            new String(c.qualifier, UTF_8), c.ts,
-            java.nio.ByteBuffer.wrap(c.value).getDouble,
-            opOf(c.typ), ttlOfTags(c.tags).map(Long.box).orNull,
-            visOfTags(c.tags).orNull)
-        }
-      }
-    spark.createDataFrame(rows, StructType(
-      cellsSchema.fields :+ StructField("ttl_ms", LongType, nullable = true)
-        :+ StructField("vis", StringType, nullable = true)))
-  }
+  def readWithCellTags(spark: SparkSession, dir: String): DataFrame =
+    streamScan(spark, regionFiles(spark, dir).map(Seq(_)),
+      extraFields = Seq(StructField("ttl_ms", LongType, nullable = true),
+        StructField("vis", StringType, nullable = true)),
+      extra = _ => c => Seq(ttlOfTags(c.tags).map(Long.box).orNull, visOfTags(c.tags).orNull))
 
-  /** The streaming read core over an explicit file list — shared by
-    * [[read]] (whole directory) and [[readFamilies]] (store-pruned).
+  /** The one streaming file scan behind [[read]] and its variants,
+    * [[readFamilies]], [[readWithGen]] and [[mergedRegionScan]]: one
+    * task per file group, streaming the group's files in order
+    * ([[streamFileCells]]), each cell one cells-schema row (UTF-8 values
+    * under `textValue`) followed by the `extraFields` columns that
+    * `extra(file)(cell)` yields.
     */
-  private def readPaths(spark: SparkSession, paths: Seq[String],
-                        serConf: SerializableConfiguration,
-                        textValue: Boolean = false): DataFrame = {
+  private def streamScan(spark: SparkSession, groups: Seq[Seq[String]],
+                         textValue: Boolean = false,
+                         extraFields: Seq[StructField] = Nil,
+                         extra: String => HFileCodec.HCell => Seq[Any] = _ => _ => Nil)
+      : DataFrame = {
+    val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val rows = spark.sparkContext
-      .parallelize(paths, math.max(1, paths.size))
-      .flatMap { p =>
-        streamFileCells(p, serConf.value).map { c =>
-          Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-            new String(c.qualifier, UTF_8), c.ts,
-            if (textValue) new String(c.value, UTF_8)
-            else java.nio.ByteBuffer.wrap(c.value).getDouble,
-            opOf(c.typ))
-        }
-      }
-    spark.createDataFrame(rows, if (textValue) textCellsSchema else cellsSchema)
+      .parallelize(groups, math.max(1, groups.size))
+      .flatMap(_.iterator.flatMap { p =>
+        val more = extra(p)
+        streamFileCells(p, serConf.value).map(c => cellRow(c, textValue, more(c)))
+      })
+    spark.createDataFrame(rows, StructType(
+      (if (textValue) textCellsSchema else cellsSchema).fields ++ extraFields))
   }
 
   /** One region file's full forward cell stream (O(blockSize) memory) —
-    * the executor-side body shared by [[readPaths]], the merged-region
-    * scan, and the merge compaction. One positioned read of trailer +
-    * file-info resolves the per-file mvcc/tags postfix flags BEFORE the
-    * forward stream (positioned reads don't move the stream's own
+    * the executor-side body of [[streamScan]] and the merge compaction.
+    * [[openForTask]] resolves the per-file mvcc/tags postfix flags BEFORE
+    * the forward stream (positioned reads don't move the stream's own
     * position); the stream closes on task completion.
     */
-  private def streamFileCells(p: String,
-                              conf: org.apache.hadoop.conf.Configuration)
-      : Iterator[HFileCodec.HCell] = {
-    val path = new HPath(p)
-    val fs = path.getFileSystem(conf)
-    val raw = fs.open(path)
-    val extras = streamExtras(raw, fs.getFileStatus(path).getLen)
-    val in = new java.io.BufferedInputStream(raw, 1 << 16)
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-    HFileCodec.readStreaming(in, extras)
+  private def streamFileCells(p: String, conf: Configuration): Iterator[HFileCodec.HCell] = {
+    val (in, loo, blockAt) = openForTask(p, conf)
+    HFileCodec.readStreaming(new java.io.BufferedInputStream(in, 1 << 16),
+      extrasAt(blockAt, loo))
   }
 
   /** Region MERGE read path — the inverse of [[referenceScan]]'s split
@@ -877,27 +865,14 @@ object HFileOps {
     * merged region's parent files in ascending rowkey-range order; the
     * scan is ONE task per merged region in ONE RDD — never a union of
     * per-parent DataFrame legs, which wave-serializes the heavy tasks in
-    * the scheduler (the measured-14× a19 lesson, docs/SCALE.md r12).
+    * the scheduler (a19 measured 14× slower that way, docs/SCALE.md).
     * Parents are internally KeyValue-sorted and mutually disjoint-
     * adjacent, so streaming them sequentially IS the merged region's
     * sort order — no heap, no buffering beyond a block.
     */
   def mergedRegionScan(spark: SparkSession,
-                       groups: Seq[Seq[String]]): DataFrame = {
-    val serConf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val rows = spark.sparkContext
-      .parallelize(groups, math.max(1, groups.size))
-      .flatMap { parents =>
-        parents.iterator.flatMap(p =>
-          streamFileCells(p, serConf.value).map { c =>
-            Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-              new String(c.qualifier, UTF_8), c.ts,
-              java.nio.ByteBuffer.wrap(c.value).getDouble, opOf(c.typ))
-          })
-      }
-    spark.createDataFrame(rows, cellsSchema)
-  }
+                       groups: Seq[Seq[String]]): DataFrame =
+    streamScan(spark, groups)
 
   /** The compaction that FOLLOWS a region merge: rewrite each merged
     * region's parent store files as ONE new store file under `outDir`
@@ -979,25 +954,13 @@ object HFileOps {
     */
   def readFamilies(spark: SparkSession, dir: String,
                    families: Seq[String]): DataFrame = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
     val dirPath = new HPath(dir)
-    val dfs = dirPath.getFileSystem(hadoopConf)
+    val dfs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val paths = families.sorted.flatMap { f =>
       Option(dfs.globStatus(new HPath(dirPath, s"cf=$f/*.hfile")))
         .getOrElse(Array.empty).map(_.getPath.toString).sorted
     }
-    readPaths(spark, paths, new SerializableConfiguration(hadoopConf))
-  }
-
-  /** Open-time postfix-flag resolution for the forward-streaming readers:
-    * trailer (1 positioned read) → file-info block (1 positioned read) →
-    * [[HFileCodec.extrasOf]].
-    */
-  private def streamExtras(in: org.apache.hadoop.fs.FSDataInputStream,
-                           len: Long): HFileCodec.CellExtras = {
-    val tail = new Array[Byte](HFileCodec.TrailerLen)
-    in.readFully(len - HFileCodec.TrailerLen, tail)
-    extrasAt(readBlockAt(in, _), HFileCodec.readTrailer(tail).fileInfoOffset)
+    streamScan(spark, paths.map(Seq(_)))
   }
 
   /** Like [[read]], plus the store-file generation each cell came from
@@ -1006,40 +969,27 @@ object HFileOps {
     * merge-on-read tiebreak, standing in for HBase's per-file max
     * sequence id.
     */
-  def readWithGen(spark: SparkSession, dir: String): DataFrame = {
-    val (paths, serConf) = regionFiles(spark, dir)
-    val rows = spark.sparkContext
-      .parallelize(paths, math.max(1, paths.size))
-      .flatMap { p =>
-        val path = new HPath(p)
-        val gen = {
-          val m = GenFilePattern.matcher(path.getName)
-          if (m.matches()) m.group(1).toInt else 0
-        }
-        val fs = path.getFileSystem(serConf.value)
-        val raw = fs.open(path)
-        val extras = streamExtras(raw, fs.getFileStatus(path).getLen)
-        val in = new java.io.BufferedInputStream(raw, 1 << 16)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-        HFileCodec.readStreaming(in, extras).map { c =>
-          Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-            new String(c.qualifier, UTF_8), c.ts,
-            java.nio.ByteBuffer.wrap(c.value).getDouble,
-            opOf(c.typ),
-            gen)
-        }
-      }
-    spark.createDataFrame(rows, cellsWithGenSchema)
-  }
+  def readWithGen(spark: SparkSession, dir: String): DataFrame =
+    streamScan(spark, regionFiles(spark, dir).map(Seq(_)),
+      extraFields = Seq(genField),
+      extra = { p => val gen = genOf(p); _ => Seq(gen) })
 
   private val GenFilePattern = java.util.regex.Pattern.compile("gen-(\\d+)-.*\\.hfile")
 
-  private val cellsWithGenSchema = StructType(
-    cellsSchema.fields :+ StructField("gen", IntegerType, nullable = false))
+  /** The store-file generation of file `p`: `gen-NNN-*.hfile` is NNN,
+    * any other name generation 0. */
+  private def genOf(p: String): Int = {
+    val m = GenFilePattern.matcher(new HPath(p).getName)
+    if (m.matches()) m.group(1).toInt else 0
+  }
+
+  private val genField = StructField("gen", IntegerType, nullable = false)
+
+  private val cellsWithGenSchema = StructType(cellsSchema.fields :+ genField)
 
   /** Merge-on-read across store-file generations — the LSM read path an
     * HBase region server runs over its accumulated store files, with the
-    * full Get/Scan read semantics (r9, delete scopes completed r10):
+    * full Get/Scan read semantics:
     * cells older than `ttlFloor` expire; the three HBase tombstone
     * scopes mask — `delete_family` hides every column of its (row, cf)
     * at-or-before its ts, `delete` (= DeleteColumn, see [[typOf]]) hides
@@ -1050,30 +1000,29 @@ object HFileOps {
     * (ts, generation) — generation standing in for HBase's sequence id,
     * which breaks equal-timestamp ties in favor of the later file.
     *
-    * Scale shape (r10): NO exchange — the actual region-server shape.
+    * Scale shape: NO exchange — the actual region-server shape.
     * Store files arrive range-partitioned and internally sorted by
     * (rowkey, cf, qualifier, ts desc), so the (row, cf, qualifier)
     * resolution window is computable with a per-range K-way heap merge
     * of the overlapping files' sorted streams, K = files covering the
     * range (≈ the generation count). The driver's only work is region
-    * assignment — per FILE NAME, three positioned reads of trailer +
-    * load-on-open metadata (first/last row), never data — exactly the
-    * boundary bookkeeping an HBase master keeps in META. Each Spark task
-    * owns one row range, index-seeks every overlapping file to the range
-    * start ([[HFileCodec.entriesInRange]]), and streams the merge:
-    * O(blockSize · K) memory, zero shuffle, zero driver data. PlanSpec
+    * assignment — per file, the one open ([[openStore]]: trailer +
+    * load-on-open section, two positioned reads) for its first/last row,
+    * never data — exactly the boundary bookkeeping an HBase master keeps
+    * in META. Each Spark task owns one row range, walks every overlapping
+    * file's index to the range start ([[dataBlocks]]), and streams the
+    * merge: O(blockSize · K) memory, zero shuffle, zero driver data,
+    * every data block read once. PlanSpec
     * pins the exchange-free plan; the window-shuffle spelling is kept as
     * [[mergedReadShuffled]] and equivalence-pinned in HFileSpec.
     */
   def mergedRead(spark: SparkSession, dir: String,
                  maxVersions: Int = 1,
-                 ttlFloor: Long = Long.MinValue): DataFrame = {
-    val (paths, _) = regionFiles(spark, dir)
-    mergedReadFiles(spark, paths, maxVersions, ttlFloor)
-  }
+                 ttlFloor: Long = Long.MinValue): DataFrame =
+    mergedReadFiles(spark, regionFiles(spark, dir), maxVersions, ttlFloor)
 
   /** Per-region key-range metadata for split decisions — (file, first
-    * row, mid row, last row), each from trailer + load-on-open positioned
+    * row, mid row, last row), each from [[keyRange]]'s load-on-open
     * reads only (never data blocks): exactly the bookkeeping an HBase
     * master consults to pick a region's split point. `mid` is the first
     * key of the middle root-index entry — a data-block boundary, so a
@@ -1084,27 +1033,26 @@ object HFileOps {
     */
   def regionKeyRanges(spark: SparkSession, dir: String)
       : Seq[(String, String, String, String)] = {
-    val (paths, _) = regionFiles(spark, dir)
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    paths.map { p =>
-      val path = new HPath(p)
-      val fs = path.getFileSystem(hadoopConf)
-      val in = fs.open(path)
-      try {
-        val (loo, _, sect) = openSections(in, fs.getFileStatus(path).getLen)
-        val root = HFileCodec.parseIndexEntriesWithKeys(
-          loo, sect.rootIndexOffset.toInt, HFileCodec.RootIndexMagic)
-        val info = HFileCodec.parseFileInfoPayload(
-          HFileCodec.blockPayload(loo, sect.fileInfoOffset.toInt))
-        val lastKey = info.getOrElse("hfile.LASTKEY",
-          throw new IllegalStateException(s"$p missing hfile.LASTKEY"))
-        (p,
-          new String(HFileCodec.rowOfKey(root.head._3), UTF_8),
-          new String(HFileCodec.rowOfKey(root(root.size / 2)._3), UTF_8),
-          new String(HFileCodec.rowOfKey(lastKey), UTF_8))
-      } finally in.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    regionFiles(spark, dir).map { p =>
+      val (first, mid, last) = keyRange(p, conf)
+      (p, new String(first, UTF_8), new String(mid, UTF_8), new String(last, UTF_8))
     }
   }
+
+  /** First, middle and last row of store file `p`, from its load-on-open
+    * blocks alone: the first keys of the first and the middle root-index
+    * entries, and file-info `hfile.LASTKEY`.
+    */
+  private def keyRange(p: String, conf: Configuration)
+      : (Array[Byte], Array[Byte], Array[Byte]) =
+    openRegion(p, conf) { (blockAt, loo) =>
+      val root = rootIndex(blockAt, loo)
+      val lastKey = fileInfo(blockAt, loo).getOrElse("hfile.LASTKEY",
+        throw new IllegalStateException(s"$p missing hfile.LASTKEY"))
+      (HFileCodec.rowOfKey(root.head._3), HFileCodec.rowOfKey(root(root.size / 2)._3),
+        HFileCodec.rowOfKey(lastKey))
+    }
 
   /** Write a snapshot MANIFEST: the HBase snapshot model [public:
     * o.a.h.hbase.snapshot.SnapshotManifest] — a snapshot is a reference
@@ -1197,7 +1145,7 @@ object HFileOps {
   def restoreDiff(spark: SparkSession, manifestPath: String,
                   dir: String): DataFrame = {
     val snapByRegion = filesByRegion(manifestFiles(spark, manifestPath))
-    val liveByRegion = filesByRegion(regionFiles(spark, dir)._1)
+    val liveByRegion = filesByRegion(regionFiles(spark, dir))
     import spark.implicits._
     (snapByRegion.keySet ++ liveByRegion.keySet).toSeq.sorted.map { r =>
       val snap = snapByRegion.getOrElse(r, Set.empty)
@@ -1317,30 +1265,15 @@ object HFileOps {
                       maxVersions: Int = 1,
                       ttlFloor: Long = Long.MinValue): DataFrame = {
     require(maxVersions >= 1, s"maxVersions must be >= 1, got $maxVersions")
-    val serConf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     if (paths.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], cellsSchema)
     // ---- driver-side region assignment: (gen, firstRow, lastRow) per
-    // file from trailer + load-on-open only (firstRow = root index's
-    // first key, lastRow = file-info hfile.LASTKEY)
+    // file from its load-on-open blocks only ([[keyRange]])
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val metas: Seq[(String, Int, Array[Byte], Array[Byte])] = paths.map { p =>
-      val path = new HPath(p)
-      val fs = path.getFileSystem(hadoopConf)
-      val in = fs.open(path)
-      try {
-        val (loo, _, sect) = openSections(in, fs.getFileStatus(path).getLen)
-        val root = HFileCodec.parseIndexEntriesWithKeys(
-          loo, sect.rootIndexOffset.toInt, HFileCodec.RootIndexMagic)
-        val info = HFileCodec.parseFileInfoPayload(
-          HFileCodec.blockPayload(loo, sect.fileInfoOffset.toInt))
-        val lastKey = info.getOrElse("hfile.LASTKEY",
-          throw new IllegalStateException(s"$p missing hfile.LASTKEY"))
-        (p, genOf(path.getName), HFileCodec.rowOfKey(root.head._3),
-          HFileCodec.rowOfKey(lastKey))
-      } finally in.close()
+      val (first, _, last) = keyRange(p, hadoopConf)
+      (p, genOf(p), first, last)
     }
     // merge ranges: the distinct file first-rows partition the key space;
     // every cell's row is >= its file's first row, so [bounds(0), ∞)
@@ -1351,18 +1284,19 @@ object HFileOps {
         if (acc.nonEmpty && java.util.Arrays.equals(acc.last, r)) acc
         else acc :+ r
       }
-    val ranges: Seq[(Array[Byte], Option[Array[Byte]], Seq[(String, Int)])] =
+    // each range is [start, stop); the last one's empty stop is open-ended
+    val ranges: Seq[(Array[Byte], Array[Byte], Seq[(String, Int)])] =
       bounds.indices.map { i =>
         val start = bounds(i)
-        val stop = if (i + 1 < bounds.size) Some(bounds(i + 1)) else None
+        val stop = if (i + 1 < bounds.size) bounds(i + 1) else Array.emptyByteArray
         val files = metas.collect {
           case (p, gen, fr, lr)
-            if java.util.Arrays.compareUnsigned(lr, start) >= 0 &&
-              stop.forall(s => java.util.Arrays.compareUnsigned(fr, s) < 0) =>
+            if java.util.Arrays.compareUnsigned(lr, start) >= 0 && rowBelow(fr, stop) =>
             (p, gen)
         }
         (start, stop, files)
       }.filter(_._3.nonEmpty)
+    val serConf = new SerializableConfiguration(hadoopConf)
     val rows = spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
       .flatMap { case (start, stop, files) =>
@@ -1371,28 +1305,23 @@ object HFileOps {
     spark.createDataFrame(rows, cellsSchema)
   }
 
-  /** Trailer + load-on-open section in two positioned reads; returns the
-    * section bytes, its absolute start, and the walked (RELATIVE) block
-    * offsets — index entries inside hold absolute data offsets, so most
-    * callers never need another metadata read.
+  /** One store file's cells in `[start, stop)` (an empty `stop` is
+    * open-ended), ascending — a merge range's per-file stream. Lazy over
+    * the one index walk ([[dataBlocks]]): each selected block is read
+    * once, when the merge reaches it. Pure over `blockAt` so the spec can
+    * count reads.
     */
-  private def openSections(in: org.apache.hadoop.fs.FSDataInputStream,
-                           len: Long): (Array[Byte], Long, HFileCodec.LoadOnOpen) = {
-    val tail = new Array[Byte](HFileCodec.TrailerLen)
-    in.readFully(len - HFileCodec.TrailerLen, tail)
-    val trailer = HFileCodec.readTrailer(tail)
-    val looStart = trailer.loadOnOpenOffset
-    val looLen = len - HFileCodec.TrailerLen - looStart
-    require(looStart >= 0 && looLen > 0 && looLen <= HFileCodec.MaxBlockBytes,
-      s"implausible load-on-open section [$looStart, ${len - HFileCodec.TrailerLen})")
-    val loo = new Array[Byte](looLen.toInt)
-    in.readFully(looStart, loo)
-    (loo, looStart, HFileCodec.walkLoadOnOpen(loo, 0, loo.length))
-  }
-
-  private def genOf(name: String): Int = {
-    val m = GenFilePattern.matcher(name)
-    if (m.matches()) m.group(1).toInt else 0
+  private[graft] def mergeFileCells(blockAt: Long => Array[Byte],
+                                    loo: HFileCodec.LoadOnOpen,
+                                    start: Array[Byte],
+                                    stop: Array[Byte]): Iterator[HFileCodec.HCell] = {
+    val extras = extrasAt(blockAt, loo)
+    dataBlocks(blockAt, rootIndex(blockAt, loo), forwardRange(start, stop))
+      .flatMap(blockCells(_, extras))
+      // streams are row-ascending, so the range restriction is a
+      // prefix drop + a truncation, never a full filter
+      .dropWhile(c => java.util.Arrays.compareUnsigned(c.row, start) < 0)
+      .takeWhile(c => rowBelow(c.row, stop))
   }
 
   /** One merge range: K-way heap merge of the overlapping files' sorted
@@ -1402,48 +1331,13 @@ object HFileOps {
     * size.
     */
   private def mergeRangeRows(serConf: SerializableConfiguration,
-                             start: Array[Byte], stop: Option[Array[Byte]],
+                             start: Array[Byte], stop: Array[Byte],
                              files: Seq[(String, Int)], maxVersions: Int,
                              ttlFloor: Long): Iterator[Row] = {
     val streams: Seq[(Iterator[HFileCodec.HCell], Int)] = files.map {
       case (p, gen) =>
-        val path = new HPath(p)
-        val fs = path.getFileSystem(serConf.value)
-        val in = fs.open(path)
-        Option(TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-        val (loo, _, sect) = openSections(in, fs.getFileStatus(path).getLen)
-        val root = HFileCodec.parseIndexEntriesWithKeys(
-          loo, sect.rootIndexOffset.toInt, HFileCodec.RootIndexMagic)
-        val extras =
-          if (sect.fileInfoOffset < 0) HFileCodec.NoExtras
-          else HFileCodec.extrasOf(HFileCodec.parseFileInfoPayload(
-            HFileCodec.blockPayload(loo, sect.fileInfoOffset.toInt)))
-        def inRange(entries: Seq[(Long, Int, Array[Byte])]) = stop match {
-          case Some(s) => HFileCodec.entriesInRange(entries, start, s)
-          case None => HFileCodec.entriesFromStart(entries, start)
-        }
-        val dataOffsets = inRange(root).flatMap { case (off, _, _) =>
-          val blk = readBlockAt(in, off)
-          if (magicAt(blk, HFileCodec.IntermediateIndexMagic))
-            inRange(HFileCodec.parseIndexEntriesWithKeys(blk, 0,
-              HFileCodec.IntermediateIndexMagic)).map(_._1)
-          else Seq(off)
-        }
-        val cells = dataOffsets.iterator.flatMap { off =>
-          val blk = readBlockAt(in, off)
-          val isEncoded = magicAt(blk, HFileCodec.EncodedDataMagic)
-          require(isEncoded || magicAt(blk, HFileCodec.DataMagic),
-            "bad data block magic")
-          HFileCodec.dataBlockCells(HFileCodec.blockPayload(blk, 0),
-            isEncoded, extras)
-        }
-          // streams are row-ascending, so the range restriction is a
-          // prefix drop + a truncation, never a full filter
-          .dropWhile(c => java.util.Arrays.compareUnsigned(c.row, start) < 0)
-          .takeWhile(c => stop.forall(s =>
-            java.util.Arrays.compareUnsigned(c.row, s) < 0))
-        (cells, gen)
+        val (_, loo, blockAt) = openForTask(p, serConf.value)
+        (mergeFileCells(blockAt, loo, start, stop), gen)
     }
     def coordCompare(a: HFileCodec.HCell, b: HFileCodec.HCell): Int = {
       var c = java.util.Arrays.compareUnsigned(a.row, b.row)
@@ -1520,18 +1414,14 @@ object HFileOps {
                 java.nio.ByteBuffer.wrap(b._1.value).getDouble
             }
             .take(maxVersions)
-            .foreach { case (c, _) =>
-              out += Row(new String(c.row, UTF_8), new String(c.family, UTF_8),
-                new String(c.qualifier, UTF_8), c.ts,
-                java.nio.ByteBuffer.wrap(c.value).getDouble, "put")
-            }
+            .foreach { case (c, _) => out += cellRow(c) }
         }
       def hasNext: Boolean = { refill(); out.nonEmpty }
       def next(): Row = { refill(); out.dequeue() }
     }
   }
 
-  /** The r9 window-shuffle spelling of [[mergedRead]] — one
+  /** The window-shuffle spelling of [[mergedRead]] — one
     * coordinate-keyed exchange over the union of generations. Kept as
     * the REFERENCE implementation the exchange-free merge is
     * equivalence-pinned against in HFileSpec.
@@ -1584,11 +1474,8 @@ object HFileOps {
               blockSize: Int = 64 * 1024,
               compression: Int = HFileCodec.CompressionNone,
               encoding: Int = HFileCodec.EncodingNone): Int = {
-    val (paths, serConf) = regionFiles(spark, dir)
-    val gens = paths.map { p =>
-      val m = GenFilePattern.matcher(new HPath(p).getName)
-      if (m.matches()) m.group(1).toInt else 0
-    }
+    val paths = regionFiles(spark, dir)
+    val gens = paths.map(genOf)
     val newGen = if (gens.isEmpty) 0 else gens.max + 1
     val merged = mergedRead(spark, dir)
     val regions = math.max(1, paths.size)

@@ -65,14 +65,7 @@ object NamespaceOps {
       else spark.sparkContext
         .parallelize(files, math.min(files.size, 64))
         .map { case (t, p, bytes) =>
-          val path = new HPath(p)
-          val pfs = path.getFileSystem(serConf.value)
-          val in = pfs.open(path)
-          try {
-            val tail = new Array[Byte](HFileCodec.TrailerLen)
-            in.readFully(pfs.getFileStatus(path).getLen - HFileCodec.TrailerLen, tail)
-            (t, bytes, HFileCodec.readTrailer(tail).entryCount)
-          } finally in.close()
+          (t, bytes, HFileOps.withFile(p, serConf.value)(HFileOps.trailerAt(_, _).entryCount))
         }.collect().toSeq
     val rows = perFile.groupBy(_._1).toSeq.sortBy(_._1).map { case (t, fs0) =>
       Row(t, fs0.size.toLong, fs0.map(_._2).sum, fs0.map(_._3).sum)

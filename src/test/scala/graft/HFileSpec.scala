@@ -1206,6 +1206,49 @@ class HFileSpec extends SparkSuite {
     assert(reads <= 110, s"bounded range read $reads blocks")
   }
 
+  test("merge-on-read file stream: every selected data block is read once, lazily") {
+    // 100 one-cell blocks: a single-level index (root -> data blocks) and
+    // a two-level one (root -> 16-entry IDXINTE2 chunks -> data blocks)
+    val cells = (0 until 100).map(i => cell(f"row$i%05d", "q", 1L, i.toDouble))
+    def rows(from: Int, until: Int) = (from until until).map(i => f"row$i%05d")
+    for ((chunkEntries, chunksOf) <- Seq(
+           HFileCodec.DefaultIndexChunkEntries -> ((_: Range) => 0),
+           16 -> ((r: Range) => r.map(_ / 16).distinct.size))) {
+      val file = HFileCodec.write(cells.iterator, blockSize = 1,
+        indexChunkEntries = chunkEntries)
+      val tr = HFileCodec.readTrailer(file)
+      val loo = HFileCodec.walkLoadOnOpen(file,
+        tr.loadOnOpenOffset.toInt, file.length - HFileCodec.TrailerLen)
+      var reads = 0
+      def countingBlockAt(off: Long): Array[Byte] = {
+        reads += 1
+        val payloadLen = java.nio.ByteBuffer.wrap(file, off.toInt + 8, 4).getInt
+        java.util.Arrays.copyOfRange(file, off.toInt,
+          off.toInt + HFileCodec.HeaderSize + payloadLen)
+      }
+      def stream(start: String, stop: String) = HFileOps.mergeFileCells(
+        countingBlockAt, loo, start.getBytes(UTF_8), stop.getBytes(UTF_8))
+        .map(c => new String(c.row, UTF_8))
+      // root + file-info, then each chunk and data block of the selection
+      // once: blocks 19-59 for [row20, row60) — a start row that begins a
+      // block also selects the block before it, where the row may begin
+      val bounded = stream("row00020", "row00060").toList
+      assert(bounded == rows(20, 60), s"chunk $chunkEntries: bounded range")
+      assert(reads == 2 + chunksOf(19 until 60) + 41,
+        s"chunk $chunkEntries: $reads reads for 41 data blocks")
+      // an empty stop is open-ended: [row20, end), blocks 19-99
+      reads = 0
+      assert(stream("row00020", "").toList == rows(20, 100))
+      assert(reads == 2 + chunksOf(19 until 100) + 81,
+        s"chunk $chunkEntries: $reads reads for 81 data blocks")
+      // lazy: the first cell costs blocks 19 and 20 (and their chunk) only
+      reads = 0
+      assert(stream("row00020", "row00060").next() == "row00020")
+      assert(reads == 2 + chunksOf(19 until 21) + 2,
+        s"chunk $chunkEntries: $reads reads for the first cell")
+    }
+  }
+
   test("whileMatchScan: global stop-key composition equals the relational spelling") {
     val src = Tables.cells(spark, sf)
     val dir = tmpDir("wm").toString
@@ -1331,6 +1374,12 @@ class HFileSpec extends SparkSuite {
       assert(revRange.nonEmpty && revRange.sameElements(fwd), s"bounded reversed ($tag)")
       // a seek origin below every key selects nothing — index-only rejection
       assert(HFileOps.rangeScan(spark, dir, "!", "", reversed = true, limit = 5).isEmpty)
+      // an empty stop row is open-ended forward too (HBase EMPTY_END_ROW)
+      val openFwd = HFileOps.rangeScan(spark, dir, from, "")
+        .collect().map(_.toString).sorted
+      val atOrAfter = HFileOps.read(spark, dir).where(col("rowkey") >= from)
+        .collect().map(_.toString).sorted
+      assert(openFwd.nonEmpty && openFwd.sameElements(atOrAfter), s"open forward ($tag)")
     }
   }
 
