@@ -339,8 +339,8 @@ object HFileCodec {
     * coincidental varint match on an LZ4 chunk falls through to the LZ4
     * attempt rather than returning garbage).
     */
-  private[sources] def decompress(b: Array[Byte], off: Int, len: Int,
-                                  uncompressedLen: Int): Array[Byte] = {
+  private def decompress(b: Array[Byte], off: Int, len: Int,
+                         uncompressedLen: Int): Array[Byte] = {
     require(len >= 4, s"compressed payload of $len B cannot hold any codec stream")
     val b0 = b(off) & 0xff
     if (b0 == 0x1f && (b(off + 1) & 0xff) == 0x8b)
@@ -1221,14 +1221,13 @@ object HFileCodec {
     ((payload(0) & 0xff) << 8) | (payload(1) & 0xff)
   }
 
-  /** Cell iterator over one data block's UNCOMPRESSED payload, NONE or
-    * FAST_DIFF — the one decode seam every read path (full read,
-    * streaming, point get, range scan) goes through. `encoded` comes
+  /** Cell iterator over one data block's UNCOMPRESSED payload, plain or
+    * encoded — the payload decode under [[blockCells]]. `encoded` comes
     * from the block's own magic (`DATABLKE`), and the payload's leading
-    * 2-byte id is verified against the one encoding we write.
+    * 2-byte id picks the encoding.
     */
-  private[sources] def dataBlockCells(payload: Array[Byte], encoded: Boolean,
-                                      extras: CellExtras = NoExtras): Iterator[HCell] =
+  private def dataBlockCells(payload: Array[Byte], encoded: Boolean,
+                             extras: CellExtras = NoExtras): Iterator[HCell] =
     if (!encoded)
       new Iterator[HCell] {
         private var q = 0
@@ -1252,10 +1251,10 @@ object HFileCodec {
   /** CRC32C sums over the logical concatenation of `parts` (each a
     * (buffer, offset, length) segment), one 4-byte BE word per `bpc`-byte
     * chunk — segment form so the writer (header and payload in separate
-    * buffers) and the streaming reader share one implementation with the
-    * contiguous-buffer verify path, no copies anywhere.
+    * buffers) shares one implementation with the contiguous-buffer verify
+    * path, no copies anywhere.
     */
-  private[sources] def checksumChunks(bpc: Int,
+  private def checksumChunks(bpc: Int,
       parts: (Array[Byte], Int, Int)*): Array[Byte] = {
     val total = parts.iterator.map(_._3.toLong).sum
     val n = ((total + bpc - 1) / bpc).toInt
@@ -1281,9 +1280,9 @@ object HFileCodec {
 
   /** Verify a contiguous block's checksum chunks against its header's
     * declared type; damaged data throws, NULL-checksum blocks return
-    * immediately. Shared by [[blockPayload]] (every random-access read).
+    * immediately. Called by [[blockPayload]] only, so every read verifies.
     */
-  private[sources] def verifyChecksums(block: Array[Byte], hdrOff: Int): Unit = {
+  private def verifyChecksums(block: Array[Byte], hdrOff: Int): Unit = {
     val ctype = block(hdrOff + 24)
     if (ctype == ChecksumNull) return
     require(ctype == ChecksumCrc32c,
@@ -1337,22 +1336,33 @@ object HFileCodec {
     * never over-allocate.
     */
   private[graft] def blockPayload(block: Array[Byte], hdrOff: Int): Array[Byte] = {
-    val onDiskLen = ByteBuffer.wrap(block, hdrOff + 8, 4).getInt
+    val onDiskLen = declaredOnDiskLen(block, hdrOff)
+    require(hdrOff.toLong + HeaderSize + onDiskLen <= block.length,
+      s"block payload $onDiskLen B at $hdrOff runs past the buffer")
+    verifyChecksums(block, hdrOff)
     val uncompressedLen = ByteBuffer.wrap(block, hdrOff + 12, 4).getInt
-    val dataWithHeader = ByteBuffer.wrap(block, hdrOff + 29, 4).getInt
+    val dataLen = ByteBuffer.wrap(block, hdrOff + 29, 4).getInt - HeaderSize
+    if (dataLen == uncompressedLen)
+      java.util.Arrays.copyOfRange(block, hdrOff + HeaderSize,
+        hdrOff + HeaderSize + dataLen)
+    else decompress(block, hdrOff + HeaderSize, dataLen, uncompressedLen)
+  }
+
+  /** The on-disk length (checksums included) that the block header at
+    * `hdrOff` declares, once every length the header declares is in
+    * bounds — the check that precedes any allocation a header sizes.
+    */
+  private def declaredOnDiskLen(b: Array[Byte], hdrOff: Int): Int = {
+    val onDiskLen = ByteBuffer.wrap(b, hdrOff + 8, 4).getInt
+    val uncompressedLen = ByteBuffer.wrap(b, hdrOff + 12, 4).getInt
+    val dataWithHeader = ByteBuffer.wrap(b, hdrOff + 29, 4).getInt
     require(onDiskLen >= 0 && onDiskLen <= MaxBlockBytes &&
       uncompressedLen >= 0 && uncompressedLen <= MaxBlockBytes,
       s"implausible block lengths onDisk=$onDiskLen uncompressed=$uncompressedLen at $hdrOff")
     val dataLen = dataWithHeader - HeaderSize
     require(dataLen >= 0 && dataLen <= onDiskLen,
       s"implausible onDiskDataSizeWithHeader $dataWithHeader at $hdrOff")
-    require(hdrOff.toLong + HeaderSize + onDiskLen <= block.length,
-      s"block payload $onDiskLen B at $hdrOff runs past the buffer")
-    verifyChecksums(block, hdrOff)
-    if (dataLen == uncompressedLen)
-      java.util.Arrays.copyOfRange(block, hdrOff + HeaderSize,
-        hdrOff + HeaderSize + dataLen)
-    else decompress(block, hdrOff + HeaderSize, dataLen, uncompressedLen)
+    onDiskLen
   }
 
   /** Index entry serialization, shared by the root and intermediate
@@ -1408,8 +1418,8 @@ object HFileCodec {
   }
 
   /** Test one serialized chunk (payload at `off`, after the header). */
-  private[sources] def bloomChunkContains(chunk: Array[Byte], off: Int,
-                                          row: Array[Byte]): Boolean = {
+  private def bloomChunkContains(chunk: Array[Byte], off: Int,
+                                 row: Array[Byte]): Boolean = {
     val buf = ByteBuffer.wrap(chunk, off, chunk.length - off)
     val k = buf.getInt
     val mBits = buf.getLong
@@ -1765,21 +1775,16 @@ object HFileCodec {
     out.toByteArray
   }
 
-  /** Parse the FILEINF2 block's FileInfoProto map — protobuf wire rules
-    * only, unknown fields skipped, same hostile-input regime as
-    * [[readTrailer]].
+  /** The FILEINF2 block's FileInfoProto map of an in-memory file, as
+    * the shared open ([[openStore]]) locates and parses it.
     */
-  def readFileInfo(file: Array[Byte]): Map[String, Array[Byte]] = {
-    val trailer = readTrailer(file)
-    require(trailer.fileInfoOffset >= 0 && trailer.fileInfoOffset < file.length,
-      s"bad fileInfoOffset ${trailer.fileInfoOffset}")
-    parseFileInfoPayload(blockPayload(file, trailer.fileInfoOffset.toInt))
-  }
+  def readFileInfo(file: Array[Byte]): Map[String, Array[Byte]] =
+    openStore(bytesAt(file), file.length).fileInfo
 
-  /** Parse an already-extracted FILEINF2 block payload — the form the
-    * positioned-read paths use (they fetch the block themselves).
+  /** Parse a FILEINF2 block payload — protobuf wire rules only, unknown
+    * fields skipped, same hostile-input regime as [[readTrailer]].
     */
-  def parseFileInfoPayload(payload: Array[Byte]): Map[String, Array[Byte]] = {
+  private def parseFileInfoPayload(payload: Array[Byte]): Map[String, Array[Byte]] = {
     require(payload.length >= 4 &&
       java.util.Arrays.equals(java.util.Arrays.copyOfRange(payload, 0, 4), PbMagic),
       "file-info block missing PBUF magic")
@@ -1849,7 +1854,7 @@ object HFileCodec {
     * the jump, an unknown magic or a non-tiling section throws, so a
     * damaged file can only ever fail loudly at open.
     */
-  private[graft] def walkLoadOnOpen(b: Array[Byte], start: Int, end: Int): LoadOnOpen = {
+  private def walkLoadOnOpen(b: Array[Byte], start: Int, end: Int): LoadOnOpen = {
     require(start >= 0 && start <= end && end <= b.length,
       s"bad load-on-open range [$start, $end)")
     var root = -1L; var meta = -1L; var fileInfo = -1L; var bloom = -1L
@@ -1873,15 +1878,6 @@ object HFileCodec {
     }
     require(root >= 0, "load-on-open section missing the root data index")
     LoadOnOpen(root, meta, fileInfo, bloom)
-  }
-
-  /** Locate the load-on-open blocks of an in-memory file. */
-  private[graft] def loadOnOpenOf(file: Array[Byte]): LoadOnOpen = {
-    val trailer = readTrailer(file)
-    require(trailer.loadOnOpenOffset >= 0 &&
-      trailer.loadOnOpenOffset <= file.length - TrailerLen,
-      s"bad loadOnOpenOffset ${trailer.loadOnOpenOffset}")
-    walkLoadOnOpen(file, trailer.loadOnOpenOffset.toInt, file.length - TrailerLen)
   }
 
   /** Parse the 212-byte tail per the protobuf wire rules: skip the magic,
@@ -1940,99 +1936,224 @@ object HFileCodec {
       ByteBuffer.wrap(file, file.length - 4, 4).getInt & 0x00ffffff)
   }
 
+  // -------------------------------------------------------------- reader
+  // One reader under every read shape: the in-memory read/mayContainRow/
+  // readFileInfo below, HFileOps' positioned seek paths (gets, range and
+  // WhileMatch scans, merge-on-read) and the forward stream all open,
+  // walk the index, check the bloom and decode blocks here.
+
+  /** Positioned read of `len` bytes at file offset `off`; throws where
+    * the file ends, as Hadoop's `readFully` does. */
+  private[graft] type ReadAt = (Long, Int) => Array[Byte]
+
+  /** Index entries as the codec parses them: (offset, onDiskSize, first key). */
+  private[sources] type Entries = Seq[(Long, Int, Array[Byte])]
+
+  /** An in-memory file as a [[ReadAt]]. A read that leaves the array
+    * throws: a bare `copyOfRange` would zero-pad past the end instead.
+    */
+  private[graft] def bytesAt(file: Array[Byte]): ReadAt = (off, len) => {
+    require(off >= 0 && len >= 0 && off <= file.length.toLong - len,
+      s"read of $len B at $off runs past the ${file.length} B file")
+    java.util.Arrays.copyOfRange(file, off.toInt, off.toInt + len)
+  }
+
+  /** The block an index entry points at: ONE positioned read of the
+    * entry's recorded on-disk size, which must equal the size the block's
+    * own header declares (HFileBlock.FSReaderImpl checks the same pair) —
+    * so a damaged entry or header throws instead of decoding a block cut
+    * at the wrong length. Index entries reach intermediate index chunks,
+    * data blocks and bloom chunks; the writer records
+    * `HeaderSize + onDisk + sums` for all three.
+    */
+  private def readBlockAt(readAt: ReadAt, off: Long, size: Int): Array[Byte] = {
+    require(size >= HeaderSize && size - HeaderSize <= MaxBlockBytes,
+      s"implausible index entry size $size at $off")
+    val blk = readAt(off, size)
+    val declared = HeaderSize.toLong + ByteBuffer.wrap(blk, 8, 4).getInt
+    require(declared == size,
+      s"block size mismatch at $off: index entry $size B, block header $declared B")
+    blk
+  }
+
+  /** One opened store file: its trailer, the load-on-open block offsets
+    * (absolute), the load-on-open section's bytes and the source every
+    * other block is read from. The section's blocks (root index, file
+    * info, bloom meta) are served from `section`; every other block is
+    * reached through an index entry ([[readBlockAt]]).
+    */
+  private[graft] final case class Store(trailer: Trailer, loo: LoadOnOpen,
+                                        section: Array[Byte], readAt: ReadAt) {
+    private def inSection(off: Long): Int = (off - trailer.loadOnOpenOffset).toInt
+
+    /** The root data-index entries; there are as many as the trailer's
+      * `dataIndexCount`. */
+    lazy val root: Entries = {
+      val entries = indexEntries(section, inSection(loo.rootIndexOffset))
+      require(entries.size == trailer.dataIndexCount, "index count mismatch")
+      entries
+    }
+
+    /** The file-info map; empty when the file has no file-info block. */
+    lazy val fileInfo: Map[String, Array[Byte]] =
+      if (loo.fileInfoOffset < 0) Map.empty
+      else parseFileInfoPayload(blockPayload(section, inSection(loo.fileInfoOffset)))
+
+    /** The open-time mvcc/tags postfix gate every cell decode applies
+      * (HFileReaderImpl's shouldIncludeMemStoreTS). */
+    lazy val extras: CellExtras = extrasOf(fileInfo)
+
+    /** The row-bloom check, with the bloom meta parsed once per open:
+      * false means the row is DEFINITELY absent (the point-get prune),
+      * true means "read the data block". Files without a bloom answer
+      * true, and so does a chunk that cannot be inflated: a bloom may
+      * only ever PRUNE, never throw a false negative out of a get.
+      */
+    lazy val mayContain: Array[Byte] => Boolean =
+      if (loo.bloomMetaOffset < 0) _ => true
+      else {
+        val meta = indexEntries(section, inSection(loo.bloomMetaOffset))
+        val metaRows = indexRows(meta)
+        row => candidateEntries(meta, metaRows, row).exists { case (off, size, _) =>
+          val chunk = readBlockAt(readAt, off, size)
+          require(hasMagic(chunk, 0, BloomChunkMagic), "bad bloom chunk magic")
+          try bloomChunkContains(blockPayload(chunk, 0), 0, row)
+          catch { case _: Exception => true }
+        }
+      }
+
+    /** The one block-index walk: the root entries `select` picks, each
+      * one that points at an IDXINTE2 chunk expanded into the chunk's
+      * entries `select` picks, yielded as data-block BYTES in file order
+      * (back to front under `backward`). Lazy: a chunk or data block is
+      * read only when the walk reaches it, so a walk stopped early (a
+      * limit, a WhileMatch stop) stops reading, and every block is read
+      * once.
+      */
+    def dataBlocks(select: Entries => Entries,
+                   backward: Boolean = false): Iterator[Array[Byte]] = {
+      def walk(entries: Entries): Iterator[Array[Byte]] = {
+        val sel = select(entries)
+        (if (backward) sel.reverseIterator else sel.iterator)
+          .map { case (off, size, _) => readBlockAt(readAt, off, size) }
+      }
+      walk(root).flatMap { blk =>
+        if (hasMagic(blk, 0, IntermediateIndexMagic)) walk(indexEntries(blk, 0))
+        else Iterator.single(blk)
+      }
+    }
+  }
+
+  /** The one store-file open — HFileReaderImpl's open sequence over a
+    * positioned-read source: the trailer, then the whole LOAD-ON-OPEN
+    * section (root index, meta index, file info, bloom meta, located by
+    * [[walkLoadOnOpen]]) in one read.
+    */
+  private[graft] def openStore(readAt: ReadAt, len: Long): Store = {
+    require(len >= TrailerLen, s"file shorter than a trailer")
+    val trailer = readTrailer(readAt(len - TrailerLen, TrailerLen))
+    val looStart = trailer.loadOnOpenOffset
+    val looLen = len - TrailerLen - looStart
+    // index + file info + bloom meta: ~100s of KB at most under the
+    // two-level index invariant; a hostile offset claiming more than
+    // one block's worth may only throw, never mega-allocate
+    require(looStart >= 0 && looLen > 0 && looLen <= MaxBlockBytes,
+      s"implausible load-on-open section [$looStart, ${len - TrailerLen})")
+    val section = readAt(looStart, looLen.toInt)
+    val rel = walkLoadOnOpen(section, 0, section.length)
+    def abs(r: Long): Long = if (r < 0) -1L else looStart + r
+    Store(trailer, LoadOnOpen(abs(rel.rootIndexOffset), abs(rel.metaIndexOffset),
+      abs(rel.fileInfoOffset), abs(rel.bloomMetaOffset)), section, readAt)
+  }
+
   /** Stream-decode cells block-by-block from `in` — O(blockSize) heap,
     * independent of file size: the region-server read shape. Relies on the
-    * v3 layout invariant that the file-info block follows the last data
-    * block, so the data section ends at the first non-`DATABLK*` magic.
+    * v3 layout invariant that the data blocks come first, so the data
+    * section ends at the first block whose magic is not a data magic.
+    * Per block: the header, its declared lengths checked BEFORE the block
+    * array is allocated, the rest of the block, then [[blockCells]].
     *
     * A pure forward stream meets the file-info (which gates mvcc/tags)
     * only AFTER the data blocks, so a caller reading a file that carries
-    * postfixes must pass `extras` — [[graft.sources.HFileOps]] reads the
-    * trailer + file-info with one positioned read first and passes the
-    * flags in.
+    * postfixes must pass `extras` — [[graft.sources.HFileOps]] opens the
+    * file with positioned reads first and passes the flags in.
     */
   def readStreaming(in: java.io.InputStream,
                     extras: CellExtras = NoExtras): Iterator[HCell] = new Iterator[HCell] {
     private var blockIter: Iterator[HCell] = Iterator.empty
     private var done = false
 
-    private def readFully(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n)
-      var off = 0
-      while (off < n) {
-        val r = in.read(b, off, n - off)
+    private def fill(b: Array[Byte], from: Int): Unit = {
+      var off = from
+      while (off < b.length) {
+        val r = in.read(b, off, b.length - off)
         require(r >= 0, "unexpected EOF inside an HFile block")
         off += r
       }
-      b
     }
 
     private def advance(): Unit =
       while (!done && !blockIter.hasNext) {
-        val hdr = readFully(HeaderSize)
-        val onDiskLen = ByteBuffer.wrap(hdr, 8, 4).getInt
-        val uncompressedLen = ByteBuffer.wrap(hdr, 12, 4).getInt
-        val dataWithHeader = ByteBuffer.wrap(hdr, 29, 4).getInt
-        require(onDiskLen >= 0 && onDiskLen <= MaxBlockBytes &&
-          uncompressedLen >= 0 && uncompressedLen <= MaxBlockBytes,
-          s"implausible block lengths onDisk=$onDiskLen uncompressed=$uncompressedLen")
-        val dataLen = dataWithHeader - HeaderSize
-        require(dataLen >= 0 && dataLen <= onDiskLen,
-          s"implausible onDiskDataSizeWithHeader $dataWithHeader")
-        val magic8 = java.util.Arrays.copyOfRange(hdr, 0, 8)
-        val isData = java.util.Arrays.equals(magic8, DataMagic)
-        val isEncoded = java.util.Arrays.equals(magic8, EncodedDataMagic)
-        if (isData || isEncoded) {
-          // onDiskLen includes the trailing checksum bytes — one read
-          // grabs data + sums, still O(blockSize) heap
-          val body = readFully(onDiskLen)
-          val ctype = hdr(24)
-          if (ctype != ChecksumNull) {
-            require(ctype == ChecksumCrc32c,
-              s"unsupported checksum type $ctype (NULL=0, CRC32C=2)")
-            val bpc = ByteBuffer.wrap(hdr, 25, 4).getInt
-            require(bpc > 0, s"bad bytesPerChecksum $bpc")
-            val expect = checksumChunks(bpc,
-              (hdr, 0, HeaderSize), (body, 0, dataLen))
-            require(expect.length == onDiskLen - dataLen &&
-              java.util.Arrays.equals(expect,
-                java.util.Arrays.copyOfRange(body, dataLen, onDiskLen)),
-              "CRC32C mismatch in streamed data block")
-          }
-          // data length differs from uncompressed ⟺ compressed payload,
-          // codec sniffed from its own first bytes (see decompress) —
-          // one raw + one inflated block at a time
-          val payload =
-            if (dataLen == uncompressedLen) {
-              if (dataLen == onDiskLen) body
-              else java.util.Arrays.copyOfRange(body, 0, dataLen)
-            } else decompress(body, 0, dataLen, uncompressedLen)
-          blockIter = dataBlockCells(payload, isEncoded, extras)
-        } else done = true // file-info block: past the data section
+        val hdr = new Array[Byte](HeaderSize)
+        fill(hdr, 0)
+        if (dataBlockKind(hdr, 0).isEmpty) done = true // past the data section
+        else {
+          val blk = java.util.Arrays.copyOf(hdr, HeaderSize + declaredOnDiskLen(hdr, 0))
+          fill(blk, HeaderSize)
+          blockIter = blockCells(blk, extras)
+        }
       }
 
     def hasNext: Boolean = { advance(); blockIter.hasNext }
     def next(): HCell = { advance(); blockIter.next() }
   }
 
-  private[sources] def hasMagic(file: Array[Byte], off: Int, magic: Array[Byte]): Boolean =
+  private def hasMagic(file: Array[Byte], off: Int, magic: Array[Byte]): Boolean =
     java.util.Arrays.equals(java.util.Arrays.copyOfRange(file, off, off + 8), magic)
 
-  /** Parse one index block's (offset, onDiskSize) child entries — the
-    * keyless view of [[parseIndexEntriesWithKeys]] (one wire-format
-    * parser; a layout change lands in exactly one place).
-    */
-  private def parseIndexEntries(file: Array[Byte], hdrOff: Int,
-                                magic: Array[Byte]): Seq[(Long, Int)] =
-    parseIndexEntriesWithKeys(file, hdrOff, magic).map { case (o, s, _) => (o, s) }
+  /** `Some(encoded)` for a data block's magic (DATABLKE encoded,
+    * DATABLK* plain), None for every other block. */
+  private def dataBlockKind(b: Array[Byte], off: Int): Option[Boolean] =
+    if (hasMagic(b, off, EncodedDataMagic)) Some(true)
+    else if (hasMagic(b, off, DataMagic)) Some(false)
+    else None
 
-  /** Parse one index block's (offset, onDiskSize, firstKey) entries —
-    * the key-aware form the point-get path needs to binary-search blocks.
+  /** The one data-block decoder: magic check, payload (checksums
+    * verified, GZ and the other codecs inflated by [[blockPayload]]),
+    * cells.
+    *
+    * When the block is ROW_INDEX_V1-encoded, `seekRows` (distinct sorted
+    * target rows, the multiGet shape) switches the decode from a full
+    * block scan to one binary-searched in-block seek per target, and
+    * `seekFrom` (a range scan's start row) skips the block prefix — the
+    * RowIndexSeekerV1 read shape. Both are hints only: callers still
+    * filter by row, so every encoding returns identical rows.
     */
-  private[sources] def parseIndexEntriesWithKeys(block: Array[Byte], hdrOff: Int,
-      magic: Array[Byte]): Seq[(Long, Int, Array[Byte])] = {
-    require(hasMagic(block, hdrOff, magic),
-      s"bad index block magic at $hdrOff (want ${new String(magic, UTF_8)})")
+  private[sources] def blockCells(blk: Array[Byte], extras: CellExtras,
+                                  seekRows: Seq[Array[Byte]] = Nil,
+                                  seekFrom: Option[Array[Byte]] = None): Iterator[HCell] = {
+    val kind = dataBlockKind(blk, 0)
+    require(kind.isDefined, "bad data block magic")
+    val isEncoded = kind.get
+    val payload = blockPayload(blk, 0)
+    val rowIndexed = isEncoded && encodingIdOf(payload) == EncodingRowIndexV1
+    if (rowIndexed && seekRows.nonEmpty)
+      seekRows.iterator.flatMap { r =>
+        rowIndexSeek(payload, 2, r, extras)
+          .takeWhile(c => java.util.Arrays.equals(c.row, r))
+      }
+    else if (rowIndexed && seekFrom.isDefined)
+      rowIndexSeek(payload, 2, seekFrom.get, extras)
+    else dataBlockCells(payload, isEncoded, extras)
+  }
+
+  /** Parse one index block's (offset, onDiskSize, firstKey) entries — the
+    * root and intermediate data index and the bloom meta share the
+    * layout. The block's magic was checked by whoever classified it
+    * ([[walkLoadOnOpen]] for the section's blocks, the index walk for an
+    * IDXINTE2 chunk).
+    */
+  private def indexEntries(block: Array[Byte], hdrOff: Int): Entries = {
     val idx = blockPayload(block, hdrOff) // inflates if the block is compressed
     var p = 0
     val entries = ArrayBuffer.empty[(Long, Int, Array[Byte])]
@@ -2060,8 +2181,7 @@ object HFileCodec {
     * parsed index and share across a key batch (multiGet was re-copying
     * every entry's row per key).
     */
-  private[sources] def indexRows(
-      entries: Seq[(Long, Int, Array[Byte])]): Array[Array[Byte]] =
+  private[sources] def indexRows(entries: Entries): Array[Array[Byte]] =
     entries.iterator.map { case (_, _, k) => rowOfKey(k) }.toArray
 
   /** Greatest index with rows(i) ≤ row under `strict = false`, or
@@ -2084,14 +2204,11 @@ object HFileCodec {
     * `row`: the last entry whose first row sorts ≤ `row`, plus the
     * walk-back over every preceding entry whose first row EQUALS `row`
     * (a row can span block boundaries). Works identically at the root
-    * (chunk entries), the intermediate level, and the bloom meta.
+    * (chunk entries), the intermediate level, and the bloom meta; `rows`
+    * is [[indexRows]] of `entries`.
     */
-  private[sources] def candidateEntries(entries: Seq[(Long, Int, Array[Byte])],
-      row: Array[Byte]): Seq[(Long, Int, Array[Byte])] =
-    candidateEntries(entries, indexRows(entries), row)
-
-  private[sources] def candidateEntries(entries: Seq[(Long, Int, Array[Byte])],
-      rows: Array[Array[Byte]], row: Array[Byte]): Seq[(Long, Int, Array[Byte])] = {
+  private[sources] def candidateEntries(entries: Entries,
+      rows: Array[Array[Byte]], row: Array[Byte]): Entries = {
     val last = lastBefore(rows, row, strict = false)
     if (last < 0) Seq.empty
     else {
@@ -2108,12 +2225,13 @@ object HFileCodec {
     * earlier cells can sit in the previous block when a row spans a block
     * boundary (same rule as [[candidateEntries]]) — through the last
     * entry whose first row sorts < stop. Empty when every block starts
-    * at/after stop.
+    * at/after stop. An empty `stop` is open-ended, like HBase's
+    * `HConstants.EMPTY_END_ROW`.
     */
-  private[sources] def entriesInRange(entries: Seq[(Long, Int, Array[Byte])],
-      start: Array[Byte], stop: Array[Byte]): Seq[(Long, Int, Array[Byte])] = {
+  private[sources] def entriesInRange(entries: Entries,
+      start: Array[Byte], stop: Array[Byte]): Entries = {
     val rows = indexRows(entries)
-    val hi = lastBefore(rows, stop, strict = true)
+    val hi = if (stop.isEmpty) rows.length - 1 else lastBefore(rows, stop, strict = true)
     if (hi < 0) Seq.empty
     else {
       var lo = math.max(0, lastBefore(rows, start, strict = false))
@@ -2131,8 +2249,8 @@ object HFileCodec {
     * bound". Upper cut uses `strict = false`: a block whose FIRST key
     * equals the start row still contains in-range keys.
     */
-  private[sources] def entriesInRevRange(entries: Seq[(Long, Int, Array[Byte])],
-      stopExc: Array[Byte], startInc: Array[Byte]): Seq[(Long, Int, Array[Byte])] = {
+  private[sources] def entriesInRevRange(entries: Entries,
+      stopExc: Array[Byte], startInc: Array[Byte]): Entries = {
     val rows = indexRows(entries)
     val hi = lastBefore(rows, startInc, strict = false)
     if (hi < 0) Seq.empty
@@ -2143,63 +2261,18 @@ object HFileCodec {
     }
   }
 
-  /** [[entriesInRange]] with an open upper bound — the last merge range
-    * of a generational read has no stop row.
+  /** Row-bloom membership test over a whole in-memory file
+    * ([[Store.mayContain]]): false means the row is DEFINITELY absent;
+    * true means "read the data block". Files without a bloom answer true.
     */
-  private[sources] def entriesFromStart(entries: Seq[(Long, Int, Array[Byte])],
-      start: Array[Byte]): Seq[(Long, Int, Array[Byte])] = {
-    val rows = indexRows(entries)
-    var lo = math.max(0, lastBefore(rows, start, strict = false))
-    while (lo > 0 && java.util.Arrays.compareUnsigned(rows(lo), start) == 0)
-      lo -= 1
-    entries.slice(lo, entries.size)
-  }
+  def mayContainRow(file: Array[Byte], row: Array[Byte]): Boolean =
+    openStore(bytesAt(file), file.length).mayContain(row)
 
-  /** Row-bloom membership test over a whole in-memory file: false means
-    * the row is DEFINITELY absent (the point-get prune); true means
-    * "read the data block". Files without a bloom answer true.
-    */
-  def mayContainRow(file: Array[Byte], row: Array[Byte]): Boolean = {
-    val loo = loadOnOpenOf(file)
-    if (loo.bloomMetaOffset < 0) return true
-    val meta = parseIndexEntriesWithKeys(file, loo.bloomMetaOffset.toInt,
-      BloomMetaMagic)
-    val cands = candidateEntries(meta, row)
-    cands.exists { case (off, _, _) =>
-      require(hasMagic(file, off.toInt, BloomChunkMagic), "bad bloom chunk magic")
-      // a bloom may only ever PRUNE: a chunk that fails to inflate
-      // (damaged compressed payload) claims containment rather than
-      // throwing a false negative out of the get path
-      try bloomChunkContains(blockPayload(file, off.toInt), 0, row)
-      catch { case _: Exception => true }
-    }
-  }
-
-  /** Decode every cell by walking the index: root entries point at data
-    * blocks directly (single-level files) or at IDXINTE2 intermediate
-    * chunks (large files) — dispatch is by the target block's own magic,
-    * exactly how HBase's reader resolves non-leaf index entries.
+  /** Decode every cell of an in-memory file through the shared open,
+    * index walk and block decoder.
     */
   def read(file: Array[Byte]): Iterator[HCell] = {
-    val trailer = readTrailer(file)
-    // open-time gate: file-info keys decide whether cells carry the
-    // mvcc/tags postfixes (HFileReaderImpl's shouldIncludeMemStoreTS)
-    val extras = extrasOf(readFileInfo(file))
-    val rootEntries = parseIndexEntries(
-      file, loadOnOpenOf(file).rootIndexOffset.toInt, RootIndexMagic)
-    require(rootEntries.size == trailer.dataIndexCount, "index count mismatch")
-    val blocks = rootEntries.flatMap { case (off, size) =>
-      if (hasMagic(file, off.toInt, IntermediateIndexMagic))
-        parseIndexEntries(file, off.toInt, IntermediateIndexMagic)
-      else Seq((off, size))
-    }
-    blocks.iterator.flatMap { case (off, size) =>
-      val hdr = off.toInt
-      val isEncoded = hasMagic(file, hdr, EncodedDataMagic)
-      require(isEncoded || hasMagic(file, hdr, DataMagic), "bad data block magic")
-      val onDiskLen = ByteBuffer.wrap(file, hdr + 8, 4).getInt
-      require(HeaderSize + onDiskLen == size, "block size mismatch")
-      dataBlockCells(blockPayload(file, hdr), isEncoded, extras)
-    }
+    val store = openStore(bytesAt(file), file.length)
+    store.dataBlocks(identity).flatMap(blockCells(_, store.extras))
   }
 }

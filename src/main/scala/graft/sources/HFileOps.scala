@@ -305,114 +305,36 @@ object HFileOps {
   def regionCountForBytes(sourceBytes: Long): Int =
     math.min(4096L, math.max(4L, (sourceBytes + (1L << 24) - 1) / (1L << 24))).toInt
 
-  /** Index entries as the codec parses them: (offset, onDiskSize, first key). */
-  private type Entries = Seq[(Long, Int, Array[Byte])]
-
-  /** One Hadoop positioned-read of a whole block (header first for the
-    * length, then header+payload) — the random-access primitive of every
-    * seek path.
-    */
-  private def readBlockAt(in: FSDataInputStream, off: Long): Array[Byte] = {
-    val hdr = new Array[Byte](HFileCodec.HeaderSize)
-    in.readFully(off, hdr)
-    val payloadLen = java.nio.ByteBuffer.wrap(hdr, 8, 4).getInt
-    require(payloadLen >= 0 && payloadLen <= HFileCodec.MaxBlockBytes,
-      s"implausible block payload length $payloadLen at $off")
-    val block = new Array[Byte](HFileCodec.HeaderSize + payloadLen)
-    in.readFully(off, block)
-    block
+  /** A Hadoop stream as the codec's positioned-read source. */
+  private def readAtOf(in: FSDataInputStream): HFileCodec.ReadAt = (off, len) => {
+    val b = new Array[Byte](len)
+    in.readFully(off, b)
+    b
   }
 
-  /** Open `p`, hand `f` the stream and the file length, close on return.
-    * `f` MUST evaluate eagerly — nothing it returns may read the stream
-    * lazily.
+  /** [[HFileCodec.openStore]] over `p` for one eager reader: `f` gets the
+    * opened store and the file closes on return, so `f` MUST evaluate
+    * eagerly — nothing it returns may read the file lazily.
     */
-  private[sources] def withFile[A](p: String, conf: Configuration)(
-      f: (FSDataInputStream, Long) => A): A = {
+  private[sources] def openRegion[A](p: String, conf: Configuration)(
+      f: HFileCodec.Store => A): A = {
     val path = new HPath(p)
     val fs = path.getFileSystem(conf)
     val in = fs.open(path)
-    try f(in, fs.getFileStatus(path).getLen) finally in.close()
+    try f(HFileCodec.openStore(readAtOf(in), fs.getFileStatus(path).getLen))
+    finally in.close()
   }
 
-  /** A store file's trailer: one positioned read of its last
-    * [[HFileCodec.TrailerLen]] bytes. */
-  private[sources] def trailerAt(in: FSDataInputStream, len: Long): HFileCodec.Trailer = {
-    val tail = new Array[Byte](HFileCodec.TrailerLen)
-    in.readFully(len - HFileCodec.TrailerLen, tail)
-    HFileCodec.readTrailer(tail)
-  }
-
-  /** The one store-file open — HFileReaderImpl's open sequence: the
-    * trailer, then the whole LOAD-ON-OPEN section (root index, meta
-    * index, file info, bloom meta, located by magic walk) in one
-    * positioned read. Returns the blocks' absolute offsets and a
-    * `blockAt` that serves the section's blocks from the bytes already
-    * read and every other block (data, intermediate index, bloom chunk)
-    * with one positioned read.
-    */
-  private def openStore(in: FSDataInputStream,
-                        len: Long): (HFileCodec.LoadOnOpen, Long => Array[Byte]) = {
-    val looStart = trailerAt(in, len).loadOnOpenOffset
-    val looLen = len - HFileCodec.TrailerLen - looStart
-    // index + file info + bloom meta: ~100s of KB at most under the
-    // two-level index invariant; a hostile offset claiming more than
-    // one block's worth may only throw, never mega-allocate
-    require(looStart >= 0 && looLen > 0 && looLen <= HFileCodec.MaxBlockBytes,
-      s"implausible load-on-open section [$looStart, ${len - HFileCodec.TrailerLen})")
-    val section = new Array[Byte](looLen.toInt)
-    in.readFully(looStart, section)
-    val rel = HFileCodec.walkLoadOnOpen(section, 0, section.length)
-    def abs(r: Long): Long = if (r < 0) -1L else looStart + r
-    // the walk has bounds-checked every block it found
-    val held: Map[Long, Array[Byte]] = Seq(rel.rootIndexOffset, rel.metaIndexOffset,
-      rel.fileInfoOffset, rel.bloomMetaOffset).filter(_ >= 0).map { r =>
-      val at = r.toInt
-      abs(r) -> java.util.Arrays.copyOfRange(section, at,
-        at + HFileCodec.HeaderSize + java.nio.ByteBuffer.wrap(section, at + 8, 4).getInt)
-    }.toMap
-    (HFileCodec.LoadOnOpen(abs(rel.rootIndexOffset), abs(rel.metaIndexOffset),
-      abs(rel.fileInfoOffset), abs(rel.bloomMetaOffset)),
-      off => held.getOrElse(off, readBlockAt(in, off)))
-  }
-
-  /** [[openStore]] for one eager positioned reader: hands `f` the
-    * `blockAt` + offsets, closes on return. */
-  private def openRegion[A](p: String, conf: Configuration)(
-      f: (Long => Array[Byte], HFileCodec.LoadOnOpen) => A): A =
-    withFile(p, conf) { (in, len) =>
-      val (loo, blockAt) = openStore(in, len)
-      f(blockAt, loo)
-    }
-
-  /** [[openStore]] for a lazy stream: the file stays open until the
-    * running task completes. */
+  /** [[HFileCodec.openStore]] for a lazy stream: the file stays open until
+    * the running task completes. */
   private def openForTask(p: String, conf: Configuration)
-      : (FSDataInputStream, HFileCodec.LoadOnOpen, Long => Array[Byte]) = {
+      : (FSDataInputStream, HFileCodec.Store) = {
     val path = new HPath(p)
     val fs = path.getFileSystem(conf)
     val in = fs.open(path)
     Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-    val (loo, blockAt) = openStore(in, fs.getFileStatus(path).getLen)
-    (in, loo, blockAt)
+    (in, HFileCodec.openStore(readAtOf(in), fs.getFileStatus(path).getLen))
   }
-
-  private def rootIndex(blockAt: Long => Array[Byte], loo: HFileCodec.LoadOnOpen): Entries =
-    HFileCodec.parseIndexEntriesWithKeys(blockAt(loo.rootIndexOffset), 0,
-      HFileCodec.RootIndexMagic)
-
-  /** The file-info map; empty when the file has no file-info block. */
-  private def fileInfo(blockAt: Long => Array[Byte],
-                       loo: HFileCodec.LoadOnOpen): Map[String, Array[Byte]] =
-    if (loo.fileInfoOffset < 0) Map.empty
-    else HFileCodec.parseFileInfoPayload(
-      HFileCodec.blockPayload(blockAt(loo.fileInfoOffset), 0))
-
-  /** Per-file postfix flags — the open-time mvcc/tags gate every read
-    * path applies before decoding cells. */
-  private def extrasAt(blockAt: Long => Array[Byte],
-                       loo: HFileCodec.LoadOnOpen): HFileCodec.CellExtras =
-    HFileCodec.extrasOf(fileInfo(blockAt, loo))
 
   /** The region files under `dir` — one name per region, bounded
     * metadata, shared by every reader. */
@@ -423,65 +345,8 @@ object HFileOps {
       .getOrElse(Array.empty).map(_.getPath.toString).toSeq.sorted
   }
 
-  /** The one block-index walk: the root entries `select` picks, each one
-    * that points at an IDXINTE2 chunk expanded into the chunk's entries
-    * `select` picks, yielded as data-block BYTES in file order (back to
-    * front under `backward`). Lazy: a chunk or data block is read only
-    * when the walk reaches it, so a walk stopped early (a limit, a
-    * WhileMatch stop) stops reading, and every block is read once.
-    */
-  private def dataBlocks(blockAt: Long => Array[Byte], root: Entries,
-                         select: Entries => Entries,
-                         backward: Boolean = false): Iterator[Array[Byte]] = {
-    def walk(entries: Entries): Iterator[Array[Byte]] = {
-      val sel = select(entries)
-      (if (backward) sel.reverseIterator else sel.iterator).map(e => blockAt(e._1))
-    }
-    walk(root).flatMap { blk =>
-      if (HFileCodec.hasMagic(blk, 0, HFileCodec.IntermediateIndexMagic))
-        walk(HFileCodec.parseIndexEntriesWithKeys(blk, 0,
-          HFileCodec.IntermediateIndexMagic))
-      else Iterator.single(blk)
-    }
-  }
-
-  /** Entry selection of a forward `[start, stop)` walk; an empty `stop`
-    * is open-ended, like HBase's `HConstants.EMPTY_END_ROW`. */
-  private def forwardRange(start: Array[Byte], stop: Array[Byte]): Entries => Entries =
-    if (stop.isEmpty) HFileCodec.entriesFromStart(_, start)
-    else HFileCodec.entriesInRange(_, start, stop)
-
   private def rowBelow(row: Array[Byte], stop: Array[Byte]): Boolean =
     stop.isEmpty || java.util.Arrays.compareUnsigned(row, stop) < 0
-
-  /** The one data-block decoder: magic check, payload (GZ and the other
-    * codecs inflate here), cells.
-    *
-    * When the block is ROW_INDEX_V1-encoded, `seekRows` (distinct sorted
-    * target rows, the multiGet shape) switches the decode from a full
-    * block scan to one binary-searched in-block seek per target, and
-    * `seekFrom` (a range scan's start row) skips the block prefix — the
-    * RowIndexSeekerV1 read shape. Both are hints only: callers still
-    * filter by row, so every encoding returns identical rows.
-    */
-  private def blockCells(blk: Array[Byte], extras: HFileCodec.CellExtras,
-                         seekRows: Seq[Array[Byte]] = Nil,
-                         seekFrom: Option[Array[Byte]] = None): Iterator[HFileCodec.HCell] = {
-    val isEncoded = HFileCodec.hasMagic(blk, 0, HFileCodec.EncodedDataMagic)
-    require(isEncoded || HFileCodec.hasMagic(blk, 0, HFileCodec.DataMagic),
-      "bad data block magic")
-    val payload = HFileCodec.blockPayload(blk, 0)
-    val rowIndexed = isEncoded &&
-      HFileCodec.encodingIdOf(payload) == HFileCodec.EncodingRowIndexV1
-    if (rowIndexed && seekRows.nonEmpty)
-      seekRows.iterator.flatMap { r =>
-        HFileCodec.rowIndexSeek(payload, 2, r, extras)
-          .takeWhile(c => java.util.Arrays.equals(c.row, r))
-      }
-    else if (rowIndexed && seekFrom.isDefined)
-      HFileCodec.rowIndexSeek(payload, 2, seekFrom.get, extras)
-    else HFileCodec.dataBlockCells(payload, isEncoded, extras)
-  }
 
   /** The cells of one data block whose row passes `keep`, as rows — the
     * shared tail of every positioned reader. */
@@ -489,7 +354,7 @@ object HFileOps {
                               extras: HFileCodec.CellExtras,
                               seekRows: Seq[Array[Byte]] = Nil,
                               seekFrom: Option[Array[Byte]] = None): Seq[Row] =
-    blockCells(blk, extras, seekRows, seekFrom).filter(c => keep(c.row))
+    HFileCodec.blockCells(blk, extras, seekRows, seekFrom).filter(c => keep(c.row))
       .map(cellRow(_)).toSeq
 
   /** The one cell → row conversion: the cells-schema columns (the value
@@ -508,21 +373,20 @@ object HFileOps {
     * the seek paths take part in merge-on-read version resolution.
     */
   private def seekScanWithGen(spark: SparkSession, dir: String)(
-      f: (Long => Array[Byte], HFileCodec.LoadOnOpen) => Seq[Row]): DataFrame = {
+      f: HFileCodec.Store => Seq[Row]): DataFrame = {
     val paths = regionFiles(spark, dir)
     val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val rows = spark.sparkContext
       .parallelize(paths, math.max(1, paths.size))
       .flatMap { p =>
         val gen = genOf(p)
-        openRegion(p, serConf.value)((blockAt, loo) =>
-          f(blockAt, loo).map(r => Row.fromSeq(r.toSeq :+ gen)))
+        openRegion(p, serConf.value)(f(_).map(r => Row.fromSeq(r.toSeq :+ gen)))
       }
     spark.createDataFrame(rows, cellsWithGenSchema)
   }
 
   private def seekScan(spark: SparkSession, dir: String)(
-      f: (Long => Array[Byte], HFileCodec.LoadOnOpen) => Seq[Row]): DataFrame =
+      f: HFileCodec.Store => Seq[Row]): DataFrame =
     seekScanWithGen(spark, dir)(f).drop("gen")
 
   /** The HBase `Get` read shape against a bulk-written table: per region
@@ -560,51 +424,32 @@ object HFileOps {
     resolveVersions(seekScanWithGen(spark, dir)(multiGetBody(Seq(rowkey))),
       maxVersions, ttlFloor)
 
-  private def multiGetBody(rowkeys: Seq[String])
-      : (Long => Array[Byte], HFileCodec.LoadOnOpen) => Seq[Row] = {
+  private def multiGetBody(rowkeys: Seq[String]): HFileCodec.Store => Seq[Row] = {
     val keyBytes = rowkeys.distinct.map(_.getBytes(UTF_8))
-    (readBlock, loo) => {
+    opened => {
       // raw blocks cached by offset: k keys sharing a bloom chunk,
       // intermediate index chunk, or data block cost ONE positioned
       // read of it (bounded: candidates per key are O(1))
       val blockCache = scala.collection.mutable.Map.empty[Long, Array[Byte]]
-      def blockAt(off: Long): Array[Byte] =
-        blockCache.getOrElseUpdate(off, readBlock(off))
-      val surviving: Seq[Array[Byte]] =
-        if (loo.bloomMetaOffset < 0) keyBytes
-        else {
-          val meta = HFileCodec.parseIndexEntriesWithKeys(
-            blockAt(loo.bloomMetaOffset), 0, HFileCodec.BloomMetaMagic)
-          val metaRows = HFileCodec.indexRows(meta) // once per batch, not per key
-          keyBytes.filter { kb =>
-            HFileCodec.candidateEntries(meta, metaRows, kb).exists { case (off, _, _) =>
-              val chunk = blockAt(off)
-              require(HFileCodec.hasMagic(chunk, 0, HFileCodec.BloomChunkMagic),
-                "bad bloom chunk magic")
-              // bloom may only PRUNE: an uninflatable chunk claims containment
-              try HFileCodec.bloomChunkContains(
-                HFileCodec.blockPayload(chunk, 0), 0, kb)
-              catch { case _: Exception => true }
-            }
-          }
-        }
+      val store = opened.copy(readAt = (off, len) =>
+        blockCache.getOrElseUpdate(off, opened.readAt(off, len)))
+      val surviving = keyBytes.filter(store.mayContain)
       if (surviving.isEmpty) Seq.empty[Row]
       else {
-        val root = rootIndex(blockAt, loo)
         val wanted = surviving
           .map(scala.collection.immutable.ArraySeq.unsafeWrapArray(_)).toSet
         val seekRows = surviving.sortWith(
           java.util.Arrays.compareUnsigned(_, _) < 0)
-        val extras = extrasAt(blockAt, loo)
         // one walk per key, in row order, so the blocks arrive in file
         // order; the cache hands back one array per block, so `distinct`
         // decodes each block once however many keys land in it
         seekRows.iterator
-          .flatMap(kb => dataBlocks(blockAt, root, HFileCodec.candidateEntries(_, kb)))
+          .flatMap(kb => store.dataBlocks(entries =>
+            HFileCodec.candidateEntries(entries, HFileCodec.indexRows(entries), kb)))
           .distinct
           .flatMap(decodeBlockRows(_, row =>
             wanted.contains(scala.collection.immutable.ArraySeq.unsafeWrapArray(row)),
-            extras, seekRows = seekRows))
+            store.extras, seekRows = seekRows))
           .toSeq
       }
     }
@@ -636,7 +481,7 @@ object HFileOps {
                 reversed: Boolean = false, limit: Int = Int.MaxValue): DataFrame = {
     val start = startRow.getBytes(UTF_8)
     val stop = stopRow.getBytes(UTF_8)
-    seekScan(spark, dir)(rangeRowsInFile(_, _, start, stop, reversed, limit))
+    seekScan(spark, dir)(rangeRowsInFile(_, start, stop, reversed, limit))
   }
 
   /** Reference-daughter scan — the read path of freshly-SPLIT regions:
@@ -655,7 +500,7 @@ object HFileOps {
     val rows = spark.sparkContext
       .parallelize(refs, math.max(1, refs.size))
       .flatMap { case (p, startS, stopS) =>
-        openRegion(p, serConf.value)(rangeRowsInFile(_, _,
+        openRegion(p, serConf.value)(rangeRowsInFile(_,
           startS.getBytes(UTF_8), stopS.getBytes(UTF_8),
           reversed = false, limit = Int.MaxValue))
       }
@@ -666,19 +511,17 @@ object HFileOps {
     * body of [[rangeScan]] (every file of a directory) and
     * [[referenceScan]] (an explicit half-file reference).
     */
-  private def rangeRowsInFile(blockAt: Long => Array[Byte],
-                              loo: HFileCodec.LoadOnOpen,
+  private def rangeRowsInFile(store: HFileCodec.Store,
                               start: Array[Byte], stop: Array[Byte],
                               reversed: Boolean, limit: Int): Seq[Row] = {
-    val root = rootIndex(blockAt, loo)
-    val extras = extrasAt(blockAt, loo)
+    val extras = store.extras
     if (!reversed) {
       val keep = (row: Array[Byte]) =>
         java.util.Arrays.compareUnsigned(row, start) >= 0 && rowBelow(row, stop)
       // stop pulling blocks once `limit` cells have matched — cells are
       // in file order, so the first `limit` of the concatenation is exact
       var n = 0
-      val taken = dataBlocks(blockAt, root, forwardRange(start, stop))
+      val taken = store.dataBlocks(HFileCodec.entriesInRange(_, start, stop))
         .takeWhile(_ => n < limit).map { blk =>
           val rows = decodeBlockRows(blk, keep, extras, seekFrom = Some(start))
           n += rows.size
@@ -697,8 +540,8 @@ object HFileOps {
       // past `limit` can only ADD earlier cells, never change the last K.
       var blocks = List.empty[Seq[Row]]
       var n = 0
-      val it = dataBlocks(blockAt, root,
-        HFileCodec.entriesInRevRange(_, stop, start), backward = true)
+      val it = store.dataBlocks(HFileCodec.entriesInRevRange(_, stop, start),
+        backward = true)
       while (n < limit && it.hasNext) {
         val rows = decodeBlockRows(it.next(), keep, extras)
         blocks = rows :: blocks
@@ -714,28 +557,27 @@ object HFileOps {
     * ascending from `start` through `stopInclusive`, emit them while
     * `matches` holds, and STOP THE WALK at the first non-matching cell —
     * no further data block is pulled, so bytes read stop with the match
-    * run (HFileSpec pins the block-read count through the counting
-    * `blockAt`). Returns the matched prefix plus the terminating cell
-    * (None if the whole selected range matched) — the terminator is what
-    * lets the multi-region caller resolve the GLOBAL stop key.
+    * run (HFileSpec pins the block-read count through a counting
+    * positioned-read source). Returns the matched prefix plus the
+    * terminating cell (None if the whole selected range matched) — the
+    * terminator is what lets the multi-region caller resolve the GLOBAL
+    * stop key.
     *
-    * Pure over `blockAt` so the spec can count reads; the distributed
-    * entry point is [[whileMatchScan]].
+    * Pure over the opened store so the spec can count reads; the
+    * distributed entry point is [[whileMatchScan]].
     */
   private[graft] def whileMatchWalk(
-      blockAt: Long => Array[Byte],
-      loo: HFileCodec.LoadOnOpen,
+      store: HFileCodec.Store,
       start: Array[Byte], stopInclusive: Array[Byte],
       matches: Row => Boolean): (Seq[Row], Option[Row]) = {
     val stopExcl = stopInclusive :+ 0.toByte // inclusive stop as [start, stop+0x00)
-    val extras = extrasAt(blockAt, loo)
+    val extras = store.extras
     val keep = (row: Array[Byte]) =>
       java.util.Arrays.compareUnsigned(row, start) >= 0 &&
         java.util.Arrays.compareUnsigned(row, stopInclusive) <= 0
     val out = Seq.newBuilder[Row]
     var failed: Option[Row] = None
-    val blocks = dataBlocks(blockAt, rootIndex(blockAt, loo),
-      HFileCodec.entriesInRange(_, start, stopExcl))
+    val blocks = store.dataBlocks(HFileCodec.entriesInRange(_, start, stopExcl))
     while (failed.isEmpty && blocks.hasNext) {
       val rows = decodeBlockRows(blocks.next(), keep, extras, seekFrom = Some(start))
       val it = rows.iterator
@@ -771,8 +613,8 @@ object HFileOps {
     val rows = spark.sparkContext
       .parallelize(paths, math.max(1, paths.size))
       .flatMap { p =>
-        openRegion(p, serConf.value) { (blockAt, loo) =>
-          val (matched, failedAt) = whileMatchWalk(blockAt, loo, start, stopI, matches)
+        openRegion(p, serConf.value) { store =>
+          val (matched, failedAt) = whileMatchWalk(store, start, stopI, matches)
           matched.map(r => Row.fromSeq(r.toSeq :+ true)) ++
             failedAt.map(r => Row.fromSeq(r.toSeq :+ false))
         }
@@ -851,9 +693,8 @@ object HFileOps {
     * position); the stream closes on task completion.
     */
   private def streamFileCells(p: String, conf: Configuration): Iterator[HFileCodec.HCell] = {
-    val (in, loo, blockAt) = openForTask(p, conf)
-    HFileCodec.readStreaming(new java.io.BufferedInputStream(in, 1 << 16),
-      extrasAt(blockAt, loo))
+    val (in, store) = openForTask(p, conf)
+    HFileCodec.readStreaming(new java.io.BufferedInputStream(in, 1 << 16), store.extras)
   }
 
   /** Region MERGE read path — the inverse of [[referenceScan]]'s split
@@ -1006,15 +847,16 @@ object HFileOps {
     * resolution window is computable with a per-range K-way heap merge
     * of the overlapping files' sorted streams, K = files covering the
     * range (≈ the generation count). The driver's only work is region
-    * assignment — per file, the one open ([[openStore]]: trailer +
-    * load-on-open section, two positioned reads) for its first/last row,
-    * never data — exactly the boundary bookkeeping an HBase master keeps
-    * in META. Each Spark task owns one row range, walks every overlapping
-    * file's index to the range start ([[dataBlocks]]), and streams the
-    * merge: O(blockSize · K) memory, zero shuffle, zero driver data,
-    * every data block read once. PlanSpec
-    * pins the exchange-free plan; the window-shuffle spelling is kept as
-    * [[mergedReadShuffled]] and equivalence-pinned in HFileSpec.
+    * assignment — per file, the one open ([[HFileCodec.openStore]]:
+    * trailer + load-on-open section, two positioned reads) for its
+    * first/last row, never data — exactly the boundary bookkeeping an
+    * HBase master keeps in META. Each Spark task owns one row range, walks
+    * every overlapping file's index to the range start
+    * ([[HFileCodec.Store.dataBlocks]]), and streams the merge:
+    * O(blockSize · K) memory, zero shuffle, zero driver data, every data
+    * block read once. PlanSpec pins the exchange-free plan; the
+    * window-shuffle spelling is kept as [[mergedReadShuffled]] and
+    * equivalence-pinned in HFileSpec.
     */
   def mergedRead(spark: SparkSession, dir: String,
                  maxVersions: Int = 1,
@@ -1046,9 +888,9 @@ object HFileOps {
     */
   private def keyRange(p: String, conf: Configuration)
       : (Array[Byte], Array[Byte], Array[Byte]) =
-    openRegion(p, conf) { (blockAt, loo) =>
-      val root = rootIndex(blockAt, loo)
-      val lastKey = fileInfo(blockAt, loo).getOrElse("hfile.LASTKEY",
+    openRegion(p, conf) { store =>
+      val root = store.root
+      val lastKey = store.fileInfo.getOrElse("hfile.LASTKEY",
         throw new IllegalStateException(s"$p missing hfile.LASTKEY"))
       (HFileCodec.rowOfKey(root.head._3), HFileCodec.rowOfKey(root(root.size / 2)._3),
         HFileCodec.rowOfKey(lastKey))
@@ -1307,17 +1149,16 @@ object HFileOps {
 
   /** One store file's cells in `[start, stop)` (an empty `stop` is
     * open-ended), ascending — a merge range's per-file stream. Lazy over
-    * the one index walk ([[dataBlocks]]): each selected block is read
-    * once, when the merge reaches it. Pure over `blockAt` so the spec can
-    * count reads.
+    * the one index walk ([[HFileCodec.Store.dataBlocks]]): each selected
+    * block is read once, when the merge reaches it. Pure over the opened
+    * store so the spec can count reads.
     */
-  private[graft] def mergeFileCells(blockAt: Long => Array[Byte],
-                                    loo: HFileCodec.LoadOnOpen,
+  private[graft] def mergeFileCells(store: HFileCodec.Store,
                                     start: Array[Byte],
                                     stop: Array[Byte]): Iterator[HFileCodec.HCell] = {
-    val extras = extrasAt(blockAt, loo)
-    dataBlocks(blockAt, rootIndex(blockAt, loo), forwardRange(start, stop))
-      .flatMap(blockCells(_, extras))
+    val extras = store.extras
+    store.dataBlocks(HFileCodec.entriesInRange(_, start, stop))
+      .flatMap(HFileCodec.blockCells(_, extras))
       // streams are row-ascending, so the range restriction is a
       // prefix drop + a truncation, never a full filter
       .dropWhile(c => java.util.Arrays.compareUnsigned(c.row, start) < 0)
@@ -1336,8 +1177,8 @@ object HFileOps {
                              ttlFloor: Long): Iterator[Row] = {
     val streams: Seq[(Iterator[HFileCodec.HCell], Int)] = files.map {
       case (p, gen) =>
-        val (_, loo, blockAt) = openForTask(p, serConf.value)
-        (mergeFileCells(blockAt, loo, start, stop), gen)
+        val (_, store) = openForTask(p, serConf.value)
+        (mergeFileCells(store, start, stop), gen)
     }
     def coordCompare(a: HFileCodec.HCell, b: HFileCodec.HCell): Int = {
       var c = java.util.Arrays.compareUnsigned(a.row, b.row)

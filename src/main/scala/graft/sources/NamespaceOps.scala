@@ -43,8 +43,9 @@ object NamespaceOps {
 
   /** The admin listing: per table — store-file count, on-disk bytes,
     * and the EXACT cell count — every number from filesystem metadata
-    * plus one trailer positioned-read per file (`entryCount`), never a
-    * data block. Table names move through the driver (bounded: an admin
+    * plus one store-file open per file (the trailer's `entryCount`; the
+    * trailer and the load-on-open section, two positioned reads), never
+    * a data block. Table names move through the driver (bounded: an admin
     * surface); the per-file trailer reads run as one tiny metadata job
     * so a 4096-region table doesn't serialize its opens on the driver.
     */
@@ -65,7 +66,7 @@ object NamespaceOps {
       else spark.sparkContext
         .parallelize(files, math.min(files.size, 64))
         .map { case (t, p, bytes) =>
-          (t, bytes, HFileOps.withFile(p, serConf.value)(HFileOps.trailerAt(_, _).entryCount))
+          (t, bytes, HFileOps.openRegion(p, serConf.value)(_.trailer.entryCount))
         }.collect().toSeq
     val rows = perFile.groupBy(_._1).toSeq.sortBy(_._1).map { case (t, fs0) =>
       Row(t, fs0.size.toLong, fs0.map(_._2).sum, fs0.map(_._3).sum)

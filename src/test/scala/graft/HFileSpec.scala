@@ -54,7 +54,7 @@ class HFileSpec extends SparkSuite {
       .sameElements(HFileCodec.RootIndexMagic))
     assert(bytes.slice(tr.fileInfoOffset.toInt, tr.fileInfoOffset.toInt + 8)
       .sameElements(HFileCodec.FileInfoMagic))
-    val loo = HFileCodec.loadOnOpenOf(bytes)
+    val loo = HFileCodec.openStore(HFileCodec.bytesAt(bytes), bytes.length).loo
     assert(loo.rootIndexOffset == tr.loadOnOpenOffset)
     assert(loo.metaIndexOffset > loo.rootIndexOffset, "meta index root missing")
     assert(loo.fileInfoOffset == tr.fileInfoOffset,
@@ -1173,33 +1173,25 @@ class HFileSpec extends SparkSuite {
       cell(f"row$i%05d", "q", 1L, if (i == 120) 0.5 else 100.0)
     }
     val file = HFileCodec.write(cells.iterator, blockSize = 1)
-    val tr = HFileCodec.readTrailer(file)
-    val loo = HFileCodec.walkLoadOnOpen(file,
-      tr.loadOnOpenOffset.toInt, file.length - HFileCodec.TrailerLen)
     var reads = 0
-    def countingBlockAt(off: Long): Array[Byte] = {
-      reads += 1
-      val payloadLen =
-        java.nio.ByteBuffer.wrap(file, off.toInt + 8, 4).getInt
-      java.util.Arrays.copyOfRange(file, off.toInt,
-        off.toInt + HFileCodec.HeaderSize + payloadLen)
-    }
+    val store = HFileCodec.openStore(
+      { (off, len) => reads += 1; HFileCodec.bytesAt(file)(off, len) }, file.length)
     val matches = (r: org.apache.spark.sql.Row) =>
       !r.isNullAt(4) && r.getDouble(4) > 1.0
-    val (matched, failedAt) = HFileOps.whileMatchWalk(countingBlockAt, loo,
+    val (matched, failedAt) = HFileOps.whileMatchWalk(store,
       "row00000".getBytes(UTF_8), "row01999".getBytes(UTF_8), matches)
     assert(matched.size == 120 &&
       matched.last.getString(0) == "row00119", "match run wrong")
     assert(failedAt.exists(_.getString(0) == "row00120"), "terminator wrong")
-    // reads = root + file-info + expanded intermediate chunks + the 121
-    // data blocks the run actually touched — NOT the 2000-block range.
-    // 121 data + 1 root + 1 file-info + <=2 intermediate chunks (128
+    // reads = trailer + load-on-open section + expanded intermediate
+    // chunks + the 121 data blocks the run actually touched — NOT the
+    // 2000-block range. 121 data + 2 open + <=2 intermediate chunks (128
     // entries each) = 125; allow slack but pin the order of magnitude
     assert(reads <= 130, s"walk read $reads blocks for a 121-cell match run")
     // no-terminator case: the whole selected range matches -> all cells,
     // no failing row (the global-stop caller then keeps everything)
     reads = 0
-    val (all, none) = HFileOps.whileMatchWalk(countingBlockAt, loo,
+    val (all, none) = HFileOps.whileMatchWalk(store,
       "row00000".getBytes(UTF_8), "row00099".getBytes(UTF_8),
       r => r.getDouble(4) > 0.0)
     assert(all.size == 100 && none.isEmpty)
@@ -1216,20 +1208,14 @@ class HFileSpec extends SparkSuite {
            16 -> ((r: Range) => r.map(_ / 16).distinct.size))) {
       val file = HFileCodec.write(cells.iterator, blockSize = 1,
         indexChunkEntries = chunkEntries)
-      val tr = HFileCodec.readTrailer(file)
-      val loo = HFileCodec.walkLoadOnOpen(file,
-        tr.loadOnOpenOffset.toInt, file.length - HFileCodec.TrailerLen)
       var reads = 0
-      def countingBlockAt(off: Long): Array[Byte] = {
-        reads += 1
-        val payloadLen = java.nio.ByteBuffer.wrap(file, off.toInt + 8, 4).getInt
-        java.util.Arrays.copyOfRange(file, off.toInt,
-          off.toInt + HFileCodec.HeaderSize + payloadLen)
-      }
       def stream(start: String, stop: String) = HFileOps.mergeFileCells(
-        countingBlockAt, loo, start.getBytes(UTF_8), stop.getBytes(UTF_8))
+        HFileCodec.openStore(
+          { (off, len) => reads += 1; HFileCodec.bytesAt(file)(off, len) }, file.length),
+        start.getBytes(UTF_8), stop.getBytes(UTF_8))
         .map(c => new String(c.row, UTF_8))
-      // root + file-info, then each chunk and data block of the selection
+      // trailer + load-on-open section (root index, file info), then
+      // each chunk and data block of the selection
       // once: blocks 19-59 for [row20, row60) — a start row that begins a
       // block also selects the block before it, where the row may begin
       val bounded = stream("row00020", "row00060").toList
@@ -1246,6 +1232,78 @@ class HFileSpec extends SparkSuite {
       assert(stream("row00020", "row00060").next() == "row00020")
       assert(reads == 2 + chunksOf(19 until 21) + 2,
         s"chunk $chunkEntries: $reads reads for the first cell")
+    }
+  }
+
+  test("seek paths check each index entry's size against the block it reaches") {
+    val cells = (0 until 2000).map(i => cell(f"r$i%06d", "q", 1000L + i, i.toDouble))
+    // NONE + NULL checksums: no CRC over the root index block can catch
+    // the edited entry before the walk reaches the block it points at
+    val bytes = HFileCodec.write(cells.iterator, 8 * 1024, HFileCodec.CompressionNone,
+      HFileCodec.EncodingNone, HFileCodec.ChecksumNull)
+    val dir = tmpDir("sizecheck")
+    val file = dir.resolve("region-00000.hfile")
+    Files.write(file, bytes)
+    assert(HFileOps.rangeScan(spark, dir.toString, "", "").count() == cells.size)
+    // the first root entry is `offset:8 | onDiskSize:4 | …` right after
+    // the root block's header; claim one byte more than the block holds
+    val sizeAt = HFileCodec.readTrailer(bytes).loadOnOpenOffset.toInt +
+      HFileCodec.HeaderSize + 8
+    val bumped = bytes.clone()
+    java.nio.ByteBuffer.wrap(bumped, sizeAt, 4)
+      .putInt(java.nio.ByteBuffer.wrap(bytes, sizeAt, 4).getInt + 1)
+    Files.write(file, bumped)
+    val ex = intercept[Exception](
+      HFileOps.rangeScan(spark, dir.toString, "", "").collect())
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toList
+    assert(messages.exists(_.contains("block size mismatch")),
+      s"expected a block size mismatch, got: ${messages.mkString(" / ")}")
+  }
+
+  test("in-memory read, bloom check and stream agree with the seek paths on one file") {
+    // several blocks per row range, a two-level index (32-entry chunks)
+    // and several bloom chunks, so every level of the shared walk runs
+    val cells = (0 until 1500).flatMap { i =>
+      Seq(cell(f"r$i%05d", "a", 2000L + i, i.toDouble),
+        cell(f"r$i%05d", "b", 1000L + i, -i.toDouble,
+          if (i % 41 == 0) HFileCodec.TypeDelete else HFileCodec.TypePut))
+    }
+    def canon(cs: Iterator[HCell]) = cs.map(c =>
+      (new String(c.row, UTF_8), new String(c.family, UTF_8),
+        new String(c.qualifier, UTF_8), c.ts,
+        java.nio.ByteBuffer.wrap(c.value).getDouble, HFileOps.opOf(c.typ))).toList
+    def canonRows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
+        r.getDouble(4), r.getString(5))).toList
+    val present = (0 until 1500 by 37).map(i => f"r$i%05d")
+    val absent = (0 until 300).map(i => f"r$i%05dx")
+    for (enc <- Seq(HFileCodec.EncodingNone, HFileCodec.EncodingPrefix,
+                    HFileCodec.EncodingDiff, HFileCodec.EncodingFastDiff,
+                    HFileCodec.EncodingRowIndexV1);
+         codec <- Seq(HFileCodec.CompressionNone, HFileCodec.CompressionGz)) {
+      val tag = s"${HFileCodec.encodingName(enc)}/$codec"
+      val bytes = HFileCodec.write(cells.iterator, 512, codec, enc,
+        indexChunkEntries = 32, bloomChunkKeys = 256)
+      val dir = tmpDir("cross")
+      Files.write(dir.resolve("region-00000.hfile"), bytes)
+      val inMemory = canon(HFileCodec.read(bytes))
+      assert(inMemory == canon(cells.iterator), s"$tag: in-memory read")
+      assert(canonRows(HFileOps.read(spark, dir.toString)).sorted == inMemory.sorted,
+        s"$tag: HFileOps.read")
+      assert(canon(HFileCodec.readStreaming(
+        new java.io.ByteArrayInputStream(bytes))) == inMemory, s"$tag: readStreaming")
+      // multiGet answers exactly the probed rows; every probe the bloom
+      // rejects is absent (the prune drops nothing real), and most absent
+      // probes are rejected, so the prune is not vacuous
+      val probes = present ++ absent
+      val got = canonRows(HFileOps.multiGet(spark, dir.toString, probes))
+      assert(got.sorted == inMemory.filter(c => probes.contains(c._1)).sorted,
+        s"$tag: multiGet")
+      val pruned = probes.filterNot(k => HFileCodec.mayContainRow(bytes, k.getBytes(UTF_8)))
+      assert(pruned.forall(k => !got.exists(_._1 == k) && !inMemory.exists(_._1 == k)),
+        s"$tag: the bloom pruned a present row")
+      assert(pruned.size > absent.size / 2, s"$tag: only ${pruned.size} probes pruned")
     }
   }
 

@@ -13,12 +13,13 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamingSpec extends SparkSuite {
 
   /** Run a streaming query to completion into a memory sink, in Complete
-    * or Append mode, and return the result table.
+    * or Append mode, and return the result table. The query is stopped
+    * even when it fails, so none outlives its test in the shared session.
     */
   private def runStream(df: DataFrame, mode: String, name: String): DataFrame = {
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination() finally q.stop()
     spark.table(name)
   }
 
@@ -524,14 +525,16 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("I3: sliding window stream equals batch twin") {
-    val streamed = runStream(StreamOps.slidingCounts(StreamOps.eventsStream(spark, sf)),
-      "complete", "t_sliding")
+    // the batch twin is collected before the stream starts, so its job
+    // never runs beside the streaming query's
     val batch = batchEvents
       .groupBy(window(col("ets"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    assert(streamed.collect().map(_.toString).sorted
-      .sameElements(batch.collect().map(_.toString).sorted))
+      .collect().map(_.toString).sorted
+    val streamed = runStream(StreamOps.slidingCounts(StreamOps.eventsStream(spark, sf)),
+      "complete", "t_sliding")
+    assert(streamed.collect().map(_.toString).sorted.sameElements(batch))
   }
 
   test("I4: session window stream equals batch session_window") {
