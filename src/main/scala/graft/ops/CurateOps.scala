@@ -165,7 +165,6 @@ object CurateOps {
     val admittedIds = DedupOps.incrementalAdmit(
       docs.select(h(col("text")).as("h")).distinct(),
       incoming.select(col("doc_id"), h(col("text")).as("h")),
-      logStats = false,
       // footer-metadata upper bound on |distinct hashes| — no count() job
       nExistHint = Some(Tables.rowCountFromMeta(s, d, "documents")))
     val piiTail = concat(

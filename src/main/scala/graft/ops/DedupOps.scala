@@ -739,19 +739,15 @@ object DedupOps {
     * anti-join — at that corpus size the right production structure is a
     * persisted, bucketed hash-index table, not a bigger broadcast.
     *
-    * Effective FPR is measured and logged per call (`logStats`) from the
-    * materialized classification: candidates that survive the confirm
-    * anti-join are exactly the false positives, so
-    * `effFpr = fp / (rejected + fp)` — the number SketchOpsSpec pins
-    * against the analytic `(1 − e^(−kn/m))^k` prediction at a forced-
-    * small filter, proving candidate-set size tracks FPR, not corpus
-    * size.
+    * Candidates that survive the confirm anti-join are exactly the bloom's
+    * false positives, so the candidate-set size tracks the sized filter's
+    * FPR, not corpus size — SketchOpsSpec pins the candidate count against
+    * the analytic `(1 − e^(−kn/m))^k` prediction at a forced-small filter.
     */
   def incrementalAdmit(existing: DataFrame, incoming: DataFrame,
                        bitsPerKey: Int = 10,
                        maxBandBits: Long = 1L << 26,
                        maxIndexBytes: Long = 512L << 20,
-                       logStats: Boolean = true,
                        nExistHint: Option[Long] = None): DataFrame = {
     val s = incoming.sparkSession
     graft.functions.SketchFns.register(s)
@@ -789,10 +785,10 @@ object DedupOps {
       .agg(call_function(graft.functions.SketchFns.bloomAggName,
         col("h"), lit(perBandEst), lit(perBandBits)).as("__bf"))
     // one classification pass over the incoming batch, materialized so the
-    // two admit branches and the FPR stats all read it instead of
-    // re-probing (the incoming batch is the SMALL side of a crawl by
-    // construction; the corpus-sized frame here is `ex`, touched only by
-    // the groupBy build and the candidate-sliver anti-join)
+    // two admit branches both read it instead of re-probing (the incoming
+    // batch is the SMALL side of a crawl by construction; the corpus-sized
+    // frame here is `ex`, touched only by the groupBy build and the
+    // candidate-sliver anti-join)
     val flagged = inc
       .withColumn("__band", band)
       .join(broadcast(bloomTable), Seq("__band"), "left")
@@ -803,24 +799,8 @@ object DedupOps {
       .select(col("doc_id"), col("h"), col("__mc"))
       .graftCkpt()
     val defNew = flagged.where(!col("__mc")).drop("__mc")
-    val candAdmitted0 = flagged.where(col("__mc")).drop("__mc")
+    val candAdmitted = flagged.where(col("__mc")).drop("__mc")
       .join(ex, Seq("h"), "left_anti")
-    // the ckpt exists for the FPR stats' second read; without logStats
-    // the sliver has ONE consumer and materializing it is a wasted job
-    val candAdmitted =
-      if (logStats) candAdmitted0.graftCkpt() else candAdmitted0
-    if (logStats) {
-      val nRej = defNew.count()
-      val nCand = flagged.count() - nRej
-      val nFp = candAdmitted.count()
-      val k = math.max(1, math.round(perBandBits.toDouble / perBandEst * math.log(2)))
-      val predicted = math.pow(
-        1.0 - math.exp(-k.toDouble * perBandEst / perBandBits), k.toDouble)
-      val effFpr = if (nRej + nFp == 0) 0.0 else nFp.toDouble / (nRej + nFp)
-      System.err.println(f"[graft dedup] incremental-admit: bands=$nBands " +
-        f"perBandBits=$perBandBits predictedFpr=$predicted%.6f " +
-        f"rejected=$nRej candidates=$nCand falsePos=$nFp effFpr=$effFpr%.6f")
-    }
     keepFirst(defNew.unionByName(candAdmitted))
   }
 

@@ -128,7 +128,7 @@ object RepetitionOps {
     * eval-gram set: a document's hits are computed entirely inside its
     * own row (grams → membership filter → distinct count), so the
     * operator is micro-batch invariant by construction — the streaming
-    * decontamination twin (StreamOps I18). The literal-array membership
+    * decontamination twin (StreamingSpec I18). The literal-array membership
     * scan is O(|evalGrams|) per gram; at scale the eval set rides a
     * broadcast variable either way, and the relational form is the
     * batch-backfill path.

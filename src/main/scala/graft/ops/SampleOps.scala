@@ -49,8 +49,8 @@ object SampleOps {
   private def mixTerm(id: Column, m: Long, k: Long): Column =
     (pmod(id, lit(m)) * lit(k)) % lit(4294967296L)
 
-  // private[graft]: the streaming twins (StreamOps I12/I13) apply the
-  // identical hash to prove batch ≡ stream, and the specs order by it
+  // private[graft]: the streaming twins (StreamingSpec I12, StreamOps I13)
+  // apply the identical hash to prove batch ≡ stream, and the specs order by it
   private[graft] def mixBucket(id: Column): Column =
     (mixTerm(id, 2147483647L, 2654435761L)
       + mixTerm(id, 2147483629L, 2246822519L)

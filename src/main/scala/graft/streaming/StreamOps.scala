@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.DecimalType
@@ -106,6 +106,34 @@ object StreamOps {
       ()
     }
 
+  /** Cache a static serving index once and register it for end-of-serving
+    * cleanup: the frame is fixed across triggers, so each micro-batch
+    * probes materialized partitions instead of recomputing it.
+    */
+  private def servingCache(spark: SparkSession, df: DataFrame): DataFrame = {
+    val cached = df.cache()
+    registerServingCache(spark, cached)
+    cached
+  }
+
+  /** The one micro-batch sink path: a checkpointed AvailableNow stream
+    * whose every NON-EMPTY micro-batch goes to `f` with its batch id.
+    * The id is a pure function of the checkpointed offsets, so a batch
+    * replayed after a crash reaches `f` under the same id, which is what
+    * the per-batch store-file generations and WAL prefixes key on.
+    */
+  private def batchSink(df: DataFrame, checkpointDir: String, mode: OutputMode)
+                       (f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      // typed lambda: an untyped one cannot pick between the Scala and
+      // the Java (VoidFunction2) foreachBatch overloads
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) f(batch, batchId)
+      }
+
   /** State-store provider toggle — the 100 TB knob for the I-series. The
     * default HDFSBackedStateStoreProvider keeps every maintained version of
     * every partition's state map in executor HEAP; fine for bounded session
@@ -208,22 +236,6 @@ object StreamOps {
                       splits: Int = 4): DataFrame =
     stagedStream(Tables.documents(spark, sfDir), "doc_id", "docs",
       splits, stampMtime = false)
-
-  /** I11: the deterministic hash sample applied to a document stream.
-    * Stateless (no watermark, no state store): each micro-batch makes the
-    * identical keep/drop decision a batch backfill would, so streaming
-    * ingestion and batch sampling agree row-for-row (StreamingSpec I11).
-    */
-  def hashSampleStream(docs: DataFrame): DataFrame =
-    graft.ops.SampleOps.sampleHash(docs)
-
-  /** I12: the j22 domain-mix filter applied to a document stream — like
-    * I11, stateless: per-language coin flips are pure functions of the
-    * doc id, so membership is replay- and micro-batch-invariant
-    * (StreamingSpec I12).
-    */
-  def mixDomainsStream(docs: DataFrame): DataFrame =
-    graft.ops.SampleOps.mixDomains(docs)
 
   case class StratDoc(lang: String, doc_id: Long, h: Long)
   case class StratSample(lang: String, doc_id: Long, rn: Long)
@@ -407,15 +419,6 @@ object StreamOps {
       }
   }
 
-  /** I15: real pixel decode applied to a document stream — the media
-    * curation step as continuous ingestion. Stateless per row (PNG
-    * build + ImageIO decode are pure functions of doc_id), so streamed
-    * features equal the batch decode row-for-row (StreamingSpec I15).
-    */
-  def pixelDecodeStream(spark: SparkSession, docs: DataFrame): DataFrame =
-    graft.ops.MultimodalOps.decodePixels(spark,
-      graft.ops.MultimodalOps.grayPngFiles(spark, docs).toDF()).toDF()
-
   /** I30: the perceptual image hash (j62's decode → integer-exact
     * block-mean aHash) applied to a document stream — fingerprint media
     * at ingest time so the dedup groupBy downstream only ever sees one
@@ -452,12 +455,7 @@ object StreamOps {
     val docs = Tables.documents(spark, sfDir)
       .where(col("doc_id") <= 200 && length(col("text")) >= 5)
     val sh0 = DedupOps.shingleSets(docs)
-    val sh =
-      if (probeDocs.isStreaming) {
-        val cached = sh0.cache()
-        registerServingCache(spark, cached)
-        cached
-      } else sh0
+    val sh = if (probeDocs.isStreaming) servingCache(spark, sh0) else sh0
     val pairs = probeDocs
       .where(col("doc_id") < 200 && length(col("text")) >= 5)
       .select(col("doc_id").as("a"))
@@ -465,62 +463,6 @@ object StreamOps {
     DedupOps.verifyPairs(sh, pairs)
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
   }
-
-  /** I16: BPE encoding applied to a document stream with a batch-trained
-    * broadcast model — train once on the curated corpus, tokenize
-    * arriving documents forever; stateless given the model, so streaming
-    * and batch tokenizations agree row-for-row (StreamingSpec I16).
-    */
-  def bpeEncodeStream(spark: SparkSession, docs: DataFrame,
-                      model: graft.ops.BpeOps.BpeModel): DataFrame =
-    graft.ops.BpeOps.encode(spark, docs, model)
-
-  /** I18: eval-set decontamination applied to a document stream — the
-    * j29 pass as continuous ingestion. The eval-gram set is extracted
-    * once (batch) and rides along as a literal/broadcast; each arriving
-    * document's hit count is computed entirely inside its own row
-    * (grams → membership filter → distinct count), so the flagging is
-    * stateless and micro-batch invariant — StreamingSpec I18 pins the
-    * streamed result against the RELATIONAL batch spelling
-    * (explode → broadcast semi-join → groupBy), which is also the
-    * backfill path at scale.
-    */
-  def decontaminateStream(docs: DataFrame, evalGrams: Seq[String],
-                          n: Int = 3): DataFrame =
-    graft.ops.RepetitionOps.contaminationHitsRowwise(docs, evalGrams, n)
-
-  /** I19: the j33/j34 row-local quality passes applied to a document
-    * stream — the PII-scrub digest and winnowing fingerprint count are
-    * pure functions of the row (map-only in batch, PlanSpec-pinned), so
-    * continuous ingestion equals batch backfill row-for-row
-    * (StreamingSpec I19).
-    */
-  def scrubFingerprintStream(docs: DataFrame): DataFrame =
-    graft.ops.TextAnalysisOps.scrubFingerprint(docs)
-
-  /** I20: the portable SimHash + MinHash fingerprints (j39/j40) applied
-    * to a document stream — both are row-local projections (the batch
-    * plans are map-only scans), so continuous ingestion equals batch
-    * backfill row-for-row (StreamingSpec I20).
-    */
-  def fingerprintSketchStream(docs: DataFrame): DataFrame =
-    graft.ops.DedupOps.withMinhashPortable(
-        graft.ops.DedupOps.withSimhashPortable(docs))
-      .select("doc_id", "simhash", "sig_md5")
-
-  /** I28: language identification applied to a document stream — the
-    * j60 classifier as continuous ingestion: profiles TRAIN once on the
-    * static labeled corpus (batch, [[graft.ops.LangIdOps.trainCapped]]
-    * bounds the vocabulary), the literalized model rides in the plan
-    * (the I21/I18 discipline), and scoring is
-    * [[graft.ops.LangIdOps.predictRowLocal]] — one codegen'd expression
-    * chain per row, no join, no state — so streaming and batch
-    * classification agree row-for-row (StreamingSpec I28 pins stream ≡
-    * batch ≡ the relational predict).
-    */
-  def langIdStream(docs: DataFrame,
-                   model: graft.ops.LangIdOps.LiteralLangIdModel): DataFrame =
-    graft.ops.LangIdOps.predictRowLocal(docs, model)
 
   /** I21: BM25 retrieval with a STREAMING probe feed against a static
     * corpus — the serving shape of j35 (queries arrive continuously; the
@@ -548,12 +490,7 @@ object StreamOps {
     // cache is registered for end-of-serving cleanup (ADVICE r10: it
     // used to outlive the stream for the session's lifetime, and
     // repeated serving setups accumulated index copies).
-    val tfdl =
-      if (probeDocs.isStreaming) {
-        val cached = tfdl0.cache()
-        registerServingCache(spark, cached)
-        cached
-      } else tfdl0
+    val tfdl = if (probeDocs.isStreaming) servingCache(spark, tfdl0) else tfdl0
     val st = docs.agg(count(lit(1)).as("n_docs"),
       sum(size(split(lower(col("text")), " "))).cast("long").as("toktot")).head()
     val nDocs = st.getLong(0)
@@ -595,26 +532,19 @@ object StreamOps {
     */
   def rrfServeSink(spark: SparkSession, sfDir: String, probeIds: DataFrame,
                    checkpointDir: String)(sink: DataFrame => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     // both static indexes (BM25 tf/dl, corpus stats, normalized
     // embeddings) are FIXED across triggers — build + cache them ONCE so
     // a trigger's cost is the request sliver, not a per-batch corpus
     // explode/aggregation/norm pass (the bm25ScoreStream lifecycle; the
     // caches unpersist when the session's last stream terminates)
     val idx0 = graft.ops.RankOps.rrfIndex(spark, sfDir)
-    val idx = idx0.copy(tf = idx0.tf.cache(), dl = idx0.dl.cache(),
-      stats = idx0.stats.cache(), emb = idx0.emb.cache())
-    Seq(idx.tf, idx.dl, idx.stats, idx.emb)
-      .foreach(registerServingCache(spark, _))
-    probeIds.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.ops.RankOps.rrfServe(spark, sfDir, batch, idx))
-        ()
-      }
+    val idx = idx0.copy(tf = servingCache(spark, idx0.tf),
+      dl = servingCache(spark, idx0.dl), stats = servingCache(spark, idx0.stats),
+      emb = servingCache(spark, idx0.emb))
+    batchSink(probeIds, checkpointDir, OutputMode.Append) { (batch, _) =>
+      sink(graft.ops.RankOps.rrfServe(spark, sfDir, batch, idx))
+    }
   }
 
   /** I32: LIVE hotspot monitoring — the b35 skew report over a streaming
@@ -630,19 +560,13 @@ object StreamOps {
     */
   def hotBucketsSink(events: DataFrame, checkpointDir: String)
                     (sink: DataFrame => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    cellsStream(events)
-      .groupBy(substring(col("rowkey"), 1, 12).as("bucket"))
-      .agg(count(lit(1)).as("n_req"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.ops.BalancerOps.hotBucketReport(batch))
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(cellsStream(events)
+        .groupBy(substring(col("rowkey"), 1, 12).as("bucket"))
+        .agg(count(lit(1)).as("n_req")),
+      checkpointDir, OutputMode.Complete) { (batch, _) =>
+      sink(graft.ops.BalancerOps.hotBucketReport(batch))
+    }
 
   /** I33: LIVE replication monitoring — the a26 SyncTable range plan
     * recomputed as the replica's cells stream in. The replica side
@@ -661,23 +585,16 @@ object StreamOps {
     */
   def syncMonitorSink(spark: SparkSession, sfDir: String, events: DataFrame,
                       checkpointDir: String)(sink: DataFrame => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     import graft.ops.ReplicaOps
     val range = ReplicaOps.regionOf(col("user_id"))
-    val srcManifest = ReplicaOps
-      .rangeManifest(ReplicaOps.srcCells(spark, sfDir), range).cache()
-    registerServingCache(spark, srcManifest)
-    ReplicaOps.rawManifest(
-        ReplicaOps.driftOf(ReplicaOps.enrich(cellsStream(events))), range)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(ReplicaOps.syncPlan(srcManifest, ReplicaOps.foldManifest(batch)))
-        ()
-      }
+    val srcManifest = servingCache(spark,
+      ReplicaOps.rangeManifest(ReplicaOps.srcCells(spark, sfDir), range))
+    batchSink(ReplicaOps.rawManifest(
+        ReplicaOps.driftOf(ReplicaOps.enrich(cellsStream(events))), range),
+      checkpointDir, OutputMode.Complete) { (batch, _) =>
+      sink(ReplicaOps.syncPlan(srcManifest, ReplicaOps.foldManifest(batch)))
+    }
   }
 
   /** I34: LIVE canary health monitoring — the a27 per-region probe
@@ -698,27 +615,19 @@ object StreamOps {
     */
   def canarySink(spark: SparkSession, sfDir: String, events: DataFrame,
                  checkpointDir: String)(sink: DataFrame => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     import graft.ops.BalancerOps
-    val probes = BalancerOps.canaryProbes(Tables.cells(spark, sfDir)).cache()
-    registerServingCache(spark, probes)
-    cellsStream(events)
-      .where(col("op") === "put")
-      .join(broadcast(probes.select(col("probe_row").as("rowkey"))), "rowkey")
-      .groupBy(col("rowkey"), col("cf"), col("qualifier"))
-      .agg(count(lit(1)).as("n_versions"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val live = batch.groupBy(col("rowkey").as("probe_row"))
-            .agg(count(lit(1)).as("live_cells"))
-          sink(BalancerOps.canaryReport(probes, live))
-        }
-        ()
-      }
+    val probes = servingCache(spark, BalancerOps.canaryProbes(Tables.cells(spark, sfDir)))
+    batchSink(cellsStream(events)
+        .where(col("op") === "put")
+        .join(broadcast(probes.select(col("probe_row").as("rowkey"))), "rowkey")
+        .groupBy(col("rowkey"), col("cf"), col("qualifier"))
+        .agg(count(lit(1)).as("n_versions")),
+      checkpointDir, OutputMode.Complete) { (batch, _) =>
+      val live = batch.groupBy(col("rowkey").as("probe_row"))
+        .agg(count(lit(1)).as("live_cells"))
+      sink(BalancerOps.canaryReport(probes, live))
+    }
   }
 
   /** I35: LIVE quota monitoring — the a28 status report recomputed as
@@ -736,21 +645,15 @@ object StreamOps {
     */
   def quotaWatchSink(events: DataFrame, checkpointDir: String)
                     (sink: DataFrame => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    cellsStream(events)
-      .groupBy(when(col("qualifier").isin("click", "view"), "t_click")
-        .otherwise("t_txn").as("table"))
-      .agg(count(lit(1)).as("n_cells"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(graft.sources.NamespaceOps.quotaReport(batch, "graft_ns",
-            tableLimitExpr = "tot DIV 2", nsLimitExpr = "(tot DIV 10) * 11"))
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(cellsStream(events)
+        .groupBy(when(col("qualifier").isin("click", "view"), "t_click")
+          .otherwise("t_txn").as("table"))
+        .agg(count(lit(1)).as("n_cells")),
+      checkpointDir, OutputMode.Complete) { (batch, _) =>
+      sink(graft.sources.NamespaceOps.quotaReport(batch, "graft_ns",
+        tableLimitExpr = "tot DIV 2", nsLimitExpr = "(tot DIV 10) * 11"))
+    }
 
   /** I36: LIVE compaction monitoring — the a30 ratio-based file
     * SELECTION recomputed as the store-file manifest grows. The feed's
@@ -770,25 +673,18 @@ object StreamOps {
     */
   def compactionWatchSink(events: DataFrame, checkpointDir: String)
                          (sink: DataFrame => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     import graft.ops.BalancerOps
-    cellsStream(events)
-      .groupBy(
-        BalancerOps.regionOf(substring(col("rowkey"), 1, 12).cast("long"))
-          .as("region_id"),
-        (substring(col("rowkey"), 14, 12).cast("long") % 7).as("seq"))
-      .agg(count(lit(1)).as("size"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          sink(BalancerOps.compactionSelect(batch)
-            .orderBy(col("region_id").asc_nulls_last,
-              col("seq").asc_nulls_last))
-        ()
-      }
+    batchSink(cellsStream(events)
+        .groupBy(
+          BalancerOps.regionOf(substring(col("rowkey"), 1, 12).cast("long"))
+            .as("region_id"),
+          (substring(col("rowkey"), 14, 12).cast("long") % 7).as("seq"))
+        .agg(count(lit(1)).as("size")),
+      checkpointDir, OutputMode.Complete) { (batch, _) =>
+      sink(BalancerOps.compactionSelect(batch)
+        .orderBy(col("region_id").asc_nulls_last, col("seq").asc_nulls_last))
+    }
   }
 
   /** The canonical cells projection of an events stream — the same
@@ -822,20 +718,6 @@ object StreamOps {
     labeled.where(graft.ops.FilterOps.visibleUnder(col("vis"), auths))
   }
 
-  /** I26: streaming MOB ingest — each arriving micro-batch of documents
-    * splits at the MOB threshold exactly like the batch bulk-load (the
-    * a17 core, [[graft.ops.ScanOps.mobWrite]]): reference cells and
-    * under-threshold values into the main store, over-threshold payloads
-    * into the content-addressed MOB store, each batch as its own
-    * store-file generation (the I17 discipline — a replayed batch
-    * overwrites precisely its own files, exactly-once without a
-    * transactional sink). Payload identity rides the content hash, so
-    * the same large value arriving in two batches lands under ONE key
-    * and reconstruction collapses it — the MOB refcount property, which
-    * is what makes payload re-delivery a read-time no-op. StreamingSpec
-    * I26 pins streamed reconstruction ≡ the a17 batch reconstruction,
-    * including after a replayed write.
-    */
   /** I29: streaming ingest of TAGGED cells — the b33 multi-tag
     * cell-metadata lattice built incrementally. Each micro-batch arrives
     * already carrying its two v3 cell tags (per-cell TTL + visibility
@@ -852,37 +734,37 @@ object StreamOps {
     */
   def taggedCellsSink(taggedCells: DataFrame, outDir: String,
                       checkpointDir: String, regionsPerBatch: Int = 2)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    taggedCells.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.HFileOps.bulkWrite(batch, outDir,
-            regions = regionsPerBatch,
-            ttlMsCol = Some("ttl_ms"), visCol = Some("vis"),
-            generation = batchId.toInt)
-          ()
-        }
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(taggedCells, checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      graft.sources.HFileOps.bulkWrite(batch, outDir,
+        regions = regionsPerBatch,
+        ttlMsCol = Some("ttl_ms"), visCol = Some("vis"),
+        generation = batchId.toInt)
+      ()
+    }
 
+  /** I26: streaming MOB ingest — each arriving micro-batch of documents
+    * splits at the MOB threshold exactly like the batch bulk-load (the
+    * a17 core, [[graft.ops.ScanOps.mobWrite]]): reference cells and
+    * under-threshold values into the main store, over-threshold payloads
+    * into the content-addressed MOB store, each batch as its own
+    * store-file generation (the I17 discipline — a replayed batch
+    * overwrites precisely its own files, exactly-once without a
+    * transactional sink). Payload identity rides the content hash, so
+    * the same large value arriving in two batches lands under ONE key
+    * and reconstruction collapses it — the MOB refcount property, which
+    * is what makes payload re-delivery a read-time no-op. StreamingSpec
+    * I26 pins streamed reconstruction ≡ the a17 batch reconstruction,
+    * including after a replayed write.
+    */
   def mobIngestSink(docs: DataFrame, outDir: String, checkpointDir: String,
                     regionsPerBatch: Int = 2)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.ScanOps.mobWrite(batch, outDir, regionsPerBatch,
-            generation = batchId.toInt)
-          ()
-        }
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(docs, checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      graft.ops.ScanOps.mobWrite(batch, outDir, regionsPerBatch,
+        generation = batchId.toInt)
+      ()
+    }
 
   /** I14: streaming HFile bulk-load sink — the continuous-ingest shape an
     * HBase support library actually serves: each micro-batch of cells is
@@ -909,40 +791,22 @@ object StreamOps {
     * BEFORE Spark commits the epoch — the hand-off point for a real
     * deployment's "tell HBase to adopt these files" step (and the spec's
     * crash-injection point); it must be idempotent, exactly like the
-    * write itself.
+    * write itself. An empty micro-batch writes no directory and does not
+    * reach `onCommit`.
     */
   def hfileBulkLoadSink(cells: DataFrame, outDir: String, checkpointDir: String,
                         compression: Int = graft.sources.HFileCodec.CompressionNone,
                         encoding: Int = graft.sources.HFileCodec.EncodingNone,
                         onCommit: (Long, Seq[String]) => Unit = (_, _) => ())
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    cells.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = batch.count()
-        if (n > 0) {
-          val files = graft.sources.HFileOps.bulkWrite(
-            batch, f"$outDir/batch-$batchId%05d",
-            regions = graft.sources.HFileOps.regionCountFor(n),
-            compression = compression, encoding = encoding)
-          onCommit(batchId, files)
-        }
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(cells, checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      val files = graft.sources.HFileOps.bulkWrite(
+        batch, f"$outDir/batch-$batchId%05d",
+        regions = graft.sources.HFileOps.regionCountFor(batch.count()),
+        compression = compression, encoding = encoding)
+      onCommit(batchId, files)
+    }
 
-  /** I17: continuous bulk-ingest into ONE generational store — each
-    * micro-batch commits as its own store-file generation (generation =
-    * batchId), so [[graft.sources.HFileOps.mergedRead]] over the
-    * directory is the continuously-updated merge-on-read view at any
-    * moment and [[graft.sources.HFileOps.compact]] folds the accumulated
-    * history whenever the file count warrants — the flush-then-compact
-    * lifecycle of a region server, driven by Structured Streaming.
-    * Idempotent under replay: a retried batch REPLACES exactly its own
-    * generation's files ([[graft.sources.HFileOps.bulkWrite]] generation
-    * mode) and touches nothing else.
-    */
   /** I24: streaming WAL ingest — each micro-batch appends its own WAL
     * segment group ([[graft.sources.WalOps.writeWal]] with a per-batch
     * prefix), so the log accrues exactly the way a RegionServer's WAL
@@ -954,23 +818,16 @@ object StreamOps {
     * persists the delta at a sequence point, recovery = flushed
     * generations ∪ post-marker replay — StreamingSpec I24 pins
     * streamed-log recovery ≡ the batch cells view, including after a
-    * simulated batch replay.
+    * simulated batch replay. An empty micro-batch writes no segment.
     */
   def walIngestSink(cells: DataFrame, walDir: String, checkpointDir: String,
                     segmentsPerBatch: Int = 2)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    cells.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.WalOps.writeWal(batch, walDir, segmentsPerBatch,
-            prefix = f"wal-b$batchId%04d")
-          ()
-        }
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(cells, checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      graft.sources.WalOps.writeWal(batch, walDir, segmentsPerBatch,
+        prefix = f"wal-b$batchId%04d")
+      ()
+    }
 
   /** I27: CONTINUOUS WAL-shipping replication — I24's streaming log
     * append with a replication source bolted on: each micro-batch
@@ -989,57 +846,49 @@ object StreamOps {
   def walReplicateSink(cells: DataFrame, primaryDir: String,
                        replicaDir: String, checkpointDir: String,
                        segmentsPerBatch: Int = 2)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    cells.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val prefix = f"wal-b$batchId%04d"
-          graft.sources.WalOps.writeWal(batch, primaryDir, segmentsPerBatch,
-            prefix = prefix)
-          graft.sources.WalOps.replicate(batch.sparkSession, primaryDir,
-            replicaDir, glob = s"$prefix-[0-9][0-9][0-9][0-9][0-9].gwal")
-          ()
-        }
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(cells, checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      val prefix = f"wal-b$batchId%04d"
+      graft.sources.WalOps.writeWal(batch, primaryDir, segmentsPerBatch,
+        prefix = prefix)
+      graft.sources.WalOps.replicate(batch.sparkSession, primaryDir,
+        replicaDir, glob = s"$prefix-[0-9][0-9][0-9][0-9][0-9].gwal")
+      ()
+    }
 
+  /** I17: continuous bulk-ingest into ONE generational store — each
+    * micro-batch commits as its own store-file generation (generation =
+    * batchId), so [[graft.sources.HFileOps.mergedRead]] over the
+    * directory is the continuously-updated merge-on-read view at any
+    * moment and [[graft.sources.HFileOps.compact]] folds the accumulated
+    * history whenever the file count warrants — the flush-then-compact
+    * lifecycle of a region server, driven by Structured Streaming.
+    * Idempotent under replay: a retried batch REPLACES exactly its own
+    * generation's files ([[graft.sources.HFileOps.bulkWrite]] generation
+    * mode) and touches nothing else.
+    */
   def hfileGenerationalSink(cells: DataFrame, outDir: String, checkpointDir: String,
                             compression: Int = graft.sources.HFileCodec.CompressionNone,
                             encoding: Int = graft.sources.HFileCodec.EncodingNone)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    cells.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = batch.count()
-        if (n > 0) {
-          graft.sources.HFileOps.bulkWrite(
-            batch, outDir,
-            regions = graft.sources.HFileOps.regionCountFor(n),
-            compression = compression, encoding = encoding,
-            generation = batchId.toInt)
-          ()
-        }
-        ()
-      }
+      : DataStreamWriter[Row] =
+    batchSink(cells, checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      graft.sources.HFileOps.bulkWrite(
+        batch, outDir,
+        regions = graft.sources.HFileOps.regionCountFor(batch.count()),
+        compression = compression, encoding = encoding,
+        generation = batchId.toInt)
+      ()
+    }
 
   /** I10: exactly-once parquet sink — foreachBatch + idempotent overwrite
     * by batchId partition; checkpointed so restart resumes, and a replayed
     * batch overwrites rather than duplicates.
     */
   def exactlyOnceParquetSink(df: DataFrame, outDir: String,
-                             checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-      }
+                             checkpointDir: String): DataStreamWriter[Row] =
+    batchSink(df, checkpointDir, OutputMode.Update) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .parquet(s"$outDir/batch_id=$batchId")
+    }
 }

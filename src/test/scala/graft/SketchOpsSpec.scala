@@ -56,7 +56,7 @@ class SketchOpsSpec extends SparkSuite {
       (0 until 500).map(i => (20000L + i, s"new-${i * 2}")))              // within-batch dups
       .toDF("doc_id", "h")
     val got = graft.ops.DedupOps.incrementalAdmit(existing, incoming,
-        maxBandBits = 1L << 14, logStats = false)
+        maxBandBits = 1L << 14)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
     val want = {
       val w = org.apache.spark.sql.expressions.Window
@@ -76,13 +76,13 @@ class SketchOpsSpec extends SparkSuite {
       .toDF("doc_id", "h")
     // empty corpus path
     val emptyEx = Seq.empty[String].toDF("h")
-    val adm0 = graft.ops.DedupOps.incrementalAdmit(emptyEx, incoming,
-      logStats = false).select("doc_id").as[Long].collect().sorted
+    val adm0 = graft.ops.DedupOps.incrementalAdmit(emptyEx, incoming)
+      .select("doc_id").as[Long].collect().sorted
     assert(adm0.sameElements(Array(1L, 3L)), s"empty-corpus path admitted ${adm0.toSeq}")
     // bloom path
     val ex = Seq("h-a").toDF("h")
-    val adm1 = graft.ops.DedupOps.incrementalAdmit(ex, incoming,
-      logStats = false).select("doc_id").as[Long].collect().sorted
+    val adm1 = graft.ops.DedupOps.incrementalAdmit(ex, incoming)
+      .select("doc_id").as[Long].collect().sorted
     assert(adm1.sameElements(Array(3L)), s"bloom path admitted ${adm1.toSeq}")
   }
 
@@ -110,7 +110,7 @@ class SketchOpsSpec extends SparkSuite {
       val predicted = math.pow(
         1.0 - math.exp(-k.toDouble * perBandEst / perBandBits), k.toDouble)
       val admitted = graft.ops.DedupOps.incrementalAdmit(existing, absent,
-        bitsPerKey = bitsPerKey, logStats = false).count()
+        bitsPerKey = bitsPerKey).count()
       // every probe is absent, so candidates = probes NOT admitted... no:
       // ALL absent probes are admitted (anti-join kills false positives).
       // The candidate count is what the bloom flagged; recover it by

@@ -2,9 +2,9 @@ package graft
 
 import graft.streaming.StreamOps
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** SURVEY §5.4 — batch–stream equivalence: each streaming op replayed
   * over the events fixture (AvailableNow file stream) must equal its
@@ -12,16 +12,33 @@ import org.apache.spark.sql.streaming.Trigger
   */
 class StreamingSpec extends SparkSuite {
 
+  /** Start a streaming query and run it to the end of its input. The
+    * query is stopped even when it fails (the failure is rethrown), so
+    * none outlives its test in the shared session.
+    */
+  private def runToEnd(writer: DataStreamWriter[Row]): Unit = {
+    val q = writer.start()
+    try q.awaitTermination() finally q.stop()
+  }
+
   /** Run a streaming query to completion into a memory sink, in Complete
-    * or Append mode, and return the result table. The query is stopped
-    * even when it fails, so none outlives its test in the shared session.
+    * or Append mode, and return the result table.
     */
   private def runStream(df: DataFrame, mode: String, name: String): DataFrame = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    runToEnd(df.writeStream.format("memory").queryName(name)
+      .outputMode(mode).trigger(Trigger.AvailableNow()))
     spark.table(name)
   }
+
+  /** Events as WAL cells; seq = event_id is a monotone edit order that is
+    * independent of micro-batching.
+    */
+  private def walCells(df: DataFrame): DataFrame = df.select(
+    col("event_id").as("seq"),
+    concat(Tables.pad(col("user_id")), lit(":"), Tables.pad(col("event_id"))).as("rowkey"),
+    lit("e").as("cf"), col("event_type").as("qualifier"),
+    col("event_id").as("ts"), col("value"),
+    when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
 
   private lazy val batchEvents =
     Tables.events(spark, sf).withColumn("ets", col("ts").cast("timestamp")).cache()
@@ -42,7 +59,7 @@ class StreamingSpec extends SparkSuite {
     // make the identical keep/drop decision the batch backfill makes, so
     // incremental ingestion and a full recompute produce the same sample
     val streamed = runStream(
-      StreamOps.hashSampleStream(StreamOps.documentsStream(spark, sf))
+      graft.ops.SampleOps.sampleHash(StreamOps.documentsStream(spark, sf))
         .select("doc_id", "lang"),
       "append", "t_sample")
     val batch = graft.ops.SampleOps.sampleHash(Tables.documents(spark, sf))
@@ -81,11 +98,10 @@ class StreamingSpec extends SparkSuite {
     import graft.ops.FilterOps
     val dir = Files.createTempDirectory("graft_tags_stream").toString
     val ckpt = Files.createTempDirectory("graft_tags_stream_ckpt").toString
-    val q = StreamOps.taggedCellsSink(
+    runToEnd(StreamOps.taggedCellsSink(
       FilterOps.withTagColumns(
         StreamOps.cellsStream(StreamOps.eventsStream(spark, sf))),
-      dir, ckpt).start()
-    q.awaitTermination()
+      dir, ckpt))
     // multi-generation store accrued (one per non-empty micro-batch) —
     // otherwise the twin degenerates to the batch write itself
     val gens = new java.io.File(dir).listFiles()
@@ -119,9 +135,8 @@ class StreamingSpec extends SparkSuite {
   test("I26: streaming MOB ingest reconstructs the batch view; payload replay is a no-op") {
     val dir = Files.createTempDirectory("graft_mob_stream").toString
     val ckpt = Files.createTempDirectory("graft_mob_stream_ckpt").toString
-    val q = StreamOps.mobIngestSink(
-      StreamOps.documentsStream(spark, sf, splits = 8), dir, ckpt).start()
-    q.awaitTermination()
+    runToEnd(StreamOps.mobIngestSink(
+      StreamOps.documentsStream(spark, sf, splits = 8), dir, ckpt))
     // multi-generation store accrued (one per non-empty micro-batch)
     val gens = new java.io.File(s"$dir/main").listFiles()
       .filter(_.getName.endsWith(".hfile"))
@@ -151,15 +166,14 @@ class StreamingSpec extends SparkSuite {
 
   test("I15: pixel decode is micro-batch invariant (stream equals batch)") {
     // the media curation step as continuous ingestion: PNG build + ImageIO
-    // decode are pure per-row functions, so incremental arrival changes
-    // nothing about the extracted features
-    val streamed = runStream(
-      StreamOps.pixelDecodeStream(spark, StreamOps.documentsStream(spark, sf))
-        .select("media_id", "width", "height", "gray_sum", "entropy_mb"),
-      "append", "t_pixels")
-    val batch = graft.ops.MultimodalOps.decodePixels(spark,
-        graft.ops.MultimodalOps.grayPngFiles(spark, Tables.documents(spark, sf)).toDF())
+    // decode are pure per-row functions of doc_id, so incremental arrival
+    // changes nothing about the extracted features
+    def pixels(docs: DataFrame) = graft.ops.MultimodalOps.decodePixels(spark,
+        graft.ops.MultimodalOps.grayPngFiles(spark, docs).toDF())
       .toDF().select("media_id", "width", "height", "gray_sum", "entropy_mb")
+    val streamed = runStream(pixels(StreamOps.documentsStream(spark, sf)),
+      "append", "t_pixels")
+    val batch = pixels(Tables.documents(spark, sf))
     assert(streamed.count() == Tables.documents(spark, sf).count())
     assert(streamed.collect().map(_.toString).sorted
       .sameElements(batch.collect().map(_.toString).sorted))
@@ -190,10 +204,9 @@ class StreamingSpec extends SparkSuite {
     var last: Array[String] = Array.empty
     var triggers = 0
     val ckpt = Files.createTempDirectory("hotb_ckpt").toString
-    val q = StreamOps.hotBucketsSink(StreamOps.eventsStream(spark, sf), ckpt) { rep =>
+    runToEnd(StreamOps.hotBucketsSink(StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
-    }.start()
-    q.awaitTermination()
+    })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
     val batch = SparkEntry.queries("b35_hot_buckets")(spark, sf)
       .collect().map(_.toString)
@@ -211,11 +224,10 @@ class StreamingSpec extends SparkSuite {
     var last: Array[String] = Array.empty
     var triggers = 0
     val ckpt = Files.createTempDirectory("syncmon_ckpt").toString
-    val q = StreamOps.syncMonitorSink(spark, sf,
+    runToEnd(StreamOps.syncMonitorSink(spark, sf,
         StreamOps.eventsStream(spark, sf), ckpt) { plan =>
       last = plan.collect().map(_.toString).sorted; triggers += 1
-    }.start()
-    q.awaitTermination()
+    })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
     val batch = SparkEntry.queries("a26_sync_ranges")(spark, sf)
       .collect().map(_.toString).sorted
@@ -234,11 +246,10 @@ class StreamingSpec extends SparkSuite {
     var last: Array[String] = Array.empty
     var triggers = 0
     val ckpt = Files.createTempDirectory("canary_ckpt").toString
-    val q = StreamOps.canarySink(spark, sf,
+    runToEnd(StreamOps.canarySink(spark, sf,
         StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
-    }.start()
-    q.awaitTermination()
+    })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
     val batch = SparkEntry.queries("a27_canary_probe")(spark, sf)
       .collect().map(_.toString)
@@ -256,10 +267,9 @@ class StreamingSpec extends SparkSuite {
     var last: Array[String] = Array.empty
     var triggers = 0
     val ckpt = Files.createTempDirectory("quota_ckpt").toString
-    val q = StreamOps.quotaWatchSink(StreamOps.eventsStream(spark, sf), ckpt) { rep =>
+    runToEnd(StreamOps.quotaWatchSink(StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
-    }.start()
-    q.awaitTermination()
+    })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
     val batch = SparkEntry.queries("a28_quota_report")(spark, sf)
       .collect().map(_.toString)
@@ -277,11 +287,10 @@ class StreamingSpec extends SparkSuite {
     var last: Array[String] = Array.empty
     var triggers = 0
     val ckpt = Files.createTempDirectory("compact_ckpt").toString
-    val q = StreamOps.compactionWatchSink(
+    runToEnd(StreamOps.compactionWatchSink(
         StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
-    }.start()
-    q.awaitTermination()
+    })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
     val batch = SparkEntry.queries("a30_compaction_select")(spark, sf)
       .collect().map(_.toString)
@@ -297,30 +306,27 @@ class StreamingSpec extends SparkSuite {
     StreamOps.withStateStore(spark, StreamOps.RocksDbProvider)
     try {
       var canary: Array[String] = Array.empty
-      val cq = StreamOps.canarySink(spark, sf,
+      runToEnd(StreamOps.canarySink(spark, sf,
           StreamOps.eventsStream(spark, sf),
           Files.createTempDirectory("canary_rocks").toString) { rep =>
         canary = rep.collect().map(_.toString)
-      }.start()
-      cq.awaitTermination()
+      })
       assert(canary.sameElements(
         SparkEntry.queries("a27_canary_probe")(spark, sf)
           .collect().map(_.toString)))
       var quota: Array[String] = Array.empty
-      val qq = StreamOps.quotaWatchSink(StreamOps.eventsStream(spark, sf),
+      runToEnd(StreamOps.quotaWatchSink(StreamOps.eventsStream(spark, sf),
           Files.createTempDirectory("quota_rocks").toString) { rep =>
         quota = rep.collect().map(_.toString)
-      }.start()
-      qq.awaitTermination()
+      })
       assert(quota.sameElements(
         SparkEntry.queries("a28_quota_report")(spark, sf)
           .collect().map(_.toString)))
       var compact: Array[String] = Array.empty
-      val kq = StreamOps.compactionWatchSink(StreamOps.eventsStream(spark, sf),
+      runToEnd(StreamOps.compactionWatchSink(StreamOps.eventsStream(spark, sf),
           Files.createTempDirectory("compact_rocks").toString) { rep =>
         compact = rep.collect().map(_.toString)
-      }.start()
-      kq.awaitTermination()
+      })
       assert(compact.sameElements(
         SparkEntry.queries("a30_compaction_select")(spark, sf)
           .collect().map(_.toString)),
@@ -346,11 +352,12 @@ class StreamingSpec extends SparkSuite {
   test("I16: BPE encode with a batch-trained model is micro-batch invariant") {
     // train once on the full (batch) corpus, tokenize the stream with the
     // broadcast model: token sequences must equal the batch backfill's
+    // (encoding is stateless given the model)
     val docs = Tables.documents(spark, sf)
     val model = graft.ops.BpeOps.train(
       graft.ops.BpeOps.wordCounts(docs, 20000), numMerges = 120)
     val streamed = runStream(
-      StreamOps.bpeEncodeStream(spark, StreamOps.documentsStream(spark, sf), model)
+      graft.ops.BpeOps.encode(spark, StreamOps.documentsStream(spark, sf), model)
         .select(col("doc_id"), concat_ws("", col("tokens")).as("joined")),
       "append", "t_bpe")
     val batch = graft.ops.BpeOps.encode(spark, docs, model)
@@ -362,9 +369,10 @@ class StreamingSpec extends SparkSuite {
 
   test("I18: decontamination flags are micro-batch invariant (row-wise stream equals relational batch)") {
     // the j29 pass as continuous ingestion: eval grams extracted once
-    // (batch), each arriving doc flagged inside its own row. The batch
-    // side runs the RELATIONAL spelling (explode → broadcast semi-join →
-    // groupBy), so this also pins row-wise ≡ relational.
+    // (batch), each arriving doc flagged inside its own row, so the
+    // flagging is stateless. The batch side runs the RELATIONAL spelling
+    // (explode → broadcast semi-join → groupBy), so this also pins
+    // row-wise ≡ relational.
     val docs = Tables.documents(spark, sf)
     val relational = graft.ops.RepetitionOps.contaminationHits(docs, n = 3)
     val evSet = docs
@@ -374,7 +382,8 @@ class StreamingSpec extends SparkSuite {
         i => concat_ws(" ", slice(col("ws"), i, lit(3))))).as("g"))
       .distinct().collect().map(_.getString(0)).toSeq
     val streamed = runStream(
-      StreamOps.decontaminateStream(StreamOps.documentsStream(spark, sf), evSet),
+      graft.ops.RepetitionOps.contaminationHitsRowwise(
+        StreamOps.documentsStream(spark, sf), evSet, n = 3),
       "append", "t_decon")
     val batch = relational.collect().map(_.toString)
     assert(streamed.count() > 0, "decontamination must flag rows on this fixture")
@@ -383,10 +392,10 @@ class StreamingSpec extends SparkSuite {
 
   test("I19: PII scrub + winnow fingerprint are micro-batch invariant (stream equals batch)") {
     // the j33/j34 quality passes as continuous ingestion: both are
-    // computed inside the arriving row, so the stream must reproduce the
-    // batch backfill exactly
+    // computed inside the arriving row (map-only in batch, PlanSpec-pinned),
+    // so the stream must reproduce the batch backfill exactly
     val streamed = runStream(
-      StreamOps.scrubFingerprintStream(StreamOps.documentsStream(spark, sf)),
+      graft.ops.TextAnalysisOps.scrubFingerprint(StreamOps.documentsStream(spark, sf)),
       "append", "t_scrubfp")
     val batch = graft.ops.TextAnalysisOps.scrubFingerprint(Tables.documents(spark, sf))
     assert(streamed.count() == Tables.documents(spark, sf).count())
@@ -396,13 +405,14 @@ class StreamingSpec extends SparkSuite {
 
   test("I20: portable SimHash + MinHash fingerprints are micro-batch invariant (stream equals batch)") {
     // j39/j40 as continuous ingestion: both fingerprints are row-local
-    // projections, so the stream reproduces the batch exactly
-    val streamed = runStream(
-      StreamOps.fingerprintSketchStream(StreamOps.documentsStream(spark, sf)),
-      "append", "t_fpsketch")
-    val batch = graft.ops.DedupOps.withMinhashPortable(
-        graft.ops.DedupOps.withSimhashPortable(Tables.documents(spark, sf)))
+    // projections (the batch plans are map-only scans), so the stream
+    // reproduces the batch exactly
+    def sketch(docs: DataFrame) = graft.ops.DedupOps.withMinhashPortable(
+        graft.ops.DedupOps.withSimhashPortable(docs))
       .select("doc_id", "simhash", "sig_md5")
+    val streamed = runStream(sketch(StreamOps.documentsStream(spark, sf)),
+      "append", "t_fpsketch")
+    val batch = sketch(Tables.documents(spark, sf))
     assert(streamed.count() == Tables.documents(spark, sf).count())
     assert(streamed.collect().map(_.toString).sorted
       .sameElements(batch.collect().map(_.toString).sorted))
@@ -440,10 +450,9 @@ class StreamingSpec extends SparkSuite {
       .where(graft.ops.RankOps.probeWorkload(col("doc_id")))
       .select(col("doc_id").as("qid"))
     val ckpt = Files.createTempDirectory("rrf_serve_ckpt").toString
-    val q = StreamOps.rrfServeSink(spark, sf, requests, ckpt) { out =>
+    runToEnd(StreamOps.rrfServeSink(spark, sf, requests, ckpt) { out =>
       answered ++= out.collect().map(_.toString); triggers += 1
-    }.start()
-    q.awaitTermination()
+    })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
     val batch = SparkEntry.queries("j42_rrf_fusion")(spark, sf)
       .collect().map(_.toString)
@@ -457,7 +466,7 @@ class StreamingSpec extends SparkSuite {
     // decisions, so streaming ingestion and a batch recompute keep the
     // same docs at the same weights
     val streamed = runStream(
-      StreamOps.mixDomainsStream(StreamOps.documentsStream(spark, sf))
+      graft.ops.SampleOps.mixDomains(StreamOps.documentsStream(spark, sf))
         .select("doc_id", "lang"),
       "append", "t_mix")
     val batch = graft.ops.SampleOps.mixDomains(Tables.documents(spark, sf))
@@ -480,10 +489,10 @@ class StreamingSpec extends SparkSuite {
         val history = scala.collection.mutable.ArrayBuffer
           .empty[Map[String, Seq[(Long, Long)]]] // lang -> (doc_id, rn) by rank
         var state = Map.empty[String, Seq[(Long, Long)]]
-        val q = StreamOps.stratifiedTopKStream(spark,
+        runToEnd(StreamOps.stratifiedTopKStream(spark,
             StreamOps.documentsStream(spark, sf)).toDF()
           .writeStream.outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .trigger(Trigger.AvailableNow())
           .foreachBatch { (df: DataFrame, _: Long) =>
             val upd = df.collect().groupBy(_.getString(0)).map {
               case (lang, rs) =>
@@ -492,8 +501,7 @@ class StreamingSpec extends SparkSuite {
             }
             if (upd.nonEmpty) { state = state ++ upd; history += state }
             ()
-          }.start()
-        q.awaitTermination()
+          })
         assert(history.size >= 2,
           s"replay must be multi-micro-batch, got ${history.size} epochs")
         // final state = batch j23, row-exact
@@ -652,11 +660,8 @@ class StreamingSpec extends SparkSuite {
   test("I10: exactly-once sink — restart does not duplicate") {
     val out = Files.createTempDirectory("graft_sink").toString
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    def run(): Unit = {
-      val q = StreamOps.exactlyOnceParquetSink(
-        StreamOps.eventsStream(spark, sf).select("event_id", "ets"), out, ckpt).start()
-      q.awaitTermination()
-    }
+    def run(): Unit = runToEnd(StreamOps.exactlyOnceParquetSink(
+      StreamOps.eventsStream(spark, sf).select("event_id", "ets"), out, ckpt))
     run()
     val n1 = spark.read.parquet(out).count()
     run() // restart from checkpoint: no new data ⇒ no change
@@ -697,13 +702,13 @@ class StreamingSpec extends SparkSuite {
         })
       // first run dies mid-stream (batch 1's files are on disk, offset is not)
       val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        val q = sink(crashOn = Some(1L)).start(); q.awaitTermination()
+        runToEnd(sink(crashOn = Some(1L)))
       }
       assert(crashed.getMessage.contains("injected crash")
         || Option(crashed.getCause).exists(_.getMessage.contains("injected crash")))
       // restart from the checkpoint: batch 1 replays (overwriting its own
       // files), the remaining batches follow
-      val q2 = sink(crashOn = None).start(); q2.awaitTermination()
+      runToEnd(sink(crashOn = None))
       assert(committed.distinct.size >= 2,
         s"provider $provider: replay must be multi-micro-batch, got $committed")
       assert(committed.contains(1L),
@@ -726,10 +731,9 @@ class StreamingSpec extends SparkSuite {
       when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
     val out = Files.createTempDirectory("graft_hf_gen").toString
     val ckpt = Files.createTempDirectory("graft_hf_gen_ckpt").toString
-    val q = StreamOps.hfileGenerationalSink(
+    runToEnd(StreamOps.hfileGenerationalSink(
       coarse(StreamOps.eventsStream(spark, sf)), out, ckpt,
-      compression = graft.sources.HFileCodec.CompressionZstd).start()
-    q.awaitTermination()
+      compression = graft.sources.HFileCodec.CompressionZstd))
     // multiple generations actually accrued (one per micro-batch)
     val gens = HFileOps.readWithGen(spark, out)
       .select("gen").distinct().count()
@@ -770,13 +774,14 @@ class StreamingSpec extends SparkSuite {
     val q = df.writeStream.format("memory").queryName("t_late")
       .outputMode("append").start()
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 * 365 * 50 + min * 60000L)
-    mem.addData((ts(0), 1L), (ts(5), 2L))
-    q.processAllAvailable()
-    mem.addData((ts(60), 3L))   // advances watermark far past the first window
-    q.processAllAvailable()
-    mem.addData((ts(1), 4L))    // late beyond watermark: must be dropped
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData((ts(0), 1L), (ts(5), 2L))
+      q.processAllAvailable()
+      mem.addData((ts(60), 3L))   // advances watermark far past the first window
+      q.processAllAvailable()
+      mem.addData((ts(1), 4L))    // late beyond watermark: must be dropped
+      q.processAllAvailable()
+    } finally q.stop()
     val rows = spark.table("t_late").collect()
     val firstWindowN = rows.filter(_.getStruct(0).getTimestamp(0).getTime == ts(0).getTime)
       .map(_.getAs[Long]("n"))
@@ -788,8 +793,10 @@ class StreamingSpec extends SparkSuite {
     val batchDocs = Tables.documents(spark, sf)
     val model = LangIdOps.literalModel(
       LangIdOps.trainCapped(batchDocs, cap = 2000))
+    // scoring is one codegen'd expression chain per row (no join, no
+    // state), so streamed classification equals the batch row-for-row
     val streamed = runStream(
-      StreamOps.langIdStream(StreamOps.documentsStream(spark, sf), model),
+      LangIdOps.predictRowLocal(StreamOps.documentsStream(spark, sf), model),
       "append", "t_langid")
       .orderBy("doc_id").collect().toSeq
     val batch = LangIdOps.predictRowLocal(batchDocs, model)
@@ -810,15 +817,8 @@ class StreamingSpec extends SparkSuite {
     val priDir = Files.createTempDirectory("graft_rep_stream_p").toString
     val repDir = Files.createTempDirectory("graft_rep_stream_r").toString
     val ckpt = Files.createTempDirectory("graft_rep_stream_ckpt").toString
-    def walCells(df: DataFrame) = df.select(
-      col("event_id").as("seq"),
-      concat(Tables.pad(col("user_id")), lit(":"), Tables.pad(col("event_id"))).as("rowkey"),
-      lit("e").as("cf"), col("event_type").as("qualifier"),
-      col("event_id").as("ts"), col("value"),
-      when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
-    val q = StreamOps.walReplicateSink(
-      walCells(StreamOps.eventsStream(spark, sf)), priDir, repDir, ckpt).start()
-    q.awaitTermination()
+    runToEnd(StreamOps.walReplicateSink(
+      walCells(StreamOps.eventsStream(spark, sf)), priDir, repDir, ckpt))
     val want = walCells(batchEvents).collect().map(_.toString).sorted
     val pri = WalOps.readWal(spark, priDir).collect().map(_.toString).sorted
     val rep = WalOps.readWal(spark, repDir).collect().map(_.toString).sorted
@@ -848,16 +848,8 @@ class StreamingSpec extends SparkSuite {
     val walDir = Files.createTempDirectory("graft_wal_stream").toString
     val storeDir = Files.createTempDirectory("graft_wal_stream_store").toString
     val ckpt = Files.createTempDirectory("graft_wal_stream_ckpt").toString
-    // seq = event_id: monotone edit order independent of micro-batching
-    def walCells(df: DataFrame) = df.select(
-      col("event_id").as("seq"),
-      concat(Tables.pad(col("user_id")), lit(":"), Tables.pad(col("event_id"))).as("rowkey"),
-      lit("e").as("cf"), col("event_type").as("qualifier"),
-      col("event_id").as("ts"), col("value"),
-      when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
-    val q = StreamOps.walIngestSink(
-      walCells(StreamOps.eventsStream(spark, sf)), walDir, ckpt).start()
-    q.awaitTermination()
+    runToEnd(StreamOps.walIngestSink(
+      walCells(StreamOps.eventsStream(spark, sf)), walDir, ckpt))
     // the log accrued one segment group per micro-batch
     val groups = new java.io.File(walDir).listFiles()
       .filter(_.getName.endsWith(".gwal"))
@@ -888,5 +880,30 @@ class StreamingSpec extends SparkSuite {
       .collect().map(_.toString).sorted
     assert(got.length == want.length && got.sameElements(want),
       "streamed-WAL recovery diverges from the batch cells view")
+  }
+
+  test("store-file and WAL sinks skip empty micro-batches") {
+    // every sink reaches its batch operator only for a non-empty
+    // micro-batch: a feed whose batches all filter to nothing commits no
+    // bulk-load directory and appends no WAL segment
+    def emptyFeed = StreamOps.eventsStream(spark, sf).where(lit(false))
+    def ranBatches(ckpt: String) =
+      Option(new java.io.File(ckpt, "commits").list()).getOrElse(Array.empty[String])
+        .count(_.forall(_.isDigit))
+    val out = Files.createTempDirectory("graft_hf_empty").toString
+    val hfCkpt = Files.createTempDirectory("graft_hf_empty_ckpt").toString
+    var commits = 0
+    runToEnd(StreamOps.hfileBulkLoadSink(StreamOps.cellsStream(emptyFeed),
+      out, hfCkpt, onCommit = (_, _) => commits += 1))
+    assert(ranBatches(hfCkpt) >= 2, "the empty feed must still run micro-batches")
+    assert(commits == 0, s"onCommit ran $commits time(s) for empty batches")
+    assert(!new java.io.File(out).list().exists(_.startsWith("batch-")),
+      "an empty batch wrote a batch directory")
+    val walDir = Files.createTempDirectory("graft_wal_empty").toString
+    val walCkpt = Files.createTempDirectory("graft_wal_empty_ckpt").toString
+    runToEnd(StreamOps.walIngestSink(walCells(emptyFeed), walDir, walCkpt))
+    assert(ranBatches(walCkpt) >= 2, "the empty feed must still run micro-batches")
+    assert(!new java.io.File(walDir).list().exists(_.endsWith(".gwal")),
+      "an empty batch wrote a WAL segment")
   }
 }
