@@ -537,7 +537,7 @@ object StreamOps {
     // embeddings) are FIXED across triggers — build + cache them ONCE so
     // a trigger's cost is the request sliver, not a per-batch corpus
     // explode/aggregation/norm pass (the bm25ScoreStream lifecycle; the
-    // caches unpersist when the session's last stream terminates)
+    // caches unpersist when the stream that adopted them terminates)
     val idx0 = graft.ops.RankOps.rrfIndex(spark, sfDir)
     val idx = idx0.copy(tf = servingCache(spark, idx0.tf),
       dl = servingCache(spark, idx0.dl), stats = servingCache(spark, idx0.stats),
