@@ -89,17 +89,25 @@ object Bench {
     }
     // timed pass. A query that throws is recorded as -1 (NOT a near-zero
     // wall-clock) so a crashed query can never read as a speedup; the
-    // compact line carries a failed count for the same reason. A GC +
+    // compact line carries a failed count for the same reason, and the
+    // detail file's "errors" map says why (exception class and the first
+    // line of its message, first failure per query). A GC +
     // short settle precedes each timed query so one query's garbage isn't
     // billed to its successor — measured, not hypothetical: a 0.24 s
     // filtered count read 0.53 s mid-battery right after the HFile write
     // queries, purely from inherited heap pressure.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = ordered.map { case (name, fn) =>
       val times = (0 until repeat).map { _ =>
         System.gc(); Thread.sleep(50)
         val t0 = System.nanoTime()
         try { evaluate(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch {
+          case e: Throwable =>
+            val firstLine = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+            errors.getOrElseUpdate(name, s"${e.getClass.getName}: $firstLine")
+            -1.0
+        }
       }
       val sec =
         if (times.exists(_ < 0)) -1.0
@@ -112,6 +120,8 @@ object Bench {
       if (repeat <= 1) ""
       else results.map { case (k, _, lo, hi) => "\"" + k + "\":[" + lo + "," + hi + "]" }
         .mkString(""","k":""" + repeat + ""","spread":{""", ",", "}")
+    val errs = errors.map { case (k, v) => JsonUtil.q(k) + ":" + JsonUtil.q(v) }
+      .mkString(""","errors":{""", ",", "}")
     val failed = results.count(_._2 < 0)
     val total = results.map(_._2).filter(_ >= 0).sum
     // Per-query detail goes to a FILE, not stdout: the driver captures only
@@ -120,7 +130,7 @@ object Bench {
     // ("parsed": null). The graded stdout line stays compact (<200 bytes).
     // Write-then-atomic-move so a concurrent reader never sees a torn file.
     val detailBytes =
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"queries":$qs$spread,"sf":"$sfDir","cpus":"$cpus"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"queries":$qs$spread$errs,"sf":"$sfDir","cpus":"$cpus"}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // unique tmp per JVM: two concurrent Bench runs sharing a cwd must not
     // interleave writes into the same tmp file before the atomic move

@@ -1,6 +1,6 @@
 package graft
 
-/** Minimal JSON string escaping shared by Verify and OracleDump.
+/** Minimal JSON string escaping shared by Verify, OracleDump and Bench.
   * Escapes backslash, quote, and ALL control chars (<0x20) — a tab or CR in
   * builder-authored SQL would otherwise make the driver's json.load fail and
   * silently zero the round's correctness.

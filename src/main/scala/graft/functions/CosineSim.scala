@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** SURVEY.md §2.12 K5 — native Catalyst expression for cosine similarity
@@ -81,17 +81,20 @@ object CosineSim {
   private[functions] val builder: Seq[Expression] => Expression =
     es => { GraftFnArgs.exact(name, es, 2); CosineSim(es(0), es(1)) }
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+  /** `graft_cosine(a, b)` as a typed column. */
+  def of(a: Column, b: Column): Column = Native(CosineSim(Native.expr(a), Native.expr(b)))
 }
 
 /** Production registration path: `--conf spark.sql.extensions=
   * graft.functions.GraftExtensions` makes the native graft_* functions
   * first-class SQL functions and installs the bounded-heap top-k rewrite
   * in every session of the cluster. [[graft.Harness.session]] installs
-  * it the same way for every main. Each function is injected with its
-  * companion's own `builder`, the one its runtime `register` uses.
+  * it the same way for every main. This is the one place graft installs
+  * SQL function names, each with its companion's `builder` (which checks
+  * arity and literal arguments for SQL text). Graft's own operators never
+  * look a function up by name: they build the same expressions as typed
+  * columns (`CosineSim.of`, `DotProduct.of`, …), so a query resolves on
+  * any session and never writes to its function registry.
   *
   * The top-k rewrite goes in as a pre-CBO rule, which runs once on the
   * plan the operator-optimization batches finished — the plan a

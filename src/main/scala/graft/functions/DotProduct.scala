@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product of two float-array columns:
@@ -86,7 +87,6 @@ object DotProduct {
   private[functions] val builder: Seq[Expression] => Expression =
     es => { GraftFnArgs.exact(name, es, 2); DotProduct(es(0), es(1)) }
 
-  /** Runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+  /** `graft_dot(a, b)` as a typed column. */
+  def of(a: Column, b: Column): Column = Native(DotProduct(Native.expr(a), Native.expr(b)))
 }

@@ -1,41 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Session registration for the native graft_* functions.
-  *
-  * Every op that uses a native function calls `register` at query
-  * construction so any session works (ADVICE r16 #7 context): with stock
-  * `createOrReplaceTempFunction` that re-registration makes
-  * SimpleFunctionRegistry log "function X replaced a previously
-  * registered function" once per query build — ~20 WARN lines forming
-  * the entire stderr tail of every bench artifact. Dropping the name
-  * first makes the replace a fresh insert, which the registry does not
-  * log. Same end state (the builders are deterministic for a given
-  * name + captured parameters), silent path.
-  *
-  * NOT ATOMIC (ADVICE r17 #5): between the drop and the create the
-  * registry is briefly empty for that name, so a query ANALYZED
-  * concurrently on the same session in that window would fail to
-  * resolve the function (stock `createOrReplaceTempFunction` is a
-  * single atomic replace). Acceptable for the engine's registration
-  * path — queries register at construction on the driver thread —
-  * but synchronize on the registry before sharing a session across
-  * concurrently-analyzing threads.
-  */
-private[functions] object GraftFnReg {
-  def quietReplace(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression,
-      source: String = "internal"): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.dropFunction(FunctionIdentifier(name))
-    reg.createOrReplaceTempFunction(name, builder, source)
-  }
-}
-
-/** Builder-time argument validation for the native graft_* functions.
+/** Builder-time argument validation for the graft_* functions
+  * [[GraftExtensions]] installs for SQL text.
   *
   * Function builders run at plan/analysis time; without these guards a
   * wrong arity or a non-literal where an integer literal is required

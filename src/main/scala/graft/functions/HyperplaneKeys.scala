@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native random-hyperplane LSH keys: `graft_hyperplane_keys(emb, nBits,
@@ -92,9 +93,9 @@ object HyperplaneKeys {
     es => HyperplaneKeys(GraftFnArgs.exact(name, es, 3).head,
       GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2))
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+  /** `graft_hyperplane_keys(emb, nBits, tables)` as a typed column. */
+  def of(emb: Column, nBits: Int, tables: Int): Column =
+    Native(HyperplaneKeys(Native.expr(emb), nBits, tables))
 }
 
 /** Margin-ranked multi-probe keys: `graft_hyperplane_probes(emb, nBits,
@@ -141,9 +142,9 @@ object HyperplaneProbes {
   val name = "graft_hyperplane_probes"
 
   def probes(emb: ArrayData, nBits: Int, tables: Int, m: Int): ArrayData = {
-    // m clamps into [0, nBits]: this is registered SQL surface, and a
-    // negative literal used to allocate an empty output then index it
-    // (AIOOBE); m = 0 degrades to the base keys, same as no multi-probe
+    // m clamps into [0, nBits]: a negative m used to allocate an empty
+    // output then index it (AIOOBE); m = 0 degrades to the base keys,
+    // same as no multi-probe
     val mm = math.max(0, math.min(m, nBits))
     val dim = emb.numElements()
     val v = new Array[Double](dim)
@@ -200,11 +201,7 @@ object HyperplaneProbes {
     new GenericArrayData(out)
   }
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => HyperplaneProbes(GraftFnArgs.exact(name, es, 4).head,
-        GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2),
-        GraftFnArgs.intLit(name, es, 3)),
-      "internal")
+  /** `graft_hyperplane_probes(emb, nBits, tables, m)` as a typed column. */
+  def of(emb: Column, nBits: Int, tables: Int, m: Int): Column =
+    Native(HyperplaneProbes(Native.expr(emb), nBits, tables, m))
 }

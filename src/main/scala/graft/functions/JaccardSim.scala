@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -61,8 +60,4 @@ object JaccardSim {
 
   private[functions] val builder: Seq[Expression] => Expression =
     es => { GraftFnArgs.exact(name, es, 2); JaccardSim(es(0), es(1)) }
-
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,9 +82,13 @@ object MinHashSig {
   private[functions] val builder: Seq[Expression] => Expression =
     es => MinHashSig(GraftFnArgs.exact(name, es, 2).head, GraftFnArgs.intLit(name, es, 1))
 
-  /** Runtime registration on an existing session (test/driver path). */
+  /** `graft_minhash(shingles, n)` as a typed column. */
+  def of(shs: Column, n: Int): Column = Native(MinHashSig(Native.expr(shs), n))
+
+  /** Installs `graft_minhash` on a session built without
+    * [[GraftExtensions]], for SQL text on that session. */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "internal")
 }
 
 /** Native signature agreement: `graft_sig_agree(a, b)` = fraction of
@@ -161,9 +166,8 @@ object SigAgree {
   private[functions] val builder: Seq[Expression] => Expression =
     es => { GraftFnArgs.exact(name, es, 2); SigAgree(es(0), es(1)) }
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+  /** `graft_sig_agree(a, b)` as a typed column. */
+  def of(a: Column, b: Column): Column = Native(SigAgree(Native.expr(a), Native.expr(b)))
 }
 
 /** Native LSH band keys: `graft_lsh_bands(sig, bands, rows)` maps a
@@ -218,7 +222,7 @@ object LshBands {
     es => LshBands(GraftFnArgs.exact(name, es, 3).head,
       GraftFnArgs.intLit(name, es, 1), GraftFnArgs.intLit(name, es, 2))
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+  /** `graft_lsh_bands(sig, bands, rows)` as a typed column. */
+  def of(sig: Column, bands: Int, rows: Int): Column =
+    Native(LshBands(Native.expr(sig), bands, rows))
 }

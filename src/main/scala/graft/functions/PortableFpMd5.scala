@@ -2,10 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -56,7 +57,7 @@ object PortableFpMd5 {
     while (t < n) {
       // null elements are skipped, not hashed: the declarative twin's
       // md5(concat(seed, ':', tok)) is NULL for a null token, and
-      // array_min ignores NULLs — a session-registered function must not
+      // array_min ignores NULLs — the native function must not
       // NPE on array('a', NULL) (ADVICE r10)
       if (!ws.isNullAt(t)) {
         any = true
@@ -112,14 +113,11 @@ object PortableFpMd5 {
 
   val minhashName = "graft_minhash_md5"
   val simhashName = "graft_simhash_md5"
+}
 
-  def register(spark: SparkSession): Unit = {
-    GraftFnReg.quietReplace(spark, minhashName,
-      es => MinHashMd5(GraftFnArgs.exact(minhashName, es, 2).head,
-        GraftFnArgs.intLit(minhashName, es, 1)), "internal")
-    GraftFnReg.quietReplace(spark, simhashName,
-      es => SimHashMd5(GraftFnArgs.exact(simhashName, es, 1).head), "internal")
-  }
+object MinHashMd5 {
+  /** `graft_minhash_md5(tokens, nSeeds)` as a typed column. */
+  def of(tokens: Column, nSeeds: Int): Column = Native(MinHashMd5(Native.expr(tokens), nSeeds))
 }
 
 case class MinHashMd5(child: Expression, nSeeds: Int) extends UnaryExpression {
@@ -139,6 +137,11 @@ case class MinHashMd5(child: Expression, nSeeds: Int) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.PortableFpMd5.minhashSig($c, $nSeeds)")
   override protected def withNewChildInternal(newChild: Expression): MinHashMd5 =
     copy(child = newChild)
+}
+
+object SimHashMd5 {
+  /** `graft_simhash_md5(tokens)` as a typed column. */
+  def of(tokens: Column): Column = Native(SimHashMd5(Native.expr(tokens)))
 }
 
 case class SimHashMd5(child: Expression) extends UnaryExpression {

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** SURVEY.md §2.11 J9 (IVF-PQ) — product-quantization codec as native
@@ -75,14 +76,10 @@ object PqEncode {
 
   val name = "graft_pq_encode"
 
-  /** Register with a CAPTURED codebook (driver-trained, bounded) —
-    * callers re-register per invocation; createOrReplace is idempotent.
-    */
-  def register(spark: SparkSession, m: Int, ksub: Int, dsub: Int,
-               codebook: Array[Float]): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => PqEncode(GraftFnArgs.exact(name, es, 1).head, m, ksub, dsub, codebook),
-      "internal")
+  /** Encode `vectors` against a CAPTURED codebook (driver-trained,
+    * bounded): each call's codebook lives in its own expression. */
+  def of(vectors: Column, m: Int, ksub: Int, dsub: Int, codebook: Array[Float]): Column =
+    Native(PqEncode(Native.expr(vectors), m, ksub, dsub, codebook))
 }
 
 /** Reconstruction: codes back to the concatenated codewords —
@@ -132,9 +129,7 @@ object PqDecode {
 
   val name = "graft_pq_decode"
 
-  def register(spark: SparkSession, m: Int, ksub: Int, dsub: Int,
-               codebook: Array[Float]): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => PqDecode(GraftFnArgs.exact(name, es, 1).head, m, ksub, dsub, codebook),
-      "internal")
+  /** Decode `codes` against the codebook they were encoded with. */
+  def of(codes: Column, m: Int, ksub: Int, dsub: Int, codebook: Array[Float]): Column =
+    Native(PqDecode(Native.expr(codes), m, ksub, dsub, codebook))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -158,13 +159,9 @@ object ProbeShingleHits {
 
   val name = "graft_probe_hits"
 
-  /** Register with a CAPTURED probe table (the probes are query arguments,
-    * not expressible as SQL literals at any reasonable size) — callers
-    * re-register per invocation; createOrReplace makes that idempotent.
-    */
-  def register(spark: SparkSession, k: Int,
-               probes: Seq[(Long, Seq[String])]): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => ProbeShingleHits(GraftFnArgs.exact(name, es, 1).head, k, probes),
-      "internal")
+  /** Probe hits of `text` against a CAPTURED probe table (the probes are
+    * query arguments, not expressible as SQL literals at any reasonable
+    * size): each call's table lives in its own expression. */
+  def of(text: Column, k: Int, probes: Seq[(Long, Seq[String])]): Column =
+    Native(ProbeShingleHits(Native.expr(text), k, probes))
 }

@@ -2,10 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,10 +32,9 @@ case class ShingleMd5(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = ShingleMd5.name
 
-  // session-registered temp function: a non-string argument must fail at
-  // ANALYSIS with a typed message, not ClassCastException at eval (ADVICE
-  // r10). NullType stays legal — a bare NULL literal evaluates to NULL
-  // through nullSafeEval, as it always did (r11 review).
+  // a non-string argument must fail at ANALYSIS with a typed message, not
+  // a ClassCastException at eval. NullType stays legal: a bare NULL
+  // literal evaluates to NULL through nullSafeEval.
   override def checkInputDataTypes() = child.dataType match {
     case org.apache.spark.sql.types.StringType |
          org.apache.spark.sql.types.NullType =>
@@ -97,9 +97,6 @@ object ShingleMd5 {
     new GenericArrayData(out)
   }
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name,
-      es => ShingleMd5(GraftFnArgs.exact(name, es, 2).head,
-        GraftFnArgs.intLit(name, es, 1)), "internal")
+  /** `graft_shingle_md5_60(text, k)` as a typed column. */
+  def of(text: Column, k: Int): Column = Native(ShingleMd5(Native.expr(text), k))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -77,7 +78,11 @@ object Shingles {
   private[functions] val builder: Seq[Expression] => Expression =
     es => Shingles(GraftFnArgs.exact(name, es, 2).head, GraftFnArgs.intLit(name, es, 1))
 
-  /** Runtime registration on an existing session (test/driver path). */
+  /** `graft_shingles(text, k)` as a typed column. */
+  def of(text: Column, k: Int): Column = Native(Shingles(Native.expr(text), k))
+
+  /** Installs `graft_shingles` on a session built without
+    * [[GraftExtensions]], for SQL text on that session. */
   def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "internal")
 }

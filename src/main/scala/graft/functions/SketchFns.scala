@@ -1,55 +1,51 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{BinaryType, LongType}
 
-/** Registry handles for Spark's NATIVE sketch expressions — the exact
+/** Typed columns over Spark's NATIVE sketch expressions — the exact
   * operators Catalyst injects for runtime bloom-filter joins
   * ([public: o.a.s.sql.catalyst.expressions.aggregate.BloomFilterAggregate],
   * [public: o.a.s.sql.catalyst.expressions.BloomFilterMightContain]) —
-  * exposed as callable functions so the sketch-path queries
-  * ([[graft.ops.SketchOps]]) build and probe the filter with codegen'd
-  * built-ins instead of a Scala UDF. The value is pre-hashed with Spark's
-  * own XxHash64, matching the runtime-filter shape, so the aggregate's
-  * input is a long and the probe never materializes the gram twice.
+  * so the sketch-path queries ([[graft.ops.SketchOps]]) build and probe
+  * the filter with codegen'd built-ins instead of a Scala UDF. The value
+  * is pre-hashed with Spark's own XxHash64, matching the runtime-filter
+  * shape, so the aggregate's input is a long and the probe never
+  * materializes the gram twice.
   */
 object SketchFns {
 
-  val bloomAggName = "graft_bloom_agg"
-  val bloomMightName = "graft_bloom_might"
+  private def hashed(value: Column): Expression = XxHash64(Seq(Native.expr(value)), 42L)
 
-  /** `graft_bloom_agg(value, estItems, numBits)` — distributed build via
+  /** Bloom filter aggregate over `value` — distributed build via
     * partial/final TypedImperativeAggregate merge; the result is the
     * serialized filter, ≤ numBits/8 bytes BY CONSTRUCTION at any corpus
     * size (the bound that makes the one-row driver materialization in
     * SketchOps legitimate).
     */
-  private def bloomAggBuilder(es: Seq[Expression]): Expression = {
-    GraftFnArgs.exact(bloomAggName, es, 3)
-    new BloomFilterAggregate(XxHash64(Seq(es.head), 42L), es(1), es(2))
-  }
+  def bloomAgg(value: Column, estItems: Column, numBits: Column): Column =
+    Native.agg(new BloomFilterAggregate(hashed(value),
+      Native.expr(estItems), Native.expr(numBits)))
 
-  /** `graft_bloom_might(bloomBinary, value)` — bloomBinary must be a
-    * literal/foldable (the broadcast-inlined filter); value is hashed the
-    * same way the build side was.
+  /** Membership probe — `bloom` must be a literal/foldable (the
+    * broadcast-inlined filter); value is hashed the same way the build
+    * side was.
     */
-  private def bloomMightBuilder(es: Seq[Expression]): Expression = {
-    GraftFnArgs.exact(bloomMightName, es, 2)
-    BloomFilterMightContain(es.head, XxHash64(Seq(es(1)), 42L))
-  }
+  def bloomMight(bloom: Column, value: Column): Column =
+    Native(BloomFilterMightContain(Native.expr(bloom), hashed(value)))
 
-  /** `graft_bloom_might_col(bloomColumn, value)` — the NON-foldable
-    * variant: the bloom arrives as a regular binary column (a banded
-    * bloom-index row joined alongside the probe — see
+  /** The NON-foldable probe: the bloom arrives as a regular binary column
+    * (a banded bloom-index row joined alongside the probe — see
     * [[graft.ops.DedupOps.incrementalAdmit]]), which Spark's native
     * [[BloomFilterMightContain]] rejects (it requires a literal/scalar
     * subquery). Value hashing is identical to the build/probe pair above
-    * (XxHash64 seed 42), so a filter built by `graft_bloom_agg` answers
-    * both probe spellings interchangeably.
+    * (XxHash64 seed 42), so a filter built by [[bloomAgg]] answers both
+    * probe spellings interchangeably.
     *
     * The bloom side MUST arrive via a broadcast join: the per-instance
     * deserialization cache keys on array IDENTITY, which broadcast hash
@@ -59,18 +55,10 @@ object SketchFns {
     * so a beyond-broadcast bloom index is the wrong plan shape in the
     * first place (use the exact anti-join / persisted hash-index path).
     */
+  def bloomMightCol(bloom: Column, value: Column): Column =
+    Native(BloomMightContainCol(Native.expr(bloom), hashed(value)))
+
   val bloomMightColName = "graft_bloom_might_col"
-
-  private def bloomMightColBuilder(es: Seq[Expression]): Expression = {
-    GraftFnArgs.exact(bloomMightColName, es, 2)
-    BloomMightContainCol(es.head, XxHash64(Seq(es(1)), 42L))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    GraftFnReg.quietReplace(spark, bloomAggName, bloomAggBuilder, "internal")
-    GraftFnReg.quietReplace(spark, bloomMightName, bloomMightBuilder, "internal")
-    GraftFnReg.quietReplace(spark, bloomMightColName, bloomMightColBuilder, "internal")
-  }
 }
 
 /** Bloom membership probe against a column-valued serialized filter.

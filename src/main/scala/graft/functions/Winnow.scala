@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native sliding-window minimum: `graft_winnow(grams, w)` maps an
@@ -65,7 +66,6 @@ object Winnow {
   private[functions] val builder: Seq[Expression] => Expression =
     es => Winnow(GraftFnArgs.exact(name, es, 2).head, GraftFnArgs.intLit(name, es, 1))
 
-  /** Runtime registration on an existing session (test/driver path). */
-  def register(spark: SparkSession): Unit =
-    GraftFnReg.quietReplace(spark, name, builder, "internal")
+  /** `graft_winnow(grams, w)` as a typed column. */
+  def of(grams: Column, w: Int): Column = Native(Winnow(Native.expr(grams), w))
 }

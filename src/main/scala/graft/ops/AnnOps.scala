@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.{CosineSim, HyperplaneKeys, HyperplaneProbes, PqDecode, PqEncode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,10 +57,8 @@ object AnnOps {
     * whole near-dup pipeline at 200k vectors).
     */
   def bucketed(emb: DataFrame, nBits: Int = 12, tables: Int = 4): DataFrame = {
-    graft.functions.HyperplaneKeys.register(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding"),
-      posexplode(call_function(graft.functions.HyperplaneKeys.name,
-        col("embedding"), lit(nBits), lit(tables))))
+      posexplode(HyperplaneKeys.of(col("embedding"), nBits, tables)))
       .select(col("vec_id"), col("embedding"),
         col("pos").as("tbl"), col("col").as("key"))
   }
@@ -79,13 +78,11 @@ object AnnOps {
       bucketed(probes, nBits, tables)
         .select(col("tbl"), col("key"), col("vec_id").as("pid"))
     else {
-      graft.functions.HyperplaneProbes.register(probes.sparkSession)
       val mm = math.min(multiProbe, nBits)
       // layout is table-major, (mm+1) keys per table → pos div (mm+1)
       // recovers the table id
       probes.select(col("vec_id").as("pid"),
-          posexplode(call_function(graft.functions.HyperplaneProbes.name,
-            col("embedding"), lit(nBits), lit(tables), lit(multiProbe))))
+          posexplode(HyperplaneProbes.of(col("embedding"), nBits, tables, multiProbe)))
         .select((col("pos") / (mm + 1)).cast("int").as("tbl"),
           col("col").as("key"), col("pid"))
     }
@@ -141,10 +138,8 @@ object AnnOps {
     // native codegen'd cosine (bit-identical to the HOF spelling per
     // CosineSimSpec) — the re-rank runs over every candidate pair, so the
     // interpreted zip_with/aggregate form dominates at corpus scale
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val sims = cands.select(col("pid"), col("vec_id"),
-      call_function(graft.functions.CosineSim.name,
-        col("p_emb"), col("embedding")).as("sim"))
+      CosineSim.of(col("p_emb"), col("embedding")).as("sim"))
     val w = Window.partitionBy("pid").orderBy(col("sim").desc, col("vec_id"))
     sims.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
       .select("pid", "vec_id", "rn", "sim")
@@ -197,13 +192,10 @@ object AnnOps {
                          maxBucket: Int = 200): DataFrame = {
     val ids = cosineCandidatePairs(emb, nBits, tables, maxBucket)
     val e = emb.select(col("vec_id"), col("embedding"))
-    graft.functions.CosineSim.register(emb.sparkSession)
     ids
       .join(e.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
       .join(e.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .select(col("a"), col("b"),
-        call_function(graft.functions.CosineSim.name,
-          col("ea"), col("eb")).as("cos"))
+      .select(col("a"), col("b"), CosineSim.of(col("ea"), col("eb")).as("cos"))
       .where(col("cos") >= threshold)
   }
 
@@ -318,12 +310,10 @@ object AnnOps {
     // candidates from the probed cells only, exact cosine re-rank
     // (native graft_cosine — the re-rank touches nProbe/nlist of the
     // corpus per probe, far too many pairs for interpreted HOF lambdas)
-    graft.functions.CosineSim.register(spark)
     val cands = probeCells.join(assigned, "cell")
       .where(col("vec_id") =!= col("pid"))
     val sims = cands.select(col("pid"), col("vec_id"),
-      call_function(graft.functions.CosineSim.name,
-        col("p_emb"), col("embedding")).as("sim"))
+      CosineSim.of(col("p_emb"), col("embedding")).as("sim"))
     val wr = Window.partitionBy("pid").orderBy(col("sim").desc, col("vec_id"))
     sims.withColumn("rn", row_number().over(wr)).where(col("rn") <= k)
       .select("pid", "vec_id", "rn", "sim")
@@ -464,21 +454,17 @@ object AnnOps {
     val (assigned, centroids) = coarseAssign(spark, corpus, nlist, seed, trainFraction)
     val probeCells = nearestCells(probes, centroids, nProbe)
     val cb = pqTrain(spark, corpus, dim, m, ksub, seed, trainFraction)
-    graft.functions.PqEncode.register(spark, m, ksub, dsub, cb)
-    graft.functions.PqDecode.register(spark, m, ksub, dsub, cb)
-    graft.functions.CosineSim.register(spark)
 
     // the searchable representation: codes, not vectors
     val coded = assigned.select(col("vec_id"), col("cell"),
-      call_function(graft.functions.PqEncode.name, col("embedding")).as("codes"))
+      PqEncode.of(col("embedding"), m, ksub, dsub, cb).as("codes"))
 
     // approximate ranking from codes alone (asymmetric: exact probe vs
     // reconstructed candidate)
     val cands = probeCells.join(coded, "cell")
       .where(col("vec_id") =!= col("pid"))
     val approx = cands.select(col("pid"), col("p_emb"), col("vec_id"),
-      call_function(graft.functions.CosineSim.name, col("p_emb"),
-        call_function(graft.functions.PqDecode.name, col("codes"))).as("asim"))
+      CosineSim.of(col("p_emb"), PqDecode.of(col("codes"), m, ksub, dsub, cb)).as("asim"))
     val wa = Window.partitionBy("pid").orderBy(col("asim").desc, col("vec_id"))
     val shortlist = approx.withColumn("ar", row_number().over(wa))
       .where(col("ar") <= nRerank)
@@ -490,8 +476,7 @@ object AnnOps {
     val exact = shortlist
       .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("pid"), col("vec_id"),
-        call_function(graft.functions.CosineSim.name,
-          col("p_emb"), col("embedding")).as("sim"))
+        CosineSim.of(col("p_emb"), col("embedding")).as("sim"))
     val wr = Window.partitionBy("pid").orderBy(col("sim").desc, col("vec_id"))
     exact.withColumn("rn", row_number().over(wr)).where(col("rn") <= k)
       .select("pid", "vec_id", "rn", "sim")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{CosineSim, LshBands, MinHashMd5, MinHashSig, Shingles, SigAgree, SimHashMd5, SketchFns}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,49 +23,38 @@ object DedupOps {
   /** Distinct k-character shingles of a text column, via the native
     * O(len·k) [[graft.functions.Shingles]] expression (the declarative
     * substr-per-position form is O(len²) per document — disqualifying for
-    * the 100 TB dedup path this object IS). Callers register the function
-    * on their session first ([[graft.functions.Shingles.register]]); the
-    * DataFrame-taking entry points here do it themselves.
+    * the 100 TB dedup path this object IS).
     */
-  def shingles(text: Column, k: Int): Column =
-    array_distinct(call_function(graft.functions.Shingles.name, text, lit(k)))
+  def shingles(text: Column, k: Int): Column = array_distinct(Shingles.of(text, k))
 
   /** MinHash signature via the native one-hash-per-shingle expression
     * ([[graft.functions.MinHashSig]]) — the HOF spelling re-hashed every
     * shingle n times through interpreted lambdas, which the 100×-corpus
     * scale smoke measured in minutes-per-500k-docs territory.
     */
-  def minhashSig(shs: Column, n: Int): Column =
-    call_function(graft.functions.MinHashSig.name, shs, lit(n))
+  def minhashSig(shs: Column, n: Int): Column = MinHashSig.of(shs, n)
 
   /** LSH banding: one 64-bit key per band (band index folded into the
     * hash — [[graft.functions.LshBands]], native). Two docs share a band
     * key iff their signatures agree on that whole band (mod 2⁻⁶⁴
     * collisions, which the est_jaccard verify stage absorbs anyway).
     */
-  def bandsOf(sig: Column, bands: Int, rows: Int): Column =
-    call_function(graft.functions.LshBands.name, sig, lit(bands), lit(rows))
+  def bandsOf(sig: Column, bands: Int, rows: Int): Column = LshBands.of(sig, bands, rows)
 
   /** Estimated Jaccard = fraction of agreeing signature positions —
     * native [[graft.functions.SigAgree]] (runs once per candidate pair;
     * the interpreted zip_with/filter spelling is kept only as
     * [[sigSimilarityHof]], the SigAgreeProps test reference).
     */
-  def sigSimilarity(a: Column, b: Column): Column =
-    call_function(graft.functions.SigAgree.name, a, b)
+  def sigSimilarity(a: Column, b: Column): Column = SigAgree.of(a, b)
 
   /** HOF reference spelling of [[sigSimilarity]] (test oracle only). */
   private[graft] def sigSimilarityHof(a: Column, b: Column): Column =
     size(filter(zip_with(a, b, (x, y) => x === y), id => id)).cast("double") / size(a)
 
   /** Signatures for every document: (doc_id, sig). */
-  def signatures(docs: DataFrame, k: Int = 5, n: Int = 128): DataFrame = {
-    graft.functions.Shingles.register(docs.sparkSession)
-    graft.functions.MinHashSig.register(docs.sparkSession)
-    // downstream est_jaccard over these sigs resolves graft_sig_agree
-    graft.functions.SigAgree.register(docs.sparkSession)
+  def signatures(docs: DataFrame, k: Int = 5, n: Int = 128): DataFrame =
     docs.select(col("doc_id"), minhashSig(shingles(col("text"), k), n).as("sig"))
-  }
 
   /** Candidate near-dup pairs (a < b) from LSH banding, with estimated
     * Jaccard ≥ threshold. bands*rows must equal the signature length.
@@ -104,8 +94,6 @@ object DedupOps {
   def candidatePairs(sigs: DataFrame, bands: Int = 32, rows: Int = 4,
                      threshold: Double = 0.7, maxBucket: Int = 200,
                      hotExtraReps: Int = 2): DataFrame = {
-    graft.functions.LshBands.register(sigs.sparkSession)
-    graft.functions.SigAgree.register(sigs.sparkSession)
     val allBanded = sigs.select(col("doc_id"),
       explode(bandsOf(col("sig"), bands, rows)).as("bnd"))
     val hot = allBanded.groupBy("bnd")
@@ -368,10 +356,8 @@ object DedupOps {
     * (native O(len·k) expression). Split out of [[exactJaccard]] so the
     * I31 serving path can cache it across micro-batch triggers.
     */
-  def shingleSets(docs: DataFrame, k: Int = 5): DataFrame = {
-    graft.functions.Shingles.register(docs.sparkSession)
+  def shingleSets(docs: DataFrame, k: Int = 5): DataFrame =
     docs.select(col("doc_id"), shingles(col("text"), k).as("sh"))
-  }
 
   /** Verify a candidate-pair sliver against a shingle-set index:
     * exact |A∩B| / |A∪B| per pair, one final IEEE division of two exact
@@ -471,7 +457,6 @@ object DedupOps {
   def semanticDedup(corpus: DataFrame, nClusters: Int, threshold: Double,
                     maxCluster: Int = 1000, seed: Long = 42L): DataFrame = {
     val s = corpus.sparkSession
-    graft.functions.CosineSim.register(s)
     val (assigned0, _) = AnnOps.coarseAssign(s, corpus, nClusters, seed,
       trainFraction = 1.0)
     // cache: the cell assignment feeds the hot census, both pair branches
@@ -487,7 +472,7 @@ object DedupOps {
     val r = cold.select(col("cell").as("cr"), col("vec_id").as("b"),
       col("embedding").as("eb"))
     val coldPairs = l.join(r, col("cl") === col("cr") && col("a") < col("b"))
-      .select(col("a"), col("b"), expr("graft_cosine(ea, eb)").as("sim"))
+      .select(col("a"), col("b"), CosineSim.of(col("ea"), col("eb")).as("sim"))
     // hot cells: member ↔ hub star with sim verified per edge. Hubs are
     // the rep (min vec_id) plus 2 seeded members — a mass-duplicate cell
     // is mostly duplicates, so some hub lands in the dup mass and the
@@ -504,7 +489,7 @@ object DedupOps {
       .where(col("vec_id") =!= col("hub"))
       .select(least(col("hub"), col("vec_id")).as("a"),
         greatest(col("hub"), col("vec_id")).as("b"),
-        expr("graft_cosine(eh, embedding)").as("sim"))
+        CosineSim.of(col("eh"), col("embedding")).as("sim"))
     val pairs = coldPairs.union(hotPairs).where(col("sim") >= threshold)
       .select("a", "b").distinct()
     val labels = clusters(pairs, assigned.select(col("vec_id").as("doc_id")),
@@ -535,7 +520,6 @@ object DedupOps {
     * (the 2..4 band keeps boilerplate shingles from minting hub stars).
     */
   def shingleEdges(docs: DataFrame, L: Int = 30): DataFrame = {
-    graft.functions.Shingles.register(docs.sparkSession)
     // Per-doc window dedup is ROW-LOCAL (array_distinct before the
     // explode), so the corpus-wide (doc, w) distinct exchange the r19
     // spelling paid is gone; one row per (doc, distinct window) leaves
@@ -544,7 +528,7 @@ object DedupOps {
       .select(col("doc_id"), lower(col("text")).as("t"))
       .where(length(col("t")) >= L)
       .select(col("doc_id"),
-        explode(array_distinct(expr(s"graft_shingles(t, $L)"))).as("w"))
+        explode(array_distinct(Shingles.of(col("t"), L))).as("w"))
     // ONE w-keyed exchange: the occurrence count rides a window over the
     // same partitioning, the 2..4 band filters before anything collects,
     // and the groupBy reuses the window's hash partitioning, so the
@@ -622,9 +606,7 @@ object DedupOps {
     // fused native bit-vote pass ([[graft.functions.PortableFpMd5]]) —
     // bit-identical to the declarative md5/conv + 60-bit HOF loop
     // (PortableFpSpec pins it) at a fraction of its per-token allocation
-    graft.functions.PortableFpMd5.register(docs.sparkSession)
-    docs.withColumn("simhash",
-      expr("graft_simhash_md5(split(lower(text), ' '))"))
+    docs.withColumn("simhash", SimHashMd5.of(split(lower(col("text")), " ")))
   }
 
   /** j40: the MinHash signature algorithm (Broder 1997, public) under
@@ -661,10 +643,8 @@ object DedupOps {
 
   /** Column-adding form — see [[withSimhashPortable]]. */
   def withMinhashPortable(docs: DataFrame): DataFrame = {
-    graft.functions.PortableFpMd5.register(docs.sparkSession)
     docs
-      .withColumn("sig",
-        expr("graft_minhash_md5(array_distinct(split(lower(text), ' ')), 16)"))
+      .withColumn("sig", MinHashMd5.of(array_distinct(split(lower(col("text")), " ")), 16))
       .withColumn("sig_md5",
         md5(concat_ws(",", expr("transform(sig, m -> CAST(m AS STRING))"))))
       .drop("sig")
@@ -749,8 +729,6 @@ object DedupOps {
                        maxBandBits: Long = 1L << 26,
                        maxIndexBytes: Long = 512L << 20,
                        nExistHint: Option[Long] = None): DataFrame = {
-    val s = incoming.sparkSession
-    graft.functions.SketchFns.register(s)
     def keepFirst(surv: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("h").orderBy(asc_nulls_last("doc_id"))
@@ -782,8 +760,7 @@ object DedupOps {
     val perBandEst = math.max(1L, nExist / nBands)
     val band = pmod(xxhash64(col("h")), lit(nBands.toLong))
     val bloomTable = ex.groupBy(band.as("__band"))
-      .agg(call_function(graft.functions.SketchFns.bloomAggName,
-        col("h"), lit(perBandEst), lit(perBandBits)).as("__bf"))
+      .agg(SketchFns.bloomAgg(col("h"), lit(perBandEst), lit(perBandBits)).as("__bf"))
     // one classification pass over the incoming batch, materialized so the
     // two admit branches both read it instead of re-probing (the incoming
     // batch is the SMALL side of a crawl by construction; the corpus-sized
@@ -793,9 +770,7 @@ object DedupOps {
       .withColumn("__band", band)
       .join(broadcast(bloomTable), Seq("__band"), "left")
       // a band with no existing keys has no filter row: definitely new
-      .withColumn("__mc", coalesce(call_function(
-        graft.functions.SketchFns.bloomMightColName, col("__bf"), col("h")),
-        lit(false)))
+      .withColumn("__mc", coalesce(SketchFns.bloomMightCol(col("__bf"), col("h")), lit(false)))
       .select(col("doc_id"), col("h"), col("__mc"))
       .graftCkpt()
     val defNew = flagged.where(!col("__mc")).drop("__mc")

@@ -122,7 +122,6 @@ object RankOps {
     val stats = Tables.documents(s, d).agg(
       count(lit(1)).as("n_docs"),
       sum(size(split(lower(col("text")), " "))).cast("long").as("toktot"))
-    graft.functions.DotProduct.register(s)
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
         TextOps.l2Col(col("embedding")).as("e_norm"))
@@ -247,7 +246,6 @@ object RankOps {
 
   private def bruteSemLeg(sel: ProbeSel, idx: RrfIndex): org.apache.spark.sql.DataFrame = {
     val emb = idx.emb
-    graft.functions.DotProduct.register(emb.sparkSession)
     val probes = sel(emb, "vec_id")
       .select(col("vec_id").as("qid"), col("embedding").as("p_emb"),
         col("e_norm").as("p_norm"))

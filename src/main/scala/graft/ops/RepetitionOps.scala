@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.Shingles
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,13 +63,12 @@ object RepetitionOps {
     * copies, found WITHOUT any pairwise comparison.
     */
   def j28_dup_substrings: Q = (s, d) => {
-    graft.functions.Shingles.register(s)
     val L = 30
     val wins = Tables.documents(s, d)
       .select(col("doc_id"), lower(col("text")).as("t"))
       .where(length(col("t")) >= L)
       .select(col("doc_id"),
-        posexplode(expr(s"graft_shingles(t, $L)")).as(Seq("pos", "w")))
+        posexplode(Shingles.of(col("t"), L)).as(Seq("pos", "w")))
       .select(col("doc_id"), (col("pos") + 1).as("p"), col("w"))
     // ONE shuffle keyed on the window: the occurrence count is a window
     // function over the same partition, so the explode runs once and
@@ -245,14 +245,13 @@ object RepetitionOps {
     * per-doc state is bounded by document length.
     */
   def j31_dedup_cut: Q = (s, d) => {
-    graft.functions.Shingles.register(s)
     val L = 30
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), lower(col("text")).as("t"))
     val wins = docs
       .where(length(col("t")) >= L)
       .select(col("doc_id"), col("t"),
-        posexplode(expr(s"graft_shingles(t, $L)")).as(Seq("pos", "w")))
+        posexplode(Shingles.of(col("t"), L)).as(Seq("pos", "w")))
       .select(col("doc_id"), (col("pos") + 1).as("p"), col("w"))
     val byW = Window.partitionBy("w")
     val byWOrd = Window.partitionBy("w").orderBy("doc_id", "p")

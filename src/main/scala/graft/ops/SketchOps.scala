@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.Tables
+import graft.functions.SketchFns
 
 /** Sketch-gated corpus passes — the 100 TB shapes where an exact
   * distributed answer is reached THROUGH a probabilistic prefilter, so
@@ -49,7 +50,6 @@ object SketchOps {
     * cap 8 MiB — bounded by the numBits argument at any corpus size.
     */
   def j36_decontaminate_bloom: Q = (s, d) => {
-    graft.functions.SketchFns.register(s)
     val n = 4
     val words = docWords(s, d)
     // localCheckpoint: the eval-gram set is consumed THREE times (the
@@ -76,8 +76,7 @@ object SketchOps {
         s"eval grams (~${(1L << 26) / math.max(nEval, 1L)} bits/item) — " +
         "prefilter selectivity degraded; raise the cap for this eval set")
     val bloomBytes = evalGrams
-      .agg(call_function(graft.functions.SketchFns.bloomAggName,
-        col("g"), lit(math.max(nEval, 1L)), lit(numBits)).as("bf"))
+      .agg(SketchFns.bloomAgg(col("g"), lit(math.max(nEval, 1L)), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
     if (bloomBytes == null) {
       // empty eval set: the aggregate yields a null sketch, and a null
@@ -88,8 +87,7 @@ object SketchOps {
     } else {
       val corpus = wordGrams(words.where(col("doc_id") % 97 =!= 0), n)
       corpus
-        .where(call_function(graft.functions.SketchFns.bloomMightName,
-          lit(bloomBytes), col("g")))
+        .where(SketchFns.bloomMight(lit(bloomBytes), col("g")))
         .join(broadcast(evalGrams), Seq("g"), "left_semi")
         .groupBy("doc_id").agg(count_distinct(col("g")).as("hits"))
         .orderBy(desc("hits"), asc_nulls_last("doc_id")).limit(100)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.{Shingles, Winnow}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -120,16 +121,12 @@ object TextAnalysisOps {
     * distinct set per doc usable as an index key.
     */
   def fingerprints(docs: DataFrame, k: Int = 7, w: Int = 4): DataFrame = {
-    graft.functions.Shingles.register(docs.sparkSession)
-    graft.functions.Winnow.register(docs.sparkSession)
     // native O(len·k) k-gram slicing (vs O(len²) substr-per-position),
     // hashed in position order, then the native O(n) monotonic-deque
     // sliding minimum (the slice-per-window HOF spelling measured minutes
     // per 500k docs at the 100× smoke)
-    val grams = transform(
-      call_function(graft.functions.Shingles.name, col("text"), lit(k)),
-      sh => xxhash64(sh))
-    val windows = call_function(graft.functions.Winnow.name, grams, lit(w))
+    val grams = transform(Shingles.of(col("text"), k), sh => xxhash64(sh))
+    val windows = Winnow.of(grams, w)
     docs.select(col("doc_id"),
       array_sort(array_distinct(windows)).as("fingerprint"))
   }
@@ -141,15 +138,9 @@ object TextAnalysisOps {
     * j33/j34 map-only shape as one scan-stage pipeline.
     */
   def scrubFingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.Shingles.register(docs.sparkSession)
-    graft.functions.Winnow.register(docs.sparkSession)
-    val grams = transform(
-      call_function(graft.functions.Shingles.name, lower(col("text")), lit(7)),
-      sh => xxhash64(sh))
+    val grams = transform(Shingles.of(lower(col("text")), 7), sh => xxhash64(sh))
     docs.select(col("doc_id"),
       md5(TextOps.piiScrub(lower(col("text")))).as("scrub_md5"),
-      size(array_distinct(
-        call_function(graft.functions.Winnow.name, grams, lit(4))))
-        .cast("long").as("n_fp"))
+      size(array_distinct(Winnow.of(grams, 4))).cast("long").as("n_fp"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{CosineSim, DotProduct, ProbeShingleHits, ShingleMd5, Shingles, Winnow}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,11 +22,10 @@ object TextOps {
   /** Left-fold dot product of two float vectors in double precision —
     * deterministic across engines per R7 (float×float exact in double;
     * 0.0-init left fold == DuckDB list_reduce). The native codegen'd
-    * [[graft.functions.DotProduct]] kernel: callers register it on their
-    * session first (`DotProduct.register`).
+    * [[graft.functions.DotProduct]] kernel, built as a typed column, so it
+    * resolves on any session.
     */
-  def dotCol(a: Column, b: Column): Column =
-    call_function(graft.functions.DotProduct.name, a, b)
+  def dotCol(a: Column, b: Column): Column = DotProduct.of(a, b)
 
   /** Left-fold L2 norm (sqrt of the self dot product, same kernel). */
   def l2Col(a: Column): Column = sqrt(dotCol(a, a))
@@ -133,7 +133,6 @@ object TextOps {
     * against. Probe set is broadcast; corpus side never shuffles.
     */
   def j8_sim_topk: Q = (s, d) => {
-    graft.functions.DotProduct.register(s)
     val emb = Tables.embeddings(s, d)
     // norms precomputed once per row (not once per pair) — sqrt is
     // deterministic, so sim stays bit-identical to the inline form
@@ -155,12 +154,10 @@ object TextOps {
   }
 
   /** j10: L2 norms (R7 left fold). */
-  def j10_vec_norms: Q = (s, d) => {
-    graft.functions.DotProduct.register(s)
+  def j10_vec_norms: Q = (s, d) =>
     Tables.embeddings(s, d)
       .select(col("vec_id"), l2Col(col("embedding")).as("l2"))
       .orderBy(asc_nulls_last("vec_id")).limit(100)
-  }
 
   /** j14: n-gram Jaccard near-dup ranking — exact 5-char-shingle Jaccard
     * of each probe doc against the corpus, top-5 most similar per probe.
@@ -201,18 +198,15 @@ object TextOps {
     * spelling (MiscSpec A/B + sparse-corpus pad test + sf0.001 golden).
     */
   def j14_dedup_ngram: Q = (s, d) => {
-    graft.functions.Shingles.register(s)
     val sh = Tables.documents(s, d)
       .select(col("doc_id"), lower(col("text")).as("t"))
-      .select(col("doc_id"),
-        array_distinct(expr("graft_shingles(t, 5)")).as("sh"))
+      .select(col("doc_id"), array_distinct(Shingles.of(col("t"), 5)).as("sh"))
     val probes = sh.where(col("doc_id") < 10)
       .select(col("doc_id").as("pid"), col("sh").as("psh"))
     // probe table: ≤10 query docs, a bounded client argument (the same
     // shingle pipeline as the corpus side, so strings match exactly)
     val probeTable: Seq[(Long, Seq[String])] = probes.collect()
       .map(r => (r.getLong(0), r.getSeq[String](1))).toSeq
-    graft.functions.ProbeShingleHits.register(s, 5, probeTable)
     // localCheckpoint: `inter` is tiny (only pairs sharing ≥1 shingle) but
     // feeds THREE consumers (pos, okPids, zero's anti-join); without
     // materialization each consumer re-runs the corpus-sized fused pass.
@@ -220,7 +214,7 @@ object TextOps {
     // (no cross-run cache).
     val inter = Tables.documents(s, d)
       .select(col("doc_id"), lower(col("text")).as("t"))
-      .select(col("doc_id"), explode(expr("graft_probe_hits(t)")).as("h"))
+      .select(col("doc_id"), explode(ProbeShingleHits.of(col("t"), 5, probeTable)).as("h"))
       .select(col("h.pid").as("pid"), col("doc_id"), col("h.c").as("c"),
         col("h.pn").as("pn"), col("h.dn").as("dn"))
       .where(col("doc_id") =!= col("pid"))
@@ -254,12 +248,11 @@ object TextOps {
     * AnnOps (LSH / IVF), recall-gated against this exact baseline.
     */
   def j15_dedup_cosine: Q = (s, d) => {
-    graft.functions.CosineSim.register(s)
     val emb = Tables.embeddings(s, d).where(col("vec_id") < 1000)
     val a = emb.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("vb"), col("embedding").as("eb"))
     a.join(b, col("va") < col("vb"))
-      .select(col("va"), col("vb"), expr("graft_cosine(ea, eb)").as("sim"))
+      .select(col("va"), col("vb"), CosineSim.of(col("ea"), col("eb")).as("sim"))
       .orderBy(desc("sim"), asc_nulls_last("va"), asc_nulls_last("vb")).limit(50)
   }
 
@@ -407,8 +400,6 @@ object TextOps {
     * algorithm cross-engine with the portable hash.
     */
   def j33_winnow_fingerprint: Q = (s, d) => {
-    graft.functions.ShingleMd5.register(s)
-    graft.functions.Winnow.register(s)
     val k = 7
     val w = 4
     // fused native shingle+hash: bit-identical to
@@ -417,9 +408,7 @@ object TextOps {
     // five allocating expressions per gram and made this map-only pass
     // the heaviest bench query (7.8 s at sf0.1) once toRdd stopped
     // .count() from pruning the fingerprint columns
-    val hashes = expr(s"graft_shingle_md5_60(t, $k)")
-    val fps = array_sort(array_distinct(
-      call_function(graft.functions.Winnow.name, hashes, lit(w))))
+    val fps = array_sort(array_distinct(Winnow.of(ShingleMd5.of(col("t"), k), w)))
     // fanOut: the fixture's single-row-group scan would run the whole
     // digest pass on one core; identity at production split counts.
     // Keyed on the output order, so the sort reuses its range exchange

@@ -75,14 +75,13 @@ object UdxOps {
     * HOF formulation.
     */
   def k5_expr_cosine: Q = (s, d) => {
-    graft.functions.CosineSim.register(s)
     val emb = graft.Tables.embeddings(s, d)
     val probes = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("p_emb"))
     val sims = broadcast(probes).crossJoin(emb)
       .where(col("vec_id") =!= col("pid"))
       .select(col("pid"), col("vec_id"),
-        expr("graft_cosine(p_emb, embedding)").as("sim"))
+        graft.functions.CosineSim.of(col("p_emb"), col("embedding")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("pid").orderBy(col("sim").desc, col("vec_id"))
     sims.withColumn("rn", row_number().over(w))

@@ -169,24 +169,20 @@ class AnnSpec extends SparkSuite {
     // ADVICE r4: all-NaN margins used to leave best = -1 → AIOOBE. Now the
     // selection falls back to first-unused-plane order.
     import spark.implicits._
-    graft.functions.HyperplaneProbes.register(spark)
     val nan = Seq((1L, Array.fill(8)(Float.NaN)), (2L, Array.fill(8)(0.5f)))
       .toDF("vec_id", "embedding")
     val keys = nan.select(col("vec_id"),
-      call_function(graft.functions.HyperplaneProbes.name,
-        col("embedding"), lit(6), lit(2), lit(3)).as("ks"))
+      graft.functions.HyperplaneProbes.of(col("embedding"), 6, 2, 3).as("ks"))
       .select(col("vec_id"), size(col("ks")).as("n")).collect()
     assert(keys.forall(_.getInt(1) == 2 * 4), s"expected 8 keys per row: ${keys.mkString}")
   }
 
   test("native hyperplane keys are bit-identical to the HOF reference spelling") {
-    import org.apache.spark.sql.functions.{call_function, lit, posexplode, sequence, transform, struct, explode}
-    graft.functions.HyperplaneKeys.register(spark)
+    import org.apache.spark.sql.functions.{lit, posexplode, sequence, transform, struct, explode}
     val nBits = 12; val tables = 4
     val sample = emb.limit(100)
     val native = sample.select(col("vec_id"),
-      posexplode(call_function(graft.functions.HyperplaneKeys.name,
-        col("embedding"), lit(nBits), lit(tables))))
+      posexplode(graft.functions.HyperplaneKeys.of(col("embedding"), nBits, tables)))
       .select(col("vec_id"), col("pos").as("tbl"), col("col").as("key"))
     val hof = sample.select(col("vec_id"),
       explode(transform(sequence(lit(0), lit(tables - 1)),
@@ -249,14 +245,12 @@ class AnnSpec extends SparkSuite {
   test("IVF-PQ: codes-only ranking + bounded exact re-rank keeps recall@10") {
     val probes = emb.where(col("vec_id") < 10)
     // exact top-10 reference (j8's machinery is pinned to k=5)
-    graft.functions.CosineSim.register(spark)
     val corpus = emb.select("vec_id", "embedding")
     val sims = broadcast(probes.select(col("vec_id").as("pid"),
         col("embedding").as("p_emb"))).crossJoin(corpus)
       .where(col("vec_id") =!= col("pid"))
       .select(col("pid"), col("vec_id"),
-        call_function(graft.functions.CosineSim.name,
-          col("p_emb"), col("embedding")).as("sim"))
+        graft.functions.CosineSim.of(col("p_emb"), col("embedding")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("pid").orderBy(col("sim").desc, col("vec_id"))
     val exact = sims.withColumn("rn", row_number().over(w))
@@ -281,20 +275,17 @@ class AnnSpec extends SparkSuite {
     val dim = 64; val m = 8; val ksub = 32; val dsub = dim / m
     val cb = AnnOps.pqTrain(spark, emb, dim, m, ksub)
     assert(cb.length == m * ksub * dsub)
-    graft.functions.PqEncode.register(spark, m, ksub, dsub, cb)
-    graft.functions.PqDecode.register(spark, m, ksub, dsub, cb)
     val roundtrip = emb.select(col("embedding"),
-      call_function(graft.functions.PqEncode.name, col("embedding")).as("codes"))
+      graft.functions.PqEncode.of(col("embedding"), m, ksub, dsub, cb).as("codes"))
       .select(col("embedding"), col("codes"),
-        call_function(graft.functions.PqDecode.name, col("codes")).as("rec"))
+        graft.functions.PqDecode.of(col("codes"), m, ksub, dsub, cb).as("rec"))
     // every code within [0, ksub)
     assert(roundtrip.select(explode(col("codes")).as("c"))
       .where(col("c") < 0 || col("c") >= ksub).count() == 0)
     // reconstruction correlates with the original (cosine well above
     // random ~0 for uniform vectors) — the property ADC ranking relies on
-    graft.functions.CosineSim.register(spark)
-    val meanCos = roundtrip.select(avg(call_function(
-      graft.functions.CosineSim.name, col("embedding"), col("rec"))).as("c"))
+    val meanCos = roundtrip.select(avg(
+      graft.functions.CosineSim.of(col("embedding"), col("rec"))).as("c"))
       .head().getDouble(0)
     assert(meanCos > 0.5, s"PQ reconstruction too lossy: mean cosine $meanCos")
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class CellTtlSpec extends SparkSuite {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-ttl-$tag").toString
+    SparkSuite.tempDir(s"graft-ttl-$tag").toString
 
   private def df(rows: Seq[(String, String, String, Long, Double, String, Long)]) = {
     import spark.implicits._

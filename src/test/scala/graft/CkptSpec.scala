@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class CkptSpec extends SparkSuite {
 
   private def withReliable[A](f: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = SparkSuite.tempDir("graft_ckpt").toString
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     spark.conf.set("spark.graft.checkpointDir", dir)
     try f

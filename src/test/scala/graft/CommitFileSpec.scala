@@ -18,7 +18,7 @@ class CommitFileSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(tag: String): Path =
-    Files.createTempDirectory(s"graft-commit-$tag")
+    SparkSuite.tempDir(s"graft-commit-$tag")
 
   private def commit(dir: Path, name: String, content: String): Unit =
     HFileOps.commitFile(new HPath(dir.toUri), name, conf)(

@@ -25,13 +25,12 @@ class CosineSimSpec extends SparkSuite {
   }
 
   test("cosine values themselves are bit-identical to the HOF fold") {
-    CosineSim.register(spark)
     val emb = Tables.embeddings(spark, sf).limit(50)
     val pairs = emb.select(col("vec_id").as("a"), col("embedding").as("ea"))
       .crossJoin(emb.select(col("vec_id").as("b"), col("embedding").as("eb")))
       .where(col("a") < col("b"))
     val both = pairs.select(
-      expr("graft_cosine(ea, eb)").as("native"),
+      CosineSim.of(col("ea"), col("eb")).as("native"),
       (hofDot(col("ea"), col("eb"))
         / (hofL2(col("ea")) * hofL2(col("eb")))).as("hof"))
     val diff = both.where(col("native") =!= col("hof")).count()
@@ -39,9 +38,8 @@ class CosineSimSpec extends SparkSuite {
   }
 
   test("expression participates in whole-stage codegen") {
-    CosineSim.register(spark)
     val emb = Tables.embeddings(spark, sf)
-    val plan = emb.select(expr("graft_cosine(embedding, embedding)").as("c"))
+    val plan = emb.select(CosineSim.of(col("embedding"), col("embedding")).as("c"))
       .queryExecution.executedPlan.toString
     // "*(n)" prefixes mark WholeStageCodegen stages in the compact form
     assert(plan.contains("*(1) Project [graft_cosine"), s"no codegen span in:\n$plan")
@@ -52,7 +50,6 @@ class CosineSimSpec extends SparkSuite {
     // in doGenCode, two graft_cosine calls in one codegen scope hit Janino's
     // "Redefinition of local variable" and silently fell back to interpreted
     // mode. fallback=false + CODEGEN_ONLY make any such failure throw.
-    CosineSim.register(spark)
     // restore whatever the harness had set, not hardcoded defaults
     val saved = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode")
       .map(k => k -> spark.conf.getOption(k))
@@ -61,10 +58,10 @@ class CosineSimSpec extends SparkSuite {
     try {
       val emb = Tables.embeddings(spark, sf).limit(20)
       val two = emb.select(
-          expr("graft_cosine(embedding, embedding)").as("c1"),
-          expr("graft_cosine(reverse(embedding), embedding)").as("c2"))
-        .where(expr("graft_cosine(embedding, embedding) > 0.5")
-          && expr("graft_cosine(reverse(embedding), embedding) >= -1.0"))
+          CosineSim.of(col("embedding"), col("embedding")).as("c1"),
+          CosineSim.of(reverse(col("embedding")), col("embedding")).as("c2"))
+        .where(CosineSim.of(col("embedding"), col("embedding")) > 0.5
+          && CosineSim.of(reverse(col("embedding")), col("embedding")) >= -1.0)
       assert(two.count() == 20)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -73,7 +70,6 @@ class CosineSimSpec extends SparkSuite {
   }
 
   test("interpreted eval path (nullSafeEval) matches codegen path") {
-    CosineSim.register(spark)
     val saved = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
       .map(k => k -> spark.conf.getOption(k))
     spark.conf.set("spark.sql.codegen.wholeStage", "false")

@@ -53,16 +53,15 @@ class DotProductSpec extends SparkSuite {
       Row(3, Seq(1.0f, 2.0f), Seq(1.0f)),
       Row(4, Seq.empty[Float], Seq.empty[Float]),
       Row(5, Seq(0.5f, -2.0f, 3.25f), Seq(4.0f, 0.25f, -1.0f)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dot-edges").toString
+    val dir = SparkSuite.tempDir("graft-dot-edges").toString
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .coalesce(1).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
 
   test("graft_dot is bit-identical to the HOF fold over all pairs of 50 embeddings") {
-    DotProduct.register(spark)
     val got = pairs.select(col("a"), col("b"),
-        expr("graft_dot(ea, eb)").as("native"), hofDot(col("ea"), col("eb")).as("hof"),
+        DotProduct.of(col("ea"), col("eb")).as("native"), hofDot(col("ea"), col("eb")).as("hof"),
         TextOps.l2Col(col("ea")).as("l2"), sqrt(hofDot(col("ea"), col("ea"))).as("hof_l2"))
       .collect()
     assert(got.length == 2500)
@@ -72,8 +71,7 @@ class DotProductSpec extends SparkSuite {
   }
 
   test("null array, null element and unequal lengths give null; empty arrays give 0.0; non-float arrays are rejected") {
-    DotProduct.register(spark)
-    val got = edges.select(col("id"), expr("graft_dot(a, b)").as("native"),
+    val got = edges.select(col("id"), DotProduct.of(col("a"), col("b")).as("native"),
         hofDot(col("a"), col("b")).as("hof"))
       .collect().map(r => r.getInt(0) -> (r.get(1), r.get(2))).toMap
     Seq(0, 1, 2, 3).foreach(i => assert(got(i) == ((null, null)), s"row $i: ${got(i)}"))
@@ -81,35 +79,33 @@ class DotProductSpec extends SparkSuite {
     val want = 0.5 * 4.0 + -2.0 * 0.25 + 3.25 * -1.0
     assert(got(5) == ((want, want)))
     val e = intercept[org.apache.spark.sql.AnalysisException](
-      spark.range(1).select(expr("graft_dot(array(1.0d), array(1.0d))")).collect())
+      spark.range(1).select(DotProduct.of(array(lit(1.0d)), array(lit(1.0d)))).collect())
     assert(e.getMessage.contains("array<float>"), e.getMessage)
   }
 
   test("graft_dot stays in whole-stage codegen (fallback off, CODEGEN_ONLY)") {
-    DotProduct.register(spark)
     withConf("spark.sql.codegen.fallback" -> "false",
         "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
       val emb = Tables.embeddings(spark, sf).where(col("vec_id") < 20)
       // two calls in one projection and the predicate: fresh local names
       val two = emb.select(col("vec_id"),
-          expr("graft_dot(embedding, embedding)").as("d1"),
-          expr("graft_dot(reverse(embedding), embedding)").as("d2"))
-        .where(expr("graft_dot(embedding, embedding) > 0.0")
-          && expr("graft_dot(reverse(embedding), embedding) IS NOT NULL"))
+          DotProduct.of(col("embedding"), col("embedding")).as("d1"),
+          DotProduct.of(reverse(col("embedding")), col("embedding")).as("d2"))
+        .where(DotProduct.of(col("embedding"), col("embedding")) > 0.0
+          && DotProduct.of(reverse(col("embedding")), col("embedding")).isNotNull)
       val plan = two.queryExecution.executedPlan.toString
       assert(plan.contains("*(1) Project [vec_id") && plan.contains("graft_dot"),
         s"no codegen span in:\n$plan")
       assert(two.count() == 20)
-      assert(edges.select(expr("graft_dot(a, b)")).collect().length == 6)
+      assert(edges.select(DotProduct.of(col("a"), col("b"))).collect().length == 6)
     }
   }
 
   test("interpreted and codegen evaluation agree bit-for-bit") {
-    DotProduct.register(spark)
     def eval(): Seq[(Any, Option[Long])] =
       pairs.where(col("a") < 10).select(concat_ws(",", col("a"), col("b")),
-          expr("graft_dot(ea, eb)"))
-        .union(edges.select(col("id").cast("string"), expr("graft_dot(a, b)")))
+          DotProduct.of(col("ea"), col("eb")))
+        .union(edges.select(col("id").cast("string"), DotProduct.of(col("a"), col("b"))))
         .collect().map(r => (r.get(0), bits(r.get(1)))).sortBy(_._1.toString).toSeq
     val interp = withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(eval())

@@ -25,7 +25,7 @@ class FanOutSpec extends SparkSuite {
 
   test("fanOut is the identity once the file count reaches the parallelism") {
     val target = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("fanout-many").toString
+    val dir = SparkSuite.tempDir("fanout-many").toString
     import spark.implicits._
     (0 until target + 1).map(i => (i.toLong, s"r$i")).toDF("id", "v")
       .repartition(target + 1, col("id"))

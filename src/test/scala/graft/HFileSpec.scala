@@ -15,7 +15,7 @@ class HFileSpec extends SparkSuite {
       typ, java.nio.ByteBuffer.allocate(8).putDouble(v).array())
 
   private def tmpDir(tag: String): Path =
-    Files.createTempDirectory(s"graft-hfile-$tag")
+    SparkSuite.tempDir(s"graft-hfile-$tag")
 
   test("KeyValue encode/decode round-trips every field") {
     val c = cell("row-00042", "click", 1705362487499628968L, 3.25,

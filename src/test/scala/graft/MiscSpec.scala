@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** A2 (CSV/JSON source+sink round trip), D4 (HLL error bound), J11
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
 class MiscSpec extends SparkSuite {
 
   test("A2: CSV round-trip preserves data") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = SparkSuite.tempDir("graft_csv").toString
     val src = Tables.nation(spark, sf)
     src.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
@@ -28,7 +27,7 @@ class MiscSpec extends SparkSuite {
     // most 1 intersecting partner and MUST be padded to 5 rows with the
     // lowest-doc_id zero pairs — the sparse-corpus path no fixture SF
     // exercises.
-    val dir = Files.createTempDirectory("graft_j14pad").toString
+    val dir = SparkSuite.tempDir("graft_j14pad").toString
     Seq(
       (0L, "abcdefghij"), (1L, "abcdefghij"), (2L, "kkkkkkkkkk"),
       (3L, "llllllllll"), (4L, "mmmmmmmmmm"), (5L, "nnnnnnnnnn"),
@@ -77,7 +76,7 @@ class MiscSpec extends SparkSuite {
     // landing the doc in shard -1 vs NULL. No fixture SF has a null text,
     // so this pins the constructed case: the null doc must land in the
     // NULL shard and must NOT perturb any later doc's shard.
-    val dir = Files.createTempDirectory("graft_nulltok").toString
+    val dir = SparkSuite.tempDir("graft_nulltok").toString
     def words(n: Int) = Seq.fill(n)("w").mkString(" ")
     Seq(
       (0L, Option(words(3000))), // cum 3000 -> shard 0
@@ -105,11 +104,10 @@ class MiscSpec extends SparkSuite {
     // (probe × doc) id grid so every zero-intersection pair exists before
     // the window. The shipped form pads only deficient probes; this pins
     // exceptAll = 0 in both directions on the fixture.
-    graft.functions.Shingles.register(spark)
     val sh = Tables.documents(spark, sf)
       .select(col("doc_id"), lower(col("text")).as("t"))
       .select(col("doc_id"),
-        array_distinct(expr("graft_shingles(t, 5)")).as("sh"))
+        array_distinct(graft.functions.Shingles.of(col("t"), 5)).as("sh"))
     val probes = sh.where(col("doc_id") < 10)
       .select(col("doc_id").as("pid"), col("sh").as("psh"))
     val probeSh = probes.select(col("pid"), explode(col("psh")).as("g"))
@@ -134,7 +132,7 @@ class MiscSpec extends SparkSuite {
   }
 
   test("A2: ORC round-trip preserves data") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = SparkSuite.tempDir("graft_orc").toString
     val src = Tables.supplier(spark, sf)
     src.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -143,14 +141,14 @@ class MiscSpec extends SparkSuite {
   }
 
   test("A2: text source reads lines") {
-    val dir = Files.createTempDirectory("graft_txt").toString
+    val dir = SparkSuite.tempDir("graft_txt").toString
     Tables.documents(spark, sf).select("text").limit(50)
       .write.mode("overwrite").text(dir)
     assert(spark.read.text(dir).count() == 50)
   }
 
   test("A2: JSON round-trip preserves data") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = SparkSuite.tempDir("graft_json").toString
     val src = Tables.region(spark, sf)
     src.write.mode("overwrite").json(dir)
     val back = spark.read.json(dir).select(src.columns.map(col): _*)
@@ -176,7 +174,7 @@ class MiscSpec extends SparkSuite {
   }
 
   test("Tables.invalidate drops cached relations so a regenerated path re-lists") {
-    val dir = Files.createTempDirectory("graft_inval").toString
+    val dir = SparkSuite.tempDir("graft_inval").toString
     def write(n: Int): Unit = spark.range(n).toDF("id")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
     write(3)

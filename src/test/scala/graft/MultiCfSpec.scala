@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.HFileOps
 import org.apache.spark.sql.functions._
 
@@ -13,7 +11,7 @@ import org.apache.spark.sql.functions._
 class MultiCfSpec extends SparkSuite {
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-mcf").toString
+    val d = SparkSuite.tempDir("graft-mcf").toString
     val recf = Tables.cells(spark, sf).withColumn("cf",
       when(col("qualifier").isin("click", "view"), "hot").otherwise("meta"))
     HFileOps.bulkWriteFamilies(recf, d, regions = 4)
@@ -49,7 +47,7 @@ class MultiCfSpec extends SparkSuite {
     // the I/O claim: path selection happens before any file opens, so
     // reading 'hot' can touch a meta byte only if a meta path is listed.
     // Delete the meta store entirely — the hot read must be unaffected.
-    val d2 = Files.createTempDirectory("graft-mcf2").toString
+    val d2 = SparkSuite.tempDir("graft-mcf2").toString
     val recf = Tables.cells(spark, sf).withColumn("cf",
       when(col("qualifier").isin("click", "view"), "hot").otherwise("meta"))
     HFileOps.bulkWriteFamilies(recf, d2, regions = 2)

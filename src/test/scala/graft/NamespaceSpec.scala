@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class NamespaceSpec extends SparkSuite {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-ns-$tag").toString
+    SparkSuite.tempDir(s"graft-ns-$tag").toString
 
   private def someCells(n: Int, prefix: String) = {
     import spark.implicits._

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{MinHashMd5, SimHashMd5}
 import org.apache.spark.sql.functions._
 
 /** The fused native portable fingerprints (j39/j40's hot paths) must be
@@ -36,10 +37,9 @@ class PortableFpSpec extends SparkSuite {
     })
 
   test("graft_simhash_md5 equals the declarative bit-vote chain (fixture + edges)") {
-    graft.functions.PortableFpMd5.register(spark)
     for (df <- frames) {
       val bad = df.select(
-          expr("graft_simhash_md5(split(lower(text), ' '))").as("native"),
+          SimHashMd5.of(split(lower(col("text")), " ")).as("native"),
           expr(declSimhash).as("decl"))
         .where(not(col("native") === col("decl"))).count()
       assert(bad == 0)
@@ -47,10 +47,9 @@ class PortableFpSpec extends SparkSuite {
   }
 
   test("graft_minhash_md5 equals the declarative seeded-min chain (fixture + edges)") {
-    graft.functions.PortableFpMd5.register(spark)
     for (df <- frames) {
       val bad = df.select(
-          expr("graft_minhash_md5(array_distinct(split(lower(text), ' ')), 16)").as("native"),
+          MinHashMd5.of(array_distinct(split(lower(col("text")), " ")), 16).as("native"),
           expr(declMinhash).as("decl"))
         .where(not(col("native") === col("decl"))).count()
       assert(bad == 0)
@@ -61,7 +60,6 @@ class PortableFpSpec extends SparkSuite {
     // the ADVICE r10 null-skip must match the declarative spellings
     // EXACTLY (r11 review: an nz denominator diverged): the declarative
     // filter() drops a null hash's vote, but size(arr) still counts it
-    graft.functions.PortableFpMd5.register(spark)
     import spark.implicits._
     val arr = "array('alpha', CAST(NULL AS STRING), 'beta', 'alpha')"
     val declSim =
@@ -79,16 +77,16 @@ class PortableFpSpec extends SparkSuite {
              CAST(conv(substring(md5(concat(CAST(i AS STRING), ':', tok)), 1, 15),
                        16, 10) AS BIGINT))))"""
     val row = Seq(1).toDF("one").select(
-      expr(s"graft_simhash_md5($arr)").as("ns"),
+      SimHashMd5.of(expr(arr)).as("ns"),
       expr(declSim).as("ds"),
-      expr(s"graft_minhash_md5($arr, 16)").as("nm"),
+      MinHashMd5.of(expr(arr), 16).as("nm"),
       expr(declMin).as("dm")).head()
     assert(row.getLong(0) == row.getLong(1), "simhash null semantics diverged")
     assert(row.getSeq[Long](2) == row.getSeq[Long](3), "minhash null semantics diverged")
     // all-null input: declarative array_min yields NULL per position; the
     // native twin must match, not leak a sentinel
     val nulls = Seq(1).toDF("one")
-      .select(expr("graft_minhash_md5(array(CAST(NULL AS STRING)), 4)").as("nm")).head()
+      .select(MinHashMd5.of(expr("array(CAST(NULL AS STRING))"), 4).as("nm")).head()
     assert(nulls.getSeq[Any](0) == Seq(null, null, null, null))
   }
 

@@ -71,16 +71,15 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("z-order layout localizes both dimensions; a user-sorted layout cannot") {
-    import java.nio.file.Files
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"),
       Tables.tsMicros(col("ts")).as("ts")) // z-order quantizes numeric dims
     // layout A: classic single-dimension sort (by user)
-    val userDir = Files.createTempDirectory("graft_zorder_user").toString
+    val userDir = SparkSuite.tempDir("graft_zorder_user").toString
     ev.repartitionByRange(16, col("user_id"))
       .sortWithinPartitions("user_id", "ts")
       .write.mode("overwrite").parquet(userDir)
     // layout B: z-order over (user_id, ts)
-    val zDir = Files.createTempDirectory("graft_zorder_z").toString
+    val zDir = SparkSuite.tempDir("graft_zorder_z").toString
     ScaleOps.zorderWrite(ev, zDir, "user_id", "ts", bits = 12, partitions = 16)
     // same data either way
     val back = spark.read.parquet(zDir)
@@ -150,7 +149,7 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("partitioned layout: static pruning hits PartitionFilters, DPP fires on dim join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = SparkSuite.tempDir("graft_part").toString
     ScaleOps.writePartitioned(
       Tables.events(spark, sf).select("event_id", "user_id", "ts", "event_type"),
       dir, "event_type")
@@ -170,7 +169,7 @@ class ScaleOpsSpec extends SparkSuite {
     import spark.implicits._
     // DPP requires a real filtered scan on the pruning side (a
     // LocalRelation is pre-evaluated and skipped by PartitionPruning)
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val dimDir = SparkSuite.tempDir("graft_dim").toString
     Seq(("click", 1), ("error", 2)).toDF("et", "code").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
     // tiny local fixtures fail DPP's size-benefit heuristic; disable the

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Shingles
+import graft.functions.{ShingleMd5, Shingles}
 import org.apache.spark.sql.functions._
 
 /** The native O(len·k) shingle expression must equal the declarative
@@ -16,21 +16,19 @@ class ShinglesSpec extends SparkSuite {
       i => c.substr(i, lit(k)))
 
   test("equals the declarative spelling on the fixture corpus") {
-    Shingles.register(spark)
     val df = Tables.documents(spark, sf)
       .select(lower(col("text")).as("t"))
-      .select(expr("graft_shingles(t, 5)").as("native"),
+      .select(Shingles.of(col("t"), 5).as("native"),
         declarative(col("t"), 5).as("decl"))
       .where(not(col("native") === col("decl")))
     assert(df.count() == 0)
   }
 
   test("edge cases: empty, shorter-than-k, exactly-k, multi-byte chars") {
-    Shingles.register(spark)
     import spark.implicits._
     val rows = Seq("", "ab", "abcde", "abcdef", "héllo wörld", "日本語のテキスト", "aあbいc")
     val df = rows.toDF("t")
-      .select(col("t"), expr("graft_shingles(t, 5)").as("native"),
+      .select(col("t"), Shingles.of(col("t"), 5).as("native"),
         declarative(col("t"), 5).as("decl"))
     df.collect().foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2), s"input '${r.getString(0)}'")
@@ -38,11 +36,10 @@ class ShinglesSpec extends SparkSuite {
   }
 
   test("k=2 and k=9 windows match too") {
-    Shingles.register(spark)
     import spark.implicits._
     val df = Seq("the quick brown fox", "日本語テキストです").toDF("t")
     for (k <- Seq(2, 9)) {
-      val bad = df.select(expr(s"graft_shingles(t, $k)").as("native"),
+      val bad = df.select(Shingles.of(col("t"), k).as("native"),
           declarative(col("t"), k).as("decl"))
         .where(not(col("native") === col("decl"))).count()
       assert(bad == 0, s"k=$k")
@@ -62,13 +59,12 @@ class ShinglesSpec extends SparkSuite {
       g => conv(substring(md5(g), 1, 15), 16, 10).cast("long"))
 
   test("graft_shingle_md5_60 equals the declarative md5/conv chain (fixture + edges)") {
-    graft.functions.ShingleMd5.register(spark)
     import spark.implicits._
     val fixture = Tables.documents(spark, sf).select(lower(col("text")).as("t"))
     val edges = Seq("", "ab", "abcdef", "abcdefg", "héllo wörld",
       "日本語のテキスト", "aあbいc").toDF("t")
     for ((df, what) <- Seq((fixture, "fixture"), (edges, "edges")); k <- Seq(3, 7)) {
-      val bad = df.select(expr(s"graft_shingle_md5_60(t, $k)").as("native"),
+      val bad = df.select(ShingleMd5.of(col("t"), k).as("native"),
           declarativeMd5(col("t"), k).as("decl"))
         .where(not(col("native") === col("decl"))).count()
       assert(bad == 0, s"$what k=$k")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.SketchFns
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -16,30 +17,24 @@ import org.apache.spark.util.sketch.CountMinSketch
 class SketchOpsSpec extends SparkSuite {
 
   test("bloom build+probe: no false negatives over the fixture grams") {
-    graft.functions.SketchFns.register(spark)
     import spark.implicits._
     val keys = (0 until 5000).map(i => s"gram-$i token-${i % 97}").toDF("g")
     val bytes = keys
-      .agg(call_function(graft.functions.SketchFns.bloomAggName,
-        col("g"), lit(65536L), lit(1048576L)).as("bf"))
+      .agg(SketchFns.bloomAgg(col("g"), lit(65536L), lit(1048576L)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
-    val misses = keys.where(!call_function(
-        graft.functions.SketchFns.bloomMightName, lit(bytes), col("g")))
+    val misses = keys.where(!SketchFns.bloomMight(lit(bytes), col("g")))
       .count()
     assert(misses == 0, s"bloom dropped $misses inserted keys")
   }
 
   test("bloom probe rejects the overwhelming majority of absent keys (prefilter is real)") {
-    graft.functions.SketchFns.register(spark)
     import spark.implicits._
     val in = (0 until 5000).map(i => s"present-$i").toDF("g")
     val bytes = in
-      .agg(call_function(graft.functions.SketchFns.bloomAggName,
-        col("g"), lit(65536L), lit(1048576L)).as("bf"))
+      .agg(SketchFns.bloomAgg(col("g"), lit(65536L), lit(1048576L)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
     val absent = (0 until 5000).map(i => s"absent-$i").toDF("g")
-    val falsePositives = absent.where(call_function(
-        graft.functions.SketchFns.bloomMightName, lit(bytes), col("g")))
+    val falsePositives = absent.where(SketchFns.bloomMight(lit(bytes), col("g")))
       .count()
     // 2^20 bits for 5k items: fpp is ~0; allow 1% before calling it broken
     assert(falsePositives < 50, s"$falsePositives/5000 false positives")
@@ -88,7 +83,6 @@ class SketchOpsSpec extends SparkSuite {
 
   test("incrementalAdmit candidate-set size tracks FPR, not corpus size (planted-FPR)") {
     import spark.implicits._
-    graft.functions.SketchFns.register(spark)
     // Same corpus, two filter sizings: bitsPerKey=10 (production) and a
     // forced-small bitsPerKey=1 (the 2^20-bit floor over 300k keys →
     // analytic FPR ~0.19 vs ~0.008). The candidate counts must track the
@@ -117,13 +111,10 @@ class SketchOpsSpec extends SparkSuite {
       // probing the same banded index directly.
       val band = pmod(xxhash64(col("h")), lit(nBands.toLong))
       val bloomTable = existing.groupBy(band.as("__band"))
-        .agg(call_function(graft.functions.SketchFns.bloomAggName,
-          col("h"), lit(perBandEst), lit(perBandBits)).as("__bf"))
+        .agg(SketchFns.bloomAgg(col("h"), lit(perBandEst), lit(perBandBits)).as("__bf"))
       val cand = absent.withColumn("__band", band)
         .join(broadcast(bloomTable), Seq("__band"), "left")
-        .where(coalesce(call_function(
-          graft.functions.SketchFns.bloomMightColName, col("__bf"), col("h")),
-          lit(false)))
+        .where(coalesce(SketchFns.bloomMightCol(col("__bf"), col("h")), lit(false)))
         .count()
       assert(admitted == nProbe, s"admit lost rows: $admitted/$nProbe")
       (cand, predicted)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +40,16 @@ object SparkSuite {
     SparkSession.setActiveSession(stock)
     s
   }
+
+  /** One scratch root per test JVM, deleted when the JVM exits. */
+  private lazy val tmpRoot: Path = {
+    val root = Files.createTempDirectory("graft-suite-")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh scratch directory under the suite's temp root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tmpRoot, prefix)
 }
 
 abstract class SparkSuite extends AnyFunSuite {

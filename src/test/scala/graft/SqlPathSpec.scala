@@ -40,9 +40,10 @@ class SqlPathSpec extends SparkSuite {
   }
 
   test("graft-native functions work from SQL text (k5 cosine twin)") {
-    graft.functions.CosineSim.register(spark)
-    Tables.embeddings(spark, sf).createOrReplaceTempView("emb_v")
-    val sql = spark.sql(
+    // the session the mains run: GraftExtensions installs graft_cosine
+    val g = SparkSuite.graft
+    Tables.embeddings(g, sf).createOrReplaceTempView("emb_v")
+    val sql = g.sql(
       """SELECT pid, vec_id, rn FROM (
         |  SELECT p.vec_id AS pid, e.vec_id,
         |         row_number() OVER (PARTITION BY p.vec_id

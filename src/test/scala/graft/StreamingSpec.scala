@@ -96,8 +96,8 @@ class StreamingSpec extends SparkSuite {
 
   test("I29: streaming tagged-cell ingest reconstructs the b33 lattice (stream equals batch)") {
     import graft.ops.FilterOps
-    val dir = Files.createTempDirectory("graft_tags_stream").toString
-    val ckpt = Files.createTempDirectory("graft_tags_stream_ckpt").toString
+    val dir = SparkSuite.tempDir("graft_tags_stream").toString
+    val ckpt = SparkSuite.tempDir("graft_tags_stream_ckpt").toString
     runToEnd(StreamOps.taggedCellsSink(
       FilterOps.withTagColumns(
         StreamOps.cellsStream(StreamOps.eventsStream(spark, sf))),
@@ -113,7 +113,7 @@ class StreamingSpec extends SparkSuite {
       graft.sources.HFileOps.readWithCellTags(spark, dir))
       .select(cols.map(col): _*).collect().map(_.toString).sorted
     // batch twin: one-shot tagged write over the same cells view
-    val bdir = Files.createTempDirectory("graft_tags_batch").toString
+    val bdir = SparkSuite.tempDir("graft_tags_batch").toString
     graft.sources.HFileOps.bulkWrite(
       FilterOps.withTagColumns(Tables.cells(spark, sf)), bdir, regions = 2,
       ttlMsCol = Some("ttl_ms"), visCol = Some("vis"))
@@ -133,8 +133,8 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("I26: streaming MOB ingest reconstructs the batch view; payload replay is a no-op") {
-    val dir = Files.createTempDirectory("graft_mob_stream").toString
-    val ckpt = Files.createTempDirectory("graft_mob_stream_ckpt").toString
+    val dir = SparkSuite.tempDir("graft_mob_stream").toString
+    val ckpt = SparkSuite.tempDir("graft_mob_stream_ckpt").toString
     runToEnd(StreamOps.mobIngestSink(
       StreamOps.documentsStream(spark, sf, splits = 8), dir, ckpt))
     // multi-generation store accrued (one per non-empty micro-batch)
@@ -145,7 +145,7 @@ class StreamingSpec extends SparkSuite {
     val streamed = graft.ops.ScanOps.mobReconstruct(spark, dir)
       .collect().map(_.toString).sorted
     // batch twin: one-shot a17 write + reconstruction over the same corpus
-    val bdir = Files.createTempDirectory("graft_mob_batch").toString
+    val bdir = SparkSuite.tempDir("graft_mob_batch").toString
     graft.ops.ScanOps.mobWrite(Tables.documents(spark, sf), bdir, regions = 2)
     val batch = graft.ops.ScanOps.mobReconstruct(spark, bdir)
       .collect().map(_.toString).sorted
@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSuite {
     // replayed batch: re-writing the whole corpus under one generation in
     // a FRESH dir twice must reconstruct identically (per-generation
     // overwrite + content-hash payload identity)
-    val rdir = Files.createTempDirectory("graft_mob_replay").toString
+    val rdir = SparkSuite.tempDir("graft_mob_replay").toString
     graft.ops.ScanOps.mobWrite(Tables.documents(spark, sf), rdir, 2, generation = 0)
     graft.ops.ScanOps.mobWrite(Tables.documents(spark, sf), rdir, 2, generation = 0)
     val replayed = graft.ops.ScanOps.mobReconstruct(spark, rdir)
@@ -203,7 +203,7 @@ class StreamingSpec extends SparkSuite {
     // so its report must be the declared b35 table in order.
     var last: Array[String] = Array.empty
     var triggers = 0
-    val ckpt = Files.createTempDirectory("hotb_ckpt").toString
+    val ckpt = SparkSuite.tempDir("hotb_ckpt").toString
     runToEnd(StreamOps.hotBucketsSink(StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
     })
@@ -223,7 +223,7 @@ class StreamingSpec extends SparkSuite {
     // plan must be the declared a26 table (modulo its output ORDER BY).
     var last: Array[String] = Array.empty
     var triggers = 0
-    val ckpt = Files.createTempDirectory("syncmon_ckpt").toString
+    val ckpt = SparkSuite.tempDir("syncmon_ckpt").toString
     runToEnd(StreamOps.syncMonitorSink(spark, sf,
         StreamOps.eventsStream(spark, sf), ckpt) { plan =>
       last = plan.collect().map(_.toString).sorted; triggers += 1
@@ -245,7 +245,7 @@ class StreamingSpec extends SparkSuite {
     // including the found=0 tombstoned probe row and the rollup.
     var last: Array[String] = Array.empty
     var triggers = 0
-    val ckpt = Files.createTempDirectory("canary_ckpt").toString
+    val ckpt = SparkSuite.tempDir("canary_ckpt").toString
     runToEnd(StreamOps.canarySink(spark, sf,
         StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
@@ -266,7 +266,7 @@ class StreamingSpec extends SparkSuite {
     // be the declared a28 table — statuses, basis points and all.
     var last: Array[String] = Array.empty
     var triggers = 0
-    val ckpt = Files.createTempDirectory("quota_ckpt").toString
+    val ckpt = SparkSuite.tempDir("quota_ckpt").toString
     runToEnd(StreamOps.quotaWatchSink(StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
     })
@@ -286,7 +286,7 @@ class StreamingSpec extends SparkSuite {
     // must be the declared a30 table — actions, caps and all.
     var last: Array[String] = Array.empty
     var triggers = 0
-    val ckpt = Files.createTempDirectory("compact_ckpt").toString
+    val ckpt = SparkSuite.tempDir("compact_ckpt").toString
     runToEnd(StreamOps.compactionWatchSink(
         StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
@@ -308,7 +308,7 @@ class StreamingSpec extends SparkSuite {
       var canary: Array[String] = Array.empty
       runToEnd(StreamOps.canarySink(spark, sf,
           StreamOps.eventsStream(spark, sf),
-          Files.createTempDirectory("canary_rocks").toString) { rep =>
+          SparkSuite.tempDir("canary_rocks").toString) { rep =>
         canary = rep.collect().map(_.toString)
       })
       assert(canary.sameElements(
@@ -316,7 +316,7 @@ class StreamingSpec extends SparkSuite {
           .collect().map(_.toString)))
       var quota: Array[String] = Array.empty
       runToEnd(StreamOps.quotaWatchSink(StreamOps.eventsStream(spark, sf),
-          Files.createTempDirectory("quota_rocks").toString) { rep =>
+          SparkSuite.tempDir("quota_rocks").toString) { rep =>
         quota = rep.collect().map(_.toString)
       })
       assert(quota.sameElements(
@@ -324,7 +324,7 @@ class StreamingSpec extends SparkSuite {
           .collect().map(_.toString)))
       var compact: Array[String] = Array.empty
       runToEnd(StreamOps.compactionWatchSink(StreamOps.eventsStream(spark, sf),
-          Files.createTempDirectory("compact_rocks").toString) { rep =>
+          SparkSuite.tempDir("compact_rocks").toString) { rep =>
         compact = rep.collect().map(_.toString)
       })
       assert(compact.sameElements(
@@ -449,7 +449,7 @@ class StreamingSpec extends SparkSuite {
     val requests = StreamOps.documentsStream(spark, sf)
       .where(graft.ops.RankOps.probeWorkload(col("doc_id")))
       .select(col("doc_id").as("qid"))
-    val ckpt = Files.createTempDirectory("rrf_serve_ckpt").toString
+    val ckpt = SparkSuite.tempDir("rrf_serve_ckpt").toString
     runToEnd(StreamOps.rrfServeSink(spark, sf, requests, ckpt) { out =>
       answered ++= out.collect().map(_.toString); triggers += 1
     })
@@ -658,8 +658,8 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("I10: exactly-once sink — restart does not duplicate") {
-    val out = Files.createTempDirectory("graft_sink").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val out = SparkSuite.tempDir("graft_sink").toString
+    val ckpt = SparkSuite.tempDir("graft_ckpt").toString
     def run(): Unit = runToEnd(StreamOps.exactlyOnceParquetSink(
       StreamOps.eventsStream(spark, sf).select("event_id", "ets"), out, ckpt))
     run()
@@ -674,7 +674,7 @@ class StreamingSpec extends SparkSuite {
     import graft.sources.{HFileCodec, HFileOps}
     // batch reference: the a9 write+read roundtrip on the same data,
     // FAST_DIFF+GZ like the driver-gated query
-    val batchDir = Files.createTempDirectory("graft_hf_batch").toString
+    val batchDir = SparkSuite.tempDir("graft_hf_batch").toString
     val cells = Tables.cells(spark, sf)
     HFileOps.bulkWrite(cells, batchDir,
       regions = HFileOps.regionCountFor(cells.count()),
@@ -684,8 +684,8 @@ class StreamingSpec extends SparkSuite {
 
     for (provider <- Seq(StreamOps.DefaultProvider, StreamOps.RocksDbProvider)) {
       StreamOps.withStateStore(spark, provider)
-      val out = Files.createTempDirectory("graft_hf_stream").toString
-      val ckpt = Files.createTempDirectory("graft_hf_ckpt").toString
+      val out = SparkSuite.tempDir("graft_hf_stream").toString
+      val ckpt = SparkSuite.tempDir("graft_hf_ckpt").toString
       val committed = scala.collection.mutable.ArrayBuffer.empty[Long]
       def sink(crashOn: Option[Long]) = StreamOps.hfileBulkLoadSink(
         StreamOps.cellsStream(StreamOps.eventsStream(spark, sf)),
@@ -729,8 +729,8 @@ class StreamingSpec extends SparkSuite {
       col("event_type").as("qualifier"), col("event_id").as("ts"),
       col("value"),
       when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
-    val out = Files.createTempDirectory("graft_hf_gen").toString
-    val ckpt = Files.createTempDirectory("graft_hf_gen_ckpt").toString
+    val out = SparkSuite.tempDir("graft_hf_gen").toString
+    val ckpt = SparkSuite.tempDir("graft_hf_gen_ckpt").toString
     runToEnd(StreamOps.hfileGenerationalSink(
       coarse(StreamOps.eventsStream(spark, sf)), out, ckpt,
       compression = graft.sources.HFileCodec.CompressionZstd))
@@ -814,9 +814,9 @@ class StreamingSpec extends SparkSuite {
   test("I27: continuous WAL-shipping replication — replica equals primary " +
       "equals the batch cells view, including after a replayed batch") {
     import graft.sources.WalOps
-    val priDir = Files.createTempDirectory("graft_rep_stream_p").toString
-    val repDir = Files.createTempDirectory("graft_rep_stream_r").toString
-    val ckpt = Files.createTempDirectory("graft_rep_stream_ckpt").toString
+    val priDir = SparkSuite.tempDir("graft_rep_stream_p").toString
+    val repDir = SparkSuite.tempDir("graft_rep_stream_r").toString
+    val ckpt = SparkSuite.tempDir("graft_rep_stream_ckpt").toString
     runToEnd(StreamOps.walReplicateSink(
       walCells(StreamOps.eventsStream(spark, sf)), priDir, repDir, ckpt))
     val want = walCells(batchEvents).collect().map(_.toString).sorted
@@ -845,9 +845,9 @@ class StreamingSpec extends SparkSuite {
 
   test("I24: streamed WAL ingest + flush + recovery equals the batch cells view") {
     import graft.sources.WalOps
-    val walDir = Files.createTempDirectory("graft_wal_stream").toString
-    val storeDir = Files.createTempDirectory("graft_wal_stream_store").toString
-    val ckpt = Files.createTempDirectory("graft_wal_stream_ckpt").toString
+    val walDir = SparkSuite.tempDir("graft_wal_stream").toString
+    val storeDir = SparkSuite.tempDir("graft_wal_stream_store").toString
+    val ckpt = SparkSuite.tempDir("graft_wal_stream_ckpt").toString
     runToEnd(StreamOps.walIngestSink(
       walCells(StreamOps.eventsStream(spark, sf)), walDir, ckpt))
     // the log accrued one segment group per micro-batch
@@ -890,8 +890,8 @@ class StreamingSpec extends SparkSuite {
     def ranBatches(ckpt: String) =
       Option(new java.io.File(ckpt, "commits").list()).getOrElse(Array.empty[String])
         .count(_.forall(_.isDigit))
-    val out = Files.createTempDirectory("graft_hf_empty").toString
-    val hfCkpt = Files.createTempDirectory("graft_hf_empty_ckpt").toString
+    val out = SparkSuite.tempDir("graft_hf_empty").toString
+    val hfCkpt = SparkSuite.tempDir("graft_hf_empty_ckpt").toString
     var commits = 0
     runToEnd(StreamOps.hfileBulkLoadSink(StreamOps.cellsStream(emptyFeed),
       out, hfCkpt, onCommit = (_, _) => commits += 1))
@@ -899,8 +899,8 @@ class StreamingSpec extends SparkSuite {
     assert(commits == 0, s"onCommit ran $commits time(s) for empty batches")
     assert(!new java.io.File(out).list().exists(_.startsWith("batch-")),
       "an empty batch wrote a batch directory")
-    val walDir = Files.createTempDirectory("graft_wal_empty").toString
-    val walCkpt = Files.createTempDirectory("graft_wal_empty_ckpt").toString
+    val walDir = SparkSuite.tempDir("graft_wal_empty").toString
+    val walCkpt = SparkSuite.tempDir("graft_wal_empty_ckpt").toString
     runToEnd(StreamOps.walIngestSink(walCells(emptyFeed), walDir, walCkpt))
     assert(ranBatches(walCkpt) >= 2, "the empty feed must still run micro-batches")
     assert(!new java.io.File(walDir).list().exists(_.endsWith(".gwal")),

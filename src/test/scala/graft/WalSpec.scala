@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class WalSpec extends SparkSuite {
 
   private def tmpDir(tag: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(s"graft-wal-$tag")
+    SparkSuite.tempDir(s"graft-wal-$tag")
 
   private def walCells(n: Int) = {
     import spark.implicits._

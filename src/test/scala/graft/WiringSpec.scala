@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   * plans equal to the ones Bench and Verify run. The set of declared
   * queries the rewrite fires on is exact in both directions: a query that
   * newly plans a TopKPerGroup, or stops planning one, fails the sweep.
+  * Building every declared query also leaves the session's function
+  * registry as it found it: operators build graft's native expressions as
+  * typed columns and never install a function by name.
   */
 class WiringSpec extends SparkSuite {
 
@@ -33,11 +36,18 @@ class WiringSpec extends SparkSuite {
     // its own scratch alias of the fixture path (see WindowLintSpec): the
     // constructors' filesystem side effects land in dirs no other spec uses
     val isolatedSf = sf + "/./."
+    val registry = SparkSuite.graft.sessionState.functionRegistry
+    val functionsBefore = registry.listFunction().toSet
     val planned = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan = fn(SparkSuite.graft, isolatedSf).queryExecution.optimizedPlan
       if (plan.collectWithSubqueries { case t: TopKPerGroup => t }.nonEmpty) Some(name -> plan)
       else None
     }
+    val functionsAfter = registry.listFunction().toSet
+    assert(functionsAfter == functionsBefore,
+      s"building the declared queries changed the function registry: added " +
+        s"${(functionsAfter -- functionsBefore).map(_.funcName).toSeq.sorted}, removed " +
+        s"${(functionsBefore -- functionsAfter).map(_.funcName).toSeq.sorted}")
     val unexpected = planned.map(_._1).filterNot(topK)
     assert(unexpected.isEmpty, s"TopKPerGroup planned in unlisted queries: $unexpected")
     val missing = topK -- planned.map(_._1)
