@@ -291,7 +291,7 @@ object ScaleSmoke {
     // end-to-end, IVF ANN build+probe, winnowing fingerprints
     val pipelines: Seq[(String, () => Long)] = Seq(
       "j2_minhash_lsh_e2e" -> (() =>
-        ops.DedupOps.minhashDedup(spark, dir).count()),
+        ops.DedupOps.minhashDedup(Tables.documents(spark, dir)).count()),
       "j9_ivf_build_probe" -> (() => {
         val emb = Tables.embeddings(spark, dir)
         // quantizer trains on a bounded ~20k-vector sample at any corpus

@@ -43,19 +43,12 @@ object CurateOps {
         .agg(min("doc_id").as("doc_id")).select("doc_id"),
       "doc_id")
 
-  /** Stage 3 — near-dup dedup: cluster the survivors, keep each
-    * cluster's min-doc_id representative. Signatures are cached only for
-    * the duration of the (eager) clustering loop, then released.
+  /** Stage 3 — near-dup dedup: cluster the survivors
+    * ([[DedupOps.minhashDedup]]), keep each cluster's min-doc_id
+    * representative.
     */
   private def nearDupStage(df: DataFrame, threshold: Double): DataFrame = {
-    val sigs = DedupOps.signatures(df).cache()
-    val pairs = DedupOps.candidatePairs(sigs, threshold = threshold)
-    // clusters() runs its label-propagation loop eagerly and leaves the
-    // final labels cached, so sigs can be released as soon as it returns
-    val labels = DedupOps.clusters(pairs, df.select("doc_id"),
-      canonicalPairs = true)
-    sigs.unpersist()
-    val reps = labels.groupBy("cluster_id")
+    val reps = DedupOps.minhashDedup(df, threshold).groupBy("cluster_id")
       .agg(min("doc_id").as("doc_id")).select("doc_id")
     df.join(reps, "doc_id")
   }

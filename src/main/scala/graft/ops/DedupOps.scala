@@ -337,13 +337,18 @@ object DedupOps {
     Some(edges)
   }
 
-  /** J2 end-to-end: near-dup cluster assignment for every document. */
-  def minhashDedup(s: SparkSession, d: String,
-                   threshold: Double = 0.7): DataFrame = {
-    val docs = Tables.documents(s, d)
+  /** J2 end-to-end: near-dup cluster assignment (doc_id, cluster_id) for
+    * every document of `docs`. Signatures are cached only for the
+    * duration of the clustering loop, then released.
+    */
+  def minhashDedup(docs: DataFrame, threshold: Double = 0.7): DataFrame = {
     val sigs = signatures(docs).cache()
     val pairs = candidatePairs(sigs, threshold = threshold)
-    clusters(pairs, sigs.select("doc_id"), canonicalPairs = true)
+    // clusters() runs its label-propagation loop eagerly and leaves the
+    // final labels checkpointed, so sigs can be released once it returns
+    val labels = clusters(pairs, docs.select("doc_id"), canonicalPairs = true)
+    sigs.unpersist()
+    labels
   }
 
   /** Exact n-gram Jaccard for a pair set — the verify stage when estimated

@@ -83,8 +83,8 @@ object RankOps {
     * shared by j35 (ranked list) and j42 (lexical leg of the fusion).
     */
   /** The probe-INDEPENDENT halves of the retrieval state, so a serving
-    * caller (StreamOps I23) can build them once, cache them, and answer
-    * every request batch against the materialized indexes instead of
+    * caller (StreamOps I23) can materialize them once ([[ckpt]]) and
+    * answer every request batch against those indexes instead of
     * re-running the corpus explode + aggregations per trigger (the same
     * lifecycle bm25ScoreStream gives its lexical index). The declared
     * batch queries build them fresh — one run, nothing to reuse.
@@ -195,9 +195,9 @@ object RankOps {
     * shape to j42; only the probe selection differs (broadcast semi-join
     * on the request ids instead of the deterministic mod rule), so
     * StreamingSpec can pin serve(ids of j42's probes) ≡ j42 row-for-row.
-    * The `idx` overload answers against a CALLER-CACHED [[RrfIndex]] —
-    * the serving sink builds + caches it once so per-trigger work is
-    * O(request sliver), not O(corpus).
+    * The `idx` overload answers against a CALLER-MATERIALIZED
+    * [[RrfIndex]] — the serving sink checkpoints it once at setup so
+    * per-trigger work is O(request sliver), not O(corpus).
     */
   def rrfServe(s: org.apache.spark.sql.SparkSession, d: String,
                probeIds: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.ops.GraftCkpt
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -27,94 +28,6 @@ object StreamOps {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   val DefaultProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-
-  /** Serving-index caches (e.g. [[bm25ScoreStream]]'s tf/dl/df frame)
-    * keyed by session, each cache owned by the streaming query that
-    * adopted it — the serving caches exist only to amortize work across
-    * that one stream's triggers, so ITS termination is their end of
-    * life. One listener per session (installed on first registration,
-    * removed with the last cache); without per-owner tracking two
-    * overlapping serving sinks interfered — any termination with no
-    * active streams unpersisted ALL live caches, including the second
-    * sink's freshly built index, silently degrading it to per-trigger
-    * recompute (ADVICE r11) — and the session-keyed map pinned stopped
-    * sessions forever.
-    *
-    * Ownership protocol: a cache registers at PLAN time (before any
-    * query id exists) into `pending`; the NEXT onQueryStarted adopts
-    * everything pending as that query's own (QueryStartedEvent is posted
-    * from within `start()`, so on a single setup thread the adopter is
-    * exactly the stream built from those frames); onQueryTerminated
-    * unpersists only the terminated query's adopted caches. Residual
-    * race, documented: two serving setups planned CONCURRENTLY on
-    * different threads before either starts can cross-adopt — bounded
-    * misattribution, strictly narrower than the old all-or-nothing
-    * lifecycle. When the last adopted cache is released and nothing is
-    * pending, the listener and the session's map entry are dropped so a
-    * stopped session is not strongly pinned.
-    */
-  private final class ServingCaches {
-    val pending = new java.util.LinkedHashSet[DataFrame]()
-    val byQuery = new java.util.HashMap[java.util.UUID, java.util.Set[DataFrame]]()
-    var listener: org.apache.spark.sql.streaming.StreamingQueryListener = _
-  }
-  // All mutations serialize on `servingCaches` itself: registration,
-  // adoption and teardown each run once per stream setup/termination —
-  // far off any hot path — and the monitor closes the check-then-act
-  // races a lock-free spelling leaves open (register landing in a cs
-  // whose listener a concurrent teardown just removed).
-  private val servingCaches =
-    new java.util.HashMap[SparkSession, ServingCaches]()
-
-  private[streaming] def registerServingCache(spark: SparkSession, df: DataFrame): Unit =
-    servingCaches.synchronized {
-      var cs = servingCaches.get(spark)
-      if (cs == null) {
-        val ncs = new ServingCaches
-        ncs.listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-            servingCaches.synchronized {
-              if (!ncs.pending.isEmpty) {
-                val owned = ncs.byQuery.computeIfAbsent(e.id,
-                  _ => new java.util.LinkedHashSet[DataFrame]())
-                owned.addAll(ncs.pending)
-                ncs.pending.clear()
-              }
-            }
-          override def onQueryProgress(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-          override def onQueryTerminated(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = {
-            val owned = servingCaches.synchronized {
-              val o = ncs.byQuery.remove(e.id)
-              if (ncs.byQuery.isEmpty && ncs.pending.isEmpty) {
-                spark.streams.removeListener(ncs.listener)
-                servingCaches.remove(spark)
-              }
-              o
-            }
-            // unpersist outside the monitor: it can trigger Spark-side work
-            if (owned != null) owned.forEach(c => { c.unpersist(); () })
-          }
-        }
-        spark.streams.addListener(ncs.listener)
-        servingCaches.put(spark, ncs)
-        cs = ncs
-      }
-      cs.pending.add(df)
-      ()
-    }
-
-  /** Cache a static serving index once and register it for end-of-serving
-    * cleanup: the frame is fixed across triggers, so each micro-batch
-    * probes materialized partitions instead of recomputing it.
-    */
-  private def servingCache(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    registerServingCache(spark, cached)
-    cached
-  }
 
   /** The one micro-batch sink path: a checkpointed AvailableNow stream
     * whose every NON-EMPTY micro-batch goes to `f` with its batch id.
@@ -317,8 +230,9 @@ object StreamOps {
       .select(col("user_id").as("l_user"), col("event_id").as("l_id"), col("ets").as("l_ets"))
     val r = b.withWatermark("ets", "2 hours")
       .select(col("user_id").as("r_user"), col("event_id").as("r_id"), col("ets").as("r_ets"))
+    // coalesce: a bare `<` is tried as a watermark bound (INTERNAL_ERROR log); null ≡ no match anyway
     l.join(r,
-      col("l_user") === col("r_user") && col("l_id") < col("r_id")
+      col("l_user") === col("r_user") && coalesce(col("l_id") < col("r_id"), lit(false))
         && col("r_ets") >= col("l_ets")
         && col("r_ets") <= col("l_ets") + expr("INTERVAL 1 HOUR"))
   }
@@ -443,19 +357,18 @@ object StreamOps {
   /** I31: the exact-Jaccard VERIFY stage over a streaming feed — the
     * j61 serving shape: candidate pairs arrive in micro-batches (the
     * same deterministic successor-pair carve j61 gates), the STATIC
-    * corpus's shingle-set index is built once and cached across triggers
-    * (registered for end-of-serving cleanup), each trigger verifies only
-    * its pair sliver. Stateless stream-static inner joins — append mode,
-    * no watermark, no state store; streamed verdicts must equal batch
-    * j61 row-for-row (StreamingSpec I31).
+    * corpus's shingle-set index is materialized once at setup
+    * ([[graft.ops.ckpt]]), each trigger verifies only its pair sliver.
+    * Stateless stream-static inner joins — append mode, no watermark, no
+    * state store; streamed verdicts must equal batch j61 row-for-row
+    * (StreamingSpec I31).
     */
   def jaccardVerifyStream(spark: SparkSession, sfDir: String,
                           probeDocs: DataFrame): DataFrame = {
     import graft.ops.DedupOps
     val docs = Tables.documents(spark, sfDir)
       .where(col("doc_id") <= 200 && length(col("text")) >= 5)
-    val sh0 = DedupOps.shingleSets(docs)
-    val sh = if (probeDocs.isStreaming) servingCache(spark, sh0) else sh0
+    val sh = DedupOps.shingleSets(docs).graftCkpt()
     val pairs = probeDocs
       .where(col("doc_id") < 200 && length(col("text")) >= 5)
       .select(col("doc_id").as("a"))
@@ -481,16 +394,15 @@ object StreamOps {
     val docs = graft.Tables.documents(spark, sfDir)
     val toks = docs.select(col("doc_id"),
       explode(split(lower(col("text")), " ")).as("tok"))
-    val tfdl0 = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+    // serving: the index is FIXED across triggers — materialize it once
+    // so each micro-batch probes its partitions instead of re-running the
+    // corpus explode + aggregation + both windows per trigger. A
+    // checkpoint, not a cache: its blocks go with the last reference to
+    // the frame, so no session-lifetime cache entry outlives the stream.
+    val tfdl = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       .withColumn("dl", sum(col("tf")).over(Window.partitionBy("doc_id")))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("tok")))
-    // serving: the index is FIXED across triggers — cache it so each
-    // micro-batch probes materialized partitions instead of re-running
-    // the corpus explode + aggregation + both windows per trigger. The
-    // cache is registered for end-of-serving cleanup (ADVICE r10: it
-    // used to outlive the stream for the session's lifetime, and
-    // repeated serving setups accumulated index copies).
-    val tfdl = if (probeDocs.isStreaming) servingCache(spark, tfdl0) else tfdl0
+      .graftCkpt()
     val st = docs.agg(count(lit(1)).as("n_docs"),
       sum(size(split(lower(col("text")), " "))).cast("long").as("toktot")).head()
     val nDocs = st.getLong(0)
@@ -534,14 +446,12 @@ object StreamOps {
                    checkpointDir: String)(sink: DataFrame => Unit)
       : DataStreamWriter[Row] = {
     // both static indexes (BM25 tf/dl, corpus stats, normalized
-    // embeddings) are FIXED across triggers — build + cache them ONCE so
-    // a trigger's cost is the request sliver, not a per-batch corpus
-    // explode/aggregation/norm pass (the bm25ScoreStream lifecycle; the
-    // caches unpersist when the stream that adopted them terminates)
+    // embeddings) are FIXED across triggers — materialize them ONCE at
+    // setup so a trigger's cost is the request sliver, not a per-batch
+    // corpus explode/aggregation/norm pass (the bm25ScoreStream lifecycle)
     val idx0 = graft.ops.RankOps.rrfIndex(spark, sfDir)
-    val idx = idx0.copy(tf = servingCache(spark, idx0.tf),
-      dl = servingCache(spark, idx0.dl), stats = servingCache(spark, idx0.stats),
-      emb = servingCache(spark, idx0.emb))
+    val idx = idx0.copy(tf = idx0.tf.graftCkpt(), dl = idx0.dl.graftCkpt(),
+      stats = idx0.stats.graftCkpt(), emb = idx0.emb.graftCkpt())
     batchSink(probeIds, checkpointDir, OutputMode.Append) { (batch, _) =>
       sink(graft.ops.RankOps.rrfServe(spark, sfDir, batch, idx))
     }
@@ -575,7 +485,7 @@ object StreamOps {
     * per key range in the state store — bounded by the range table, never
     * the feed; the mod fold stays OUT of the aggregate so the sum remains
     * commutative across batches). The source manifest is static across
-    * triggers — built and cached ONCE (the I23/I21 serving lifecycle) —
+    * triggers — materialized ONCE (the I23/I21 serving lifecycle) —
     * and each trigger re-plans against it ([[graft.ops.ReplicaOps
     * .syncPlan]]: bounded metadata vs bounded metadata). After full
     * replay the last plan must equal batch a26 exactly (StreamingSpec
@@ -588,8 +498,8 @@ object StreamOps {
       : DataStreamWriter[Row] = {
     import graft.ops.ReplicaOps
     val range = ReplicaOps.regionOf(col("user_id"))
-    val srcManifest = servingCache(spark,
-      ReplicaOps.rangeManifest(ReplicaOps.srcCells(spark, sfDir), range))
+    val srcManifest =
+      ReplicaOps.rangeManifest(ReplicaOps.srcCells(spark, sfDir), range).graftCkpt()
     batchSink(ReplicaOps.rawManifest(
         ReplicaOps.driftOf(ReplicaOps.enrich(cellsStream(events))), range),
       checkpointDir, OutputMode.Complete) { (batch, _) =>
@@ -599,8 +509,8 @@ object StreamOps {
 
   /** I34: LIVE canary health monitoring — the a27 per-region probe
     * report recomputed as the table's cell feed streams in. The probe
-    * set is STATIC across triggers — built and cached once from the
-    * served table (the I23/I21/I33 serving lifecycle) — and the feed
+    * set is STATIC across triggers — materialized once from the served
+    * table (the I23/I21/I33 serving lifecycle) — and the feed
     * accumulates per-COORDINATE put counts at the probe rows in the
     * state store (complete-mode streaming groupBy after a broadcast
     * stream-static semi-probe: state is bounded by probe-row
@@ -617,7 +527,7 @@ object StreamOps {
                  checkpointDir: String)(sink: DataFrame => Unit)
       : DataStreamWriter[Row] = {
     import graft.ops.BalancerOps
-    val probes = servingCache(spark, BalancerOps.canaryProbes(Tables.cells(spark, sfDir)))
+    val probes = BalancerOps.canaryProbes(Tables.cells(spark, sfDir)).graftCkpt()
     batchSink(cellsStream(events)
         .where(col("op") === "put")
         .join(broadcast(probes.select(col("probe_row").as("rowkey"))), "rowkey")
@@ -882,13 +792,13 @@ object StreamOps {
 
   /** I10: exactly-once parquet sink — foreachBatch + idempotent overwrite
     * by batchId partition; checkpointed so restart resumes, and a replayed
-    * batch overwrites rather than duplicates.
+    * batch overwrites rather than duplicates. `batch_id` is only the
+    * directory name: partition discovery supplies the column on read.
     */
   def exactlyOnceParquetSink(df: DataFrame, outDir: String,
                              checkpointDir: String): DataStreamWriter[Row] =
     batchSink(df, checkpointDir, OutputMode.Update) { (batch, batchId) =>
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
+      batch.write.mode("overwrite")
         .parquet(s"$outDir/batch_id=$batchId")
     }
 }

@@ -3,8 +3,11 @@ package graft
 import graft.streaming.StreamOps
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** SURVEY §5.4 — batch–stream equivalence: each streaming op replayed
   * over the events fixture (AvailableNow file stream) must equal its
@@ -16,19 +19,39 @@ class StreamingSpec extends SparkSuite {
     * query is stopped even when it fails (the failure is rethrown), so
     * none outlives its test in the shared session.
     */
-  private def runToEnd(writer: DataStreamWriter[Row]): Unit = {
+  private def runToEnd(writer: DataStreamWriter[Row]): StreamingQuery = {
     val q = writer.start()
     try q.awaitTermination() finally q.stop()
+    q
   }
 
-  /** Run a streaming query to completion into a memory sink, in Complete
-    * or Append mode, and return the result table.
+  /** A streaming query into memory table `name`, in Complete or Append
+    * mode.
+    */
+  private def memorySink(df: DataFrame, mode: String, name: String): DataStreamWriter[Row] =
+    df.writeStream.format("memory").queryName(name)
+      .outputMode(mode).trigger(Trigger.AvailableNow())
+
+  /** Run a streaming query to completion into a memory sink and return
+    * the result table.
     */
   private def runStream(df: DataFrame, mode: String, name: String): DataFrame = {
-    runToEnd(df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()))
+    runToEnd(memorySink(df, mode, name))
     spark.table(name)
   }
+
+  /** The root paths of every file scan in an executed plan (adaptive
+    * stages and subqueries included). A serving index read from its
+    * materialized partitions scans no fixture file.
+    */
+  private def scannedRoots(plan: SparkPlan): Seq[String] =
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case scan: FileSourceScanExec => scan.relation.location.rootPaths.map(_.toUri.getPath)
+    }.flatten
+
+  /** The executed plan of a stopped query's last micro-batch. */
+  private def lastTriggerPlan(q: StreamingQuery): SparkPlan =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
 
   /** Events as WAL cells; seq = event_id is a monotone edit order that is
     * independent of micro-batching.
@@ -218,17 +241,21 @@ class StreamingSpec extends SparkSuite {
   test("I33: streaming replication monitor equals batch a26 after full replay") {
     // live divergence paging: the replica's cell feed accumulates its
     // unfolded range manifest in the state store (complete mode); each
-    // trigger folds it and re-plans against the cached static source
-    // manifest. The final trigger has seen the whole replica, so its
-    // plan must be the declared a26 table (modulo its output ORDER BY).
+    // trigger folds it and re-plans against the materialized static
+    // source manifest. The final trigger has seen the whole replica, so
+    // its plan must be the declared a26 table (modulo its output ORDER BY).
     var last: Array[String] = Array.empty
     var triggers = 0
+    val scanned = scala.collection.mutable.Set.empty[String]
     val ckpt = SparkSuite.tempDir("syncmon_ckpt").toString
     runToEnd(StreamOps.syncMonitorSink(spark, sf,
         StreamOps.eventsStream(spark, sf), ckpt) { plan =>
       last = plan.collect().map(_.toString).sorted; triggers += 1
+      scanned ++= scannedRoots(plan.queryExecution.executedPlan)
     })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
+    assert(!scanned.contains(s"$sf/events.parquet"),
+      "a trigger rebuilt the source manifest from the events fixture")
     val batch = SparkEntry.queries("a26_sync_ranges")(spark, sf)
       .collect().map(_.toString).sorted
     assert(last.nonEmpty && last.sameElements(batch),
@@ -240,17 +267,21 @@ class StreamingSpec extends SparkSuite {
     // live health paging: put counts per probe-row coordinate accumulate
     // in the state store (complete mode, bounded by the probe set); each
     // trigger collapses them to live counts and re-assembles the report
-    // against the cached static probe set. The final trigger has seen
-    // the whole feed, so its report must be the declared a27 table —
+    // against the materialized static probe set. The final trigger has
+    // seen the whole feed, so its report must be the declared a27 table —
     // including the found=0 tombstoned probe row and the rollup.
     var last: Array[String] = Array.empty
     var triggers = 0
     val ckpt = SparkSuite.tempDir("canary_ckpt").toString
-    runToEnd(StreamOps.canarySink(spark, sf,
+    val q = runToEnd(StreamOps.canarySink(spark, sf,
         StreamOps.eventsStream(spark, sf), ckpt) { rep =>
       last = rep.collect().map(_.toString); triggers += 1
     })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
+    // the probe set is pinned on the stream's own semi-probe: the report
+    // frame the sink receives reads canaryReport's checkpoint, not probes
+    assert(!scannedRoots(lastTriggerPlan(q)).contains(s"$sf/events.parquet"),
+      "the last trigger rebuilt the canary probe set from the events fixture")
     val batch = SparkEntry.queries("a27_canary_probe")(spark, sf)
       .collect().map(_.toString)
     assert(last.nonEmpty && last.sameElements(batch),
@@ -336,12 +367,15 @@ class StreamingSpec extends SparkSuite {
 
   test("I31: streaming Jaccard verify equals batch j61 row-for-row") {
     // the verify stage's serving shape: candidate pairs stream in, the
-    // static shingle-set index is cached across triggers; stateless
+    // static shingle-set index is materialized once at setup; stateless
     // stream-static inner joins, so the streamed verdicts must be the
     // declared j61 table exactly (modulo its output ORDER BY)
-    val streamed = runStream(
+    val q = runToEnd(memorySink(
       StreamOps.jaccardVerifyStream(spark, sf, StreamOps.documentsStream(spark, sf)),
-      "append", "t_jverify")
+      "append", "t_jverify"))
+    assert(!scannedRoots(lastTriggerPlan(q)).contains(s"$sf/documents.parquet"),
+      "the last trigger rebuilt the shingle-set index from the documents fixture")
+    val streamed = spark.table("t_jverify")
     val batch = SparkEntry.queries("j61_jaccard_verify")(spark, sf)
     assert(streamed.count() > 0, "no pairs verified on this fixture")
     assert(streamed.collect().map(_.toString).sorted
@@ -421,9 +455,12 @@ class StreamingSpec extends SparkSuite {
   test("I21: BM25 scoring of a streaming probe feed equals the batch run") {
     // the serving shape of j35: probes stream in, the corpus index is
     // static — same function on a batch probe frame must agree exactly
-    val streamed = runStream(
+    val q = runToEnd(memorySink(
       StreamOps.bm25ScoreStream(spark, sf, StreamOps.documentsStream(spark, sf)),
-      "complete", "t_bm25")
+      "complete", "t_bm25"))
+    assert(!scannedRoots(lastTriggerPlan(q)).contains(s"$sf/documents.parquet"),
+      "the last trigger rebuilt the BM25 index from the documents fixture")
+    val streamed = spark.table("t_bm25")
     val batch = StreamOps.bm25ScoreStream(spark, sf, Tables.documents(spark, sf))
     assert(streamed.count() > 0, "no probe docs scored on this fixture")
     assert(streamed.collect().map(_.toString).sorted
@@ -446,14 +483,19 @@ class StreamingSpec extends SparkSuite {
     // union to exactly the batch j42 table
     val answered = scala.collection.mutable.ArrayBuffer.empty[String]
     var triggers = 0
+    val scanned = scala.collection.mutable.Set.empty[String]
     val requests = StreamOps.documentsStream(spark, sf)
       .where(graft.ops.RankOps.probeWorkload(col("doc_id")))
       .select(col("doc_id").as("qid"))
     val ckpt = SparkSuite.tempDir("rrf_serve_ckpt").toString
     runToEnd(StreamOps.rrfServeSink(spark, sf, requests, ckpt) { out =>
       answered ++= out.collect().map(_.toString); triggers += 1
+      scanned ++= scannedRoots(out.queryExecution.executedPlan)
     })
     assert(triggers >= 2, s"replay must be multi-micro-batch, got $triggers")
+    // query terms legitimately re-read documents; the embedding index not
+    assert(!scanned.contains(s"$sf/embeddings.parquet"),
+      "a trigger rebuilt the embedding index from the embeddings fixture")
     val batch = SparkEntry.queries("j42_rrf_fusion")(spark, sf)
       .collect().map(_.toString)
     assert(answered.nonEmpty && answered.sorted.sameElements(batch.sorted),
@@ -668,6 +710,10 @@ class StreamingSpec extends SparkSuite {
     val n2 = spark.read.parquet(out).count()
     assert(n1 == n2)
     assert(n1 == Tables.events(spark, sf).count())
+    // batch_id is the partition directory only, not also a file column
+    val part = new java.io.File(out).listFiles().filter(_.getName.startsWith("batch_id=")).head
+    assert(!spark.read.parquet(part.toString).columns.contains("batch_id"),
+      s"${part.getName} files carry a batch_id data column")
   }
 
   test("I14: streaming HFile bulk-load sink — crash replay converges to the batch roundtrip (both providers)") {
