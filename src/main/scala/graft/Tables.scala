@@ -17,6 +17,15 @@ import org.apache.spark.sql.functions._
   * Catalyst keeps predicate pushdown / column pruning; nothing here forces
   * materialization. At 100 TB the same code reads a partitioned directory
   * tree instead of a single file — the operators downstream are agnostic.
+  *
+  * Fixture metadata is memoized per JVM in two maps under one overflow
+  * rule ([[memo]]): the resolved relation per (session, table path)
+  * ([[load]]), and the parquet footer per data file ([[footer]], which
+  * [[rowCountFromMeta]] and [[graft.ops.ScaleOps.fanOut]] both read).
+  * Neither is ever invalidated, because the fixtures do not change while
+  * the JVM runs. Code that writes a table and reads it back in the same
+  * JVM (sink round trips, bulk loads into [[appTmpDir]]) reads it with
+  * its own `spark.read`, never through these memos.
   */
 object Tables {
 
@@ -42,53 +51,26 @@ object Tables {
     * the life of a run, so the cached plan can never go stale; queries
     * that write-then-read scratch data use their own direct reads.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // bounded: a long-lived JVM cycling per-job sessions must not pin
-    // every dead session through its cached plans (r11 review). The cache
-    // is an epoch cache, not an LRU — blowing it away wholesale is fine
-    // because entries cost one footer read to rebuild. (The clear can
-    // race a concurrent computeIfAbsent and momentarily exceed the
-    // bound — benign: the next load re-clears.)
-    if (relCache.size > 256) relCache.clear()
-    relCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      kv => kv._1.read.parquet(kv._2))
-  }
-
-  /** Drop every cached relation rooted under `path` (all sessions). The
-    * memoized DataFrame captures the analyzed relation INCLUDING its file
-    * listing, so any writer that regenerates a previously-loaded fixture
-    * path in-session MUST call this or queries silently read the stale
-    * listing (ADVICE r11). The shipped fixtures are immutable for the
-    * life of a run — today's only writers target [[appTmpDir]] scratch
-    * dirs, which never flow through [[load]] — so this is the safety
-    * hook for future flows, exercised by MiscSpec.
-    */
-  def invalidate(path: String): Unit = {
-    val root = path.stripSuffix("/")
-    def covers(key: String): Boolean =
-      // Path-component boundary, not plain string prefix: invalidating
-      // "/data/sf1" must not drop entries under a sibling "/data/sf10".
-      key == root || key.startsWith(root + "/")
-    val it = relCache.keySet.iterator()
-    while (it.hasNext) if (covers(it.next()._2)) it.remove()
-    // countCache is a synchronizedMap — iteration must hold its monitor.
-    // Bump the epoch FIRST (inside the monitor) so an in-flight footer
-    // computation that started before this invalidate skips its put():
-    // compute happens outside the lock (deliberately — footer I/O must
-    // not block other paths), so without the epoch a stale count could
-    // be re-inserted right after the remove (ADVICE r15).
-    countCache.synchronized {
-      countEpoch += 1
-      val cit = countCache.keySet.iterator()
-      while (cit.hasNext) if (covers(cit.next())) cit.remove()
-    }
-  }
-
-  // guarded by countCache's monitor; see invalidate()
-  private var countEpoch: Long = 0L
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    memo(relCache, (spark, s"$sfDir/$name.parquet"))(kv => kv._1.read.parquet(kv._2))
 
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** The one overflow rule of both fixture memos ([[load]]'s relations,
+    * [[footer]]'s parquet footers): past 256 entries the map is cleared
+    * wholesale, so a long-lived JVM cycling per-job sessions never pins
+    * every dead session through its cached plans. Clearing is cheap: an
+    * entry costs one listing or one footer read to rebuild. A clear can
+    * race a concurrent `computeIfAbsent` and leave the map briefly over
+    * the bound; the next call clears it again. Nothing else ever removes
+    * an entry (see the object doc).
+    */
+  private def memo[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
+      f: K => V): V = {
+    if (m.size > 256) m.clear()
+    m.computeIfAbsent(k, key => f(key))
+  }
 
   /** Epoch-microseconds BIGINT view of a TIMESTAMP_NTZ column. The session
     * timezone is pinned to UTC (build.sbt javaOptions + Bench/Verify conf),
@@ -149,73 +131,67 @@ object Tables {
   }
 
   /** Exact row count of a fixture table from PARQUET FOOTER METADATA —
-    * O(files) positioned footer reads, never a Spark job (the default
-    * `df.count()` runs a columnar count stage even though every footer
-    * already carries the answer; VERDICT r12 flagged that job in the
-    * bloom-sizing path). Handles both a single parquet file and a
-    * directory of part files. Callers that size probabilistic
-    * structures from a FILTERED slice use this as the upper bound —
-    * bloom sizing only ever needs one.
+    * one footer read per part file per JVM ([[footer]]), never a Spark job
+    * (the default `df.count()` runs a columnar count stage even though
+    * every footer already carries the answer; VERDICT r12 flagged that
+    * job in the bloom-sizing path). The file list is the cached
+    * relation's ([[load]], [[scanFiles]]), so a single parquet file and a
+    * directory of part files are read alike. Callers that size
+    * probabilistic structures from a FILTERED slice use this as the upper
+    * bound — bloom sizing only ever needs one.
     */
   def rowCountFromMeta(s: SparkSession, d: String, name: String): Long = {
-    // Memoized like relCache (fixtures are immutable for the life of a
-    // run; [[invalidate]] drops both): without this, every j46/j47
-    // invocation re-opened EVERY part-file footer serially on the
-    // driver — O(files) driver I/O per call at a many-part-file scale
-    // (ADVICE r13). Wide directories (> 16 part files) read their
-    // footers in one tiny metadata-only Spark job instead of a serial
-    // driver loop. The memo itself is computed OUTSIDE the cache lock
-    // (a racing duplicate footer pass computes the same value — benign)
-    // so an LRU get never blocks behind another path's footer I/O.
-    val key = s"$d/$name.parquet"
-    val hit = countCache.get(key)
-    if (hit != null) return hit.longValue()
-    val epochAtStart = countCache.synchronized(countEpoch)
-    val n: Long = {
-      val conf = s.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(key)
-      val fs = root.getFileSystem(conf)
-      val files: Seq[String] =
-        if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root).toSeq.filter(st => st.isFile &&
-            st.getPath.getName.endsWith(".parquet")).map(_.getPath.toString)
-        else Seq(key)
-      def footerCount(conf: org.apache.hadoop.conf.Configuration)(p: String): Long = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), conf))
-        try r.getRecordCount finally r.close()
-      }
-      if (files.size <= 16) files.map(footerCount(conf)).sum
-      else {
-        val ser = new org.apache.spark.util.SerializableConfiguration(conf)
-        s.sparkContext.parallelize(files, math.min(files.size, 64))
-          .map(p => footerCount(ser.value)(p)).sum().toLong
-      }
-    }
-    // re-insert only if no invalidate() ran while the footers were being
-    // read — otherwise this put would resurrect a count the caller just
-    // declared stale (the ordering computeIfAbsent used to guarantee)
-    countCache.synchronized {
-      if (countEpoch == epochAtStart)
-        countCache.put(key, java.lang.Long.valueOf(n))
-    }
-    n
+    val conf = s.sparkContext.hadoopConfiguration
+    scanFiles(load(s, d, name)).map(footer(conf, _).rows).sum
   }
 
-  // Access-ordered LRU, not an epoch cache: a count costs O(files)
-  // footer I/O to rebuild, so when a long-lived JVM crosses the bound
-  // the LEAST-RECENTLY-USED path should fall out, not the whole memo
-  // (VERDICT r14 flagged the previous clear()-on-overflow). The
-  // synchronizedMap wrapper is the mutex; [[invalidate]] iterates under
-  // the same monitor.
-  private val countCache: java.util.Map[String, java.lang.Long] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, java.lang.Long](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-          size() > 1024
-      })
+  /** What a parquet footer says about its file: row count and row-group
+    * count (the upper bound on the file's scan splits).
+    */
+  private[graft] final case class Footer(rows: Long, rowGroups: Int)
+
+  /** The footer of one parquet file, read once per JVM: the only parquet
+    * footer read in graft, memoized per file path under [[memo]]'s rule.
+    * [[rowCountFromMeta]] sums its row counts and
+    * [[graft.ops.ScaleOps.fanOut]] its row-group counts, so j5/j46/j47's
+    * counts and j34/j40's fan-out decisions cost no driver I/O after the
+    * first call.
+    */
+  private[graft] def footer(conf: org.apache.hadoop.conf.Configuration, file: String): Footer =
+    memo(footerCache, file) { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), conf))
+      try Footer(r.getRecordCount, r.getRowGroups.size) finally r.close()
+    }
+
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Footer]()
+
+  /** The data files under the file scans of `df`'s ANALYZED plan — the
+    * listing the relation already holds, no FileSystem call. Not
+    * `.logical`: Spark 4's `read.parquet` leaves an UnresolvedDataSource
+    * leaf until analysis, so the raw logical plan has no relation to
+    * inspect (probed — the match came back empty and fanOut silently
+    * became the identity; the j33/h12 bench regression). Analysis is
+    * resolution only, no physical planning. Empty when the plan scans no
+    * files.
+    */
+  private[graft] def scanFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.inputFiles.toSeq
+          case _ => Seq.empty[String]
+        }
+      case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        v2.table match {
+          case t: org.apache.spark.sql.execution.datasources.v2.FileTable =>
+            t.fileIndex.inputFiles.toSeq
+          case _ => Seq.empty[String]
+        }
+    }.flatten
 
   /** Canonical cells view (SURVEY.md §1.1 / Appendix A): one HBase-style
     * cell per event. `op` synthesizes delete tombstones deterministically.
@@ -223,14 +199,18 @@ object Tables {
     * `ts` is epoch-µs BIGINT (HBase cell timestamps are longs; DuckDB twin:
     * `CAST(epoch_us(ts) AS BIGINT)`).
     */
-  def cells(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-    ev.select(
+  def cells(spark: SparkSession, sfDir: String): DataFrame =
+    cellsOf(events(spark, sfDir))
+
+  /** The [[cells]] projection of any events frame, batch or streaming
+    * (the tombstone rule: every 97th event_id is a delete).
+    */
+  def cellsOf(events: DataFrame): DataFrame =
+    events.select(
       concat(pad(col("user_id")), lit(":"), pad(col("event_id"))).as("rowkey"),
       lit("e").as("cf"),
       col("event_type").as("qualifier"),
       tsMicros(col("ts")).as("ts"),
       col("value"),
       when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
-  }
 }

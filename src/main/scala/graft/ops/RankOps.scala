@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -128,6 +129,25 @@ object RankOps {
     RrfIndex(tf, dl, stats, emb)
   }
 
+  /** One BM25 term contribution (k1 = 1.2, b = 0.75) over the columns
+    * `tf` (term count in the document), `df` (documents holding the term)
+    * and `dl` (document length in tokens), given the corpus size `nDocs`
+    * and mean document length `avgdl` as DOUBLE columns. Rounded to 6
+    * places as DECIMAL(18,6), so the per-document sums are exact and
+    * order-independent. j35/j42 pass corpus-stats columns, the I21
+    * serving twin ([[graft.streaming.StreamOps.bm25ScoreStream]])
+    * literals collected at setup.
+    */
+  private[graft] def bm25Term(nDocs: Column, avgdl: Column): Column = {
+    val df = col("df").cast("double")
+    val idf = log(lit(1.0) + (nDocs - df + lit(0.5)) / (df + lit(0.5)))
+    val tfd = col("tf").cast("double")
+    // k1 + 1 = 2.2, 1 - b = 0.25
+    val tfn = (tfd * lit(2.2)) /
+      (tfd + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
+    round(idf * tfn, 6).cast(DecimalType(18, 6))
+  }
+
   private def bm25Scored(s: org.apache.spark.sql.SparkSession, d: String,
                          sel: ProbeSel,
                          idx: RrfIndex) = {
@@ -136,14 +156,8 @@ object RankOps {
         explode(array_distinct(split(lower(col("text")), " "))).as("tok"))
       .where(length(col("tok")) >= 6)
 
-    val avgdl = col("toktot").cast("double") / col("n_docs").cast("double")
-    val idf = log(lit(1.0) +
-      (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)))
-    val tfd = col("tf").cast("double")
-    val tfn = (tfd * lit(2.2)) /
-      (tfd + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
-    val contrib = round(idf * tfn, 6).cast(DecimalType(18, 6))
+    val nDocs = col("n_docs").cast("double")
+    val contrib = bm25Term(nDocs, col("toktot").cast("double") / nDocs)
 
     // the semi-join (key = the grouping column tok) is pushed below tf's
     // partial aggregation by PushDownLeftSemiAntiJoin, so non-query

@@ -41,11 +41,13 @@ import org.apache.spark.sql.functions._
   */
 object RepetitionOps {
 
-  /** Word n-grams as position-ordered strings: one row per gram occurrence.
-    * `transform(sequence(...))` + `slice` stays inside whole-stage codegen;
-    * documents shorter than n words contribute no rows.
+  /** Word n-grams of a (doc_id, ws) frame as position-ordered strings:
+    * one row per gram occurrence. `transform(sequence(...))` + `slice`
+    * stays inside whole-stage codegen; documents shorter than n words
+    * contribute no rows. Shared with [[SketchOps]] (j36, j37).
     */
-  private def wordGrams(docs: org.apache.spark.sql.DataFrame, n: Int) =
+  private[ops] def wordGrams(docs: org.apache.spark.sql.DataFrame,
+                             n: Int): org.apache.spark.sql.DataFrame =
     docs
       .where(size(col("ws")) >= n)
       .select(col("doc_id"), explode(transform(

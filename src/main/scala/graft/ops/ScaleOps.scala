@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** 100 TB layout utilities (SURVEY.md §4 custom rows): rowkey salting for
   * hot-spot spreading, salted range scans, skew-salted joins, and
   * bucketed co-located joins. These are the write-path / layout levers a
@@ -39,10 +41,13 @@ object ScaleOps {
     * if the scan's file count already reaches the session parallelism,
     * this is the identity with ZERO extra I/O (the production path — a
     * 100 TB corpus is millions of files); only a scan with fewer files
-    * than cores (≤ 31 here) reads those files' parquet footers (LRU-
-    * memoized, fixtures are immutable per run) to count ROW GROUPS — the
-    * true upper bound on scan parallelism for parquet, which byte-range
-    * split math overstates on the driver's single-row-group fixtures.
+    * than cores (≤ 31 here) counts those files' ROW GROUPS — the true
+    * upper bound on scan parallelism for parquet, which byte-range split
+    * math overstates on the driver's single-row-group fixtures. The file
+    * list is [[graft.Tables.scanFiles]] (the analyzed plan's relations)
+    * and the counts come from [[graft.Tables.footer]], the one per-file
+    * footer memo: each file's footer is read once per JVM, never
+    * invalidated, since the fixtures do not change while the JVM runs.
     *
     * `sortKey`: pass it when the fanned-out pass is a map-only kernel
     * whose output is then ordered (or grouped) by a column already
@@ -57,60 +62,18 @@ object ScaleOps {
   def fanOut(df: DataFrame, sortKey: Column*): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    // ANALYZED plan, not `.logical`: Spark 4's `read.parquet` leaves an
-    // UnresolvedDataSource leaf until analysis, so the raw logical plan
-    // has no relation to inspect (probed — the match came back empty and
-    // fanOut silently became the identity; the j33/h12 bench regression).
-    // Analysis is resolution only — no physical planning, the thing the
-    // old `.rdd` spelling paid twice.
-    val files: Seq[String] = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.inputFiles.toSeq
-          case _ => Seq.empty[String]
-        }
-      case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-        v2.table match {
-          case t: org.apache.spark.sql.execution.datasources.v2.FileTable =>
-            t.fileIndex.inputFiles.toSeq
-          case _ => Seq.empty[String]
-        }
-    }.flatten
+    val files = Tables.scanFiles(df)
     if (files.isEmpty) return df // no file scan under the plan: leave it be
     if (files.size >= target) return df // production path: metadata-only
+    val conf = spark.sparkContext.hadoopConfiguration
     val splits = files.map { p =>
-      if (!p.endsWith(".parquet")) 1L // non-splittable-by-row-group source
-      else {
-        val hit = rowGroupCache.get(p)
-        if (hit != null) hit.longValue()
-        else {
-          val n: Long = {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(p),
-                spark.sparkContext.hadoopConfiguration))
-            try r.getRowGroups.size.toLong finally r.close()
-          }
-          rowGroupCache.put(p, java.lang.Long.valueOf(n))
-          n
-        }
-      }
+      if (p.endsWith(".parquet")) Tables.footer(conf, p).rowGroups.toLong
+      else 1L // non-splittable-by-row-group source
     }.sum
     if (splits >= target) df
     else if (sortKey.isEmpty) df.repartition(target)
     else df.repartitionByRange(target, sortKey: _*)
   }
-
-  // path → row-group count; bounded LRU on the Tables.countCache pattern
-  // (fixtures are immutable per run; only sub-parallelism file sets are
-  // ever footer-read, so the map stays tiny)
-  private val rowGroupCache: java.util.Map[String, java.lang.Long] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, java.lang.Long](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, java.lang.Long]): Boolean = size() > 256
-      })
 
   // ------------------------------------------------------------- salting
 

@@ -9,6 +9,7 @@ import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.Tables
 import graft.functions.SketchFns
+import RepetitionOps.wordGrams
 
 /** Sketch-gated corpus passes — the 100 TB shapes where an exact
   * distributed answer is reached THROUGH a probabilistic prefilter, so
@@ -20,13 +21,6 @@ import graft.functions.SketchFns
   * that reaches the shuffle does.
   */
 object SketchOps {
-
-  /** Word n-grams of a (doc_id, ws) frame, one row per gram position. */
-  private def wordGrams(docs: DataFrame, n: Int): DataFrame =
-    docs.where(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(col("ws")) - (n - 1)),
-        i => concat_ws(" ", slice(col("ws"), i, lit(n))))).as("g"))
 
   private def docWords(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     Tables.documents(s, d)

@@ -390,7 +390,6 @@ object StreamOps {
   def bm25ScoreStream(spark: SparkSession, sfDir: String,
                       probeDocs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val docs = graft.Tables.documents(spark, sfDir)
     val toks = docs.select(col("doc_id"),
       explode(split(lower(col("text")), " ")).as("tok"))
@@ -412,20 +411,14 @@ object StreamOps {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("qid", "doc_id", "score")
     }
-    val avgdl = lit(st.getLong(1).toDouble / nDocs.toDouble)
-    val idf = log(lit(1.0) +
-      (lit(nDocs.toDouble) - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)))
-    val tfd = col("tf").cast("double")
-    val tfn = (tfd * lit(2.2)) /
-      (tfd + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
+    val contrib = graft.ops.RankOps.bm25Term(lit(nDocs.toDouble),
+      lit(st.getLong(1).toDouble / nDocs.toDouble))
     val probes = probeDocs.where(graft.ops.RankOps.probeWorkload(col("doc_id")))
       .select(col("doc_id").as("qid"),
         explode(array_distinct(split(lower(col("text")), " "))).as("tok"))
       .where(length(col("tok")) >= 6)
     probes.join(tfdl, "tok")
-      .select(col("qid"), col("doc_id"),
-        round(idf * tfn, 6).cast(DecimalType(18, 6)).as("c"))
+      .select(col("qid"), col("doc_id"), contrib.as("c"))
       .groupBy("qid", "doc_id")
       .agg(sum(col("c")).cast(DecimalType(38, 6)).cast("double").as("score"))
   }
@@ -597,19 +590,11 @@ object StreamOps {
     }
   }
 
-  /** The canonical cells projection of an events stream — the same
-    * expressions as [[graft.Tables.cells]], applied per micro-batch, so a
-    * continuous event feed becomes bulk-loadable HBase cells.
+  /** The canonical cells projection ([[graft.Tables.cellsOf]]) of an
+    * events stream, applied per micro-batch, so a continuous event feed
+    * becomes bulk-loadable HBase cells.
     */
-  def cellsStream(events: DataFrame): DataFrame =
-    events.select(
-      concat(Tables.pad(col("user_id")), lit(":"),
-        Tables.pad(col("event_id"))).as("rowkey"),
-      lit("e").as("cf"),
-      col("event_type").as("qualifier"),
-      Tables.tsMicros(col("ts")).as("ts"),
-      col("value"),
-      when(col("event_id") % 97 === 0, "delete").otherwise("put").as("op"))
+  def cellsStream(events: DataFrame): DataFrame = Tables.cellsOf(events)
 
   /** I25: visibility-labeled streaming scan — the b31 cell-visibility
     * evaluator ([[graft.ops.FilterOps.visibleUnder]] over the shared

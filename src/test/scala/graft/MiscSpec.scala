@@ -173,16 +173,16 @@ class MiscSpec extends SparkSuite {
       s"approx $approx vs exact $exact")
   }
 
-  test("Tables.invalidate drops cached relations so a regenerated path re-lists") {
-    val dir = SparkSuite.tempDir("graft_inval").toString
-    def write(n: Int): Unit = spark.range(n).toDF("id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
-    write(3)
-    assert(Tables.load(spark, dir, "t").count() == 3)
-    write(7) // regenerate in place: the memoized relation holds the OLD file listing
-    Tables.invalidate(dir)
-    assert(Tables.load(spark, dir, "t").count() == 7,
-      "invalidate did not drop the stale cached relation")
+  test("rowCountFromMeta equals count() on the fixture and on a 40-part-file directory") {
+    Seq("documents", "events", "lineitem").foreach { t =>
+      assert(Tables.rowCountFromMeta(spark, sf, t) == Tables.load(spark, sf, t).count(), t)
+    }
+    val dir = SparkSuite.tempDir("graft_rowcount").toString
+    spark.range(0, 10007, 1, 40).toDF("id").write.parquet(s"$dir/wide.parquet")
+    val parts = new java.io.File(s"$dir/wide.parquet").list().count(_.endsWith(".parquet"))
+    assert(parts == 40, s"fixture write produced $parts part files, wanted 40")
+    assert(Tables.rowCountFromMeta(spark, dir, "wide") == 10007)
+    assert(Tables.load(spark, dir, "wide").count() == 10007)
   }
 
   test("J11: seeded KMeans recovers planted blobs; deterministic on fixture") {
