@@ -25,7 +25,7 @@ object PlanDump {
     "c2_join_broadcast" -> "dimension side broadcast (BroadcastHashJoin), no shuffle of the fact side",
     "f2_topk" -> "global top-k plans TakeOrderedAndProject, never a full sort",
     "e9_win_topk_group" -> "window top-k rewritten to the custom bounded-heap TopKPerGroup operator",
-    "j8_sim_topk" -> "brute cosine: probe side broadcast, corpus never shuffles; the norms and the numerator are the native graft_dot kernel, one fused loop per row inside whole-stage codegen (no lambda functions)",
+    "j8_sim_topk" -> "brute cosine: probe side broadcast, from the unwidened scan; the corpus side is fanned out (round-robin) on a split-starved scan and never shuffles at scale; the norms and the numerator are the native graft_dot kernel, one fused loop per row inside whole-stage codegen (no lambda functions)",
     "j14_dedup_ngram" -> "exact n-gram Jaccard by inverted index: broadcast shingle equi-join + partial-agg intersection count, localCheckpointed once for its three consumers; zero-intersection pairs padded only for probes with <5 intersecting docs (positive jaccard always outranks zero)",
     "a5_bulkload_splits" -> "bulk-load split points via distributed exact ntile (no single-partition window): deterministic range-bucket expression + pruned totals pass + broadcast offsets — no checkpoint materialization, full data crosses one exchange",
     "j21_pack_shards" -> "token-budget sharding over the distributed exact cumsum: deterministic bucket expression + narrow localCheckpoint (tokenize once) + broadcast offsets, per-_pid windows only",

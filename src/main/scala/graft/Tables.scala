@@ -33,13 +33,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** events.ts is parquet `timestamp[us]` (no timezone) as of the 2026-08-13
-    * fixture regeneration — Spark reads it as TIMESTAMP_NTZ natively; the
-    * pre-regeneration fixtures were TIMESTAMP(NANOS) and needed
-    * `spark.sql.legacy.parquet.nanosAsLong`, which is gone with them. The
-    * values are bit-identical in the µs domain (old nanos ÷ 1000 exactly),
-    * so every µs-domain output is unchanged.
-    */
   /** Fixture relations are resolved ONCE per (session, path) and the
     * analyzed DataFrame reused — the same lifecycle a catalog/temp-view
     * table has in any real deployment (and in the stock baseline battery,
@@ -87,6 +80,13 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
+  /** events.ts is parquet `timestamp[us]` (no timezone) as of the 2026-08-13
+    * fixture regeneration — Spark reads it as TIMESTAMP_NTZ natively; the
+    * pre-regeneration fixtures were TIMESTAMP(NANOS) and needed
+    * `spark.sql.legacy.parquet.nanosAsLong`, which is gone with them. The
+    * values are bit-identical in the µs domain (old nanos ÷ 1000 exactly),
+    * so every µs-domain output is unchanged.
+    */
   def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

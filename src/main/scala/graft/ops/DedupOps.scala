@@ -42,15 +42,11 @@ object DedupOps {
   def bandsOf(sig: Column, bands: Int, rows: Int): Column = LshBands.of(sig, bands, rows)
 
   /** Estimated Jaccard = fraction of agreeing signature positions —
-    * native [[graft.functions.SigAgree]] (runs once per candidate pair;
-    * the interpreted zip_with/filter spelling is kept only as
-    * [[sigSimilarityHof]], the SigAgreeProps test reference).
+    * native [[graft.functions.SigAgree]], which runs once per candidate
+    * pair (SigAgreeProps checks `SigAgree.agree` against a plain Scala
+    * count of agreeing positions).
     */
   def sigSimilarity(a: Column, b: Column): Column = SigAgree.of(a, b)
-
-  /** HOF reference spelling of [[sigSimilarity]] (test oracle only). */
-  private[graft] def sigSimilarityHof(a: Column, b: Column): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), id => id)).cast("double") / size(a)
 
   /** Signatures for every document: (doc_id, sig). */
   def signatures(docs: DataFrame, k: Int = 5, n: Int = 128): DataFrame =
@@ -651,7 +647,7 @@ object DedupOps {
     docs
       .withColumn("sig", MinHashMd5.of(array_distinct(split(lower(col("text")), " ")), 16))
       .withColumn("sig_md5",
-        md5(concat_ws(",", expr("transform(sig, m -> CAST(m AS STRING))"))))
+        md5(concat_ws(",", col("sig").cast("array<string>"))))
       .drop("sig")
   }
 

@@ -1,8 +1,8 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.Shingles
-import org.apache.spark.sql.DataFrame
+import graft.functions.{Shingles, WordChunks}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,18 +98,6 @@ object RepetitionOps {
       .orderBy(desc("dup_chars"), asc_nulls_last("doc_id")).limit(100)
   }
 
-  /** j29: eval-set decontamination. The "benchmark" is a deterministic
-    * fixture slice (doc_id ≡ 0 mod 97 — ~1% of the corpus, playing the
-    * role of an eval suite); a corpus document is contaminated when it
-    * shares a word n-gram with any benchmark document. Real deployments
-    * use n = 8..13 over a genuinely external benchmark table; the declared
-    * query uses n=3 so the fixture (30-word vocabulary) produces a
-    * non-trivial overlap surface — the operator takes n as a parameter.
-    *
-    * The eval-gram side is broadcast: eval suites are small by nature
-    * (here ~1% of corpus grams), so the corpus side never shuffles —
-    * contamination flagging is a map-side semi-join at any corpus size.
-    */
   /** Relational contamination hits: distinct shared n-grams per corpus
     * document against the fixture's eval slice (doc_id ≡ 0 mod 97).
     * Exposed separately so the streaming twin (I18) can pin the
@@ -149,6 +137,18 @@ object RepetitionOps {
       .where(col("hits") > 0)
   }
 
+  /** j29: eval-set decontamination. The "benchmark" is a deterministic
+    * fixture slice (doc_id ≡ 0 mod 97 — ~1% of the corpus, playing the
+    * role of an eval suite); a corpus document is contaminated when it
+    * shares a word n-gram with any benchmark document. Real deployments
+    * use n = 8..13 over a genuinely external benchmark table; the declared
+    * query uses n=3 so the fixture (30-word vocabulary) produces a
+    * non-trivial overlap surface — the operator takes n as a parameter.
+    *
+    * The eval-gram side is broadcast: eval suites are small by nature
+    * (here ~1% of corpus grams), so the corpus side never shuffles —
+    * contamination flagging is a map-side semi-join at any corpus size.
+    */
   def j29_decontaminate: Q = (s, d) =>
     contaminationHits(ScaleOps.fanOut(Tables.documents(s, d)), n = 3)
       .orderBy(desc("hits"), asc_nulls_last("doc_id")).limit(100)
@@ -297,6 +297,49 @@ object RepetitionOps {
       .orderBy(asc_nulls_last("doc_id"))
   }
 
+  /** The j45/j47 segmentation of any (doc_id, text) frame: lowercase
+    * fixed-width 8-word chunks (native [[graft.functions.WordChunks]]),
+    * one row per chunk — (doc_id, seg, chunk).
+    */
+  private def paragraphs(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"),
+        posexplode(WordChunks.of(split(lower(col("text")), " "), 8)))
+      .select(col("doc_id"), col("pos").cast("long").as("seg"),
+        col("col").as("chunk"))
+
+  /** The GLOBAL keep-first rank per chunk text over [[paragraphs]]' rows:
+    * adds rn, 1 iff this occurrence is the corpus-wide first of its
+    * chunk. ONE chunk-keyed window.
+    */
+  private def keepFirst(chunks: DataFrame): DataFrame = {
+    // null ordering pinned explicitly (Spark defaults NULLS FIRST,
+    // DuckDB NULLS LAST — R4): "first occurrence" must mean the same
+    // row on both engines even if a null doc_id ever enters the fixture
+    val w = Window.partitionBy("chunk")
+      .orderBy(asc_nulls_last("doc_id"), asc_nulls_last("seg"))
+    chunks.withColumn("rn", row_number().over(w))
+  }
+
+  /** A document's chunks in seg order, joined by spaces. `sort_array`
+    * and the struct field extraction both compile into generated code;
+    * `array_sort` would sort through an interpreted comparator lambda.
+    * Both order the collected structs by seg, which is unique within a
+    * document, and collect_list keeps no null element to place.
+    */
+  private def reassembled(chunks: Column): Column =
+    concat_ws(" ", sort_array(collect_list(chunks)).getField("chunk"))
+
+  /** Paragraph-dedup SURGERY for j47: each document's kept chunks
+    * reassembled in seg order as its cleaned (lowercase) text; documents
+    * whose every chunk is a later duplicate get NO row (fully
+    * deduplicated away).
+    */
+  def paragraphDedupText(docs: DataFrame): DataFrame =
+    keepFirst(paragraphs(docs)).where(col("rn") === 1)
+      .groupBy("doc_id")
+      .agg(reassembled(struct(col("seg"), col("chunk"))).as("text"))
+
   /** j45: paragraph-level dedup — CCNet's pass (Wenzek et al.,
     * arXiv:1911.00359 §2: hash each paragraph, drop duplicated
     * paragraphs corpus-wide before LM scoring). The fixture text has no
@@ -313,52 +356,28 @@ object RepetitionOps {
     * (carrying (doc_id, seg) only — ~16 B/row beside the chunk text) →
     * one doc_id re-aggregation. No pairwise compare, no join;
     * structurally the j31 exchange pattern minus the interval union.
+    * On a split-starved scan both exchanges are widened to the session's
+    * parallelism, and both widenings are the identity at scale: the
+    * window's input is hash-partitioned on chunk
+    * ([[ScaleOps.fanOutHashed]]), which the window reuses and AQE does
+    * not coalesce to one task, and the doc_id regroup is range-widened
+    * ([[ScaleOps.fanOut]] keyed on the output order), so the final sort
+    * reuses that exchange too. j47's paragraph pass keeps AQE's sizing:
+    * the hash widening measured no faster there.
     */
-  /** The j45/j47 core over any (doc_id, text) frame: lowercase
-    * fixed-width 8-word chunk explode with the GLOBAL keep-first rank
-    * per chunk text — (doc_id, seg, chunk, rn), rn = 1 iff this
-    * occurrence is the corpus-wide first of its chunk. One explode, ONE
-    * chunk-keyed window.
-    */
-  private[ops] def chunkKeepFirst(docs: DataFrame): DataFrame = {
-    val seg = docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), ceil(size(col("ws")) / lit(8.0)).cast("int") - 1),
-        i => array_join(slice(col("ws"), i * 8 + 1, lit(8)), " "))))
-      .select(col("doc_id"), col("pos").cast("long").as("seg"),
-        col("col").as("chunk"))
-    // null ordering pinned explicitly (Spark defaults NULLS FIRST,
-    // DuckDB NULLS LAST — R4): "first occurrence" must mean the same
-    // row on both engines even if a null doc_id ever enters the fixture
-    val w = Window.partitionBy("chunk")
-      .orderBy(asc_nulls_last("doc_id"), asc_nulls_last("seg"))
-    seg.withColumn("rn", row_number().over(w))
-  }
-
-  /** Paragraph-dedup SURGERY for j47: each document's kept chunks
-    * reassembled in seg order as its cleaned (lowercase) text; documents
-    * whose every chunk is a later duplicate get NO row (fully
-    * deduplicated away).
-    */
-  def paragraphDedupText(docs: DataFrame): DataFrame =
-    chunkKeepFirst(docs).where(col("rn") === 1)
-      .groupBy("doc_id")
-      .agg(concat_ws(" ", transform(
-        array_sort(collect_list(struct(col("seg"), col("chunk")))),
-        x => x.getField("chunk"))).as("text"))
-
-  def j45_dedup_paragraphs: Q = (s, d) =>
-    chunkKeepFirst(Tables.documents(s, d))
+  def j45_dedup_paragraphs: Q = (s, d) => {
+    val key = asc_nulls_last("doc_id")
+    val ranked = keepFirst(
+      ScaleOps.fanOutHashed(paragraphs(Tables.documents(s, d)), col("chunk")))
+    ScaleOps.fanOut(ranked, key)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("rn") === 1, 1).otherwise(0)).cast("long").as("n_kept"),
         when(sum(when(col("rn") === 1, 1).otherwise(0)) > 0,
-          md5(concat_ws(" ", transform(
-            array_sort(collect_list(when(col("rn") === 1,
-              struct(col("seg"), col("chunk"))))),
-            x => x.getField("chunk"))))).as("clean_md5"))
-      .orderBy(asc_nulls_last("doc_id"))
+          md5(reassembled(when(col("rn") === 1, struct(col("seg"), col("chunk"))))))
+          .as("clean_md5"))
+      .orderBy(key)
+  }
 
   def queries: Map[String, Q] = Map(
     "j28_dup_substrings" -> j28_dup_substrings,

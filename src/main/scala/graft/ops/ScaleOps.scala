@@ -26,12 +26,15 @@ object ScaleOps {
     *
     * Applied selectively, measured per query: it pays off only where the
     * pre-shuffle map work dominates (j33's digest pass: 3.1 s → 0.9 s at
-    * sf0.1). A query whose cost sits in an already-parallel shuffle or
-    * in I/O just pays the extra exchange (j31/j32 measured SLOWER with
-    * it — reverted; j49 likewise, its five model branches each replayed
-    * the round-robin exchange. j29 initially measured as a loser too,
-    * but the r20 isolated A/B — after its gram explode got heavier under
-    * n=3 word-grams — read 0.99 → 0.95 s, so it now fans out).
+    * sf0.1; j8's per-row norms and cosines: 183 → 161 ms; j45's
+    * chunk-keyed window ([[fanOutHashed]]) and its range-widened doc_id
+    * regroup: 313 → 213 ms, both at sf0.1 on 4 cores). A query whose
+    * cost sits in an already-parallel shuffle or in I/O just pays the
+    * extra exchange (j31/j32 measured SLOWER with it — reverted; j49
+    * likewise, its five model branches each replayed the round-robin
+    * exchange. j29 initially measured as a loser too, but the r20
+    * isolated A/B — after its gram explode got heavier under n=3
+    * word-grams — read 0.99 → 0.95 s, so it now fans out).
     *
     * The split-starvation decision comes from SCAN METADATA, not from
     * `df.rdd.getNumPartitions` — that spelling physically planned the
@@ -59,7 +62,26 @@ object ScaleOps {
     * round-robin fan-out, the sort's own range sampling re-runs the
     * whole kernel). Still the identity when the scan is not starved.
     */
-  def fanOut(df: DataFrame, sortKey: Column*): DataFrame = {
+  def fanOut(df: DataFrame, sortKey: Column*): DataFrame =
+    widened(df) { n =>
+      if (sortKey.isEmpty) df.repartition(n) else df.repartitionByRange(n, sortKey: _*)
+    }
+
+  /** [[fanOut]]'s hash-keyed form: on a split-starved source scan,
+    * `repartition(defaultParallelism, keys)`; the identity otherwise, by
+    * the same scan-metadata test. For a frame derived from the scan that
+    * feeds a shuffle keyed on `keys` (a window or an aggregate): that
+    * shuffle reuses this exchange, and being user-sized, AQE does not
+    * coalesce it down to the one partition a small fixture input would
+    * otherwise get — j45's chunk-keyed keep-first window ran as one task.
+    */
+  def fanOutHashed(df: DataFrame, keys: Column*): DataFrame =
+    widened(df)(df.repartition(_, keys: _*))
+
+  /** `widen(defaultParallelism)` when `df`'s file scan plans fewer splits
+    * than the session's parallelism, else `df` itself (see [[fanOut]]).
+    */
+  private def widened(df: DataFrame)(widen: Int => DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val files = Tables.scanFiles(df)
@@ -70,9 +92,7 @@ object ScaleOps {
       if (p.endsWith(".parquet")) Tables.footer(conf, p).rowGroups.toLong
       else 1L // non-splittable-by-row-group source
     }.sum
-    if (splits >= target) df
-    else if (sortKey.isEmpty) df.repartition(target)
-    else df.repartitionByRange(target, sortKey: _*)
+    if (splits >= target) df else widen(target)
   }
 
   // ------------------------------------------------------------- salting

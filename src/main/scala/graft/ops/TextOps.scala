@@ -40,19 +40,26 @@ object TextOps {
       .agg(min("doc_id").as("keep"))
       .agg(count(lit(1)).as("kept"))
 
-  /** j3: 5-char character shingles (the MinHash substrate). sequence +
-    * transform + explode keeps generation distributed and codegen'd.
+  /** j3: 5-char character shingles (the MinHash substrate): the number
+    * of distinct shingles of each of the first 50 documents.
     */
   def j3_text_shingles: Q = (s, d) =>
-    Tables.documents(s, d)
-      .where(col("doc_id") < 50)
-      .select(col("doc_id"),
-        explode(transform(
-          sequence(lit(1), greatest(length(col("text")) - 4, lit(0))),
-          i => col("text").substr(i, lit(5)))).as("sh"))
-      .groupBy("doc_id")
-      .agg(countDistinct("sh").as("shingles"))
+    distinctShingleCounts(Tables.documents(s, d).where(col("doc_id") < 50))
       .orderBy(asc_nulls_last("doc_id"))
+
+  /** (doc_id, shingles): each document's distinct 5-char shingle count,
+    * as the size of [[DedupOps.shingles]] (native
+    * [[graft.functions.Shingles]] + `array_distinct`) — map-only, compiled
+    * into the scan's codegen stage. Equal to j3's earlier relational
+    * spelling (`explode(transform(sequence(1, greatest(length - 4, 0)),
+    * substr))` → shuffle → `countDistinct`) on every input: texts
+    * shorter than 5 chars, multi-byte text, and a null text, whose
+    * windows are all null and so count 0 (ShinglesSpec pins it).
+    */
+  private[graft] def distinctShingleCounts(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      when(col("text").isNull, lit(0L))
+        .otherwise(size(DedupOps.shingles(col("text"), 5)).cast("long")).as("shingles"))
 
   /** j4: tokenize + token counts — global top-20 tokens >2 chars. */
   def j4_text_tokens: Q = (s, d) =>
@@ -130,15 +137,21 @@ object TextOps {
       .orderBy(asc_nulls_last("doc_id"))
 
   /** j8: brute-force cosine top-5 — the exact baseline ANN (J9) is graded
-    * against. Probe set is broadcast; corpus side never shuffles.
+    * against. The 10-row probe set is broadcast; the corpus side is
+    * fanned out on a split-starved scan ([[ScaleOps.fanOut]]: its norms
+    * and 10 cosines per row then run on every core) and never shuffles
+    * at scale, where the fan-out is the identity.
     */
   def j8_sim_topk: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
     // norms precomputed once per row (not once per pair) — sqrt is
     // deterministic, so sim stays bit-identical to the inline form
-    val corpus = emb.select(col("vec_id"), col("embedding"),
-      l2Col(col("embedding")).as("e_norm"))
-    val probes = corpus.where(col("vec_id") < 10)
+    def withNorm(df: DataFrame): DataFrame = df.select(col("vec_id"),
+      col("embedding"), l2Col(col("embedding")).as("e_norm"))
+    val corpus = withNorm(ScaleOps.fanOut(emb))
+    // the probes come from the unwidened scan: a 10-row broadcast side
+    // needs no exchange of its own
+    val probes = withNorm(emb.where(col("vec_id") < 10))
       .select(col("vec_id").as("pid"), col("embedding").as("p_emb"),
         col("e_norm").as("p_norm"))
     val sims = broadcast(probes).crossJoin(corpus)

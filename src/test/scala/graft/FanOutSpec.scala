@@ -23,7 +23,8 @@ class FanOutSpec extends SparkSuite {
       "widened plan lost its round-robin exchange")
   }
 
-  test("fanOut is the identity once the file count reaches the parallelism") {
+  /** A parquet scan of more files than the session's parallelism. */
+  private lazy val manyFiles = {
     val target = spark.sparkContext.defaultParallelism
     val dir = SparkSuite.tempDir("fanout-many").toString
     import spark.implicits._
@@ -33,6 +34,11 @@ class FanOutSpec extends SparkSuite {
     val df = spark.read.parquet(dir)
     assert(df.inputFiles.length >= target,
       s"fixture write produced ${df.inputFiles.length} files, wanted >= $target")
+    df
+  }
+
+  test("fanOut is the identity once the file count reaches the parallelism") {
+    val df = manyFiles
     // production path: enough files => identity decided from the file
     // LIST alone, zero footer reads
     assert(graft.ops.ScaleOps.fanOut(df) eq df)
@@ -50,5 +56,29 @@ class FanOutSpec extends SparkSuite {
     assert(exchanges == 1 && plan.toLowerCase.contains("rangepartitioning"),
       s"expected the fan-out's range exchange to serve the sort too\n$plan")
     assert(!plan.toLowerCase.contains("roundrobinpartitioning"), plan)
+  }
+
+  test("hash-keyed fanOut is the identity once the file count reaches the parallelism") {
+    val df = manyFiles
+    assert(graft.ops.ScaleOps.fanOutHashed(df, col("v")) eq df)
+    val derived = df.select(col("id"), upper(col("v")).as("u"))
+    assert(graft.ops.ScaleOps.fanOutHashed(derived, col("u")) eq derived)
+  }
+
+  test("hash-keyed fanOut on a starved scan sizes the exchange a window on its key reuses") {
+    val target = spark.sparkContext.defaultParallelism
+    val docs = Tables.documents(spark, sf) // 1 file, 1 row group
+    val words = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    val out = graft.ops.ScaleOps.fanOutHashed(words, col("w"))
+    assert(!(out eq words), "hash-keyed fanOut returned the identity on a 1-row-group scan")
+    val ranked = out.withColumn("rn", row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy("w").orderBy("doc_id")))
+    val plan = ranked.queryExecution.executedPlan.toString
+    val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges == 1 && plan.contains(s"hashpartitioning(w#") &&
+      plan.contains(s", $target), REPARTITION_BY_NUM"),
+      s"expected the fan-out's hash exchange to serve the window\n$plan")
+    assert(ranked.count() == words.count())
+    assert(ranked.rdd.getNumPartitions == target)
   }
 }

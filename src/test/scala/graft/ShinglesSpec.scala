@@ -70,4 +70,36 @@ class ShinglesSpec extends SparkSuite {
       assert(bad == 0, s"$what k=$k")
     }
   }
+
+  /** j3's earlier relational spelling, spelled out here: every 5-char
+    * window through a shuffle into countDistinct. */
+  private def j3Relational(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(col("doc_id"),
+        explode(transform(
+          sequence(lit(1), greatest(length(col("text")) - 4, lit(0))),
+          i => col("text").substr(i, lit(5)))).as("sh"))
+      .groupBy("doc_id")
+      .agg(countDistinct("sh").as("shingles"))
+
+  test("j3's distinct-shingle count equals its relational spelling (fixture + edges)") {
+    import org.apache.spark.sql.types._
+    val texts = Seq(null, "", "a", "abcd", "abcde", "abcdef", "aaaaaaaaaa",
+      "abcabcabcabc", "héllo wörld", "日本語のテキスト", "aあbいc", "aあbいcう",
+      "😀😀😀😀😀😀", "Ünïcödé Ünïcödé")
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    val dir = SparkSuite.tempDir("graft-j3-edges").toString
+    spark.createDataFrame(java.util.Arrays.asList(
+        texts.zipWithIndex.map { case (t, i) => org.apache.spark.sql.Row(i.toLong, t) }: _*), schema)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val edges = spark.read.parquet(dir)
+    for ((docs, what) <- Seq(edges -> "edges", Tables.documents(spark, sf) -> "fixture")) {
+      val got = graft.ops.TextOps.distinctShingleCounts(docs).collect().map(_.toString).sorted
+      val want = j3Relational(docs).collect().map(_.toString).sorted
+      assert(got.toSeq == want.toSeq, what)
+    }
+    val j3 = SparkEntry.queries("j3_text_shingles")(spark, sf).collect().map(_.toString)
+    val want = j3Relational(Tables.documents(spark, sf).where(col("doc_id") < 50))
+      .orderBy("doc_id").collect().map(_.toString)
+    assert(j3.toSeq == want.toSeq && j3.length == 50)
+  }
 }
